@@ -8,6 +8,10 @@ JsonFileBackend (a single JSON file; cross-process memoization). On a real
 cluster the same 8-method interface fronts a Delta table or a database —
 the catalog is tiny (O(partitions) rows of fingerprints+paths), never a
 scaling concern next to the 100 TB data plane.
+
+Write cost: a mutating call rewrites the JsonFileBackend file only when it
+changes the catalog's state, and a build makes one memo probe and one link
+call per producer output — so a no-op rebuild leaves the file untouched.
 """
 
 from __future__ import annotations
@@ -43,6 +47,19 @@ def _partition_to_json(p: StoragePartition) -> dict[str, Any]:
     if p.value is not None:  # literal payload rides in the catalog
         out["value"] = p.value
     return out
+
+
+def _upsert(table: dict[str, Any], key: str, partitions: list[StoragePartition]) -> bool:
+    """Upsert ``partitions`` by path into ``table[key]``; True if any entry
+    was new or different."""
+    store = table.setdefault(key, {})
+    changed = False
+    for p in partitions:
+        entry = _partition_to_json(p)
+        if store.get(p.path) != entry:
+            store[p.path] = entry
+            changed = True
+    return changed
 
 
 def _partition_from_json(d: dict[str, Any]) -> StoragePartition:
@@ -208,7 +225,11 @@ class JsonFileBackend(Backend):
     cannot be the lock) and re-reads the file before acting, so writers merge
     instead of clobbering each other and readers never serve a stale
     construction-time snapshot. Mutations are add-only upserts, so
-    reload-then-apply IS the merge. Swap for Delta/DB at multi-host scale.
+    reload-then-apply IS the merge. A mutation compares each entry with the
+    reloaded state and rewrites the file only if something is new or
+    different: skipping a write that changes nothing cannot drop another
+    writer's entries, and a memoized rebuild writes nothing. Swap for
+    Delta/DB at multi-host scale.
     """
 
     def __init__(self, path: str) -> None:
@@ -297,9 +318,11 @@ class JsonFileBackend(Backend):
         self._stamp = (st.st_mtime_ns, st.st_ino, st.st_size)
 
     def write_snapshot(self, snapshot_id: Fingerprint, graph_name: str) -> None:
+        key = str(snapshot_id.key)
         with self._locked():
-            self._state["snapshots"][str(snapshot_id.key)] = graph_name
-            self._flush()
+            if self._state["snapshots"].get(key) != graph_name:
+                self._state["snapshots"][key] = graph_name
+                self._flush()
 
     def has_snapshot(self, snapshot_id: Fingerprint) -> bool:
         with self._locked(exclusive=False):
@@ -309,10 +332,8 @@ class JsonFileBackend(Backend):
         self, artifact_fp: Fingerprint, partitions: list[StoragePartition]
     ) -> None:
         with self._locked():
-            store = self._state["partitions"].setdefault(str(artifact_fp.key), {})
-            for p in partitions:
-                store[p.path] = _partition_to_json(p)
-            self._flush()
+            if _upsert(self._state["partitions"], str(artifact_fp.key), partitions):
+                self._flush()
 
     def read_artifact_partitions(
         self,
@@ -320,20 +341,20 @@ class JsonFileBackend(Backend):
         input_fingerprints: set[int | None] | None = None,
     ) -> list[StoragePartition]:
         with self._locked(exclusive=False):
-            parts = [
-                _partition_from_json(d)
-                for d in self._state["partitions"].get(str(artifact_fp.key), {}).values()
-            ]
+            entries = list(self._state["partitions"].get(str(artifact_fp.key), {}).values())
         if input_fingerprints is not None:
-            parts = [p for p in parts if p.input_fingerprint.key in input_fingerprints]
-        return parts
+            entries = [d for d in entries if d["input_fp"] in input_fingerprints]
+        return [_partition_from_json(d) for d in entries]
 
     def delete_partitions_by_path(self, paths: set[str]) -> None:
         with self._locked():
+            removed = False
             for store in self._state["partitions"].values():
-                for path in paths:
-                    store.pop(path, None)
-            self._flush()
+                for path in paths & store.keys():
+                    del store[path]
+                    removed = True
+            if removed:
+                self._flush()
 
     def read_all_snapshot_partitions(
         self, snapshot_id: Fingerprint
@@ -350,10 +371,8 @@ class JsonFileBackend(Backend):
         self, snapshot_id: Fingerprint, artifact_fp: Fingerprint, partitions: list[StoragePartition]
     ) -> None:
         with self._locked():
-            store = self._state["links"].setdefault(f"{snapshot_id.key}:{artifact_fp.key}", {})
-            for p in partitions:
-                store[p.path] = _partition_to_json(p)
-            self._flush()
+            if _upsert(self._state["links"], f"{snapshot_id.key}:{artifact_fp.key}", partitions):
+                self._flush()
 
     def read_snapshot_partitions(
         self, snapshot_id: Fingerprint, artifact_fp: Fingerprint
@@ -376,8 +395,10 @@ class JsonFileBackend(Backend):
         with self._locked():
             if key in self._state["tags"] and not overwrite:
                 raise ValueError(f"tag {tag!r} already exists for graph {graph_name!r}")
-            self._state["tags"][key] = snapshot_id.key
-            self._flush()
+            tags = self._state["tags"]
+            if key not in tags or tags[key] != snapshot_id.key:
+                tags[key] = snapshot_id.key
+                self._flush()
 
     def read_tag(self, graph_name: str, tag: str) -> Fingerprint:
         key = self._tag_key(graph_name, tag)

@@ -68,27 +68,34 @@ class LocalSparkExecutor:
         output_artifacts = {
             pos: graph._artifacts[key] for pos, key in sorted(outputs.items())
         }
+        # One memo probe per output, indexed by (partition key, input
+        # fingerprint): a probe per key would parse every partition of the
+        # artifact each time, quadratic in partitions.
+        memo: dict[int, dict[tuple[PartitionKey, int | None], list[StoragePartition]]] = {}
+        for pos, artifact in output_artifacts.items():
+            index = memo[pos] = {}
+            for p in backend.read_artifact_partitions(artifact.fingerprint):
+                index.setdefault((p.partition_key, p.input_fingerprint.key), []).append(p)
+        memoized: dict[int, list[StoragePartition]] = {pos: [] for pos in output_artifacts}
+        to_build = []
         for partition_key, dep_inputs in dependencies.items():
             input_fp = producer.compute_input_fingerprint(dep_inputs)
-            existing_per_output = {}
-            for pos, artifact in output_artifacts.items():
-                existing = backend.read_artifact_partitions(
-                    artifact.fingerprint, input_fingerprints={input_fp.key}
+            hits = {pos: index.get((partition_key, input_fp.key)) for pos, index in memo.items()}
+            if all(hits.values()):
+                for pos, parts in hits.items():
+                    memoized[pos].extend(parts)
+            else:
+                to_build.append((partition_key, dep_inputs, input_fp))
+        # Memoized: link every existing partition to this snapshot in one
+        # call per output, before any build can fail, and skip them.
+        for pos, artifact in output_artifacts.items():
+            if memoized[pos]:
+                backend.link_snapshot_partitions(
+                    snapshot.snapshot_id, artifact.fingerprint, memoized[pos]
                 )
-                match = [p for p in existing if p.partition_key == partition_key]
-                if match:
-                    existing_per_output[pos] = match
-            if len(existing_per_output) == len(output_artifacts):
-                # Memoized: link existing partitions to this snapshot, skip.
-                for pos, artifact in output_artifacts.items():
-                    backend.link_snapshot_partitions(
-                        snapshot.snapshot_id,
-                        artifact.fingerprint,
-                        existing_per_output[pos],
-                    )
-                with self._lock:
-                    self.skipped_partitions += 1
-                continue
+        with self._lock:
+            self.skipped_partitions += len(dependencies) - len(to_build)
+        for partition_key, dep_inputs, input_fp in to_build:
             self._build_partition(
                 snapshot, producer, dep_inputs, partition_key, input_fp, output_artifacts
             )

@@ -88,3 +88,77 @@ def test_json_backend_migrates_legacy_colon_tag_keys(tmp_path):
     }))
     with pytest.raises(ValueError, match="unambiguously"):
         JsonFileBackend(str(bad))
+
+
+def _part(path: str, input_fp: int):
+    from artigraph_spark.fingerprint import Fingerprint
+    from artigraph_spark.partitions import IntField, PartitionKey
+    from artigraph_spark.storage import StoragePartition
+
+    return StoragePartition(
+        path=path,
+        partition_key=PartitionKey(fields={"n": IntField(key=input_fp)}),
+        input_fingerprint=Fingerprint.from_int(input_fp),
+        content_fingerprint=Fingerprint.from_int(100 + input_fp),
+    )
+
+
+def _child_upsert(catalog: str) -> None:
+    from artigraph_spark.backends import JsonFileBackend
+    from artigraph_spark.fingerprint import Fingerprint
+
+    b = JsonFileBackend(catalog)
+    b.write_artifact_partitions(Fingerprint.from_int(5), [_part("/d/n=3", 3)])
+    b.link_snapshot_partitions(Fingerprint.from_int(1), Fingerprint.from_int(5), [_part("/d/n=3", 3)])
+
+
+def test_json_backend_merges_across_instances_and_processes(tmp_path):
+    """Writers on one catalog file merge: a stale instance re-upserting
+    entries it never loaded leaves the file alone (it compares against the
+    reloaded file, not its own stale state), adding an entry keeps every
+    other writer's entries, and a fresh instance sees them all."""
+    import multiprocessing
+    import os
+
+    from artigraph_spark.backends import JsonFileBackend
+    from artigraph_spark.fingerprint import Fingerprint
+
+    catalog = str(tmp_path / "cat.json")
+    snap, afp = Fingerprint.from_int(1), Fingerprint.from_int(5)
+    a, b = JsonFileBackend(catalog), JsonFileBackend(catalog)  # b goes stale
+    ours = [_part("/d/n=1", 1), _part("/d/n=2", 2)]
+    a.write_snapshot(snap, "g")
+    a.write_artifact_partitions(afp, ours)
+    a.link_snapshot_partitions(snap, afp, ours)
+    a.write_tag("g", "prod", snap)
+
+    child = multiprocessing.get_context("spawn").Process(target=_child_upsert, args=(catalog,))
+    child.start()
+    child.join(60)
+    assert child.exitcode == 0
+
+    def stamp():
+        st = os.stat(catalog)
+        with open(catalog, "rb") as f:
+            return f.read(), st.st_ino, st.st_mtime_ns
+
+    before = stamp()
+    b.write_snapshot(snap, "g")
+    b.write_artifact_partitions(afp, ours)
+    b.link_snapshot_partitions(snap, afp, ours)
+    b.write_tag("g", "prod", snap, overwrite=True)
+    b.delete_partitions_by_path({"/d/n=9"})
+    assert stamp() == before
+
+    b.write_artifact_partitions(afp, [_part("/d/n=4", 4)])
+    fresh = JsonFileBackend(catalog)
+    assert fresh.has_snapshot(snap)
+    assert fresh.read_tag("g", "prod") == snap
+    assert sorted(p.path for p in fresh.read_artifact_partitions(afp)) == [
+        "/d/n=1", "/d/n=2", "/d/n=3", "/d/n=4",
+    ]
+    assert sorted(p.path for p in fresh.read_snapshot_partitions(snap, afp)) == [
+        "/d/n=1", "/d/n=2", "/d/n=3",
+    ]
+    (hit,) = fresh.read_artifact_partitions(afp, input_fingerprints={Fingerprint.from_int(2).key})
+    assert hit == _part("/d/n=2", 2)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from artigraph_spark import types as at
 from artigraph_spark.artifacts import Artifact
 from artigraph_spark.backends import JsonFileBackend, MemoryBackend
-from artigraph_spark.executors import BuildError, LocalSparkExecutor
+from artigraph_spark.executors import BuildError, LocalSparkExecutor, ThreadedSparkExecutor
 from artigraph_spark.formats import JSON
 from artigraph_spark.graphs import Graph, GraphSnapshot
 from artigraph_spark.producers import Producer
@@ -398,3 +398,137 @@ def test_literal_preset_value_cannot_be_written(tmp_root, spark):
     part = storage.generate_partition(PartitionKey.not_partitioned(), Fingerprint.empty())
     with pytest.raises(ValueError, match="already set"):
         io.write(2, at.Int64(), JSON(), part, PythonScalarView, spark, storage=storage)
+
+
+DAY_TYPE = at.Collection(
+    element=at.Struct(fields={"value": at.Int64(), "d": at.Int64()}),
+    partition_by=("d",),
+)
+DOC_TYPE = at.Struct(fields={"total": at.Int64()})
+DAYS = (1, 2, 3, 4)
+
+
+class DayTotal(Producer):
+    """Sums one day's values into a JSON document; a negative value
+    fails the build (the stand-in for a producer bug)."""
+
+    version = SemVer(major=1)
+
+    nums: Num
+
+    def build(self, nums: list) -> dict:
+        if any(r["value"] < 0 for r in nums):
+            raise ValueError("negative value")
+        return {"total": sum(r["value"] for r in nums)}
+
+    def map(self, nums: tuple) -> dict:
+        return {p.partition_key: {"nums": (p,)} for p in nums}
+
+
+class DayDouble(Producer):
+    version = SemVer(major=1)
+
+    total: Total
+
+    def build(self, total: dict) -> dict:
+        return {"total": 2 * total["total"]}
+
+    def map(self, total: tuple) -> dict:
+        return {p.partition_key: {"total": (p,)} for p in total}
+
+
+def seed_days(root: str, values: dict[int, list[int]]) -> None:
+    for d, vals in values.items():
+        dirpath = os.path.join(root, f"days/nums/nums/d={d}")
+        os.makedirs(dirpath, exist_ok=True)
+        with open(os.path.join(dirpath, "part-0.json"), "w") as f:
+            json.dump([{"value": v, "d": d} for v in vals], f)
+
+
+def make_day_graph(root: str, backend, spark) -> Graph:
+    storage = LocalFile(root=root)
+    with Graph("days", backend=backend, spark=spark) as g:
+        g.artifacts.nums = Num(type=DAY_TYPE, format=JSON(), storage=storage)
+        g.artifacts.total = DayTotal(nums=g.artifacts.nums).out(
+            Total(type=DOC_TYPE, format=JSON(), storage=storage)
+        )
+        g.artifacts.double = DayDouble(total=g.artifacts.total).out(
+            Total(type=DOC_TYPE, format=JSON(), storage=storage)
+        )
+    return g
+
+
+def _links(backend, snap: GraphSnapshot, artifact: Artifact) -> set:
+    return set(backend.read_snapshot_partitions(snap.snapshot_id, artifact.fingerprint))
+
+
+def _day_totals(backend, snap: GraphSnapshot, artifact: Artifact) -> dict[int, int]:
+    from artigraph_spark import io
+    from artigraph_spark.views import PythonScalarView
+
+    return {
+        p.partition_key.values()["d"]: io.read(
+            artifact.type, artifact.format, artifact.storage, [p], PythonScalarView, None
+        )["total"]
+        for p in _links(backend, snap, artifact)
+    }
+
+
+def test_noop_rebuild_leaves_catalog_file_alone(tmp_root, spark):
+    """A memoized rebuild writes nothing: the catalog file keeps its bytes,
+    inode and mtime, and MemoryBackend gives the same counts and links."""
+    seed_days(tmp_root, {d: [d, 10 * d] for d in DAYS})
+    catalog = os.path.join(tmp_root, "catalog.json")
+
+    def build(backend):
+        g = make_day_graph(tmp_root, backend, spark)
+        ex = LocalSparkExecutor(strict_fingerprints=True)
+        snap = g.snapshot(strict_fingerprints=True).build(ex)
+        assert _day_totals(backend, snap, g.artifacts.double) == {d: 22 * d for d in DAYS}
+        links = {a: _links(backend, snap, getattr(g.artifacts, a)) for a in ("total", "double")}
+        return snap.snapshot_id, (ex.built_partitions, ex.skipped_partitions), links
+
+    def file_state():
+        st = os.stat(catalog)
+        with open(catalog, "rb") as f:
+            return f.read(), st.st_ino, st.st_mtime_ns
+
+    on_file, in_memory = JsonFileBackend(catalog), MemoryBackend()
+    assert build(on_file)[1] == (2 * len(DAYS), 0)
+    before = file_state()
+    rebuilt = build(on_file)
+    assert file_state() == before
+    assert rebuilt[1] == (0, 2 * len(DAYS))
+    assert all(len(parts) == len(DAYS) for parts in rebuilt[2].values())
+    assert build(in_memory)[1] == (2 * len(DAYS), 0)
+    assert build(in_memory) == rebuilt
+
+
+@pytest.mark.parametrize("executor", [LocalSparkExecutor, ThreadedSparkExecutor])
+def test_memoized_partitions_link_before_a_failed_build(tmp_root, spark, executor):
+    """Memoized partitions are linked before any partition is built, so a
+    producer failing on one key still leaves the others linked to the
+    snapshot; the rerun after the fix builds exactly that key."""
+    backend = JsonFileBackend(os.path.join(tmp_root, "catalog.json"))
+    values = {d: [d, 10 * d] for d in DAYS}
+    seed_days(tmp_root, values)
+    g = make_day_graph(tmp_root, backend, spark)
+    g.snapshot(strict_fingerprints=True).build(executor(strict_fingerprints=True))
+
+    seed_days(tmp_root, {3: [-1]})
+    snap = g.snapshot(strict_fingerprints=True)
+    ex = executor(strict_fingerprints=True)
+    with pytest.raises(ValueError, match="negative value"):
+        snap.build(ex)
+    assert (ex.built_partitions, ex.skipped_partitions) == (0, len(DAYS) - 1)
+    linked = _links(backend, snap, g.artifacts.total)
+    assert sorted(p.partition_key.values()["d"] for p in linked) == [1, 2, 4]
+
+    values[3] = [7]
+    seed_days(tmp_root, {3: values[3]})
+    ex = executor(strict_fingerprints=True)
+    snap = g.snapshot(strict_fingerprints=True).build(ex)
+    assert (ex.built_partitions, ex.skipped_partitions) == (2, 2 * len(DAYS) - 2)
+    assert _day_totals(backend, snap, g.artifacts.double) == {
+        d: 2 * sum(vals) for d, vals in values.items()
+    }
