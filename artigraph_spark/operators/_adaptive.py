@@ -44,14 +44,16 @@ AQE alone above it. ``SPARK_GRAFT_LOOP_AQE=1`` never pins;
 
 Thread-safety: Spark session conf is session-global, so the scope is
 serialized under a module lock held for the WHOLE operator runtime
-(concurrent threads entering pinned operators run one at a time); a
-*different* thread planning an unrelated query concurrently on the same
-session could still observe AQE off (the same session-conf caveat as
-``sources.load``'s nanosAsLong scope). The lock is re-entrant and the
-conf toggles only at nesting depth 0, so composed pinned operators (a
-graph operator calling connected_components) neither deadlock nor
-restore the conf early. The threaded executor runs producers, not
-declared queries, so this does not arise in the build/bench paths.
+(concurrent threads entering pinned operators run one at a time; a
+bypassed, data-bound scope takes no lock and is not protected from a
+concurrent pin); a *different* thread planning an unrelated query
+concurrently on the same session could still observe AQE off (the same
+session-conf caveat as ``sources.load``'s nanosAsLong scope). The lock
+is re-entrant and the conf toggles only at nesting depth 0, so composed
+pinned operators (a graph operator calling connected_components) neither
+deadlock nor restore the conf early. The threaded executor runs
+producers, not declared queries, so this does not arise in the
+build/bench paths.
 """
 
 from __future__ import annotations
@@ -146,7 +148,7 @@ def reuse_frame(df: DataFrame) -> DataFrame:
     256 MB) this is a NO-OP — the declared plan, the bench timings and
     the oracle replay at test scale are bit-identical to the lazy
     shape. Above it the frame is cut with ``localCheckpoint(eager=
-    False)``: computed once on first action, blocks freed by the
+    False)``: computed once (timing: see below), blocks freed by the
     ContextCleaner when the result frame is dropped (the persist()
     alternative leaks CacheManager entries for lazy query frames no
     caller ever unpersists), partitioning/ordering metadata preserved
@@ -157,6 +159,13 @@ def reuse_frame(df: DataFrame) -> DataFrame:
     routes through ``operators._checkpoint`` (reliable ``checkpoint``)
     instead; iterative operators that take an explicit
     ``checkpoint_dir`` argument keep their own routing.
+
+    "Lazy" is only partly true under AQE (the session default): making
+    the cut builds the frame's RDD, which finalizes the adaptive plan
+    and so runs the frame's upstream shuffle stages when the frame is
+    DEFINED, not on its first action; only the last stage and the
+    checkpoint blocks wait for the action. With AQE off nothing runs
+    until the first action.
 
     Only hand this SUMMARY-sized frames (histograms, distinct-value
     maps): the materialization cost is the frame's own size, which for
@@ -213,6 +222,8 @@ def cut_frame(df: DataFrame) -> DataFrame:
     zero), so ``reuse_frame`` on it could never fire even though one
     materialized execution is exactly as justified as the upstream one
     (seasonal_decompose's output under stl_outliers' 3-branch fan-out).
+    Same timing as :func:`reuse_frame`: under AQE the frame's upstream
+    shuffle stages run here, when the cut is made.
     """
     reuse_dir = os.environ.get(_REUSE_DIR_ENV)
     if reuse_dir:
@@ -252,12 +263,17 @@ def pinned_parallelism(spark, frame: "DataFrame | None" = None):
     The module lock is held for the ENTIRE scope (typically a whole
     operator run): concurrent threads entering pinned operators
     serialize behind it, by design — the alternative is two threads
-    fighting over one session-global conf. The lock is re-entrant and
-    the conf toggles only at depth 0, so a pinned operator composing
-    another pinned operator is safe. Restore semantics: a conf the
-    session had explicitly set is restored to that value; a conf left
-    at its session default is restored by ``unset`` (never forced to
-    "true" — a session whose default is AQE-off stays AQE-off).
+    fighting over one session-global conf. Only a scope that pins takes
+    the lock: a bypassed scope (data-bound estimate, or
+    ``SPARK_GRAFT_LOOP_AQE=1``) yields without it, so it neither
+    serializes with other operators nor guards against a concurrent pin
+    — while another thread holds a pin, a bypassed operator plans with
+    AQE off too. The lock is re-entrant and the conf toggles only at
+    depth 0, so a pinned operator composing another pinned operator is
+    safe. Restore semantics: a conf the session had explicitly set is
+    restored to that value; a conf left at its session default is
+    restored by ``unset`` (never forced to "true" — a session whose
+    default is AQE-off stays AQE-off).
     """
     mode = os.environ.get("SPARK_GRAFT_LOOP_AQE", "")
     if mode == "1":

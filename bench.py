@@ -7,7 +7,7 @@ Each query is timed over a full execution into the JVM-side `noop` sink —
 every row is produced and consumed on executors with no driver collect and
 no Python workers in the action path (a Python `foreach` would bill ~0.25 s
 of worker spin-up per output partition to the query). Noise control: every
-query first runs once UNTIMED (absorbs session/codegen/footer-cache
+query first runs once UNTIMED (absorbs session/codegen/schema-cache
 residue — historically ~2 s billed to whichever query ran first), then the
 reported figure is the MEDIAN of 3 timed runs.
 
@@ -58,9 +58,11 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("artigraph_spark_bench")
 
-    # Warm up the JVM, codegen, parquet reader paths, and footer caches with
-    # small real reads — otherwise session startup is billed to the first
-    # timed query (~2.5 s of noise in round 1's record).
+    # Warm up the JVM, codegen and parquet reader paths with small real
+    # reads — otherwise session startup is billed to the first timed query
+    # (~2.5 s of noise in round 1's record). The reads also fill load()'s
+    # schema cache (each query's untimed first run fills it for the other
+    # tables), so timed queries never run schema inference.
     from artigraph_spark.sources import load  # noqa: E402
 
     spark.range(1000).count()
