@@ -35,40 +35,28 @@ shape, not data volume) — but the benefit side is NOT zero at every
 scale: the r15 x30 probe (docs/SCALE_PROBE_r15.json) measured pagerank
 1.5x FASTER with AQE ON once the loop's input reached 373 MB (runtime
 partition coalescing/skew handling earns the barriers when stages do
-real data work). The scope is therefore SCALE-ADAPTIVE: it pins AQE off
+real data work). The pin is therefore SCALE-ADAPTIVE: it turns AQE off
 only while the operator's estimated input is below
 ``SPARK_GRAFT_PIN_MAX_BYTES`` (default 256 MB — the dispatch-bound
 regime where the pin measured ~2x at sf0.1), and leaves the session's
-AQE alone above it. ``SPARK_GRAFT_LOOP_AQE=1`` never pins;
-``SPARK_GRAFT_LOOP_AQE=0`` always pins.
+AQE alone above it or when the estimate is unknown.
 
-Thread-safety: Spark session conf is session-global, so the scope is
-serialized under a module lock held for the WHOLE operator runtime
-(concurrent threads entering pinned operators run one at a time; a
-bypassed, data-bound scope takes no lock and is not protected from a
-concurrent pin); a *different* thread planning an unrelated query
-concurrently on the same session could still observe AQE off (the same
-session-conf caveat as ``sources.load``'s nanosAsLong scope). The lock
-is re-entrant and the conf toggles only at nesting depth 0, so composed
-pinned operators (a graph operator calling connected_components) neither
-deadlock nor restore the conf early. The threaded executor runs
-producers, not declared queries, so this does not arise in the
-build/bench paths.
+A pinned operator runs in a CLONE of the caller's session with AQE off
+(``session.child_session``) and hands its result back as a frame of the
+caller's session; the caller's conf is never written, so other threads
+on that session keep planning with their own AQE setting while a pinned
+operator runs, and concurrent pinned operators do not wait for each
+other.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-# Re-entrant: nested pinned scopes (operator composition) must not
-# deadlock. The conf is toggled only by the outermost scope (_DEPTH 0).
-_LOCK = threading.RLock()
-_DEPTH = 0
-_PREV: "str | None" = None
+from artigraph_spark.session import child_session, rebind
 
 _FLAG = "spark.sql.adaptive.enabled"
 
@@ -99,6 +87,15 @@ _REUSE_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 # not an actual size. 2^60 ≈ 1.15 exabytes — no real leaf estimate in
 # this engine's regime approaches it.
 _UNKNOWN_SIZE = 1 << 60
+
+
+def _threshold(env: str) -> int:
+    """The byte threshold ``env`` sets; the 256 MB default when it is unset
+    or malformed (a malformed env must not break queries)."""
+    try:
+        return int(os.environ.get(env, _REUSE_DEFAULT))
+    except (TypeError, ValueError):
+        return _REUSE_DEFAULT
 
 
 def estimated_input_bytes(df: DataFrame) -> int | None:
@@ -178,12 +175,8 @@ def reuse_frame_cut(df: DataFrame) -> "tuple[DataFrame, bool]":
     for callers that restructure neighbouring branches only when the
     frame is actually materialized (e.g. sourcing a min/max range frame
     from the cached histogram instead of the raw rows)."""
-    try:
-        threshold = int(os.environ.get(_REUSE_ENV, _REUSE_DEFAULT))
-    except (TypeError, ValueError):  # malformed env must not break queries
-        threshold = _REUSE_DEFAULT
     est = estimated_input_bytes(df)
-    if est is None or est < threshold:
+    if est is None or est < _threshold(_REUSE_ENV):
         return df, False
     try:
         # Already materialized (the plan is a bare LogicalRDD /
@@ -245,69 +238,40 @@ def cut_frame(df: DataFrame) -> DataFrame:
 _PIN_MAX_ENV = "SPARK_GRAFT_PIN_MAX_BYTES"
 
 
-@contextmanager
-def pinned_parallelism(spark, frame: "DataFrame | None" = None):
-    """Scope AQE off around an operator-managed eager materialization —
-    scale-adaptively: the scope only pins when the operator's estimated
-    input (``frame``'s leaf sizes) is below ``SPARK_GRAFT_PIN_MAX_BYTES``
-    (default 256 MB), i.e. when the loop is dispatch-bound and the
-    per-exchange AQE barrier is the dominant cost. Data-bound loops
-    keep the session's AQE (runtime coalescing + skew splitting won
-    1.5x at the x30 probe scale). With ``frame=None`` the scope always
-    pins (caller opted out of the estimate).
+def pinned_parallelism(fn):
+    """Decorator: run ``fn`` with AQE off when its first argument — the
+    frame it loops or joins over — estimates below
+    ``SPARK_GRAFT_PIN_MAX_BYTES`` (default 256 MB), i.e. when the loop is
+    dispatch-bound and the per-exchange AQE barrier is the dominant cost.
+    Data-bound loops keep the session's AQE (runtime coalescing + skew
+    splitting won 1.5x at the x30 probe scale), and so does a frame whose
+    estimate is unknown: without a size there is no case for the pin.
 
-    Env overrides: ``SPARK_GRAFT_LOOP_AQE=1`` never pins (cluster
-    operators who want runtime skew handling inside every loop);
-    ``SPARK_GRAFT_LOOP_AQE=0`` always pins (measurement/debug).
+    Pinned, every DataFrame argument is rebound into a clone of the
+    frame's session with AQE off — all of them, because a join plans in
+    its LEFT frame's session, so a caller-session seed frame on the left
+    would plan adaptively — and a DataFrame result is rebound to the
+    frame's own session. Everything ``fn`` builds, persists or
+    checkpoints plans in the clone, which matters because a persist
+    compiles its plan at cacheQuery and a lazy checkpoint freezes its
+    plan when it is declared. A pinned operator calling another pinned
+    operator passes frames of the clone, so the inner one runs AQE-off
+    too."""
 
-    The module lock is held for the ENTIRE scope (typically a whole
-    operator run): concurrent threads entering pinned operators
-    serialize behind it, by design — the alternative is two threads
-    fighting over one session-global conf. Only a scope that pins takes
-    the lock: a bypassed scope (data-bound estimate, or
-    ``SPARK_GRAFT_LOOP_AQE=1``) yields without it, so it neither
-    serializes with other operators nor guards against a concurrent pin
-    — while another thread holds a pin, a bypassed operator plans with
-    AQE off too. The lock is re-entrant and the conf toggles only at
-    depth 0, so a pinned operator composing another pinned operator is
-    safe. Restore semantics: a conf the session had explicitly set is
-    restored to that value; a conf left at its session default is
-    restored by ``unset`` (never forced to "true" — a session whose
-    default is AQE-off stays AQE-off).
-    """
-    mode = os.environ.get("SPARK_GRAFT_LOOP_AQE", "")
-    if mode == "1":
-        yield
-        return
-    if mode != "0" and frame is not None:
-        try:
-            threshold = int(os.environ.get(_PIN_MAX_ENV, _REUSE_DEFAULT))
-        except (TypeError, ValueError):  # malformed env must not break queries
-            threshold = _REUSE_DEFAULT
+    @functools.wraps(fn)
+    def pinned(frame: DataFrame, *args, **kwargs):
         est = estimated_input_bytes(frame)
-        if est is not None and est >= threshold:
-            # Data-bound loop: AQE's runtime re-planning earns its
-            # barriers — leave the session conf alone entirely.
-            yield
-            return
-    global _DEPTH, _PREV
-    with _LOCK:
-        if _DEPTH == 0:
-            try:
-                # None <=> not explicitly set on this session (the
-                # default-bypassing two-arg get) — restored via unset.
-                _PREV = spark.conf.get(_FLAG, None)
-            except Exception:  # noqa: BLE001 — treat as unset
-                _PREV = None
-            spark.conf.set(_FLAG, "false")
-        _DEPTH += 1
-        try:
-            yield
-        finally:
-            _DEPTH -= 1
-            if _DEPTH == 0:
-                prev, _PREV = _PREV, None
-                if prev is None:
-                    spark.conf.unset(_FLAG)
-                else:
-                    spark.conf.set(_FLAG, prev)
+        if est is None or est >= _threshold(_PIN_MAX_ENV):
+            return fn(frame, *args, **kwargs)
+        child = child_session(frame.sparkSession, {_FLAG: "false"})
+
+        def to_child(v):
+            return rebind(v, child) if isinstance(v, DataFrame) else v
+
+        out = fn(
+            *map(to_child, (frame, *args)),
+            **{k: to_child(v) for k, v in kwargs.items()},
+        )
+        return rebind(out, frame.sparkSession) if isinstance(out, DataFrame) else out
+
+    return pinned

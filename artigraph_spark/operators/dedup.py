@@ -19,6 +19,7 @@ import dataclasses
 
 from pyspark.sql import Column, DataFrame, Window
 
+from artigraph_spark.operators._adaptive import pinned_parallelism
 from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 from pyspark.sql import functions as F
 
@@ -545,6 +546,7 @@ def ngram_jaccard_pairs(
     )
 
 
+@pinned_parallelism
 def connected_components(
     edges: DataFrame,
     *,
@@ -585,26 +587,23 @@ def connected_components(
     # join, but each round's job replayed its subtree (scan + union) from
     # scratch — O(log diameter) re-executions of the upstream pair
     # pipeline. Persist it for the loop and release in the finally (the
-    # pagerank e-frame convention). The whole loop also runs under the
-    # pinned-AQE scope (operators._adaptive): per-round exchange shapes
+    # pagerank e-frame convention). The whole loop also runs AQE-pinned
+    # (@pinned_parallelism, operators._adaptive): per-round exchange shapes
     # are fixed and node-keyed, the per-round lazy checkpoint freezes its
     # physical plan at declaration (so the scope must cover construction),
     # and AQE's per-exchange barrier was costing several driver
     # round-trips per round for plans that never change between rounds.
     from pyspark import StorageLevel
 
-    from artigraph_spark.operators._adaptive import pinned_parallelism
-
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        sym = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            return _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir)
-        finally:
-            sym.unpersist()
+    sym = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        return _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir)
+    finally:
+        sym.unpersist()
 
 
 def _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir):

@@ -24,6 +24,7 @@ from artigraph_spark.operators._adaptive import pinned_parallelism
 from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 
 
+@pinned_parallelism
 def pagerank(
     edges: DataFrame,
     src: str,
@@ -83,95 +84,95 @@ def pagerank(
     from pyspark import StorageLevel
 
     # r14: the WHOLE loop (construction + materialization) runs with AQE
-    # scoped OFF (operators._adaptive): the loop's exchange shapes are
+    # pinned OFF (@pinned_parallelism, operators._adaptive): the loop's
+    # exchange shapes are
     # fixed and node-keyed, the edge frame's partitioning is pinned by the
     # persist, and AQE's per-exchange re-planning barrier costs 3 driver
     # round-trips per iteration for plans that never change between
     # rounds — measured 24.5 s vs 59 s same-minute at sf0.1 on a noisy
-    # host (29 jobs/75 stages -> 7 jobs/27 stages). r15: the scope is
-    # SCALE-ADAPTIVE — it pins only while frame=edges estimates below
+    # host (29 jobs/75 stages -> 7 jobs/27 stages). r15: the pin is
+    # SCALE-ADAPTIVE — it applies only while edges estimates below
     # SPARK_GRAFT_PIN_MAX_BYTES; at the x30 probe scale AQE-ON measured
     # 1.5x faster (35.3 vs 52.8 s, docs/SCALE_PROBE_r15.json), so
     # data-bound loops keep runtime coalescing/skew splitting and only
-    # dispatch-bound loops pay zero barriers. The scope must cover
-    # plan CONSTRUCTION too, not just the final action: the mid-loop
-    # lazy localCheckpoint freezes its physical plan the moment it is
-    # declared, so a cut planned outside the scope would embed (and
-    # later execute) an AQE plan regardless of the conf at action time.
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        e = (
-            edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-            .join(deg, "__s")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    # dispatch-bound loops pay zero barriers. The pin must cover plan
+    # CONSTRUCTION too, not just the final action: the mid-loop lazy
+    # localCheckpoint freezes its physical plan the moment it is
+    # declared, so a cut planned with AQE on would embed (and later
+    # execute) an AQE plan whatever session runs the final action.
+    e = (
+        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+        .join(deg, "__s")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    n_df = nodes.agg(F.count(F.lit(1)).alias("__n"))
+    base = (
+        nodes.crossJoin(F.broadcast(n_df))
+        .select(
+            "node",
+            F.floor(F.lit(float(one)) / F.col("__n")).alias("__init"),
+            F.floor(F.lit(base_num) / F.col("__n")).alias("__base"),
         )
-        n_df = nodes.agg(F.count(F.lit(1)).alias("__n"))
-        base = (
-            nodes.crossJoin(F.broadcast(n_df))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    ranks = base.select("node", F.col("__init").alias("r"))
+    for it in range(iterations):
+        contrib = (
+            e.join(ranks.withColumnRenamed("node", "__s"), "__s")
+            .select(
+                "__d", F.floor(F.col("r") / F.col("__deg")).alias("__share")
+            )
+            .groupBy("__d")
+            .agg(F.sum("__share").alias("__in"))
+        )
+        ranks = (
+            base.join(contrib.withColumnRenamed("__d", "node"), "node", "left")
             .select(
                 "node",
-                F.floor(F.lit(float(one)) / F.col("__n")).alias("__init"),
-                F.floor(F.lit(base_num) / F.col("__n")).alias("__base"),
+                (
+                    F.col("__base")
+                    + F.floor(
+                        F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0))
+                    )
+                ).alias("r"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        ranks = base.select("node", F.col("__init").alias("r"))
-        for it in range(iterations):
-            contrib = (
-                e.join(ranks.withColumnRenamed("node", "__s"), "__s")
-                .select(
-                    "__d", F.floor(F.col("r") / F.col("__deg")).alias("__share")
-                )
-                .groupBy("__d")
-                .agg(F.sum("__share").alias("__in"))
+        if (it + 1) % 4 == 0 and it + 1 < iterations:
+            # Mid-loop lineage cut every 4 rounds, ALWAYS (r9): even
+            # though ranks is consumed once per round (plan nodes grow
+            # linearly, not 4^k), Catalyst's analysis/optimization cost
+            # over the unrolled 8-deep loop plan grows superlinearly —
+            # measured 1/2/4/8 iterations at 3.4/3.4/6.5/19.7 s on the
+            # sf0.1 co-purchase graph, i.e. the last 4 rounds cost 3x
+            # the first 4 under one unrolled plan. The cut caps the
+            # optimizer's working plan at 4 rounds EITHER WAY (the
+            # Catalyst plan truncates to a LogicalRDD at cut time, not
+            # at materialization), so in local-blocks mode it is LAZY —
+            # the next action materializes it, saving one node-count-
+            # sized job per cut. With checkpoint_dir the cut stays
+            # EAGER: it is the mid-loop fault barrier, and a deferred
+            # reliable checkpoint would leave nothing durable until the
+            # final action (an executor loss would replay the whole
+            # loop — the exact failure mode reliable mode buys off).
+            ranks = _ckpt(
+                ranks, checkpoint_dir, eager=checkpoint_dir is not None
             )
-            ranks = (
-                base.join(contrib.withColumnRenamed("__d", "node"), "node", "left")
-                .select(
-                    "node",
-                    (
-                        F.col("__base")
-                        + F.floor(
-                            F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0))
-                        )
-                    ).alias("r"),
-                )
-            )
-            if (it + 1) % 4 == 0 and it + 1 < iterations:
-                # Mid-loop lineage cut every 4 rounds, ALWAYS (r9): even
-                # though ranks is consumed once per round (plan nodes grow
-                # linearly, not 4^k), Catalyst's analysis/optimization cost
-                # over the unrolled 8-deep loop plan grows superlinearly —
-                # measured 1/2/4/8 iterations at 3.4/3.4/6.5/19.7 s on the
-                # sf0.1 co-purchase graph, i.e. the last 4 rounds cost 3x
-                # the first 4 under one unrolled plan. The cut caps the
-                # optimizer's working plan at 4 rounds EITHER WAY (the
-                # Catalyst plan truncates to a LogicalRDD at cut time, not
-                # at materialization), so in local-blocks mode it is LAZY —
-                # the next action materializes it, saving one node-count-
-                # sized job per cut. With checkpoint_dir the cut stays
-                # EAGER: it is the mid-loop fault barrier, and a deferred
-                # reliable checkpoint would leave nothing durable until the
-                # final action (an executor loss would replay the whole
-                # loop — the exact failure mode reliable mode buys off).
-                ranks = _ckpt(
-                    ranks, checkpoint_dir, eager=checkpoint_dir is not None
-                )
-        # Materialize the slim (node, rank) result, then RELEASE the two
-        # persisted loop frames — otherwise each pagerank() call leaks
-        # disk-backed cache blocks the caller has no handle to unpersist.
-        # localCheckpoint follows the connected_components precedent: the
-        # result is node-count-sized, its blocks are freed by the
-        # ContextCleaner once the returned frame is garbage-collected, and a
-        # lineage replay would re-run the whole loop anyway. The finally
-        # releases the frames even when the eager checkpoint job fails — a
-        # failed call must not leak cache blocks either.
-        try:
-            return _ckpt(
-                ranks.select("node", F.col("r").alias("rank_fx")), checkpoint_dir
-            )
-        finally:
-            e.unpersist()
-            base.unpersist()
+    # Materialize the slim (node, rank) result, then RELEASE the two
+    # persisted loop frames — otherwise each pagerank() call leaks
+    # disk-backed cache blocks the caller has no handle to unpersist.
+    # localCheckpoint follows the connected_components precedent: the
+    # result is node-count-sized, its blocks are freed by the
+    # ContextCleaner once the returned frame is garbage-collected, and a
+    # lineage replay would re-run the whole loop anyway. The finally
+    # releases the frames even when the eager checkpoint job fails — a
+    # failed call must not leak cache blocks either.
+    try:
+        return _ckpt(
+            ranks.select("node", F.col("r").alias("rank_fx")), checkpoint_dir
+        )
+    finally:
+        e.unpersist()
+        base.unpersist()
 
 
 def triangle_counts(
@@ -213,7 +214,7 @@ def triangle_counts(
     from pyspark import StorageLevel
 
     # r14: the whole pipeline (persists included) is built and
-    # materialized with AQE scoped OFF (operators._adaptive): the wedge
+    # materialized with AQE pinned OFF (operators._adaptive): the wedge
     # pipeline's skew bound is algorithmic (degree orientation caps
     # out-degree at O(sqrt E)), so AQE's skew splitting is redundant
     # while its per-exchange barrier serializes the deep join pipeline —
@@ -224,12 +225,12 @@ def triangle_counts(
     # final action (the pagerank mid-cut lesson). With
     # ``materialize=False`` nothing compiles inside the scope and the
     # caller's session conf governs the returned lazy plan as before.
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        return _triangle_counts_impl(
-            edges, src, dst, materialize, checkpoint_dir, StorageLevel
-        )
+    return _triangle_counts_impl(
+        edges, src, dst, materialize, checkpoint_dir, StorageLevel
+    )
 
 
+@pinned_parallelism
 def _triangle_counts_impl(edges, src, dst, materialize, checkpoint_dir, StorageLevel):
     e = (
         edges.select(
@@ -284,7 +285,7 @@ def _triangle_counts_impl(edges, src, dst, materialize, checkpoint_dir, StorageL
         return counts
     # finally-guarded like pagerank: a failed checkpoint job must not
     # leak the two persisted frames the caller has no handle to.
-    # (AQE scope inherited from the triangle_counts wrapper.)
+    # (AQE pinned by this function's @pinned_parallelism.)
     try:
         return _ckpt(counts, checkpoint_dir)
     finally:
@@ -326,10 +327,10 @@ def support_pairs(
     # serializes the short pipeline; measured 2.0 s -> 1.5 s at sf0.1.
     # The persist must sit inside the scope (caching compiles its plan
     # at cacheQuery time — the pagerank mid-cut lesson).
-    with pinned_parallelism(df.sparkSession, frame=df):
-        return _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F)
+    return _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F)
 
 
+@pinned_parallelism
 def _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F):
     # The distinct (basket, item) frame feeds four plan branches (both
     # pair sides, the item counts, the basket total): persist it for the
@@ -389,7 +390,7 @@ def _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F):
         .orderBy(F.col("pair_cnt").desc(), F.col("item_a"), F.col("item_b"))
         .limit(top_k)
     )
-    # (AQE scope inherited from the support_pairs wrapper.)
+    # (AQE pinned by this function's @pinned_parallelism.)
     try:
         return out.localCheckpoint(eager=True)
     finally:
@@ -433,12 +434,12 @@ def bfs_hops(
     # pinned-AQE frontier loop (operators._adaptive): fixed node-keyed
     # exchange shapes every round, per-round cuts freeze plans at
     # declaration, persist compiles at cacheQuery — the pagerank scope
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        return _bfs_hops_impl(
-            edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLevel
-        )
+    return _bfs_hops_impl(
+        edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLevel
+    )
 
 
+@pinned_parallelism
 def _bfs_hops_impl(edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLevel):
     seed_col = seeds.columns[0]
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).persist(
@@ -609,12 +610,12 @@ def hits(
     # pinned-AQE loop scope (operators._adaptive): per-iteration eager
     # cuts plan inside the loop, the persist compiles at cacheQuery —
     # both must sit inside the scope (the pagerank mid-cut lesson)
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        return _hits_impl(
-            edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLevel
-        )
+    return _hits_impl(
+        edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLevel
+    )
 
 
+@pinned_parallelism
 def _hits_impl(edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLevel):
     e = (
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
@@ -712,12 +713,12 @@ def k_core(
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     # pinned-AQE peel loop (operators._adaptive): per-round eager cuts
     # and counts over fixed node-keyed exchange shapes
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        return _k_core_impl(
-            edges, src, dst, k, max_rounds, until_convergence, checkpoint_dir
-        )
+    return _k_core_impl(
+        edges, src, dst, k, max_rounds, until_convergence, checkpoint_dir
+    )
 
 
+@pinned_parallelism
 def _k_core_impl(edges, src, dst, k, max_rounds, until_convergence, checkpoint_dir):
     pe = (
         edges.select(
@@ -808,12 +809,12 @@ def association_rules(
 
     # same pinned-AQE scope as support_pairs (identical pair join); the
     # persist must compile inside the scope (the pagerank mid-cut lesson)
-    with pinned_parallelism(df.sparkSession, frame=df):
-        return _association_rules_impl(
-            df, basket_col, item_col, min_pair_cnt, top_k, StorageLevel, F
-        )
+    return _association_rules_impl(
+        df, basket_col, item_col, min_pair_cnt, top_k, StorageLevel, F
+    )
 
 
+@pinned_parallelism
 def _association_rules_impl(
     df, basket_col, item_col, min_pair_cnt, top_k, StorageLevel, F
 ):
@@ -885,7 +886,7 @@ def _association_rules_impl(
         F.col("antecedent"),
         F.col("consequent"),
     ).limit(top_k)
-    # (AQE scope inherited from the association_rules wrapper.)
+    # (AQE pinned by this function's @pinned_parallelism.)
     try:
         return ranked.localCheckpoint(eager=True)
     finally:
@@ -931,12 +932,12 @@ def shortest_paths_bounded(
         raise ValueError(f"max_hops must be non-negative, got {max_hops}")
     # pinned-AQE relaxation loop (operators._adaptive): per-round eager
     # cuts over fixed node-keyed exchange shapes (the bfs_hops scope)
-    with pinned_parallelism(edges.sparkSession, frame=edges):
-        return _shortest_paths_impl(
-            edges, src, dst, weight, seeds, max_hops, checkpoint_dir
-        )
+    return _shortest_paths_impl(
+        edges, src, dst, weight, seeds, max_hops, checkpoint_dir
+    )
 
 
+@pinned_parallelism
 def _shortest_paths_impl(edges, src, dst, weight, seeds, max_hops, checkpoint_dir):
     # Weights must be non-null, non-NaN, non-negative, and integral —
     # each violation gets its own branch with an accurate message (a

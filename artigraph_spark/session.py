@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -45,3 +45,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def child_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``conf`` applied on top, for work that needs
+    a different setting without writing the caller's conf (which every other
+    thread on that session would see).
+
+    ``cloneSession`` keeps the caller's runtime-set confs (a session timeZone
+    set after start-up survives), UDFs and temp views; ``newSession`` would
+    start from the startup conf and drop them. The clone shares the caller's
+    SparkContext, cache and catalog. Cloning costs a few milliseconds."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in conf.items():
+        child.conf.set(key, value)
+    return child
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a frame of ``session``: planned and run under
+    that session's conf from here on. Frames already materialized (cached,
+    checkpointed) keep the physical plan they were materialized with."""
+    jvm = session.sparkContext._jvm
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.queryExecution().logical()
+    )
+    return DataFrame(jdf, session)

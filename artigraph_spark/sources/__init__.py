@@ -8,22 +8,20 @@ or near-fixed cardinality in TPC-H-style scaling).
 
 Each source's schema is resolved once per file version: Spark infers a
 parquet schema by running a job, even for one file, so ``load`` keeps the
-resolved schema and later loads of the same version pass it to the
-reader, which then runs no job.
+resolved schema and passes it to the reader; later loads of the same
+version run no job.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Serializes the nanosAsLong set→resolve→restore window in load("events")
-# against concurrent loads (the threaded executor may load in parallel).
-_NANOS_LOCK = threading.Lock()
+from artigraph_spark.session import child_session
+
 _NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
 
 # Session confs that change how parquet types map to Spark types, and so
@@ -74,12 +72,10 @@ def _version(path: str) -> tuple:
     )
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Oracle comparability must not depend on the caller's session config:
-    # timestamp formatting/epoch functions are session-timezone-sensitive.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+def file_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The schema :func:`load` reads source ``name``'s file with — before the
+    ``events`` ts conversion — resolved once per file version and
+    type-mapping conf."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     confs = _TYPE_CONFS if name == "events" else _TYPE_CONFS + (_NANOS_FLAG,)
     try:
@@ -87,42 +83,37 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except OSError:
         key = None  # not a local path: infer on every call
     schema = _SCHEMAS.get(key)
-    if schema is not None:
-        df = spark.read.schema(schema).parquet(path)
-    elif name == "events":
-        # The fixture contract types events.ts as parquet TIMESTAMP(NANOS)
-        # (FIXTURES.md), which Spark has no native type for: read the raw
-        # int64 nanos (converted below).
-        # The legacy flag is scoped to THIS read (set → resolve → restore,
-        # under a lock against concurrent loads): the schema is captured at
-        # resolution, so later execution doesn't need the flag, and leaving
-        # it set would silently retype nanosecond columns in every
-        # unrelated parquet read for the rest of the session. A cache hit
-        # skips the whole scope: the stored schema already types ts long.
-        with _NANOS_LOCK:
-            # None <=> not set on this session: restored by unset, so the
-            # flag the other tables' cache keys read does not change.
-            prev = spark.conf.get(_NANOS_FLAG, None)
-            spark.conf.set(_NANOS_FLAG, "true")
-            try:
-                df = spark.read.parquet(path)
-                schema = df.schema  # resolve while the flag is in effect
-            finally:
-                if prev is None:
-                    spark.conf.unset(_NANOS_FLAG)
-                else:
-                    spark.conf.set(_NANOS_FLAG, prev)
-    else:
-        # Plain scan, no up-front repartition: an injected "parallelism
-        # floor" repartition was measured 2.5x SLOWER end-to-end at
-        # sf0.01/sf0.1 (the extra full-table exchange dwarfs any
-        # scan-parallelism gain on local fixtures), and at 100 TB real
-        # inputs have thousands of splittable row groups so the floor
-        # would never fire. Let Catalyst/AQE own parallelism.
-        df = spark.read.parquet(path)
-        schema = df.schema
-    if key is not None:
-        _SCHEMAS[key] = schema
+    if schema is None:
+        # The fixture contract allows events.ts as parquet TIMESTAMP(NANOS)
+        # (FIXTURES.md), which Spark has no native type for: infer it as the
+        # raw int64 nanos (load converts them). The legacy flag is set on a
+        # clone of the caller's session, for this inference only: the
+        # schema carries the long type from here on, and setting the flag
+        # on the caller's session would retype nanosecond columns in every
+        # other parquet read on it, in every thread.
+        infer = spark
+        if name == "events":
+            infer = child_session(spark, {_NANOS_FLAG: "true"})
+        schema = infer.read.parquet(path).schema
+        if key is not None:
+            _SCHEMAS[key] = schema
+    return schema
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    # Oracle comparability must not depend on the caller's session config:
+    # timestamp formatting/epoch functions are session-timezone-sensitive.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    schema = file_schema(spark, sf_dir, name)
+    # Plain scan, no up-front repartition: an injected "parallelism
+    # floor" repartition was measured 2.5x SLOWER end-to-end at
+    # sf0.01/sf0.1 (the extra full-table exchange dwarfs any
+    # scan-parallelism gain on local fixtures), and at 100 TB real
+    # inputs have thousands of splittable row groups so the floor
+    # would never fire. Let Catalyst/AQE own parallelism.
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
         # Truncate the raw nanos to microsecond TimestampType (documented-
         # lossy ns bridge, SURVEY §1.2 Timestamp). Derived copies written

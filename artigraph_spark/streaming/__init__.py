@@ -49,31 +49,18 @@ def read_stream(
     if name == "events":
         from pyspark.sql import types as T
 
-        from artigraph_spark.sources import _NANOS_LOCK
+        from artigraph_spark.sources import file_schema
 
-        # Same scoped set→resolve→restore as sources.load: the legacy flag
-        # must not leak into the session and retype unrelated parquet reads.
-        flag = "spark.sql.legacy.parquet.nanosAsLong"
-        with _NANOS_LOCK:
-            try:
-                prev = spark.conf.get(flag)
-            except Exception:
-                prev = None
-            spark.conf.set(flag, "true")
-            try:
-                raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-                raw.schema
-                stream = reader.schema(raw.schema).parquet(sf_dir)
-            finally:
-                if prev is None:
-                    spark.conf.unset(flag)
-                else:
-                    spark.conf.set(flag, prev)
+        # The file's own schema as sources.load read it (ts as raw int64
+        # nanos for a TIMESTAMP(NANOS) file); the batch schema above already
+        # carries the converted ts.
+        raw = file_schema(spark, sf_dir, name)
+        stream = reader.schema(raw).parquet(sf_dir)
         # Same guard as sources.load: only bridge when ts actually reads as
         # int64 nanos — fixtures written with µs timestamps stream as-is.
-        if isinstance(raw.schema["ts"].dataType, T.LongType):
+        if isinstance(raw["ts"].dataType, T.LongType):
             stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
+        elif isinstance(raw["ts"].dataType, T.TimestampNTZType):
             # Watermarks require TIMESTAMP (ltz). Session tz is pinned to UTC
             # (sources.load), so this cast preserves the wall-clock instant
             # and keeps stream/batch parity exact.

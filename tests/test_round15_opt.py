@@ -1,13 +1,19 @@
 """Round-15 optimization internals: reliable-checkpoint routing for the
 scale-adaptive reuse cut (``SPARK_GRAFT_REUSE_DIR``), hardened env
-parsing, the typed bare-leaf guard, and re-entrant/unset-restoring
-``pinned_parallelism`` — results must be identical on every path."""
+parsing, the typed bare-leaf guard, and the ``pinned_parallelism``
+decorator, which runs pinned work in a cloned session and never writes
+the caller's conf — results must be identical on every path."""
 
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
+
+from artigraph_spark.operators._adaptive import pinned_parallelism
 
 _FLAG = "spark.sql.adaptive.enabled"
 
@@ -79,42 +85,106 @@ def test_already_cut_leaf_reports_cut_without_recut(spark, monkeypatch):
     assert fired and out is pre
 
 
-def test_pinned_parallelism_nested_scopes(spark):
-    from artigraph_spark.operators._adaptive import pinned_parallelism
+@pinned_parallelism
+def _aqe_seen(df, *frames):
+    """The AQE flag of the session each frame argument runs in."""
+    return [f.sparkSession.conf.get(_FLAG) for f in (df, *frames)]
+
+
+def _parquet_frame(spark, tmp_path):
+    # parquet-backed: the estimate comes from real file-length stats (a
+    # driver-local relation counts as zero by design)
+    path = str(tmp_path / "pin.parquet")
+    _fixture(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_pinned_parallelism_nested_scopes(spark, tmp_path):
+    """A pinned operator calling another pinned operator: the inner one
+    also runs AQE-off, and the caller's session is never touched."""
+    df = _parquet_frame(spark, tmp_path)
+
+    @pinned_parallelism
+    def outer(df):
+        return [df.sparkSession.conf.get(_FLAG)] + _aqe_seen(df)
 
     spark.conf.set(_FLAG, "true")
     try:
-        with pinned_parallelism(spark):
-            assert spark.conf.get(_FLAG) == "false"
-            with pinned_parallelism(spark):  # re-entrant: no deadlock
-                assert spark.conf.get(_FLAG) == "false"
-            # inner exit must NOT restore early
-            assert spark.conf.get(_FLAG) == "false"
+        assert outer(df) == ["false", "false"]
         assert spark.conf.get(_FLAG) == "true"
     finally:
         spark.conf.unset(_FLAG)
 
 
-def test_pinned_parallelism_restores_by_unset(spark):
-    """A session that never explicitly set AQE gets its conf key back to
-    UNSET (session default), never forced to a literal 'true'."""
-    from artigraph_spark.operators._adaptive import pinned_parallelism
+@pytest.mark.parametrize("before", [None, "true", "false"])
+def test_pinned_parallelism_leaves_caller_conf_alone(spark, tmp_path, before):
+    """The caller's AQE flag reads exactly as before after a pinned call —
+    unset stays unset, an explicit value stays — also when the call raises."""
+    df = _parquet_frame(spark, tmp_path)
 
-    spark.conf.unset(_FLAG)
-    assert spark.conf.get(_FLAG, None) is None
-    with pinned_parallelism(spark):
-        assert spark.conf.get(_FLAG) == "false"
-    assert spark.conf.get(_FLAG, None) is None
+    @pinned_parallelism
+    def fails(df):
+        assert df.sparkSession.conf.get(_FLAG) == "false"
+        raise RuntimeError("boom")
 
-
-def test_pinned_parallelism_restores_explicit_value(spark):
-    from artigraph_spark.operators._adaptive import pinned_parallelism
-
-    spark.conf.set(_FLAG, "false")
+    if before is None:
+        spark.conf.unset(_FLAG)
+    else:
+        spark.conf.set(_FLAG, before)
     try:
-        with pinned_parallelism(spark):
-            assert spark.conf.get(_FLAG) == "false"
-        assert spark.conf.get(_FLAG, None) == "false"
+        assert _aqe_seen(df) == ["false"]
+        assert spark.conf.get(_FLAG, None) == before
+        with pytest.raises(RuntimeError, match="boom"):
+            fails(df)
+        assert spark.conf.get(_FLAG, None) == before
+    finally:
+        spark.conf.unset(_FLAG)
+
+
+def test_pinned_parallelism_unknown_estimate_does_not_pin(spark, monkeypatch, tmp_path):
+    from artigraph_spark.operators import _adaptive
+
+    df = _parquet_frame(spark, tmp_path)
+    monkeypatch.setattr(_adaptive, "estimated_input_bytes", lambda df: None)
+    spark.conf.set(_FLAG, "true")
+    try:
+        assert _aqe_seen(df) == ["true"]
+    finally:
+        spark.conf.unset(_FLAG)
+
+
+def test_pinned_operators_run_concurrently_with_adaptive_query(spark, tmp_path):
+    """Two pinned operators and one query on the caller's session, all
+    planning at the same time in three threads: each pinned one plans
+    without AQE, the caller's query plans adaptively, and the results
+    match a sequential run."""
+    df = _parquet_frame(spark, tmp_path)
+    barrier = threading.Barrier(3)
+
+    def shape(frame):
+        plan = frame._jdf.queryExecution().executedPlan()
+        return plan.getClass().getSimpleName(), sorted(map(tuple, frame.collect()))
+
+    @pinned_parallelism
+    def pinned_op(df):
+        barrier.wait(timeout=60)  # both pinned calls are in flight here
+        return shape(df.groupBy("g").agg(F.sum("v")))
+
+    def caller_query():
+        barrier.wait(timeout=60)
+        return shape(df.groupBy("g").agg(F.sum("v")))
+
+    spark.conf.set(_FLAG, "true")
+    try:
+        with ThreadPoolExecutor(3) as pool:
+            pinned = [pool.submit(pinned_op, df) for _ in range(2)]
+            adaptive = pool.submit(caller_query)
+            results = [f.result(timeout=120) for f in (*pinned, adaptive)]
+        rows = sorted(map(tuple, df.groupBy("g").agg(F.sum("v")).collect()))
+        for plan, got in results[:2]:
+            assert plan != "AdaptiveSparkPlanExec" and got == rows
+        assert results[2] == ("AdaptiveSparkPlanExec", rows)
+        assert spark.conf.get(_FLAG) == "true"
     finally:
         spark.conf.unset(_FLAG)
 
@@ -181,37 +251,28 @@ def test_seasonal_reuse_output_parity(spark, monkeypatch):
 def test_pinned_parallelism_scale_adaptive(spark, monkeypatch, tmp_path):
     """The AQE pin fires only while the loop's estimated input is below
     SPARK_GRAFT_PIN_MAX_BYTES; data-bound loops keep the session's AQE
-    (the r15 x30 measurement); LOOP_AQE=0/1 force either mode."""
-    from artigraph_spark.operators._adaptive import pinned_parallelism
-
-    # parquet-backed: the estimate comes from real file-length stats (a
-    # driver-local relation counts as zero by design)
-    path = str(tmp_path / "pin.parquet")
-    _fixture(spark).write.parquet(path)
-    df = spark.read.parquet(path)
+    (the r15 x30 measurement). Every frame argument runs in the pinned
+    session, and a frame result comes back on the caller's."""
+    df = _parquet_frame(spark, tmp_path)
+    seeds = _fixture(spark)  # a second frame: it must be pinned too
     spark.conf.set(_FLAG, "true")
     try:
-        monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
         # below threshold (default 256 MB): pinned
-        with pinned_parallelism(spark, frame=df):
-            assert spark.conf.get(_FLAG) == "false"
+        monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES", raising=False)
+        assert _aqe_seen(df, seeds) == ["false", "false"]
+        # malformed threshold: the default, so pinned
+        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "not-a-number")
+        assert _aqe_seen(df) == ["false"]
         # above threshold (forced to 1 byte): NOT pinned
         monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "1")
-        with pinned_parallelism(spark, frame=df):
-            assert spark.conf.get(_FLAG) == "true"
-        # LOOP_AQE=0 pins at any scale
-        monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "0")
-        with pinned_parallelism(spark, frame=df):
-            assert spark.conf.get(_FLAG) == "false"
-        # LOOP_AQE=1 never pins
-        monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "1")
-        monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES", raising=False)
-        with pinned_parallelism(spark, frame=df):
-            assert spark.conf.get(_FLAG) == "true"
-        # no frame: always pinned (caller opted out of the estimate)
-        monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
-        with pinned_parallelism(spark):
-            assert spark.conf.get(_FLAG) == "false"
+        assert _aqe_seen(df, seeds) == ["true", "true"]
+        # a threshold of 0 never pins
+        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "0")
+        assert _aqe_seen(df) == ["true"]
+        monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES")
+        out = pinned_parallelism(lambda d: d.groupBy("g").count())(df)
+        assert out.sparkSession is spark
+        assert sorted(map(tuple, out.collect())) == [("a", 5), ("b", 5)]
         assert spark.conf.get(_FLAG) == "true"
     finally:
         spark.conf.unset(_FLAG)

@@ -6,8 +6,8 @@ sf0.1 lineitem (≈340 MB of parquet, ABOVE the 256 MB reuse threshold):
    forcibly disabled (``SPARK_GRAFT_REUSE_MIN_BYTES`` huge), paired
    interleaved runs in one session, plus result parity between paths.
 2. The pinned-AQE graph loop choice — pagerank_copurchase timed with
-   the default AQE-off scope vs ``SPARK_GRAFT_LOOP_AQE=1``, same
-   protocol, plus result parity.
+   the AQE pin forced on (``SPARK_GRAFT_PIN_MAX_BYTES`` huge) vs off
+   (``SPARK_GRAFT_PIN_MAX_BYTES=0``), same protocol, plus result parity.
 3. A skew census of pagerank's contribution-shuffle key (the in-degree
    distribution of the symmetrized co-purchase graph) — max/p999/median
    degree and the max hash-partition share at 200 partitions. Caveat
@@ -170,16 +170,14 @@ def main() -> None:
 
     # --- 2. pinned-AQE loop A/B ----------------------------------------
     fn = qs["pagerank_copurchase"]
-    os.environ.pop("SPARK_GRAFT_LOOP_AQE", None)
+    pin = "SPARK_GRAFT_PIN_MAX_BYTES"
+    os.environ[pin] = HUGE
     run_once(spark, fn, fx)  # warm
-    off_med, on_med, off_all, on_all = paired_ab(
-        spark, fn, fx, "SPARK_GRAFT_LOOP_AQE", None, "1"
-    )
-    os.environ.pop("SPARK_GRAFT_LOOP_AQE", None)
+    off_med, on_med, off_all, on_all = paired_ab(spark, fn, fx, pin, HUGE, "0")
     h_off = result_hash(fn(spark, fx))
-    os.environ["SPARK_GRAFT_LOOP_AQE"] = "1"
+    os.environ[pin] = "0"
     h_on = result_hash(fn(spark, fx))
-    os.environ.pop("SPARK_GRAFT_LOOP_AQE", None)
+    os.environ.pop(pin, None)
     report["pagerank_copurchase"] = {
         "aqe_off_sec": off_med,
         "aqe_on_sec": on_med,
