@@ -98,6 +98,19 @@ def _threshold(env: str) -> int:
         return _REUSE_DEFAULT
 
 
+def _leaf_sizes(df: DataFrame) -> "list[int] | None":
+    """The Catalyst size estimate of each LEAF relation of ``df``, or None
+    when the JVM-side walk fails (never raises into an operator)."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return [
+            int(str(leaves.apply(i).stats().sizeInBytes()))
+            for i in range(leaves.size())
+        ]
+    except Exception:  # noqa: BLE001 — estimate is advisory only
+        return None
+
+
 def estimated_input_bytes(df: DataFrame) -> int | None:
     """Sum of the Catalyst size estimates of ``df``'s LEAF relations —
     the bytes one full execution of the frame's subtree re-reads from
@@ -107,25 +120,46 @@ def estimated_input_bytes(df: DataFrame) -> int | None:
     default join estimate is the PRODUCT of the input sizes (measured:
     a 11 MB ⋈ 3 MB join at sf0.1 reports 1.5 TB), so a root estimate
     would wildly over-trigger. Leaf sizes are file-length-derived for
-    parquet relations (linear in scale factor) and cache-block-sized
-    for already-checkpointed upstreams (re-reading cached blocks is
-    cheap, and the estimate says so). Leaves with NO estimate (Catalyst
+    parquet relations (linear in scale factor). A frame already cut by
+    ``localCheckpoint`` is a leaf that keeps the Catalyst estimate of the
+    frame it cut — that frame's OUTPUT, not its input (measured on Spark
+    4.1.2: a histogram aggregate over 2,045,762 B of parquet reads as
+    613,728 B after the cut). Leaves with NO estimate (Catalyst
     reports defaultSizeInBytes ≈ Long.MaxValue, e.g. a driver-local
     ``createDataFrame`` relation) count as ZERO: such inputs are either
     driver-local literals (tiny by construction) or already-materialized
     RDDs — re-reading them is cheap, and "unknown" must not be read as
     "huge" or every literal-seeded frame would pay a pointless cut.
-    Returns None when the JVM-side walk fails (never raises into an
-    operator)."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        sizes = [
-            int(str(leaves.apply(i).stats().sizeInBytes()))
-            for i in range(leaves.size())
-        ]
-        return sum(s for s in sizes if s < _UNKNOWN_SIZE)
-    except Exception:  # noqa: BLE001 — estimate is advisory only
+    Returns None when the JVM-side walk fails."""
+    sizes = _leaf_sizes(df)
+    if sizes is None:
         return None
+    return sum(s for s in sizes if s < _UNKNOWN_SIZE)
+
+
+def summary_sized(df: DataFrame) -> bool:
+    """True when ``df`` is provably small: every leaf has a known Catalyst
+    estimate and their sum is below the reuse threshold
+    (``SPARK_GRAFT_REUSE_MIN_BYTES``, default 256 MB).
+
+    The gate for operators that have a plain-window shape for small inputs
+    and a bucketed, lineage-cut shape for large ones (``kaplan_meier``,
+    ``logrank_test``). Unlike :func:`estimated_input_bytes` an unknown
+    leaf does NOT count as zero here: a single-partition window over an
+    input of unknown size is the one mistake the gate must not make, so
+    an unknown leaf or a failed walk answers False (the bucketed shape,
+    safe at any size). Sharing the reuse threshold means no second knob:
+    below it the reuse cut is a no-op anyway, and ``=0`` forces both the
+    cut and the bucketed shape. Decide on the frame BEFORE any cut: a cut
+    frame is estimated at its own (histogram) size, far below the input
+    it was computed from, so a re-check downstream could pick the
+    single-partition window at a scale its input forbids."""
+    sizes = _leaf_sizes(df)
+    return (
+        sizes is not None
+        and all(s < _UNKNOWN_SIZE for s in sizes)
+        and sum(sizes) < _threshold(_REUSE_ENV)
+    )
 
 
 def reuse_frame(df: DataFrame) -> DataFrame:

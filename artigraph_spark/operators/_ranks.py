@@ -344,6 +344,46 @@ def bucketed_prefix_sums(
     return out.drop(*drop)
 
 
+def window_prefix_sums(
+    hist: DataFrame,
+    group_cols: Sequence[str],
+    value_col: str,
+    sum_cols: Sequence[str],
+) -> DataFrame:
+    """:func:`bucketed_prefix_sums`' output contract (``__tot_<c>`` then
+    ``__pre_<c>`` appended, long for integral columns, the natural sum type
+    otherwise) from plain ``Window.partitionBy(*group_cols)`` frames: one
+    exchange and sort, no bucket map, no join.
+
+    Each group's whole histogram sorts on one partition (ungrouped: the
+    whole histogram), so callers take this shape only for a SUMMARY-sized
+    input (``_adaptive.summary_sized``) and the bucketed walk otherwise.
+    The frames are an exclusive ``rowsBetween(unboundedPreceding, -1)``
+    running sum and an unordered partition total — never a
+    ``currentRow → unboundedFollowing`` suffix frame, which Spark
+    evaluates row by row over the rest of the partition (O(n²)). Integral
+    and DECIMAL sums are order-independent, so both shapes give identical
+    rows on the same ``hist`` contract (one row per (group, value), no
+    NULL values)."""
+    if not sum_cols:
+        raise ValueError("window_prefix_sums needs sum columns")
+    scols = list(sum_cols)
+    whole = Window.partitionBy(*group_cols)
+    before = whole.orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
+
+    def typed(col, c):
+        return col.cast("long") if isinstance(hist.schema[c].dataType, _INTEGRAL) else col
+
+    return hist.select(
+        "*",
+        *[typed(F.sum(c).over(whole), c).alias(f"__tot_{c}") for c in scols],
+        *[
+            typed(F.coalesce(F.sum(c).over(before), F.lit(0)), c).alias(f"__pre_{c}")
+            for c in scols
+        ],
+    )
+
+
 def bucketed_row_numbers(
     df: DataFrame,
     value_col: str,

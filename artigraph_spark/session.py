@@ -18,6 +18,27 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# Share of host memory the driver JVM may grow to. In local mode the driver
+# is also the only executor, and a full sf0.01 oracle sweep grew a 90g-capped
+# JVM past 14 GB on a 15 GB host (OOM-killed); 40% leaves the Python workers
+# and the OS the rest.
+_DRIVER_MEM_SHARE = 0.4
+_DRIVER_MEM_CAP_GB = 90
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 40%
+    of ``MemTotal`` in whole gigabytes (at least 1g), capped at 90g — the
+    cap alone where ``meminfo`` cannot be read (non-Linux hosts)."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{_DRIVER_MEM_CAP_GB}g"
+    gb = int(kb * _DRIVER_MEM_SHARE) // (1024 * 1024)
+    return f"{min(max(gb, 1), _DRIVER_MEM_CAP_GB)}g"
+
+
 def get_spark(
     app_name: str = "artigraph_spark",
     *,
@@ -36,7 +57,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

@@ -855,6 +855,114 @@ def test_rmst_grouped_equals_solo_property(spark, rows, horizon):
         assert 0.0 <= got[g] <= float(horizon)
 
 
+# --- scale-adaptive prefix sums: window arm == bucketed arm -------------------
+
+
+def _both_arms(run):
+    """``run()`` on the plain-window arm (the size gate answers yes) and on
+    the forced-bucketed arm (a zero reuse threshold), in that order."""
+    from artigraph_spark.operators import _adaptive
+
+    out = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(_adaptive, "summary_sized", lambda df: True)
+        out.append(run())
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "0")
+        out.append(run())
+    return out
+
+
+@settings(max_examples=10, deadline=None)
+@given(_ps_rows)
+def test_window_prefix_sums_equal_bucketed_property(spark, rows):
+    """For ANY histogram, the plain-window prefix sums equal the bucketed
+    walk's row for row and type for type, on an integral count and a
+    DECIMAL(38,9) mass, with a NULL group key among the groups."""
+    from pyspark.sql import functions as F
+
+    from artigraph_spark.operators._ranks import (
+        bucketed_prefix_sums,
+        window_prefix_sums,
+    )
+
+    df = spark.createDataFrame(rows or [("a", 0.0, 1)], "g string, v double, f long")
+    if not rows:
+        df = df.filter("false")
+    hist = df.groupBy("g", "v").agg(
+        F.sum("f").cast("int").alias("n"),
+        (F.sum("f") + F.lit(0.000000001) * F.sum("f")).cast("decimal(38,9)").alias("m"),
+    )
+    win = window_prefix_sums(hist, ["g"], "v", ["n", "m"])
+    bkt = bucketed_prefix_sums(hist, ["g"], "v", ["n", "m"], buckets=3)
+    assert win.schema.simpleString() == bkt.schema.simpleString()
+    assert dict(win.dtypes)["__pre_n"] == "bigint"
+    assert dict(win.dtypes)["__pre_m"] == "decimal(38,9)"
+    key = lambda r: (r["g"] is None, r["g"] or "", r["v"])  # noqa: E731
+    assert sorted(win.collect(), key=key) == sorted(bkt.collect(), key=key)
+
+
+_km_arm_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", None]),
+        st.one_of(
+            st.integers(min_value=1, max_value=4),  # tied durations
+            st.integers(min_value=1, max_value=10_000_000),  # µs-granular
+        ),
+        st.integers(min_value=0, max_value=1),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(_km_arm_rows, st.booleans(), st.booleans())
+def test_kaplan_meier_arms_agree_property(spark, rows, grouped, tail):
+    """For ANY input, kaplan_meier's plain-window arm and its
+    forced-bucketed arm give identical curves — ungrouped and grouped
+    (NULL group key included), tied and µs-granular durations, and with
+    ``tail`` a last duration where every remaining unit has the event
+    (d = n, the zero flag)."""
+    from artigraph_spark.operators.timeseries import kaplan_meier
+
+    if tail:
+        rows = rows + [(g, 10_000_001, 1) for g in ("a", "b", None)]
+    df = spark.createDataFrame(rows, "g: string, d: bigint, obs: int")
+    gcols = ["g"] if grouped else []
+    win, bkt = _both_arms(
+        lambda: kaplan_meier(df, "d", "obs", group_cols=gcols).collect()
+    )
+    assert win == bkt
+    if tail:
+        assert win[-1]["survival_r"] == 0.0
+
+
+_lr_arm_rows = st.lists(
+    st.tuples(
+        st.one_of(
+            st.integers(min_value=1, max_value=4),
+            st.integers(min_value=1, max_value=10_000_000),
+        ),
+        st.integers(min_value=0, max_value=1),
+        st.integers(min_value=0, max_value=1),
+    ),
+    max_size=40,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(_lr_arm_rows)
+def test_logrank_arms_agree_property(spark, rows):
+    """For ANY input (empty included), logrank_test's plain-window arm and
+    its forced-bucketed arm give the identical statistics row."""
+    from artigraph_spark.operators.timeseries import logrank_test
+
+    df = spark.createDataFrame(rows, "d: bigint, obs: int, g: int")
+    win, bkt = _both_arms(lambda: logrank_test(df, "d", "obs", "g").collect())
+    assert win == bkt
+
+
 # --- r12: shingled MinHash / poly62 SimHash vs driver-side references --------
 
 _doc_texts = st.lists(
