@@ -36,10 +36,13 @@ scale: the r15 x30 probe (docs/SCALE_PROBE_r15.json) measured pagerank
 1.5x FASTER with AQE ON once the loop's input reached 373 MB (runtime
 partition coalescing/skew handling earns the barriers when stages do
 real data work). The pin is therefore SCALE-ADAPTIVE: it turns AQE off
-only while the operator's estimated input is below
-``SPARK_GRAFT_PIN_MAX_BYTES`` (default 256 MB — the dispatch-bound
+only while the operator's estimated input is below the reuse threshold
+``SPARK_GRAFT_REUSE_MIN_BYTES`` (default 256 MB — the dispatch-bound
 regime where the pin measured ~2x at sf0.1), and leaves the session's
-AQE alone above it or when the estimate is unknown.
+AQE alone above it or when the estimate is unknown. Sharing the reuse
+threshold means one knob for "is this input large": ``=0`` treats every
+input as large, so it forces the cut and the bucketed shape and never
+pins.
 
 A pinned operator runs in a CLONE of the caller's session with AQE off
 (``session.child_session``) and hands its result back as a frame of the
@@ -89,11 +92,11 @@ _REUSE_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 _UNKNOWN_SIZE = 1 << 60
 
 
-def _threshold(env: str) -> int:
-    """The byte threshold ``env`` sets; the 256 MB default when it is unset
-    or malformed (a malformed env must not break queries)."""
+def _threshold() -> int:
+    """The reuse threshold in bytes; the 256 MB default when the env is
+    unset or malformed (a malformed env must not break queries)."""
     try:
-        return int(os.environ.get(env, _REUSE_DEFAULT))
+        return int(os.environ.get(_REUSE_ENV, _REUSE_DEFAULT))
     except (TypeError, ValueError):
         return _REUSE_DEFAULT
 
@@ -158,7 +161,7 @@ def summary_sized(df: DataFrame) -> bool:
     return (
         sizes is not None
         and all(s < _UNKNOWN_SIZE for s in sizes)
-        and sum(sizes) < _threshold(_REUSE_ENV)
+        and sum(sizes) < _threshold()
     )
 
 
@@ -210,7 +213,7 @@ def reuse_frame_cut(df: DataFrame) -> "tuple[DataFrame, bool]":
     frame is actually materialized (e.g. sourcing a min/max range frame
     from the cached histogram instead of the raw rows)."""
     est = estimated_input_bytes(df)
-    if est is None or est < _threshold(_REUSE_ENV):
+    if est is None or est < _threshold():
         return df, False
     try:
         # Already materialized (the plan is a bare LogicalRDD /
@@ -261,21 +264,19 @@ def cut_frame(df: DataFrame) -> DataFrame:
 
 
 # Scale crossover for the AQE pin (r15, measured at both ends): below
-# it the loop is DISPATCH-bound — the per-exchange re-planning barrier
-# dominates and pinning AQE off measured ~2x faster (pagerank 10.6 s ->
-# 5.1 s at sf0.1, 11 MB of input; r14). Above it the loop is DATA-bound
-# and AQE's runtime partition coalescing/skew handling wins: at x30
-# (373 MB of input, docs/SCALE_PROBE_r15.json) pagerank measured 52.8 s
-# pinned vs 35.3 s with AQE on (1.5x), results identical. The pin is
-# therefore applied only when the loop's estimated input is BELOW this
-# threshold — never a constant tuned for one deployment (guide §2).
-_PIN_MAX_ENV = "SPARK_GRAFT_PIN_MAX_BYTES"
-
-
+# the reuse threshold the loop is DISPATCH-bound — the per-exchange
+# re-planning barrier dominates and pinning AQE off measured ~2x faster
+# (pagerank 10.6 s -> 5.1 s at sf0.1, 11 MB of input; r14). Above it the
+# loop is DATA-bound and AQE's runtime partition coalescing/skew handling
+# wins: at x30 (373 MB of input, docs/SCALE_PROBE_r15.json) pagerank
+# measured 52.8 s pinned vs 35.3 s with AQE on (1.5x), results identical.
+# The pin is therefore applied only when the loop's estimated input is
+# BELOW the threshold — never a constant tuned for one deployment
+# (guide §2).
 def pinned_parallelism(fn):
     """Decorator: run ``fn`` with AQE off when its first argument — the
-    frame it loops or joins over — estimates below
-    ``SPARK_GRAFT_PIN_MAX_BYTES`` (default 256 MB), i.e. when the loop is
+    frame it loops or joins over — estimates below the reuse threshold
+    ``SPARK_GRAFT_REUSE_MIN_BYTES`` (default 256 MB), i.e. when the loop is
     dispatch-bound and the per-exchange AQE barrier is the dominant cost.
     Data-bound loops keep the session's AQE (runtime coalescing + skew
     splitting won 1.5x at the x30 probe scale), and so does a frame whose
@@ -295,7 +296,7 @@ def pinned_parallelism(fn):
     @functools.wraps(fn)
     def pinned(frame: DataFrame, *args, **kwargs):
         est = estimated_input_bytes(frame)
-        if est is None or est >= _threshold(_PIN_MAX_ENV):
+        if est is None or est >= _threshold():
             return fn(frame, *args, **kwargs)
         child = child_session(frame.sparkSession, {_FLAG: "false"})
 

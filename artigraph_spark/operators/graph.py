@@ -92,7 +92,7 @@ def pagerank(
     # rounds — measured 24.5 s vs 59 s same-minute at sf0.1 on a noisy
     # host (29 jobs/75 stages -> 7 jobs/27 stages). r15: the pin is
     # SCALE-ADAPTIVE — it applies only while edges estimates below
-    # SPARK_GRAFT_PIN_MAX_BYTES; at the x30 probe scale AQE-ON measured
+    # SPARK_GRAFT_REUSE_MIN_BYTES; at the x30 probe scale AQE-ON measured
     # 1.5x faster (35.3 vs 52.8 s, docs/SCALE_PROBE_r15.json), so
     # data-bound loops keep runtime coalescing/skew splitting and only
     # dispatch-bound loops pay zero barriers. The pin must cover plan

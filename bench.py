@@ -51,6 +51,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from artigraph_spark.queries import bench_queries  # noqa: E402
 from artigraph_spark.session import get_spark  # noqa: E402
+from perfbench.harness import StatusStore, summarize_stages  # noqa: E402
 
 
 def main() -> None:
@@ -138,9 +139,16 @@ def main() -> None:
     # (README "Bench noise gauges"). Counted on the warm-up pass right
     # after each query so job-history eviction (spark.ui.retainedJobs)
     # can't drop early jobs; AQE may shift counts ±1-2 between passes —
-    # it is a gauge, not an invariant.
+    # it is a gauge, not an invariant. The same pass reads each query's
+    # executed stages, executor CPU and shuffle bytes from the status
+    # store through perfbench's reader: the measures host steal does not
+    # inflate.
     tracker = spark.sparkContext.statusTracker()
+    store = StatusStore(spark)
     stage_counts: dict[str, int] = {}
+    executed: dict[str, int] = {}
+    cpu_s: dict[str, float] = {}
+    shuffle_mb: dict[str, float] = {}
 
     def count_stages(group: str) -> int:
         n = 0
@@ -155,6 +163,11 @@ def main() -> None:
         spark.sparkContext.setJobGroup(group, name)
         run(fn)
         stage_counts[name] = count_stages(group)
+        stages, jobs = store.stages_by_group({group})
+        layer = summarize_stages(stages[group], jobs[group])
+        executed[name] = layer["stages_run"]
+        cpu_s[name] = round(layer["cpu_s"], 3)
+        shuffle_mb[name] = round(layer["shuffle_write_mb"], 3)
     spark.sparkContext.setJobGroup("bench:warmrest", "post-warmup")
     run(sentinel)
 
@@ -173,6 +186,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "stages_per_query": stage_counts,
+        "stages_executed_per_query": executed,
+        "exec_cpu_s_per_query": cpu_s,
+        "shuffle_mb_per_query": shuffle_mb,
         "noise_sentinel_sec": round(sorted(sentinel_ts)[1], 3),
         "dispatch_ms_per_stage": round(dispatch_ms_per_stage(), 1),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
@@ -191,7 +207,8 @@ def main() -> None:
     # per-query timings (~1 KB for 37 queries — still an order of
     # magnitude under the capture window that clipped r13) so a
     # tail-captured record keeps enough for per-query round-over-round
-    # comparison; stages_per_query stays on the full line only.
+    # comparison; the per-query stage, CPU and shuffle figures stay on
+    # the full line only.
     # Consumers keyed on "bench_total_runtime" are unaffected; the
     # summary uses a distinct metric name and existing keys are kept.
     summary = {

@@ -250,7 +250,7 @@ def test_seasonal_reuse_output_parity(spark, monkeypatch):
 
 def test_pinned_parallelism_scale_adaptive(spark, monkeypatch, tmp_path):
     """The AQE pin fires only while the loop's estimated input is below
-    SPARK_GRAFT_PIN_MAX_BYTES; data-bound loops keep the session's AQE
+    SPARK_GRAFT_REUSE_MIN_BYTES; data-bound loops keep the session's AQE
     (the r15 x30 measurement). Every frame argument runs in the pinned
     session, and a frame result comes back on the caller's."""
     df = _parquet_frame(spark, tmp_path)
@@ -258,18 +258,18 @@ def test_pinned_parallelism_scale_adaptive(spark, monkeypatch, tmp_path):
     spark.conf.set(_FLAG, "true")
     try:
         # below threshold (default 256 MB): pinned
-        monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
         assert _aqe_seen(df, seeds) == ["false", "false"]
         # malformed threshold: the default, so pinned
-        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "not-a-number")
+        monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "not-a-number")
         assert _aqe_seen(df) == ["false"]
         # above threshold (forced to 1 byte): NOT pinned
-        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "1")
+        monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "1")
         assert _aqe_seen(df, seeds) == ["true", "true"]
         # a threshold of 0 never pins
-        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "0")
+        monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "0")
         assert _aqe_seen(df) == ["true"]
-        monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES")
+        monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES")
         out = pinned_parallelism(lambda d: d.groupBy("g").count())(df)
         assert out.sparkSession is spark
         assert sorted(map(tuple, out.collect())) == [("a", 5), ("b", 5)]

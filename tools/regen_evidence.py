@@ -1,9 +1,9 @@
 """Closing-ritual evidence regeneration: run every offline audit at the
 ACTUAL final HEAD and write the round's committed artifacts in one shot,
 so they can never go stale against a late code commit (the r10 verdict's
-process item: `docs/PLAN_AUDIT_r10.txt` was recorded one commit before
-the final `epoch_shuffle` rewrite and missed its two sanctioned BNLJ
-singletons).
+process item: r10's plan audit, `git show 7849ccf:docs/PLAN_AUDIT_r10.txt`,
+was recorded one commit before the final `epoch_shuffle` rewrite and
+missed its two sanctioned BNLJ singletons).
 
 Runs, in order:
   1. `tools/window_audit.py`  — the r{N} rotation must be staged at HEAD
