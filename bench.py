@@ -37,12 +37,22 @@ single-job sentinel stays quiet — the r11 bench's apparent 1.5-3x
 ~20-50 ms; the slow mode measured ~115-140 ms). Triage rule: narrow queries
 → sentinel, wide scans → cpu_steal_pct, stage-heavy pipelines →
 dispatch_ms_per_stage.
+
+``--attempts N`` repeats the timed protocol (3 runs, median) N times in the
+same session and adds, per query, the median and the minimum of the N
+attempt figures (``wall_median_s_per_query``, ``wall_min_s_per_query``) and
+``attempts`` to the full line. ``queries`` and ``value`` stay the first
+attempt's figures, so they compare with single-attempt records; the
+sentinel is the median of all its runs. Without the flag the output keys
+are the single-attempt ones.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -55,6 +65,14 @@ from perfbench.harness import StatusStore, summarize_stages  # noqa: E402
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Time the bench queries into the noop sink.")
+    ap.add_argument(
+        "--attempts", type=int, default=None,
+        help="repeat the timed protocol N times; adds per-query median and minimum",
+    )
+    args = ap.parse_args()
+    if args.attempts is not None and args.attempts < 1:
+        ap.error("--attempts must be at least 1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("artigraph_spark_bench")
@@ -142,13 +160,15 @@ def main() -> None:
     # it is a gauge, not an invariant. The same pass reads each query's
     # executed stages, executor CPU and shuffle bytes from the status
     # store through perfbench's reader: the measures host steal does not
-    # inflate.
+    # inflate. The Python process's CPU time per query is the driver's
+    # share: plan building and py4j round trips.
     tracker = spark.sparkContext.statusTracker()
     store = StatusStore(spark)
     stage_counts: dict[str, int] = {}
     executed: dict[str, int] = {}
     cpu_s: dict[str, float] = {}
     shuffle_mb: dict[str, float] = {}
+    driver_cpu_s: dict[str, float] = {}
 
     def count_stages(group: str) -> int:
         n = 0
@@ -161,7 +181,9 @@ def main() -> None:
     for name, fn in queries:
         group = f"bench:{name}"
         spark.sparkContext.setJobGroup(group, name)
+        cpu0 = time.process_time()
         run(fn)
+        driver_cpu_s[name] = round(time.process_time() - cpu0, 3)
         stage_counts[name] = count_stages(group)
         stages, jobs = store.stages_by_group({group})
         layer = summarize_stages(stages[group], jobs[group])
@@ -171,13 +193,17 @@ def main() -> None:
     spark.sparkContext.setJobGroup("bench:warmrest", "post-warmup")
     run(sentinel)
 
-    samples: dict[str, list[float]] = {name: [] for name, _ in queries}
     sentinel_ts: list[float] = []
-    for _ in range(3):
-        for name, fn in queries:
-            samples[name].append(run(fn))
-        sentinel_ts.append(run(sentinel))
-    timings = {name: round(sorted(ts)[1], 3) for name, ts in samples.items()}
+    per_attempt: dict[str, list[float]] = {name: [] for name, _ in queries}
+    for _ in range(args.attempts or 1):
+        samples: dict[str, list[float]] = {name: [] for name, _ in queries}
+        for _ in range(3):
+            for name, fn in queries:
+                samples[name].append(run(fn))
+            sentinel_ts.append(run(sentinel))
+        for name, ts in samples.items():
+            per_attempt[name].append(sorted(ts)[1])
+    timings = {name: round(ts[0], 3) for name, ts in per_attempt.items()}
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -188,11 +214,18 @@ def main() -> None:
         "stages_per_query": stage_counts,
         "stages_executed_per_query": executed,
         "exec_cpu_s_per_query": cpu_s,
+        "driver_cpu_s_per_query": driver_cpu_s,
         "shuffle_mb_per_query": shuffle_mb,
-        "noise_sentinel_sec": round(sorted(sentinel_ts)[1], 3),
+        "noise_sentinel_sec": round(statistics.median(sentinel_ts), 3),
         "dispatch_ms_per_stage": round(dispatch_ms_per_stage(), 1),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
+    if args.attempts is not None:
+        out["attempts"] = args.attempts
+        out["wall_median_s_per_query"] = {
+            name: round(statistics.median(ts), 3) for name, ts in per_attempt.items()
+        }
+        out["wall_min_s_per_query"] = {name: round(min(ts), 3) for name, ts in per_attempt.items()}
     jiff1 = cpu_jiffies()
     if jiff0 is not None and jiff1 is not None and jiff1[1] > jiff0[1]:
         out["cpu_steal_pct"] = round(

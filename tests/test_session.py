@@ -1,11 +1,18 @@
-"""``session.get_spark``'s driver-memory default: derived from the host's
-``MemTotal`` so a local run cannot grow the driver past the machine."""
+"""``session.get_spark``'s defaults: the driver-memory default is derived
+from the host's ``MemTotal`` so a local run cannot grow the driver past the
+machine, and DataFrame debugging (a call-site capture on every PySpark API
+call) is off."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
-from artigraph_spark.session import default_driver_memory
+from artigraph_spark.session import child_session, default_driver_memory
+
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+DISPATCH_DATA = str(Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.01")
 
 
 @pytest.mark.parametrize(
@@ -30,3 +37,49 @@ def test_unreadable_meminfo_keeps_the_cap(tmp_path):
     garbled = tmp_path / "garbled"
     garbled.write_text("MemFree: 12 kB\n")
     assert default_driver_memory(str(garbled)) == "90g"
+
+
+def test_dataframe_debugging_is_off_in_engine_sessions(spark):
+    assert spark.conf.get(DEBUGGING) == "false"
+    # A static conf: a cloned session cannot diverge from its parent.
+    assert child_session(spark, {"spark.sql.shuffle.partitions": "3"}).conf.get(DEBUGGING) == "false"
+
+
+# py4j commands sent while defining (not running) each query on the
+# benchmark's fixture copy: 464 and 143 with call-site capture off, 1,304
+# and 403 with it on. The budgets are about 1.5x the former.
+DEFINE_BUDGET = {"survival_km_users": 700, "window_session": 215}
+
+
+@pytest.mark.parametrize("name", sorted(DEFINE_BUDGET))
+def test_defining_a_dispatch_query_stays_in_its_round_trip_budget(spark, name):
+    import pyspark.errors.utils as perr
+
+    from artigraph_spark.queries import queries
+    from artigraph_spark.sources import load
+
+    fn = queries()[name]
+    load(spark, DISPATCH_DATA, "events").schema  # schema inference outside the count
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        # Memory commands ("m") release earlier proxies whenever Python
+        # frees them; they are not part of defining this query.
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    # PySpark reads the debugging flag once per process, on the first
+    # wrapped call; clearing the cache makes this test read the session's
+    # setting whatever ran before it.
+    cached = perr._enable_debugging_cache
+    perr._enable_debugging_cache = None
+    client.send_command = counting
+    try:
+        fn(spark, DISPATCH_DATA)
+    finally:
+        del client.send_command
+        perr._enable_debugging_cache = cached
+    assert 0 < len(sent) <= DEFINE_BUDGET[name], len(sent)
