@@ -4,16 +4,34 @@ The naive exact rank — ``rank().over(Window.partitionBy(g).orderBy(v))``
 — concentrates each group's ENTIRE sort on one partition: with few, huge
 groups (3 returnflag groups over a 100 TB lineitem) the job parks the
 corpus on 3 cores. These helpers compute the *same exact ranks* through
-the repo's bucketed two-phase prefix-sum technique (the
-``select_token_budget`` / ``sorted_neighborhood_pairs`` pattern):
+ONE walk, a range-bucket two-phase prefix scan (Blelloch's scan written
+as Spark windows; the ``select_token_budget`` /
+``sorted_neighborhood_pairs`` pattern):
 
-1. range-bucket the ordering value with a deterministic monotone map
-   (any monotone bucketing is rank-exact as long as ties land in the
-   same bucket — trivially true for a pure function of the value);
-2. aggregate per-bucket counts (a groups×buckets summary frame) and
-   prefix-sum them into per-bucket rank offsets;
-3. rank locally WITHIN each (group, bucket) partition — parallelism
-   groups×buckets instead of groups — and add the offset.
+1. :func:`_bucket_map` — range-bucket the ordering value with a
+   deterministic monotone map (any monotone bucketing is rank-exact as
+   long as ties land in the same bucket — trivially true for a pure
+   function of the value);
+2. :func:`_offsets_join` — aggregate per-(group, bucket) sums (a
+   groups×buckets summary frame), prefix-sum them into per-bucket
+   offsets, and join the offsets back, on (group eq-null-safe, bucket),
+   to a WITHIN-bucket window — parallelism groups×buckets instead of
+   groups — adding offset and local value.
+
+Every public walk is one case of that core:
+
+- :func:`bucketed_prefix_sums` — exclusive running sums of the caller's
+  columns over a (group, value) histogram;
+- :func:`bucketed_group_value_ranks` — a prefix pass of the frequency
+  ``__f`` over its own histogram (competition rank = prefix + 1, group
+  size = total);
+- :func:`bucketed_group_row_numbers` — a local ``row_number`` plus
+  per-bucket row-count offsets;
+- :func:`bucketed_row_numbers` — its zero-group case, ascending or
+  descending.
+
+:func:`window_prefix_sums` is the plain-window twin of the prefix walk
+for summary-sized inputs (``_adaptive.summary_sized``).
 
 Exactness does not depend on bucket balance: skewed buckets only cost
 parallelism, never correctness, so the bucket map can be a cheap
@@ -51,37 +69,108 @@ _NULL_BUCKET = -1  # sorts first asc / last desc, like Spark's null ordering
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
-def _bucket_expr(value: Column, lo: Column, hi: Column, buckets: int) -> Column:
-    """Deterministic monotone bucket index of ``value`` in [lo, hi].
+def _bucket_map(
+    rows: DataFrame, value_col: str, buckets: int, src: DataFrame | None = None
+) -> DataFrame:
+    """``rows`` with ``__bk``, the deterministic monotone int bucket of
+    ``value_col``, appended.
 
-    NULL → -1 (mirrors Spark's asc-nulls-first / desc-nulls-last),
-    NaN → ``buckets`` (NaN sorts above every number on both engines),
-    finite values → floor-linear into [0, buckets-1]. Monotone because
-    every step (subtract, divide by a positive range, floor) is
-    monotone non-decreasing in the value.
+    NULL → -1 (mirrors Spark's asc-nulls-first / desc-nulls-last). A
+    non-numeric value puts every other row in bucket 0. A numeric one
+    puts NaN in ``buckets`` (NaN sorts above every number on both
+    engines) and finite values floor-linear into [0, buckets-1] over the
+    non-NaN min/max of ``src[value_col]`` (default ``rows``) — a one-row
+    broadcast frame. Monotone because every step (subtract, divide by a
+    positive range, floor) is monotone non-decreasing in the value.
     """
-    vd = value.cast("double")
+    v = F.col(value_col)
+    bk = F.when(v.isNull(), F.lit(_NULL_BUCKET))
+    if not isinstance(rows.schema[value_col].dataType, NumericType):
+        return rows.withColumn("__bk", bk.otherwise(F.lit(0)).cast("int"))
+    vd = v.cast("double")
+    guard = F.when(~F.isnan(vd), vd)
+    rng = (rows if src is None else src).agg(
+        F.min(guard).alias("__lo"), F.max(guard).alias("__hi")
+    )
+    lo, hi = F.col("__lo"), F.col("__hi")
+    linear = F.least(F.floor((vd - lo) / (hi - lo) * buckets), F.lit(buckets - 1))
+    bk = bk.when(F.isnan(vd), F.lit(buckets)).when(hi > lo, linear).otherwise(F.lit(0))
     return (
-        F.when(value.isNull(), F.lit(_NULL_BUCKET))
-        .when(F.isnan(vd), F.lit(buckets))
-        .when(
-            hi > lo,
-            F.least(
-                F.floor((vd - lo) / (hi - lo) * buckets),
-                F.lit(buckets - 1),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
+        rows.crossJoin(F.broadcast(rng))
+        .withColumn("__bk", bk.cast("int"))
+        .drop("__lo", "__hi")
     )
 
 
-def _range_frame(base: DataFrame, value: Column) -> DataFrame:
-    """One-row frame with the non-NaN min/max of ``value`` (NULLs are
-    ignored by min/max already) — the broadcast side of the bucket map."""
-    vd = value.cast("double")
-    guard = F.when(~F.isnan(vd), vd)
-    return base.agg(F.min(guard).alias("__lo"), F.max(guard).alias("__hi"))
+def _offsets_join(
+    hb: DataFrame,
+    group_cols: list[str],
+    weights: list[Column],
+    local: list[Column],
+    *,
+    descending: bool = False,
+) -> DataFrame:
+    """The walk's phase 2 over bucketed rows ``hb``: aggregate each
+    ``weights[i]`` per (group, bucket), take its exclusive running sum
+    over the group's buckets (ascending, or from the top bucket down) and
+    its group total, and join them back to ``hb`` plus its within-bucket
+    window columns ``local`` on (group eq-null-safe, bucket) — a NULL
+    group is a real partition (the raw-window semantics), and
+    eq-null-safe keys stay hash-joinable. Ungrouped, the offsets side
+    holds at most ``buckets + 2`` rows and is broadcast.
+
+    Appends ``__tot{i}`` (the group total) and ``__pre{i}`` (the bucket
+    offset plus ``local[i]``) to ``hb``'s columns. A decimal offset and
+    local value are narrowed to precision 37 before the addition:
+    (38,s)+(38,s) would cap at 38 digits by dropping a scale digit —
+    rounding the sum — so values must fit the remaining 37-s integer
+    digits.
+    """
+    n = range(len(weights))
+    per_bucket = hb.groupBy(*group_cols, "__bk").agg(
+        *[w.alias(f"__bs{i}") for i, w in zip(n, weights)]
+    )
+    bk = F.col("__bk").desc() if descending else F.col("__bk")
+    group = Window.partitionBy(*group_cols)
+    before = group.orderBy(bk).rowsBetween(Window.unboundedPreceding, -1)
+    offsets = per_bucket.select(
+        *[F.col(c).alias(f"__og{j}") for j, c in enumerate(group_cols)],
+        F.col("__bk").alias("__obk"),
+        *[
+            F.coalesce(F.sum(f"__bs{i}").over(before), F.lit(0)).alias(f"__off{i}")
+            for i in n
+        ],
+        *[F.sum(f"__bs{i}").over(group).alias(f"__tot{i}") for i in n],
+    )
+    rows = hb.select("*", *[c.alias(f"__lc{i}") for i, c in zip(n, local)])
+    cond = F.col("__bk") == F.col("__obk")
+    for j, c in enumerate(group_cols):
+        cond = cond & rows[c].eqNullSafe(F.col(f"__og{j}"))
+    out = rows.join(offsets if group_cols else F.broadcast(offsets), cond)
+    for i in n:
+        off, lc = F.col(f"__off{i}"), F.col(f"__lc{i}")
+        dt = per_bucket.schema[f"__bs{i}"].dataType
+        if isinstance(dt, DecimalType):
+            narrowed = DecimalType(37, dt.scale)
+            off, lc = off.cast(narrowed), lc.cast(narrowed)
+        out = out.withColumn(f"__pre{i}", off + lc)
+    internal = ["__obk", *[f"__og{j}" for j in range(len(group_cols))]]
+    return out.drop(*internal, *[f"__off{i}" for i in n], *[f"__lc{i}" for i in n])
+
+
+def _prefix_pass(
+    hb: DataFrame, group_cols: list[str], value_col: str, sum_cols: list[str]
+) -> DataFrame:
+    """:func:`_offsets_join` with exclusive within-bucket running sums of
+    ``sum_cols`` by ascending ``value_col`` — the prefix-sum case."""
+    w = Window.partitionBy(*group_cols, "__bk").orderBy(value_col)
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    return _offsets_join(
+        hb,
+        group_cols,
+        [F.sum(c) for c in sum_cols],
+        [F.coalesce(F.sum(c).over(before), F.lit(0)) for c in sum_cols],
+    )
 
 
 def bucketed_group_value_ranks(
@@ -109,13 +198,11 @@ def bucketed_group_value_ranks(
     (group eq-null-safe, value ==) to attach ranks.
 
     Plan shape: one map-side-combined groupBy(group, value) histogram
-    shuffle (the only data-sized stage), a groups×buckets offsets
-    aggregate with a per-group prefix window over ≤buckets rows, a
-    WITHIN-bucket histogram window (parallelism groups×buckets), and a
-    (group, bucket)-keyed equi-join of the two summary frames. For a
-    non-numeric value type the bucket map degenerates to one bucket —
-    still a histogram-sized (distinct-values-per-group) sort, never a
-    raw-row sort.
+    shuffle (the only data-sized stage), then the prefix walk of ``__f``
+    over that histogram (the rank is its exclusive prefix + 1, the group
+    count its total). For a non-numeric value type the bucket map
+    degenerates to one bucket — still a histogram-sized
+    (distinct-values-per-group) sort, never a raw-row sort.
     """
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
@@ -133,53 +220,19 @@ def bucketed_group_value_ranks(
     hist, cut = reuse_frame_cut(
         base.groupBy(*gcols, v.alias("__v")).agg(freq.alias("__f"))
     )
-    numeric = isinstance(base.schema[value_col].dataType, NumericType)
-    if numeric:
-        # r14: when the histogram was materialized, the range frame
-        # derives from it (min/max over the DISTINCT values equals
-        # min/max over the raw rows — bucket maps are rank-invariant
-        # anyway) so the raw-row subtree is executed ZERO extra times.
-        # When it was not (test scale), keep the original direct min/max
-        # over `base` — a map-side aggregate, cheaper than re-running
-        # the histogram exchange.
-        rng = _range_frame(hist if cut else base, F.col("__v") if cut else v)
-        bexpr = _bucket_expr(F.col("__v"), F.col("__lo"), F.col("__hi"), buckets)
-        hb = hist.crossJoin(F.broadcast(rng)).select(
-            *gcols, "__v", "__f", bexpr.alias("__bk")
-        )
-    else:
-        hb = hist.select(*gcols, "__v", "__f", F.lit(0).alias("__bk"))
-    per_bucket = hb.groupBy(*gcols, "__bk").agg(F.sum("__f").alias("__bf"))
-    w_off = Window.partitionBy(*gcols).orderBy("__bk")
-    offsets = per_bucket.select(
-        *[F.col(c).alias(f"__og{i}") for i, c in enumerate(gcols)],
-        F.col("__bk").alias("__obk"),
-        F.coalesce(
-            F.sum("__bf").over(w_off.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__off"),
-        F.sum("__bf").over(Window.partitionBy(*gcols)).alias("__ng"),
-    )
-    w_local = Window.partitionBy(*gcols, "__bk").orderBy("__v")
-    local = hb.withColumn(
-        "__lcp",
-        F.coalesce(
-            F.sum("__f").over(w_local.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    # eq-null-safe on the group keys: a NULL group is a real ranking
-    # partition (the raw-window semantics), and eq-null-safe keys stay
-    # hash-joinable.
-    cond = F.col("__bk") == F.col("__obk")
-    for i, c in enumerate(gcols):
-        cond = cond & local[c].eqNullSafe(F.col(f"__og{i}"))
-    return local.join(offsets, cond).select(
+    # r14: when the histogram was materialized, the range frame derives
+    # from it (min/max over the DISTINCT values equals min/max over the
+    # raw rows — bucket maps are rank-invariant anyway) so the raw-row
+    # subtree is executed ZERO extra times. When it was not (test scale),
+    # keep the direct min/max over `base` — a map-side aggregate, cheaper
+    # than re-running the histogram exchange.
+    hb = _bucket_map(hist, "__v", buckets, None if cut else base.select(v.alias("__v")))
+    return _prefix_pass(hb, gcols, "__v", ["__f"]).select(
         *gcols,
         "__v",
         "__f",
-        (F.col("__off") + F.col("__lcp") + F.lit(1)).cast("long").alias("__rg"),
-        F.col("__ng").cast("long").alias("__ng"),
+        (F.col("__pre0") + F.lit(1)).cast("long").alias("__rg"),
+        F.col("__tot0").cast("long").alias("__ng"),
     )
 
 
@@ -196,26 +249,25 @@ def bucketed_prefix_sums(
     """Exclusive per-group running sums of ``sum_cols`` by ascending
     ``value_col`` over a HISTOGRAM frame, plus group totals — the
     cumulative-distribution substrate for AUC / Mann–Whitney / KS /
-    winsorize-style statistics, computed with the same range-bucket
-    two-phase pattern as :func:`bucketed_group_value_ranks` so no group
-    is ever walked on one partition.
+    winsorize-style statistics, computed with the module's range-bucket
+    walk so no group is ever walked on one partition.
 
     ``hist`` must hold at most ONE row per (group, value) — the output
     of a ``groupBy(group, value)`` — with no NULL values (NaN is fine:
     it buckets last, Spark's ascending order). ``group_cols`` may be
     empty for a global running sum (the offsets window then runs over a
     single ≤buckets-row summary partition — metadata-sized by
-    construction). Appends, for each ``c`` in ``sum_cols``,
+    construction — and is broadcast to the join). Appends, for each
+    ``c`` in ``sum_cols``, ``__tot_<c>`` (the group total) and
     ``__pre_<c>`` (sum of ``c`` over STRICTLY SMALLER values in the
-    group, 0 for the smallest) and ``__tot_<c>`` (the group total);
-    every input column passes through. Output types: an INTEGRAL
-    ``sum_cols`` entry (the count-like default) comes back as long; a
-    fractional/decimal entry keeps Spark's natural sum type (e.g.
-    DECIMAL(38,9) masses stay exact decimals — never silently truncated
-    to integers). Decimal sums must fit 28 integer digits: the
-    offset+local addition narrows its operands to precision 37 so the
-    result keeps the input's full scale instead of Spark's
-    precision-capped scale-8 downgrade.
+    group, 0 for the smallest); every input column passes through.
+    Output types: an INTEGRAL ``sum_cols`` entry (the count-like
+    default) comes back as long; a fractional/decimal entry keeps
+    Spark's natural sum type (e.g. DECIMAL(38,9) masses stay exact
+    decimals — never silently truncated to integers). Decimal sums must
+    fit 28 integer digits: the offset+local addition narrows its
+    operands to precision 37 so the result keeps the input's full scale
+    instead of Spark's precision-capped scale-8 downgrade.
 
     Plan shape: one groups×buckets offsets aggregate with a per-group
     prefix window over ≤buckets rows, a within-bucket prefix window
@@ -244,8 +296,6 @@ def bucketed_prefix_sums(
         raise ValueError("bucketed_prefix_sums needs sum columns")
     gcols = list(group_cols)
     scols = list(sum_cols)
-    integral = [isinstance(hist.schema[c].dataType, _INTEGRAL) for c in scols]
-    out_cast = lambda col, i: col.cast("long") if integral[i] else col  # noqa: E731
     # r14: the caller's histogram fans out to 3 consumers here (range
     # frame, per-bucket offsets, within-bucket prefix window) with
     # divergent pruning — no exchange reuse, so each consumer re-runs
@@ -254,17 +304,17 @@ def bucketed_prefix_sums(
     # second pass (bucket_col=...) keeps its no-new-exchange property:
     # the cut preserves partitioning/ordering metadata.
     hist = reuse_frame(hist)
-    v = F.col(value_col)
-    if bucket_col is not None:
-        # bucket_col is the one EXTERNALLY-supplied bucket id (the internal
-        # branch computes __bk itself, never NULL). The offsets equi-join on
-        # __bk is null-unsafe, so a NULL id would silently DROP those
-        # histogram rows — fail loudly instead.
+    if bucket_col is None:
+        hb = _bucket_map(hist, value_col, buckets)
+    else:
+        # bucket_col is the one EXTERNALLY-supplied bucket id (the bucket
+        # map never yields NULL). The offsets equi-join on __bk is
+        # null-unsafe, so a NULL id would silently DROP those histogram
+        # rows — fail loudly instead.
+        bk = F.col(bucket_col)
         hb = hist.withColumn(
             "__bk",
-            F.when(
-                F.col(bucket_col).isNotNull(), F.col(bucket_col).cast("int")
-            ).otherwise(
+            F.when(bk.isNotNull(), bk.cast("int")).otherwise(
                 F.raise_error(
                     F.lit(
                         f"bucketed_prefix_sums: NULL bucket id in bucket_col "
@@ -274,74 +324,15 @@ def bucketed_prefix_sums(
                 )
             ),
         )
-    elif isinstance(hist.schema[value_col].dataType, NumericType):
-        rng = _range_frame(hist, v)
-        hb = hist.crossJoin(F.broadcast(rng)).withColumn(
-            "__bk", _bucket_expr(v, F.col("__lo"), F.col("__hi"), buckets)
-        ).drop("__lo", "__hi")
-    else:
-        hb = hist.withColumn("__bk", F.lit(0).cast("int"))
-    per_bucket = hb.groupBy(*gcols, "__bk").agg(
-        *[F.sum(c).alias(f"__bs{i}") for i, c in enumerate(scols)]
+    out = _prefix_pass(hb, gcols, value_col, scols).withColumnsRenamed(
+        {
+            **{f"__tot{i}": f"__tot_{c}" for i, c in enumerate(scols)},
+            **{f"__pre{i}": f"__pre_{c}" for i, c in enumerate(scols)},
+        }
     )
-    w_off = Window.partitionBy(*gcols).orderBy("__bk")
-    offsets = per_bucket.select(
-        *[F.col(c).alias(f"__og{i}") for i, c in enumerate(gcols)],
-        F.col("__bk").alias("__obk"),
-        *[
-            F.coalesce(
-                F.sum(f"__bs{i}").over(
-                    w_off.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias(f"__off{i}")
-            for i in range(len(scols))
-        ],
-        *[
-            out_cast(F.sum(f"__bs{i}").over(Window.partitionBy(*gcols)), i).alias(
-                f"__tot_{c}"
-            )
-            for i, c in enumerate(scols)
-        ],
-    )
-    w_local = Window.partitionBy(*gcols, "__bk").orderBy(value_col)
-    local = hb
-    for i, c in enumerate(scols):
-        local = local.withColumn(
-            f"__lc{i}",
-            F.coalesce(
-                F.sum(c).over(w_local.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ),
-        )
-    cond = F.col("__bk") == F.col("__obk")
-    for i, c in enumerate(gcols):
-        cond = cond & local[c].eqNullSafe(F.col(f"__og{i}"))
-    out = local.join(offsets, cond)
-    for i, c in enumerate(scols):
-        off, lc = F.col(f"__off{i}"), F.col(f"__lc{i}")
-        dt = per_bucket.schema[f"__bs{i}"].dataType
-        if isinstance(dt, DecimalType):
-            # (38,s)+(38,s) would cap at 38 digits by dropping a scale
-            # digit — rounding the sum. Narrowing both operands to
-            # precision 37 keeps the full scale; values must fit the
-            # remaining 37-s integer digits (documented contract).
-            narrowed = DecimalType(37, dt.scale)
-            pre = off.cast(narrowed) + lc.cast(narrowed)
-        else:
-            pre = out_cast(off + lc, i)
-        out = out.withColumn(f"__pre_{c}", pre)
-    drop = (
-        ["__obk"]
-        + [f"__og{i}" for i in range(len(gcols))]
-        + [f"__off{i}" for i in range(len(scols))]
-        + [f"__lc{i}" for i in range(len(scols))]
-    )
-    if keep_bucket is not None:
-        out = out.withColumnRenamed("__bk", keep_bucket)
-    else:
-        drop.append("__bk")
-    return out.drop(*drop)
+    if keep_bucket is None:
+        return out.drop("__bk")
+    return out.withColumnRenamed("__bk", keep_bucket)
 
 
 def window_prefix_sums(
@@ -384,6 +375,38 @@ def window_prefix_sums(
     )
 
 
+def _row_numbers(
+    df: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    tiebreak_cols: Sequence[str],
+    descending: bool,
+    buckets: int,
+    out_col: str,
+    count_col: str | None,
+) -> DataFrame:
+    """The row-number case of the walk: a within-(group, bucket)
+    ``row_number`` plus the bucket's row-count offset, and the group's
+    row count as ``count_col`` — free from the same offsets frame."""
+    if buckets < 1:
+        raise ValueError(f"buckets must be >= 1, got {buckets}")
+    v = F.col(value_col)
+    order = v.desc_nulls_last() if descending else v.asc_nulls_first()
+    w = Window.partitionBy(*group_cols, "__bk").orderBy(order, *tiebreak_cols)
+    out = _offsets_join(
+        _bucket_map(df, value_col, buckets),
+        group_cols,
+        [F.count(F.lit(1))],
+        [F.row_number().over(w)],
+        descending=descending,
+    )
+    if count_col is not None:
+        out = out.withColumn(count_col, F.col("__tot0").cast("long"))
+    return out.withColumn(out_col, F.col("__pre0").cast("long")).drop(
+        "__bk", "__tot0", "__pre0"
+    )
+
+
 def bucketed_row_numbers(
     df: DataFrame,
     value_col: str,
@@ -401,8 +424,9 @@ def bucketed_row_numbers(
     *tiebreaks))`` — Spark default null ordering (asc → nulls first,
     desc → nulls last; NaN above every number) — but computed as
     range-bucket offsets + within-bucket local row_numbers, so the sort
-    parallelism is ``buckets`` instead of 1. The tiebreak columns must
-    make the order total if downstream logic needs determinism (the
+    parallelism is ``buckets`` instead of 1: the zero-group case of
+    :func:`bucketed_group_row_numbers`. The tiebreak columns must make
+    the order total if downstream logic needs determinism (the
     ntile/top-k convention).
 
     ``count_col`` (optional) additionally appends the TOTAL row count —
@@ -412,43 +436,8 @@ def bucketed_row_numbers(
 
     Returns ``df`` with ``out_col`` (long, 1-based) appended.
     """
-    if buckets < 1:
-        raise ValueError(f"buckets must be >= 1, got {buckets}")
-    v = F.col(value_col)
-    numeric = isinstance(df.schema[value_col].dataType, NumericType)
-    if numeric:
-        rng = _range_frame(df, v)
-        bexpr = _bucket_expr(v, F.col("__lo"), F.col("__hi"), buckets)
-        rows = df.crossJoin(F.broadcast(rng)).withColumn("__bk", bexpr).drop(
-            "__lo", "__hi"
-        )
-    else:
-        rows = df.withColumn(
-            "__bk",
-            F.when(v.isNull(), F.lit(_NULL_BUCKET)).otherwise(F.lit(0)).cast("int"),
-        )
-    per_bucket = rows.groupBy("__bk").agg(F.count(F.lit(1)).alias("__bf"))
-    w_off = Window.orderBy(F.col("__bk").desc() if descending else F.col("__bk"))
-    off_cols = [
-        F.col("__bk").alias("__obk"),
-        F.coalesce(
-            F.sum("__bf").over(w_off.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__off"),
-    ]
-    if count_col is not None:
-        off_cols.append(
-            F.sum("__bf").over(Window.partitionBy()).cast("long").alias(count_col)
-        )
-    offsets = per_bucket.select(*off_cols)
-    order = [v.desc_nulls_last() if descending else v.asc_nulls_first()]
-    order += [F.col(c) for c in tiebreak_cols]
-    w_local = Window.partitionBy("__bk").orderBy(*order)
-    local = rows.withColumn("__lrn", F.row_number().over(w_local))
-    return (
-        local.join(F.broadcast(offsets), F.col("__bk") == F.col("__obk"))
-        .withColumn(out_col, (F.col("__off") + F.col("__lrn")).cast("long"))
-        .drop("__bk", "__obk", "__off", "__lrn")
+    return _row_numbers(
+        df, [], value_col, tiebreak_cols, descending, buckets, out_col, count_col
     )
 
 
@@ -474,8 +463,8 @@ def bucketed_group_row_numbers(
     strata are exactly where the naive window parks a corpus on a
     handful of cores). The tiebreak columns must make the order total
     within each group if downstream logic needs determinism. For a
-    non-numeric value column the bucket map degenerates to one bucket —
-    the naive colocation, no worse.
+    non-numeric value column the bucket map degenerates to one bucket
+    (plus the NULL bucket) — the naive colocation, no worse.
 
     ``count_col`` (optional) additionally appends the group's total row
     count — free from the same offsets frame, and NOT another
@@ -483,52 +472,11 @@ def bucketed_group_row_numbers(
 
     Returns ``df`` with ``out_col`` (long, 1-based) appended.
     """
-    if buckets < 1:
-        raise ValueError(f"buckets must be >= 1, got {buckets}")
     if not group_cols:
         raise ValueError("bucketed_group_row_numbers needs group columns")
     gcols = list(group_cols)
-    v = F.col(value_col)
-    numeric = isinstance(df.schema[value_col].dataType, NumericType)
-    if numeric:
-        rng = _range_frame(df, v)
-        bexpr = _bucket_expr(v, F.col("__lo"), F.col("__hi"), buckets)
-        rows = df.crossJoin(F.broadcast(rng)).withColumn("__bk", bexpr).drop(
-            "__lo", "__hi"
-        )
-    else:
-        rows = df.withColumn(
-            "__bk",
-            F.when(v.isNull(), F.lit(_NULL_BUCKET)).otherwise(F.lit(0)).cast("int"),
-        )
-    per_bucket = rows.groupBy(*gcols, "__bk").agg(F.count(F.lit(1)).alias("__bf"))
-    w_off = Window.partitionBy(*gcols).orderBy("__bk")
-    off_cols = [
-        *[F.col(c).alias(f"__og{i}") for i, c in enumerate(gcols)],
-        F.col("__bk").alias("__obk"),
-        F.coalesce(
-            F.sum("__bf").over(w_off.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__off"),
-    ]
-    if count_col is not None:
-        off_cols.append(
-            F.sum("__bf")
-            .over(Window.partitionBy(*gcols))
-            .cast("long")
-            .alias(count_col)
-        )
-    offsets = per_bucket.select(*off_cols)
-    order = [v.asc_nulls_first()] + [F.col(c) for c in tiebreak_cols]
-    w_local = Window.partitionBy(*gcols, "__bk").orderBy(*order)
-    local = rows.withColumn("__lrn", F.row_number().over(w_local))
-    cond = F.col("__bk") == F.col("__obk")
-    for i, c in enumerate(gcols):
-        cond = cond & local[c].eqNullSafe(F.col(f"__og{i}"))
-    return (
-        local.join(offsets, cond)
-        .withColumn(out_col, (F.col("__off") + F.col("__lrn")).cast("long"))
-        .drop("__bk", "__obk", "__off", "__lrn", *[f"__og{i}" for i in range(len(gcols))])
+    return _row_numbers(
+        df, gcols, value_col, tiebreak_cols, False, buckets, out_col, count_col
     )
 
 

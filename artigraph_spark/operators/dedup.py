@@ -19,7 +19,7 @@ import dataclasses
 
 from pyspark.sql import Column, DataFrame, Window
 
-from artigraph_spark.operators._adaptive import pinned_parallelism
+from artigraph_spark.operators._adaptive import cut_frame, pinned_parallelism
 from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 from pyspark.sql import functions as F
 
@@ -784,7 +784,7 @@ def dedup_clusters(
     # aggregation, so each lsh_candidate_pairs branch would re-execute
     # the dedup shuffle + signature transforms (measured ~2x on the fast
     # flavor at sf0.1). One row per survivor — survivor-count-priced.
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = cut_frame(sigs)
     candidates = lsh_candidate_pairs(sigs, id_col, num_hashes=num_hashes, bands=bands)
     # Jaccard verification reuses the candidates-based path (two equi-joins,
     # J(∅,∅)=1 guard, threshold filter) — single implementation, no drift.

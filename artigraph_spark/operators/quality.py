@@ -23,6 +23,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from artigraph_spark.operators._adaptive import cut_frame, reuse_frame
+
 
 @dataclasses.dataclass(frozen=True)
 class Check:
@@ -427,7 +429,8 @@ def robust_outliers(
     deviations) + two broadcast joins of per-group statistics — no
     global row sort. See ``_cumulative_hist`` for the distinct-value
     cardinality caveat. Both per-group statistic frames take a lazy
-    ``localCheckpoint`` (r11, the kaplan_meier chained-pass lesson):
+    lineage cut (r11, the kaplan_meier chained-pass lesson; routed by
+    ``_adaptive.cut_frame``, so ``SPARK_GRAFT_REUSE_DIR`` applies):
     the deviation histogram's 4-branch fan-out would otherwise multiply
     the median's whole tree statically, and column pruning can
     specialize the duplicated exchanges enough to defeat runtime reuse
@@ -435,15 +438,13 @@ def robust_outliers(
     groups-sized checkpoints.
     """
     c = F.col(value_col)
-    med = _rank_quantile(
-        _cumulative_hist(df, group_col, value_col), group_col, 0.5, "__med"
-    ).localCheckpoint(eager=False)
+    cum = _cumulative_hist(df, group_col, value_col)
+    med = cut_frame(_rank_quantile(cum, group_col, 0.5, "__med"))
     devs = df.join(F.broadcast(med), group_col, "left").withColumn(
         "abs_dev", F.abs(c - F.col("__med"))
     )
-    mad = _rank_quantile(
-        _cumulative_hist(devs, group_col, "abs_dev"), group_col, 0.5, "__mad"
-    ).localCheckpoint(eager=False)
+    cum = _cumulative_hist(devs, group_col, "abs_dev")
+    mad = cut_frame(_rank_quantile(cum, group_col, 0.5, "__mad"))
     return (
         devs.join(F.broadcast(mad), group_col, "left")
         .withColumn(
@@ -957,8 +958,6 @@ def psi_drift(
     # the base-side scan+groupBy. Scale-adaptive single execution; no-op
     # at test scale (operators._adaptive.reuse_frame). The current-side
     # histogram has one consumer and stays lazy.
-    from artigraph_spark.operators._adaptive import reuse_frame
-
     hb, hc = reuse_frame(_hist(base)), _hist(cur)
     wg = Window.partitionBy()
     # The base histogram's cumulative walk rides the range-bucketed

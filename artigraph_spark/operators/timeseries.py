@@ -1219,6 +1219,7 @@ def restricted_mean_survival(
 
     Returns one row per group: ``(*group_cols, horizon, rmst_r)``.
     """
+    from artigraph_spark.operators._adaptive import cut_frame
     from artigraph_spark.operators._ranks import _INTEGRAL, bucketed_group_row_numbers
 
     if horizon <= 0:
@@ -1252,11 +1253,9 @@ def restricted_mean_survival(
             )
         ),
     ).otherwise(dur_in)
-    curve = curve.select(
-        *gcols,
-        checked.alias("__t"),
-        F.col(survival_col).alias("__s"),
-    ).localCheckpoint(eager=False)
+    curve = cut_frame(
+        curve.select(*gcols, checked.alias("__t"), F.col(survival_col).alias("__s"))
+    )
     # constant group for the ungrouped form — the spearman __one idiom
     keyed = curve if gcols else curve.withColumn("__one", F.lit(1))
     kg = gcols or ["__one"]

@@ -617,6 +617,7 @@ def minhash_lsh_pairs_q(spark, sf_dir):
     `minhash_lsh_pairs_checked` (recall floor) and `dedup_minhash_end2end`
     (cluster contract); the banding operator under test here is the SAME
     `lsh_candidate_pairs` both of those exercise."""
+    from artigraph_spark.operators._adaptive import cut_frame
     from artigraph_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures_shingled,
@@ -631,7 +632,7 @@ def minhash_lsh_pairs_q(spark, sf_dir):
     # variant's signatures are a scan-cheap projection; this pipeline
     # carries a dictionary + window, which would re-execute per branch.
     # The frame is one row per doc — checkpoint is doc-count-priced.
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = cut_frame(sigs)
     return lsh_candidate_pairs(sigs, "doc_id", num_hashes=16, bands=4)
 
 

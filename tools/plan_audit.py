@@ -11,7 +11,9 @@ flag plan anti-patterns —
     the declared pandas-UDF surface shows as ArrowEvalPython /
     FlatMapGroupsInPandas / MapInPandas and is allowed
   - per-plan FileScan / Exchange counts, to spot rescans (a query whose
-    scan count jumped between rounds re-runs its upstream)
+    scan count jumped between rounds re-runs its upstream), and Window /
+    join node counts, so a diff of two full audits shows any plan-shape
+    change
 
 Usage: python tools/plan_audit.py [sf_dir] [name ...]
 Prints one line per query and a summary; exits 1 on hard violations
@@ -20,6 +22,7 @@ Prints one line per query and a summary; exits 1 on hard violations
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -27,6 +30,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from artigraph_spark.queries import queries
 from artigraph_spark.session import get_spark
+
+# a physical node's name: the first word of a plan line, after the tree
+# drawing and any whole-stage-codegen "*(n)" marker
+_NODE = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)", re.M)
 
 
 def main() -> int:
@@ -51,6 +58,9 @@ def main() -> int:
         pyudf = plan.count("BatchEvalPython")
         scans = plan.count("FileScan")
         exch = plan.count("Exchange")
+        nodes = _NODE.findall(plan)
+        windows = nodes.count("Window")
+        joins = sum(n.endswith("Join") or n == "CartesianProduct" for n in nodes)
         flags = []
         if cart:
             flags.append(f"CARTESIAN x{cart}")
@@ -63,7 +73,8 @@ def main() -> int:
             soft.append((name, f"BroadcastNestedLoopJoin x{bnlj}"))
         status = "WARN" if flags else "ok  "
         print(
-            f"{status} {name}: scans={scans} exchanges={exch} bnlj={bnlj}"
+            f"{status} {name}: scans={scans} exchanges={exch} windows={windows} "
+            f"joins={joins} bnlj={bnlj}"
             + (f"  [{', '.join(flags)}]" if flags else "")
         )
     print(
