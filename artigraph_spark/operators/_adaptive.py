@@ -91,6 +91,11 @@ _REUSE_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 # this engine's regime approaches it.
 _UNKNOWN_SIZE = 1 << 60
 
+# Leaf plan classes of an already-materialized frame (a lineage cut's
+# output, a cached relation). Such a leaf carries the estimate of the frame
+# it holds, not of the input that frame was computed from.
+_MATERIALIZED = ("LogicalRDD", "InMemoryRelation")
+
 
 def _threshold() -> int:
     """The reuse threshold in bytes; the 256 MB default when the env is
@@ -140,28 +145,46 @@ def estimated_input_bytes(df: DataFrame) -> int | None:
     return sum(s for s in sizes if s < _UNKNOWN_SIZE)
 
 
-def summary_sized(df: DataFrame) -> bool:
-    """True when ``df`` is provably small: every leaf has a known Catalyst
-    estimate and their sum is below the reuse threshold
-    (``SPARK_GRAFT_REUSE_MIN_BYTES``, default 256 MB).
+def _materialized_leaf(df: DataFrame) -> bool:
+    """True when a leaf of ``df`` is already materialized
+    (``_MATERIALIZED``), or when the JVM-side walk fails."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return any(
+            leaves.apply(i).getClass().getSimpleName() in _MATERIALIZED
+            for i in range(leaves.size())
+        )
+    except Exception:  # noqa: BLE001 — estimate is advisory only
+        return True
 
-    The gate for operators that have a plain-window shape for small inputs
-    and a bucketed, lineage-cut shape for large ones (``kaplan_meier``,
-    ``logrank_test``). Unlike :func:`estimated_input_bytes` an unknown
-    leaf does NOT count as zero here: a single-partition window over an
-    input of unknown size is the one mistake the gate must not make, so
-    an unknown leaf or a failed walk answers False (the bucketed shape,
-    safe at any size). Sharing the reuse threshold means no second knob:
-    below it the reuse cut is a no-op anyway, and ``=0`` forces both the
-    cut and the bucketed shape. Decide on the frame BEFORE any cut: a cut
-    frame is estimated at its own (histogram) size, far below the input
-    it was computed from, so a re-check downstream could pick the
-    single-partition window at a scale its input forbids."""
+
+def summary_sized(df: DataFrame) -> bool:
+    """True when ``df`` is provably small: no leaf is materialized, every
+    leaf has a known Catalyst estimate, and their sum is below the reuse
+    threshold (``SPARK_GRAFT_REUSE_MIN_BYTES``, default 256 MB).
+
+    The gate inside the two prefix walks of ``operators._ranks``
+    (``bucketed_prefix_sums``, ``bucketed_group_value_ranks``): a
+    summary-sized input takes the plain-window shape, any other the
+    bucketed, lineage-cut walk. Every operator reaches it through those
+    two calls. Unlike :func:`estimated_input_bytes` an unknown leaf does
+    NOT count as zero here: a single-partition window over an input of
+    unknown size is the one mistake the gate must not make, so an
+    unknown leaf or a failed walk answers False (the bucketed shape, safe
+    at any size). Sharing the reuse threshold means no second knob: below
+    it the reuse cut is a no-op anyway, and ``=0`` forces both the cut and
+    the bucketed shape. A materialized leaf answers False too: a cut frame
+    is estimated at its own (histogram) size, far below the input it was
+    computed from (2,045,762 B of parquet reads as 613,728 B after the
+    cut), so a frame cut upstream — ``psi_drift``'s base histogram,
+    ``spearman_corr``'s joint histogram above the threshold — must never
+    read as small."""
     sizes = _leaf_sizes(df)
     return (
         sizes is not None
         and all(s < _UNKNOWN_SIZE for s in sizes)
         and sum(sizes) < _threshold()
+        and not _materialized_leaf(df)
     )
 
 
@@ -229,12 +252,7 @@ def reuse_frame_cut(df: DataFrame) -> "tuple[DataFrame, bool]":
         plan = df._jdf.queryExecution().analyzed()
         if plan.children().isEmpty():
             name = plan.getClass().getSimpleName()
-            if name in (
-                "LogicalRDD",
-                "InMemoryRelation",
-                "LocalRelation",
-                "OneRowRelation",
-            ):
+            if name in (*_MATERIALIZED, "LocalRelation", "OneRowRelation"):
                 return df, True
             return df, False
     except Exception:  # noqa: BLE001 — guard is advisory only

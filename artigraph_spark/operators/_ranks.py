@@ -30,8 +30,14 @@ Every public walk is one case of that core:
 - :func:`bucketed_row_numbers` — its zero-group case, ascending or
   descending.
 
-:func:`window_prefix_sums` is the plain-window twin of the prefix walk
-for summary-sized inputs (``_adaptive.summary_sized``).
+The two prefix walks choose their own shape. Each checks
+``_adaptive.summary_sized`` on its un-cut input: a summary-sized input
+takes :func:`window_prefix_sums`, the plain-window twin (one exchange
+and sort, no bucket map, no join, no lineage cut); any other input takes
+the bucketed walk behind its own ``reuse_frame`` cut. Integral and
+DECIMAL sums are order-independent, so both shapes give identical rows
+and callers make one call with no branch. The row-number walks always
+take the bucketed shape.
 
 Exactness does not depend on bucket balance: skewed buckets only cost
 parallelism, never correctness, so the bucket map can be a cheap
@@ -51,22 +57,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ByteType,
-    DecimalType,
-    IntegerType,
-    LongType,
-    NumericType,
-    ShortType,
-)
+from pyspark.sql.types import DecimalType, NumericType
 
-from artigraph_spark.operators._adaptive import reuse_frame, reuse_frame_cut
+from artigraph_spark.operators import _adaptive
 
 _NULL_BUCKET = -1  # sorts first asc / last desc, like Spark's null ordering
-
-# Count-like sum columns normalize to long; fractional/decimal masses keep
-# Spark's natural sum type (see bucketed_prefix_sums).
-_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
 def _bucket_map(
@@ -162,7 +157,8 @@ def _prefix_pass(
     hb: DataFrame, group_cols: list[str], value_col: str, sum_cols: list[str]
 ) -> DataFrame:
     """:func:`_offsets_join` with exclusive within-bucket running sums of
-    ``sum_cols`` by ascending ``value_col`` — the prefix-sum case."""
+    ``sum_cols`` by ascending ``value_col`` — the prefix-sum case, named
+    like :func:`window_prefix_sums`' output (``__tot_<c>``, ``__pre_<c>``)."""
     w = Window.partitionBy(*group_cols, "__bk").orderBy(value_col)
     before = w.rowsBetween(Window.unboundedPreceding, -1)
     return _offsets_join(
@@ -170,6 +166,11 @@ def _prefix_pass(
         group_cols,
         [F.sum(c) for c in sum_cols],
         [F.coalesce(F.sum(c).over(before), F.lit(0)) for c in sum_cols],
+    ).withColumnsRenamed(
+        {
+            **{f"__tot{i}": f"__tot_{c}" for i, c in enumerate(sum_cols)},
+            **{f"__pre{i}": f"__pre_{c}" for i, c in enumerate(sum_cols)},
+        }
     )
 
 
@@ -198,9 +199,11 @@ def bucketed_group_value_ranks(
     (group eq-null-safe, value ==) to attach ranks.
 
     Plan shape: one map-side-combined groupBy(group, value) histogram
-    shuffle (the only data-sized stage), then the prefix walk of ``__f``
+    shuffle (the only data-sized stage), then a prefix pass of ``__f``
     over that histogram (the rank is its exclusive prefix + 1, the group
-    count its total). For a non-numeric value type the bucket map
+    count its total) in the shape :func:`bucketed_prefix_sums` would
+    choose: plain windows for a summary-sized histogram, else the
+    bucketed walk. For a non-numeric value type the bucket map
     degenerates to one bucket — still a histogram-sized
     (distinct-values-per-group) sort, never a raw-row sort.
     """
@@ -211,28 +214,30 @@ def bucketed_group_value_ranks(
     gcols = list(group_cols)
     v = F.col(value_col)
     freq = F.count(F.lit(1)) if freq_col is None else F.sum(freq_col)
-    # r14: the histogram subtree fans out to 3 consumers (range frame,
-    # per-bucket offsets, within-bucket window) whose divergent column
-    # pruning defeats exchange reuse — each consumer re-executes the
-    # data-sized groupBy from the scan. reuse_frame cuts that to one
-    # execution above the input-size threshold, and is a no-op at test
-    # scale (operators._adaptive).
-    hist, cut = reuse_frame_cut(
-        base.groupBy(*gcols, v.alias("__v")).agg(freq.alias("__f"))
-    )
-    # r14: when the histogram was materialized, the range frame derives
-    # from it (min/max over the DISTINCT values equals min/max over the
-    # raw rows — bucket maps are rank-invariant anyway) so the raw-row
-    # subtree is executed ZERO extra times. When it was not (test scale),
-    # keep the direct min/max over `base` — a map-side aggregate, cheaper
-    # than re-running the histogram exchange.
-    hb = _bucket_map(hist, "__v", buckets, None if cut else base.select(v.alias("__v")))
-    return _prefix_pass(hb, gcols, "__v", ["__f"]).select(
+    hist = base.groupBy(*gcols, v.alias("__v")).agg(freq.alias("__f"))
+    if _adaptive.summary_sized(hist):
+        ps = window_prefix_sums(hist, gcols, "__v", ["__f"])
+    else:
+        # r14: the histogram subtree fans out to 3 consumers (range frame,
+        # per-bucket offsets, within-bucket window) whose divergent column
+        # pruning defeats exchange reuse — each consumer re-executes the
+        # data-sized groupBy from the scan. reuse_frame cuts that to one
+        # execution above the input-size threshold.
+        hist, cut = _adaptive.reuse_frame_cut(hist)
+        # r14: when the histogram was materialized, the range frame derives
+        # from it (min/max over the DISTINCT values equals min/max over the
+        # raw rows — bucket maps are rank-invariant anyway) so the raw-row
+        # subtree is executed ZERO extra times. When it was not, keep the
+        # direct min/max over `base` — a map-side aggregate, cheaper than
+        # re-running the histogram exchange.
+        src = None if cut else base.select(v.alias("__v"))
+        ps = _prefix_pass(_bucket_map(hist, "__v", buckets, src), gcols, "__v", ["__f"])
+    return ps.select(
         *gcols,
         "__v",
         "__f",
-        (F.col("__pre0") + F.lit(1)).cast("long").alias("__rg"),
-        F.col("__tot0").cast("long").alias("__ng"),
+        (F.col("__pre___f") + F.lit(1)).cast("long").alias("__rg"),
+        F.col("__tot___f").cast("long").alias("__ng"),
     )
 
 
@@ -261,19 +266,22 @@ def bucketed_prefix_sums(
     ``c`` in ``sum_cols``, ``__tot_<c>`` (the group total) and
     ``__pre_<c>`` (sum of ``c`` over STRICTLY SMALLER values in the
     group, 0 for the smallest); every input column passes through.
-    Output types: an INTEGRAL ``sum_cols`` entry (the count-like
-    default) comes back as long; a fractional/decimal entry keeps
-    Spark's natural sum type (e.g. DECIMAL(38,9) masses stay exact
-    decimals — never silently truncated to integers). Decimal sums must
-    fit 28 integer digits: the offset+local addition narrows its
-    operands to precision 37 so the result keeps the input's full scale
-    instead of Spark's precision-capped scale-8 downgrade.
+    Output types are Spark's natural sum types: long for an INTEGRAL
+    ``sum_cols`` entry (the count-like default), and a fractional/decimal
+    entry keeps its own (e.g. DECIMAL(38,9) masses stay exact decimals —
+    never silently truncated to integers). Decimal sums must fit 28
+    integer digits: the offset+local addition narrows its operands to
+    precision 37 so the result keeps the input's full scale instead of
+    Spark's precision-capped scale-8 downgrade.
 
-    Plan shape: one groups×buckets offsets aggregate with a per-group
-    prefix window over ≤buckets rows, a within-bucket prefix window
-    (parallelism groups×buckets), and a (group, bucket)-keyed equi-join
-    of the summary frames — nothing data-sized beyond the histogram the
-    caller already built.
+    Plan shape, chosen here by ``_adaptive.summary_sized(hist)``: a
+    summary-sized ``hist`` takes :func:`window_prefix_sums` (one exchange
+    and sort, no lineage cut); any other takes the bucketed walk — one
+    groups×buckets offsets aggregate with a per-group prefix window over
+    ≤buckets rows, a within-bucket prefix window (parallelism
+    groups×buckets), and a (group, bucket)-keyed equi-join of the summary
+    frames — nothing data-sized beyond the histogram the caller already
+    built. Both shapes give identical rows, so a caller never branches.
 
     CHAINED PASSES (r12): a second prefix pass over a FIRST pass's
     output — the kaplan_meier shape, where the second pass's sum
@@ -288,7 +296,10 @@ def bucketed_prefix_sums(
     keys pass 1's output is already partitioned AND sorted by — adds no
     data-sized exchange or sort. ``bucket_col`` values must be a prior
     pass's ids over the SAME value column (any monotone-in-value int
-    works; exactness never depends on bucket balance).
+    works; exactness never depends on bucket balance). A chained pass
+    follows its first pass's shape without checking the gate again: on
+    the window shape ``keep_bucket`` adds no column, and a pass whose
+    ``bucket_col`` is absent from ``hist`` takes the window shape too.
     """
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
@@ -296,14 +307,20 @@ def bucketed_prefix_sums(
         raise ValueError("bucketed_prefix_sums needs sum columns")
     gcols = list(group_cols)
     scols = list(sum_cols)
+    if bucket_col is None:
+        window = _adaptive.summary_sized(hist)
+    else:  # a chained pass: bucketed only if its first pass kept bucket ids
+        window = bucket_col not in hist.columns
+    if window:
+        return window_prefix_sums(hist, gcols, value_col, scols)
     # r14: the caller's histogram fans out to 3 consumers here (range
     # frame, per-bucket offsets, within-bucket prefix window) with
     # divergent pruning — no exchange reuse, so each consumer re-runs
-    # the caller's whole upstream. Scale-adaptive single execution;
-    # no-op at test scale (operators._adaptive.reuse_frame). A chained
-    # second pass (bucket_col=...) keeps its no-new-exchange property:
-    # the cut preserves partitioning/ordering metadata.
-    hist = reuse_frame(hist)
+    # the caller's whole upstream. Scale-adaptive single execution
+    # (operators._adaptive.reuse_frame). A chained second pass
+    # (bucket_col=...) keeps its no-new-exchange property: the cut
+    # preserves partitioning/ordering metadata.
+    hist = _adaptive.reuse_frame(hist)
     if bucket_col is None:
         hb = _bucket_map(hist, value_col, buckets)
     else:
@@ -324,12 +341,7 @@ def bucketed_prefix_sums(
                 )
             ),
         )
-    out = _prefix_pass(hb, gcols, value_col, scols).withColumnsRenamed(
-        {
-            **{f"__tot{i}": f"__tot_{c}" for i, c in enumerate(scols)},
-            **{f"__pre{i}": f"__pre_{c}" for i, c in enumerate(scols)},
-        }
-    )
+    out = _prefix_pass(hb, gcols, value_col, scols)
     if keep_bucket is None:
         return out.drop("__bk")
     return out.withColumnRenamed("__bk", keep_bucket)
@@ -342,14 +354,14 @@ def window_prefix_sums(
     sum_cols: Sequence[str],
 ) -> DataFrame:
     """:func:`bucketed_prefix_sums`' output contract (``__tot_<c>`` then
-    ``__pre_<c>`` appended, long for integral columns, the natural sum type
-    otherwise) from plain ``Window.partitionBy(*group_cols)`` frames: one
-    exchange and sort, no bucket map, no join.
+    ``__pre_<c>`` appended, in Spark's natural sum types) from plain
+    ``Window.partitionBy(*group_cols)`` frames: one exchange and sort, no
+    bucket map, no join.
 
     Each group's whole histogram sorts on one partition (ungrouped: the
-    whole histogram), so callers take this shape only for a SUMMARY-sized
-    input (``_adaptive.summary_sized``) and the bucketed walk otherwise.
-    The frames are an exclusive ``rowsBetween(unboundedPreceding, -1)``
+    whole histogram), so the prefix walks take this shape only for a
+    SUMMARY-sized input (``_adaptive.summary_sized``) and the bucketed
+    walk otherwise. The frames are an exclusive ``rowsBetween(unboundedPreceding, -1)``
     running sum and an unordered partition total — never a
     ``currentRow → unboundedFollowing`` suffix frame, which Spark
     evaluates row by row over the rest of the partition (O(n²)). Integral
@@ -361,15 +373,11 @@ def window_prefix_sums(
     scols = list(sum_cols)
     whole = Window.partitionBy(*group_cols)
     before = whole.orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
-
-    def typed(col, c):
-        return col.cast("long") if isinstance(hist.schema[c].dataType, _INTEGRAL) else col
-
     return hist.select(
         "*",
-        *[typed(F.sum(c).over(whole), c).alias(f"__tot_{c}") for c in scols],
+        *[F.sum(c).over(whole).alias(f"__tot_{c}") for c in scols],
         *[
-            typed(F.coalesce(F.sum(c).over(before), F.lit(0)), c).alias(f"__pre_{c}")
+            F.coalesce(F.sum(c).over(before), F.lit(0)).alias(f"__pre_{c}")
             for c in scols
         ],
     )

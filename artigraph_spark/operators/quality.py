@@ -370,12 +370,11 @@ def _cumulative_hist(df: DataFrame, group_col: str, value_col: str) -> DataFrame
     """Per-group value histogram with running counts: ``(group, __v, __f,
     __cum, __n)`` — the sort-free substrate for exact rank statistics
     (winsorize thresholds, medians, equi-depth bins). One (group, value)
-    count shuffle; the running sum rides the range-bucketed two-phase
-    prefix (``bucketed_prefix_sums``), so a near-unique value column —
-    where the histogram IS the data — never parks a group's whole
-    distinct-value walk on one partition (the r10 fix; previously this
-    was a per-group window over the histogram with a documented
-    quantize-first caveat)."""
+    count shuffle; the running sum is one ``bucketed_prefix_sums`` call,
+    which takes a per-group window over a summary-sized histogram and the
+    range-bucketed two-phase prefix otherwise, so a near-unique value
+    column — where the histogram IS the data — never parks a group's
+    whole distinct-value walk on one partition (the r10 fix)."""
     from artigraph_spark.operators._ranks import bucketed_prefix_sums
 
     c = F.col(value_col)
@@ -960,15 +959,18 @@ def psi_drift(
     # histogram has one consumer and stays lazy.
     hb, hc = reuse_frame(_hist(base)), _hist(cur)
     wg = Window.partitionBy()
-    # The base histogram's cumulative walk rides the range-bucketed
-    # two-phase prefix — near-unique columns (where the histogram IS the
-    # data) never park on one partition (the r10 fix). Everything past
-    # the two histograms is one linear pipeline per side: each row of the
-    # base histogram covers ranks in (cum − f, cum], so the equi-depth
-    # edges fall out of a bins-1× explode + filter — no rank self-join,
-    # no raw-row re-scan (one FileScan per side plus the edge pass,
-    # whose repeated histogram exchange is runtime-reused). The
-    # remaining wg windows run over the ≤bins-row bin summary only.
+    # The base histogram's cumulative walk is one bucketed_prefix_sums
+    # call: plain windows while the histogram is summary-sized, else the
+    # range-bucketed two-phase prefix, so near-unique columns (where the
+    # histogram IS the data) never park on one partition (the r10 fix).
+    # A cut above is a materialized leaf, which the walk's size gate
+    # never reads as small, so the cut histogram stays bucketed.
+    # Everything past the two histograms is one linear pipeline per side:
+    # each row of the base histogram covers ranks in (cum − f, cum], so
+    # the equi-depth edges fall out of a bins-1× explode + filter — no
+    # rank self-join, no raw-row re-scan (one FileScan per side plus the
+    # edge pass, whose repeated histogram exchange is runtime-reused).
+    # The remaining wg windows run over the ≤bins-row bin summary only.
     from artigraph_spark.operators._ranks import bucketed_prefix_sums
 
     cb = bucketed_prefix_sums(hb, [], "__v", ["__f"]).select(

@@ -1056,35 +1056,16 @@ def kaplan_meier(
     0/1 flag, never ln(0).
 
     Scale shape: one groupBy(duration) shuffle collapses the data to the
-    risk table, then two cumulative walks (exit counts for n_risk, then
-    term/zero-flag for the curve) run in one of two shapes, chosen ONCE
-    on the un-cut risk table by :func:`.._adaptive.summary_sized` (every
-    input leaf has a known estimate, summing below
-    ``SPARK_GRAFT_REUSE_MIN_BYTES``, default 256 MB):
-
-    - summary-sized: both walks are plain
-      ``Window.partitionBy(*group_cols).orderBy(duration)`` frames
-      (:func:`.._ranks.window_prefix_sums`) with no lineage cut — one
-      exchange and sort serve both walks, and nothing runs while the
-      frame is defined.
-    - otherwise (large, or unknown size): both walks ride
-      :func:`.._ranks.bucketed_prefix_sums`, so even a µs-granular
-      duration column — where the risk table is data-sized — never
-      serializes onto one partition (the only single-partition windows
-      left are the ≤buckets-row offsets frames), and each walk's input
-      is lineage-cut through :func:`.._adaptive.cut_frame`.
-
-    Both shapes give identical rows: the sums are exact integers and
-    DECIMAL(38,9) grid terms.
+    risk table, then two chained :func:`.._ranks.bucketed_prefix_sums`
+    passes (exit counts for n_risk, then term/zero-flag for the curve),
+    which pick plain windows for a small risk table and the bucketed walk
+    otherwise — so even a µs-granular duration column, where the risk
+    table is data-sized, never serializes onto one partition.
 
     Returns ``(*group_cols, duration, n_risk, n_event, n_censored,
     survival_r)`` ordered by (*group_cols, duration).
     """
-    from artigraph_spark.operators._adaptive import cut_frame, summary_sized
-    from artigraph_spark.operators._ranks import (
-        bucketed_prefix_sums,
-        window_prefix_sums,
-    )
+    from artigraph_spark.operators._ranks import bucketed_prefix_sums
 
     gcols = list(group_cols)
     dur, obs = F.col(duration_col), F.col(observed_col)
@@ -1112,38 +1093,13 @@ def kaplan_meier(
         )
         .withColumn("__exits", F.col("n_event") + F.col("n_censored"))
     )
-    # Decided once, here: downstream of a cut the estimate is the cut
-    # frame's own (histogram) size, not the input's.
-    small = summary_sized(risk)
     # pass 1: n_risk = total exits − exits at strictly smaller durations.
-    if small:
-        t = window_prefix_sums(risk, gcols, "duration", ["__exits"])
-        kb = []
-    else:
-        # Lineage cuts (the pagerank convention): each bucketed pass fans
-        # its input into 4 static branches (range frame / offsets / local
-        # window / passthrough), and column pruning can specialize the
-        # exchanges per branch, defeating runtime reuse — without the
-        # cut, the DATA-SIZED aggregation below `risk` re-executes per
-        # branch, and pass 2 would multiply pass 1's whole tree again.
-        # Both frames are summary-sized (≤ groups×durations rows), so the
-        # checkpoint blocks are small. Under AQE the cut runs the
-        # upstream shuffle stages when the frame is defined.
-        # keep_bucket retains the bucket id so pass 2 rides the SAME
-        # bucketed walk (see bucketed_prefix_sums' chained-passes note):
-        # recomputing the bucket map would re-aggregate min/max and fan a
-        # third branch out of this frame for nothing.
-        t = bucketed_prefix_sums(
-            cut_frame(risk), gcols, "duration", ["__exits"], keep_bucket="__kb"
-        )
-        kb = ["__kb"]
-    t = t.select(
-        *gcols,
-        "duration",
-        "n_event",
-        "n_censored",
-        *kb,
-        (F.col("__tot___exits") - F.col("__pre___exits")).alias("n_risk"),
+    # keep_bucket lets pass 2 ride the same bucket ids when the walk is
+    # bucketed (see bucketed_prefix_sums' chained-passes note).
+    t = (
+        bucketed_prefix_sums(risk, gcols, "duration", ["__exits"], keep_bucket="__kb")
+        .withColumn("n_risk", F.col("__tot___exits") - F.col("__pre___exits"))
+        .drop("__exits", "__tot___exits", "__pre___exits")
     )
     # pass 2: the term depends on n_risk (itself a prefix), so the curve
     # needs a second prefix over the one-row-per-duration frame pass 1
@@ -1161,12 +1117,9 @@ def kaplan_meier(
     seeded = t.withColumn("__term", term.cast("decimal(38,9)")).withColumn(
         "__zf", F.when(F.col("n_event") == F.col("n_risk"), 1).otherwise(0)
     )
-    if small:
-        cum = window_prefix_sums(seeded, gcols, "duration", ["__term", "__zf"])
-    else:
-        cum = bucketed_prefix_sums(
-            cut_frame(seeded), gcols, "duration", ["__term", "__zf"], bucket_col="__kb"
-        )
+    cum = bucketed_prefix_sums(
+        seeded, gcols, "duration", ["__term", "__zf"], bucket_col="__kb"
+    )
     # inclusive sum = exclusive prefix + own term; both narrowed to
     # precision 37 so the decimal add keeps scale 9 (Spark caps
     # (38,9)+(38,9) at 38 digits by dropping a scale digit)
@@ -1213,14 +1166,16 @@ def restricted_mean_survival(
     which would serialize each group's whole curve on one partition
     (µs-granular durations make the curve data-sized; same hazard the
     r11 kaplan_meier rewrite removed). The curve input is lineage-cut
-    (the chained-pass rule, docs/PLANS.md): it is itself a bucketed
+    (the chained-pass rule, docs/PLANS.md): it is itself a prefix
     pass's output, and the three consumers here would otherwise
     re-execute its tree per branch.
 
     Returns one row per group: ``(*group_cols, horizon, rmst_r)``.
     """
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
     from artigraph_spark.operators._adaptive import cut_frame
-    from artigraph_spark.operators._ranks import _INTEGRAL, bucketed_group_row_numbers
+    from artigraph_spark.operators._ranks import bucketed_group_row_numbers
 
     if horizon <= 0:
         raise ValueError(f"horizon must be positive, got {horizon}")
@@ -1232,7 +1187,7 @@ def restricted_mean_survival(
     # rescale to an integer grid (ms/µs) first, which is also what
     # keeps the KM risk table granularity-safe.
     dt = curve.schema[duration_col].dataType
-    if not isinstance(dt, _INTEGRAL):
+    if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
         raise TypeError(
             "restricted_mean_survival: duration column "
             f"{duration_col!r} must be integral (byte/short/int/long) so "
@@ -1325,24 +1280,15 @@ def logrank_test(
     and Z is one subtraction / sqrt division on already-rounded inputs —
     engine-identical end to end.
 
-    Scale shape: kaplan_meier's gate, taken once on the un-cut risk
-    table. A summary-sized input (:func:`.._adaptive.summary_sized`)
-    takes a plain ordered window over the risk table
-    (:func:`.._ranks.window_prefix_sums`, one partition — it is small)
-    with no cut; a large or unknown-size input takes a lineage-cut
-    :func:`.._ranks.bucketed_prefix_sums` pass, so the risk table never
-    sorts on one partition, whatever the duration granularity. Both
-    give identical rows.
+    Scale shape: one :func:`.._ranks.bucketed_prefix_sums` pass over the
+    risk table, which never sorts a large risk table on one partition,
+    whatever the duration granularity.
 
     Returns one row ``(n_treat, n_control, o1, e1_r, v_r, z_r, p_r)``
     — z_r/p_r NULL when V = 0 (no comparable event times).
     """
     from artigraph_spark.functions import phi_approx
-    from artigraph_spark.operators._adaptive import cut_frame, summary_sized
-    from artigraph_spark.operators._ranks import (
-        bucketed_prefix_sums,
-        window_prefix_sums,
-    )
+    from artigraph_spark.operators._ranks import bucketed_prefix_sums
 
     dur, obs, grp = F.col(duration_col), F.col(observed_col), F.col(group_col)
     ok = dur.isNotNull() & obs.isNotNull() & grp.isNotNull()
@@ -1380,19 +1326,7 @@ def logrank_test(
             F.count(F.lit(1)).alias("__x"),
         )
     )
-    if summary_sized(risk):
-        ps = window_prefix_sums(risk, [], "duration", ["__x1", "__x"])
-    else:
-        # Lineage cut (the kaplan_meier/robust_outliers chained-pass
-        # rule): `risk` can be DATA-SIZED under near-unique durations, and
-        # the bucketed pass fans it into 3 static branches (range frame /
-        # offsets / local window). Column pruning can specialize the
-        # exchanges per branch, defeating runtime ReusedExchange, so
-        # without the cut the groupBy(duration) tree re-executes per
-        # branch (measured 2x on robust_outliers). The frame is one row
-        # per distinct duration — the lazy checkpoint is at most
-        # histogram-priced.
-        ps = bucketed_prefix_sums(cut_frame(risk), [], "duration", ["__x1", "__x"])
+    ps = bucketed_prefix_sums(risk, [], "duration", ["__x1", "__x"])
     n1 = F.col("__tot___x1") - F.col("__pre___x1")
     n = F.col("__tot___x") - F.col("__pre___x")
     d = F.col("__d")

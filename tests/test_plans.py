@@ -436,7 +436,7 @@ def test_chi2_and_mi_single_data_scan(spark, qs):
         assert "CartesianProduct" not in plan, name
 
 
-def test_ks_psi_one_scan_per_side(spark, qs):
+def test_ks_psi_one_scan_per_side(spark, qs, monkeypatch):
     # KS/PSI cumulative walks ride bucketed_prefix_sums (r10): the
     # histogram subtree is statically duplicated under the range-frame /
     # offsets / local-window branches, but every duplicate sits behind
@@ -455,11 +455,29 @@ def test_ks_psi_one_scan_per_side(spark, qs):
     # histogram exchange (2 sides) — NOT the exact node count (3 and 4
     # at Spark 4.0: an AQE/minor-version detail, not a contract; the
     # r11 advice flagged the exact pin as flaky).
+    # These counts are the bucketed arm's, pinned by patching the size
+    # gate: at this fixture scale the gate picks the plain-window arm.
+    from artigraph_spark.operators import _adaptive
+
+    monkeypatch.setattr(_adaptive, "summary_sized", lambda df: False)
     df = qs["ks_price_drift"](spark, SF)
     plan = P.physical_plan(df, "simple")
     assert plan.count("FileScan") <= 8
     assert "CartesianProduct" not in plan
     assert P.executed_plan(df).count("ReusedExchange") >= 2
+    df = qs["psi_price_drift"](spark, SF)
+    plan = P.physical_plan(df, "simple")
+    assert plan.count("FileScan") <= 10
+    assert "CartesianProduct" not in plan
+    assert P.executed_plan(df).count("ReusedExchange") >= 2
+    # The window arm the real gate picks here: KS duplicates no branch
+    # (one FileScan per side, nothing to reuse), and PSI's base histogram
+    # still feeds two consumers through one reused exchange.
+    monkeypatch.undo()
+    df = qs["ks_price_drift"](spark, SF)
+    plan = P.physical_plan(df, "simple")
+    assert plan.count("FileScan") == 2
+    assert "CartesianProduct" not in plan
     df = qs["psi_price_drift"](spark, SF)
     plan = P.physical_plan(df, "simple")
     assert plan.count("FileScan") <= 10

@@ -1,8 +1,11 @@
-"""The size gate behind kaplan_meier's and logrank_test's prefix sums:
+"""The size gate inside ``_ranks``' two prefix walks
+(``bucketed_prefix_sums``, ``bucketed_group_value_ranks``), and so behind
+every operator that calls them, kaplan_meier and logrank_test included:
 ``_adaptive.summary_sized`` picks the plain-window arm only for a frame
-whose every leaf has a known estimate summing below the reuse threshold,
-and fails safe (the bucketed arm) otherwise. Above the gate the two
-operators' lineage cuts route through ``_adaptive.cut_frame``."""
+with no materialized leaf whose every leaf has a known estimate summing
+below the reuse threshold, and fails safe (the bucketed arm) otherwise.
+On the bucketed arm the walks' own lineage cuts route through
+``_adaptive.cut_frame``."""
 
 from __future__ import annotations
 
@@ -11,8 +14,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from artigraph_spark import plans as P
 from artigraph_spark.operators import _adaptive
 from artigraph_spark.operators._adaptive import summary_sized
+from artigraph_spark.operators._ranks import bucketed_prefix_sums
 from artigraph_spark.operators.timeseries import kaplan_meier, logrank_test
 
 _ENV = "SPARK_GRAFT_REUSE_MIN_BYTES"
@@ -63,6 +68,33 @@ def test_estimate_at_threshold_takes_bucketed_arm(spark, monkeypatch):
     assert summary_sized(df)
     monkeypatch.setenv(_ENV, "0")
     assert not summary_sized(df)
+
+
+def test_cut_frame_is_not_summary_sized(spark, monkeypatch):
+    monkeypatch.delenv(_ENV, raising=False)
+    agg = _units(spark).groupBy("d").count()
+    assert summary_sized(agg)
+    cut = agg.localCheckpoint(eager=False)
+    # the cut keeps a known, histogram-sized estimate below the
+    # threshold: only its materialized leaf says no
+    sizes = _adaptive._leaf_sizes(cut)
+    assert sizes and all(s < _adaptive._UNKNOWN_SIZE for s in sizes)
+    assert sum(sizes) < _adaptive._threshold()
+    assert not summary_sized(cut)
+    assert not summary_sized(cut.groupBy("d").count())
+    assert not summary_sized(cut.join(_units(spark), "d"))
+
+
+def test_prefix_walk_over_a_cut_histogram_stays_bucketed(spark, monkeypatch):
+    # psi_drift's shape above the threshold: the base histogram is cut
+    # before the prefix call, which must not then read it as small
+    monkeypatch.delenv(_ENV, raising=False)
+    hist = _units(spark).groupBy("d").agg(F.sum("obs").alias("n"))
+    small = bucketed_prefix_sums(hist, [], "d", ["n"], buckets=4)
+    cut = bucketed_prefix_sums(hist.localCheckpoint(eager=False), [], "d", ["n"], buckets=4)
+    assert "__bk" not in P.physical_plan(small, "simple")
+    assert "__bk" in P.physical_plan(cut, "simple")
+    assert sorted(cut.collect()) == sorted(small.collect())
 
 
 def test_malformed_threshold_falls_back_to_default(spark, monkeypatch):
@@ -129,3 +161,58 @@ def test_window_prefix_sums_has_no_suffix_frame(spark):
     # never currentRow → unboundedFollowing (evaluated in O(n²))
     assert "currentrow$(), unboundedfollowing$()" not in plan.lower()
     assert "unboundedpreceding$(), -1" in plan.lower()
+
+
+def test_kaplan_meier_windows_are_bucket_partitioned(spark, monkeypatch):
+    # the bucketed arm, pinned by the gate
+    monkeypatch.delenv(_ENV, raising=False)
+    monkeypatch.setattr(_adaptive, "summary_sized", lambda df: False)
+    df = spark.createDataFrame([(i, i % 2) for i in range(1, 50)], "d: bigint, obs: int")
+    plan = P.physical_plan(kaplan_meier(df, "d", "obs"), "simple")
+    # the data-sized local windows partition by bucket; the only
+    # unpartitioned windows left are the <=buckets-row offsets frames
+    assert "hashpartitioning(__bk" in plan
+
+
+def test_kaplan_meier_summary_sized_input_takes_plain_windows(spark, monkeypatch):
+    from tests.test_round11_ops import _naive_km
+
+    # the window arm, by the real gate: a Range leaf has a known (tiny)
+    # estimate below the default threshold
+    monkeypatch.delenv(_ENV, raising=False)
+    df = spark.range(1, 50).select(
+        F.col("id").alias("d"), (F.col("id") % 2).cast("int").alias("obs")
+    )
+    out = kaplan_meier(df, "d", "obs")
+    plan = P.physical_plan(out, "simple")
+    # no bucket map and no lineage cut: the checkpoint scan is gone
+    assert "__bk" not in plan
+    assert "ExistingRDD" not in plan
+    assert "Window" in plan
+    got = {
+        r["duration"]: (r["n_risk"], r["n_event"], r["n_censored"], r["survival_r"])
+        for r in out.collect()
+    }
+    assert got == _naive_km([(i, i % 2) for i in range(1, 50)])
+
+
+def test_logrank_risk_table_is_lineage_cut(spark, monkeypatch):
+    # A Range source plans no ExistingRDD of its own, so one shows only
+    # where the risk table is cut: on the forced-cut arm (a zero
+    # threshold), never on the window arm the default gate picks here.
+    monkeypatch.delenv("SPARK_GRAFT_REUSE_DIR", raising=False)
+    df = spark.range(1, 40).select(
+        F.col("id").alias("duration"),
+        (F.col("id") % 2).cast("int").alias("observed"),
+        (F.col("id") * 7 % 2).cast("int").alias("grp"),
+    )
+    for threshold, cut in ((None, False), ("0", True)):
+        if threshold is None:
+            monkeypatch.delenv(_ENV, raising=False)
+        else:
+            monkeypatch.setenv(_ENV, threshold)
+        out = logrank_test(df, "duration", "observed", "grp")
+        assert ("ExistingRDD" in P.physical_plan(out, "simple")) is cut
+        # and the statistic itself still computes
+        row = out.collect()[0]
+        assert row["n_treat"] + row["n_control"] == 39

@@ -881,6 +881,7 @@ def test_window_prefix_sums_equal_bucketed_property(spark, rows):
     DECIMAL(38,9) mass, with a NULL group key among the groups."""
     from pyspark.sql import functions as F
 
+    from artigraph_spark.operators import _adaptive
     from artigraph_spark.operators._ranks import (
         bucketed_prefix_sums,
         window_prefix_sums,
@@ -894,12 +895,51 @@ def test_window_prefix_sums_equal_bucketed_property(spark, rows):
         (F.sum("f") + F.lit(0.000000001) * F.sum("f")).cast("decimal(38,9)").alias("m"),
     )
     win = window_prefix_sums(hist, ["g"], "v", ["n", "m"])
-    bkt = bucketed_prefix_sums(hist, ["g"], "v", ["n", "m"], buckets=3)
+    with pytest.MonkeyPatch.context() as mp:  # pin the bucketed walk
+        mp.setattr(_adaptive, "summary_sized", lambda df: False)
+        bkt = bucketed_prefix_sums(hist, ["g"], "v", ["n", "m"], buckets=3)
     assert win.schema.simpleString() == bkt.schema.simpleString()
     assert dict(win.dtypes)["__pre_n"] == "bigint"
     assert dict(win.dtypes)["__pre_m"] == "decimal(38,9)"
     key = lambda r: (r["g"] is None, r["g"] or "", r["v"])  # noqa: E731
     assert sorted(win.collect(), key=key) == sorted(bkt.collect(), key=key)
+
+
+_vr_arm_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", None]),
+        st.integers(min_value=-3, max_value=3),
+        st.integers(min_value=1, max_value=3),
+    ),
+    max_size=30,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(_vr_arm_rows, st.booleans())
+def test_value_ranks_arms_agree_property(spark, rows, as_string):
+    """For ANY input (empty included), bucketed_group_value_ranks'
+    plain-window arm and its forced-bucketed arm give identical rows and
+    types — on raw rows and on the ``freq_col`` histogram form, for a
+    numeric and a string value, with a NULL group key among the groups."""
+    from pyspark.sql import functions as F
+
+    from artigraph_spark.operators._ranks import bucketed_group_value_ranks
+
+    df = spark.createDataFrame(rows, "g: string, v: bigint, f: int")
+    if as_string:
+        df = df.withColumn("v", F.col("v").cast("string"))
+    key = lambda r: (r["g"] is None, r["g"] or "", r["__v"])  # noqa: E731
+    for freq_col in (None, "f"):
+
+        def run():
+            out = bucketed_group_value_ranks(
+                df, ["g"], "v", buckets=3, freq_col=freq_col
+            )
+            return out.schema.simpleString(), sorted(out.collect(), key=key)
+
+        win, bkt = _both_arms(run)
+        assert win == bkt
 
 
 _km_arm_rows = st.lists(

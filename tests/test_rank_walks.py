@@ -6,7 +6,12 @@ a change to the shared core that adds an exchange, a window or a join
 shows up in every walk that uses it. The ungrouped walk broadcasts its
 offsets (at most ``buckets + 2`` rows) whatever the input's size
 estimate, so an unknown-size input plans no sort-merge join and a
-non-numeric value plans no cartesian product."""
+non-numeric value plans no cartesian product.
+
+The two prefix walks pick their shape with ``_adaptive.summary_sized``;
+each test here pins the shape it checks by patching that gate, so a Range
+input (known and tiny, which the real gate sends to plain windows) still
+exercises the bucketed walk."""
 
 from __future__ import annotations
 
@@ -16,6 +21,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from artigraph_spark.operators import _adaptive
 from artigraph_spark.operators._ranks import (
     bucketed_group_row_numbers,
     bucketed_group_value_ranks,
@@ -85,10 +91,60 @@ _SHAPES = {
 }
 
 
+def _pin(monkeypatch, window: bool):
+    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
+    monkeypatch.setattr(_adaptive, "summary_sized", lambda df: window)
+
+
 @pytest.mark.parametrize("walk", sorted(_WALKS))
 def test_walk_plan_shape(spark, monkeypatch, walk):
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
+    _pin(monkeypatch, window=False)
     assert _shape(_WALKS[walk](_rows(spark))) == _SHAPES[walk]
+
+
+# The window shape of the two gated walks: the histogram's exchange plus
+# the window's own, and two Window nodes (the ordered running sum and the
+# unordered total) — no bucket map, no join.
+_WINDOW_SHAPES = {
+    "value_ranks": {"Exchange": 2, "Window": 2},
+    "prefix_grouped": {"Exchange": 2, "Window": 2},
+    "prefix_ungrouped": {"Exchange": 2, "Window": 2},
+}
+
+
+@pytest.mark.parametrize("walk", sorted(_WINDOW_SHAPES))
+def test_window_shape_of_gated_walks(spark, monkeypatch, walk):
+    _pin(monkeypatch, window=True)
+    out = _WALKS[walk](_rows(spark))
+    assert _shape(out) == _WINDOW_SHAPES[walk]
+    # the real gate takes the same shape for this known, tiny input
+    monkeypatch.undo()
+    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
+    assert _shape(_WALKS[walk](_rows(spark))) == _WINDOW_SHAPES[walk]
+
+
+@pytest.mark.parametrize("window", [False, True])
+def test_chained_pass_follows_first_pass_shape(spark, monkeypatch, window):
+    hist = _hist(_rows(spark), ["g"])
+    _pin(monkeypatch, window=window)
+    p1 = bucketed_prefix_sums(hist, ["g"], "v", ["f"], buckets=8, keep_bucket="__kb")
+    # the window shape keeps no bucket id, and pass 2 follows without
+    # consulting the gate again
+    assert ("__kb" in p1.columns) is not window
+    monkeypatch.setattr(_adaptive, "summary_sized", lambda df: pytest.fail("gated"))
+    seeded = p1.withColumn("f2", F.col("__pre_f") + F.col("f"))
+    p2 = bucketed_prefix_sums(seeded, ["g"], "v", ["f2"], buckets=8, bucket_col="__kb")
+    assert ("__bk" in str(p2._jdf.queryExecution().analyzed())) is not window
+    want = window_prefix_sums(
+        window_prefix_sums(hist, ["g"], "v", ["f"]).withColumn(
+            "f2", F.col("__pre_f") + F.col("f")
+        ),
+        ["g"],
+        "v",
+        ["f2"],
+    )
+    cols = ["g", "v", "__pre_f", "__tot_f", "__pre_f2", "__tot_f2"]
+    assert sorted(p2.select(cols).collect()) == sorted(want.select(cols).collect())
 
 
 def _local(spark, vtype):
@@ -99,7 +155,7 @@ def _local(spark, vtype):
 
 @pytest.mark.parametrize("source", ["local", "range"])
 def test_ungrouped_string_prefix_is_an_equi_join(spark, monkeypatch, source):
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
+    _pin(monkeypatch, window=False)
     df = _local(spark, "string") if source == "local" else _rows(spark)
     hist = _hist(df.withColumn("v", F.col("v").cast("string")), [])
     out = bucketed_prefix_sums(hist, [], "v", ["f"], buckets=8)
@@ -112,7 +168,7 @@ def test_ungrouped_string_prefix_is_an_equi_join(spark, monkeypatch, source):
 
 
 def test_ungrouped_numeric_prefix_of_unknown_size_broadcasts(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
+    _pin(monkeypatch, window=False)
     hist = _hist(_local(spark, "long"), [])
     out = bucketed_prefix_sums(hist, [], "v", ["f"], buckets=8)
     assert "SortMergeJoin" not in _shape(out)

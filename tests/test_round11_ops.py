@@ -375,38 +375,3 @@ def test_logrank_rejects_bad_flags(spark):
     bad_o = spark.createDataFrame([(1, 3, 1)], "d: bigint, obs: int, g: int")
     with pytest.raises(Exception, match="observed flag must be 0/1"):
         logrank_test(bad_o, "d", "obs", "g").collect()
-
-
-def test_kaplan_meier_windows_are_bucket_partitioned(spark, monkeypatch):
-    from artigraph_spark import plans as P
-    from artigraph_spark.operators.timeseries import kaplan_meier
-
-    # the bucketed arm: a zero reuse threshold forces it at any size
-    monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "0")
-    df = spark.createDataFrame([(i, i % 2) for i in range(1, 50)], "d: bigint, obs: int")
-    plan = P.physical_plan(kaplan_meier(df, "d", "obs"), "simple")
-    # the data-sized local windows partition by bucket; the only
-    # unpartitioned windows left are the <=buckets-row offsets frames
-    assert "hashpartitioning(__bk" in plan
-
-
-def test_kaplan_meier_summary_sized_input_takes_plain_windows(spark, monkeypatch):
-    from artigraph_spark import plans as P
-    from artigraph_spark.operators.timeseries import kaplan_meier
-
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
-    # a Range leaf has a known (tiny) estimate: the window arm
-    df = spark.range(1, 50).select(
-        F.col("id").alias("d"), (F.col("id") % 2).cast("int").alias("obs")
-    )
-    out = kaplan_meier(df, "d", "obs")
-    plan = P.physical_plan(out, "simple")
-    # no bucket map and no lineage cut: the checkpoint scan is gone
-    assert "__bk" not in plan
-    assert "ExistingRDD" not in plan
-    assert "Window" in plan
-    got = {
-        r["duration"]: (r["n_risk"], r["n_event"], r["n_censored"], r["survival_r"])
-        for r in out.collect()
-    }
-    assert got == _naive_km([(i, i % 2) for i in range(1, 50)])

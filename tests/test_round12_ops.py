@@ -3,10 +3,10 @@
 Each test pins a behavior added or fixed in round 12 — the
 restricted_mean_survival integral-duration / negative-duration guards
 (the r11 advice medium item: fractional durations were silently
-HALF_UP-rounded by the DECIMAL(18,0) width cast), the logrank_test
-lineage cut, the fused kaplan_meier prefix walk (values unchanged, one
-bucketing instead of two), and the bucketed_prefix_sums pre-bucketed
-reuse mode backing the fuse.
+HALF_UP-rounded by the DECIMAL(18,0) width cast), the fused
+kaplan_meier prefix walk (values unchanged, one bucketing instead of
+two), and the bucketed_prefix_sums pre-bucketed reuse mode backing the
+fuse. The logrank_test lineage-cut test lives in test_prefix_gate.py.
 """
 
 import pytest
@@ -66,28 +66,6 @@ def test_rmst_hand_value_still_exact(spark):
     assert len(got) == 1
     assert got[0]["rmst_r"] == pytest.approx(5.0, abs=1e-9)
     assert got[0]["horizon"] == 8
-
-
-# --- logrank lineage cut ------------------------------------------------------
-
-
-def test_logrank_risk_table_is_lineage_cut(spark):
-    # The cut shows up as exactly one Scan ExistingRDD feeding the
-    # prefix-sum branches — the kaplan_meier/robust_outliers convention.
-    from artigraph_spark.operators.timeseries import logrank_test
-
-    df = spark.createDataFrame(
-        [(i, i % 2, (i * 7) % 2) for i in range(1, 40)],
-        "duration: long, observed: int, grp: int",
-    )
-    out = logrank_test(df, "duration", "observed", "grp")
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    assert "ExistingRDD" in plan
-    # and the statistic itself still computes
-    row = out.collect()[0]
-    assert row["n_treat"] + row["n_control"] == 39
 
 
 # --- bucketed_prefix_sums chained-pass reuse (the kaplan_meier fuse) ----------
