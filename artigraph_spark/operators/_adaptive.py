@@ -1,4 +1,5 @@
-"""Scoped AQE control for operators that manage their own partitioning.
+"""Adaptive decisions from one size estimate: the reuse cut, and scoped
+AQE control for operators that manage their own partitioning.
 
 AQE (adaptive query execution) re-optimizes at EVERY exchange: each shuffle
 becomes an independently submitted query stage with a driver barrier —
@@ -35,14 +36,36 @@ shape, not data volume) — but the benefit side is NOT zero at every
 scale: the r15 x30 probe (docs/SCALE_PROBE_r15.json) measured pagerank
 1.5x FASTER with AQE ON once the loop's input reached 373 MB (runtime
 partition coalescing/skew handling earns the barriers when stages do
-real data work). The pin is therefore SCALE-ADAPTIVE: it turns AQE off
-only while the operator's estimated input is below the reuse threshold
-``SPARK_GRAFT_REUSE_MIN_BYTES`` (default 256 MB — the dispatch-bound
-regime where the pin measured ~2x at sf0.1), and leaves the session's
-AQE alone above it or when the estimate is unknown. Sharing the reuse
-threshold means one knob for "is this input large": ``=0`` treats every
-input as large, so it forces the cut and the bucketed shape and never
-pins.
+real data work). The pin is therefore SCALE-ADAPTIVE.
+
+Every adaptive decision in the engine — the pin, the reuse cut and the
+prefix/rank gate of ``operators._ranks`` — reads ONE size estimate per
+frame, :func:`_estimate`: a single walk over the frame's leaf relations
+that sums the Catalyst estimates it knows, adds the SOURCE bytes that
+each lineage cut recorded when it was made, and counts the leaves it
+knows nothing about (a driver-local ``createDataFrame``, a user's own
+``localCheckpoint`` or cached relation). The two decisions over it share
+the reuse threshold ``SPARK_GRAFT_REUSE_MIN_BYTES`` (default 256 MB), so
+one knob says "this input is large":
+
+- :func:`summary_sized` — no unknown leaf and known + source bytes below
+  the threshold: the prefix walks take plain windows and a pinned
+  operator runs with AQE off. An unknown leaf answers no (the bucketed
+  shape and the session's AQE are safe at any size).
+- the reuse cut (:func:`reuse_frame_cut`) — known + source bytes at or
+  above the threshold, on a frame that is not itself a bare leaf.
+
+``=0`` treats every input as large: it forces the cut and the bucketed
+shape and never pins.
+
+A cut (:func:`cut_frame`) names its own RDD after the estimate of the
+frame it cut (bytes and unknown leaves). Catalyst would estimate the
+cut's ``LogicalRDD`` leaf at the cut frame's OUTPUT (a histogram over
+2,045,762 B of parquet reads as 613,728 B on Spark 4.1.2, and a
+signature frame over 65,515 B as 169,033,645 B); the name carries the
+input it stands for instead, and every frame derived from the cut reads
+it through that leaf, through joins, aggregates and actions alike. Only
+this module writes or reads that name.
 
 A pinned operator runs in a CLONE of the caller's session with AQE off
 (``session.child_session``) and hands its result back as a frame of the
@@ -56,9 +79,11 @@ from __future__ import annotations
 
 import functools
 import os
+from collections import namedtuple
 
 from pyspark.sql import DataFrame
 
+from artigraph_spark.operators._checkpoint import checkpoint
 from artigraph_spark.session import child_session, rebind
 
 _FLAG = "spark.sql.adaptive.enabled"
@@ -75,14 +100,9 @@ _FLAG = "spark.sql.adaptive.enabled"
 _REUSE_ENV = "SPARK_GRAFT_REUSE_MIN_BYTES"
 _REUSE_DEFAULT = 256 * 1024 * 1024
 
-# Optional reliable-checkpoint routing for the cut (r15): when set, frames
-# cut above the threshold go through ``operators._checkpoint`` into this
-# fault-tolerant directory (HDFS/object store on a cluster) instead of
-# executor-local blocks. localCheckpoint blocks cannot be replayed after
-# executor loss, and the cut only fires ABOVE the size threshold — i.e.
-# exactly at the cluster scale where executor loss is routine — so
-# production runs should point this at durable storage; local/bench runs
-# leave it unset and keep the cheap executor-local path.
+# Optional reliable-checkpoint routing for every cut (:func:`cut_frame`):
+# production runs point it at durable storage (HDFS/object store);
+# local/bench runs leave it unset and keep executor-local blocks.
 _REUSE_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 
 # Catalyst's defaultSizeInBytes for relations with no statistics is
@@ -92,9 +112,20 @@ _REUSE_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 _UNKNOWN_SIZE = 1 << 60
 
 # Leaf plan classes of an already-materialized frame (a lineage cut's
-# output, a cached relation). Such a leaf carries the estimate of the frame
-# it holds, not of the input that frame was computed from.
+# output, a cached relation): known only through a cut's record.
 _MATERIALIZED = ("LogicalRDD", "InMemoryRelation")
+
+# The RDD name a cut records its source estimate under:
+# ``<_RECORD><known + source bytes>,<unknown leaves>``.
+_RECORD = "artigraph_spark.estimate="
+
+
+# What :func:`_estimate` reads off a frame: ``known`` bytes of the leaves
+# Catalyst has an estimate for, ``source`` bytes the cut leaves were
+# computed from (their records), the count of ``unknown`` leaves (no
+# estimate; a cut's record adds the unknown leaves of the frame it cut),
+# and the plan's class as ``root`` when the root is itself a leaf.
+_Estimate = namedtuple("_Estimate", "known source unknown root")
 
 
 def _threshold() -> int:
@@ -106,86 +137,60 @@ def _threshold() -> int:
         return _REUSE_DEFAULT
 
 
-def _leaf_sizes(df: DataFrame) -> "list[int] | None":
-    """The Catalyst size estimate of each LEAF relation of ``df``, or None
-    when the JVM-side walk fails (never raises into an operator)."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        return [
-            int(str(leaves.apply(i).stats().sizeInBytes()))
-            for i in range(leaves.size())
-        ]
-    except Exception:  # noqa: BLE001 — estimate is advisory only
-        return None
-
-
-def estimated_input_bytes(df: DataFrame) -> int | None:
-    """Sum of the Catalyst size estimates of ``df``'s LEAF relations —
-    the bytes one full execution of the frame's subtree re-reads from
-    storage.
+def _estimate(df: DataFrame) -> "_Estimate | None":
+    """One walk over ``df``'s leaf relations — the bytes one full
+    execution of the frame's subtree re-reads from storage — reading each
+    leaf's class and size once. None when the JVM-side walk fails (it
+    never raises into an operator).
 
     Leaves, not the plan root: without CBO column statistics Catalyst's
     default join estimate is the PRODUCT of the input sizes (measured:
     a 11 MB ⋈ 3 MB join at sf0.1 reports 1.5 TB), so a root estimate
     would wildly over-trigger. Leaf sizes are file-length-derived for
-    parquet relations (linear in scale factor). A frame already cut by
-    ``localCheckpoint`` is a leaf that keeps the Catalyst estimate of the
-    frame it cut — that frame's OUTPUT, not its input (measured on Spark
-    4.1.2: a histogram aggregate over 2,045,762 B of parquet reads as
-    613,728 B after the cut). Leaves with NO estimate (Catalyst
-    reports defaultSizeInBytes ≈ Long.MaxValue, e.g. a driver-local
-    ``createDataFrame`` relation) count as ZERO: such inputs are either
-    driver-local literals (tiny by construction) or already-materialized
-    RDDs — re-reading them is cheap, and "unknown" must not be read as
-    "huge" or every literal-seeded frame would pay a pointless cut.
-    Returns None when the JVM-side walk fails."""
-    sizes = _leaf_sizes(df)
-    if sizes is None:
-        return None
-    return sum(s for s in sizes if s < _UNKNOWN_SIZE)
-
-
-def _materialized_leaf(df: DataFrame) -> bool:
-    """True when a leaf of ``df`` is already materialized
-    (``_MATERIALIZED``), or when the JVM-side walk fails."""
+    parquet relations (linear in scale factor), and a self-join counts
+    its input twice."""
     try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        return any(
-            leaves.apply(i).getClass().getSimpleName() in _MATERIALIZED
-            for i in range(leaves.size())
-        )
+        plan = df._jdf.queryExecution().analyzed()
+        leaves = plan.collectLeaves()
+        known = source = unknown = 0
+        for i in range(n := leaves.size()):
+            leaf = leaves.apply(i)
+            name = leaf.nodeName()
+            if name == "LogicalRDD" and (tag := leaf.rdd().name() or "").startswith(_RECORD):
+                recorded, unknowns = map(int, tag[len(_RECORD):].split(","))
+                source += recorded
+                unknown += unknowns
+            elif name in _MATERIALIZED or (
+                size := int(str(leaf.stats().sizeInBytes()))
+            ) >= _UNKNOWN_SIZE:
+                unknown += 1
+            else:
+                known += size
+        root = name if n == 1 and plan.equals(leaf) else None
+        return _Estimate(known, source, unknown, root)
     except Exception:  # noqa: BLE001 — estimate is advisory only
-        return True
+        return None
 
 
 def summary_sized(df: DataFrame) -> bool:
-    """True when ``df`` is provably small: no leaf is materialized, every
-    leaf has a known Catalyst estimate, and their sum is below the reuse
-    threshold (``SPARK_GRAFT_REUSE_MIN_BYTES``, default 256 MB).
+    """True when ``df`` is provably small: every leaf's estimate is known
+    (a Catalyst estimate, or the source estimate a cut recorded) and they
+    sum below the reuse threshold (``SPARK_GRAFT_REUSE_MIN_BYTES``,
+    default 256 MB).
 
     The gate inside the two prefix walks of ``operators._ranks``
     (``bucketed_prefix_sums``, ``bucketed_group_value_ranks``): a
     summary-sized input takes the plain-window shape, any other the
-    bucketed, lineage-cut walk. Every operator reaches it through those
-    two calls. Unlike :func:`estimated_input_bytes` an unknown leaf does
-    NOT count as zero here: a single-partition window over an input of
-    unknown size is the one mistake the gate must not make, so an
-    unknown leaf or a failed walk answers False (the bucketed shape, safe
-    at any size). Sharing the reuse threshold means no second knob: below
-    it the reuse cut is a no-op anyway, and ``=0`` forces both the cut and
-    the bucketed shape. A materialized leaf answers False too: a cut frame
-    is estimated at its own (histogram) size, far below the input it was
-    computed from (2,045,762 B of parquet reads as 613,728 B after the
-    cut), so a frame cut upstream — ``psi_drift``'s base histogram,
-    ``spearman_corr``'s joint histogram above the threshold — must never
-    read as small."""
-    sizes = _leaf_sizes(df)
-    return (
-        sizes is not None
-        and all(s < _UNKNOWN_SIZE for s in sizes)
-        and sum(sizes) < _threshold()
-        and not _materialized_leaf(df)
-    )
+    bucketed, lineage-cut walk. It is also the AQE pin's test
+    (:func:`pinned_parallelism`). An unknown leaf or a failed walk
+    answers False: a single-partition window over an input of unknown
+    size is the one mistake the gate must not make. A frame derived from
+    a cut reads as large as the input the cut was computed from, so a
+    frame cut upstream above the threshold (``psi_drift``'s base
+    histogram, ``spearman_corr``'s joint histogram) never reads as small,
+    while one cut below it (``robust_outliers``' median) still does."""
+    est = _estimate(df)
+    return est is not None and not est.unknown and est.known + est.source < _threshold()
 
 
 def reuse_frame(df: DataFrame) -> DataFrame:
@@ -204,25 +209,7 @@ def reuse_frame(df: DataFrame) -> DataFrame:
     Below the ``SPARK_GRAFT_REUSE_MIN_BYTES`` input threshold (default
     256 MB) this is a NO-OP — the declared plan, the bench timings and
     the oracle replay at test scale are bit-identical to the lazy
-    shape. Above it the frame is cut with ``localCheckpoint(eager=
-    False)``: computed once (timing: see below), blocks freed by the
-    ContextCleaner when the result frame is dropped (the persist()
-    alternative leaks CacheManager entries for lazy query frames no
-    caller ever unpersists), partitioning/ordering metadata preserved
-    (LogicalRDD carries both, so chained passes keep their
-    no-new-exchange property). Fault-tolerance: a localCheckpoint
-    cannot be replayed after executor loss, so cluster runs set
-    ``SPARK_GRAFT_REUSE_DIR`` to a fault-tolerant directory and the cut
-    routes through ``operators._checkpoint`` (reliable ``checkpoint``)
-    instead; iterative operators that take an explicit
-    ``checkpoint_dir`` argument keep their own routing.
-
-    "Lazy" is only partly true under AQE (the session default): making
-    the cut builds the frame's RDD, which finalizes the adaptive plan
-    and so runs the frame's upstream shuffle stages when the frame is
-    DEFINED, not on its first action; only the last stage and the
-    checkpoint blocks wait for the action. With AQE off nothing runs
-    until the first action.
+    shape. Above it the frame is cut with :func:`cut_frame`.
 
     Only hand this SUMMARY-sized frames (histograms, distinct-value
     maps): the materialization cost is the frame's own size, which for
@@ -231,54 +218,56 @@ def reuse_frame(df: DataFrame) -> DataFrame:
 
 
 def reuse_frame_cut(df: DataFrame) -> "tuple[DataFrame, bool]":
-    """:func:`reuse_frame` plus a flag saying whether the cut fired —
-    for callers that restructure neighbouring branches only when the
-    frame is actually materialized (e.g. sourcing a min/max range frame
-    from the cached histogram instead of the raw rows)."""
-    est = estimated_input_bytes(df)
-    if est is None or est < _threshold():
+    """:func:`reuse_frame` plus a flag saying whether the frame is
+    materialized — for callers that restructure neighbouring branches
+    only then (e.g. sourcing a min/max range frame from the cached
+    histogram instead of the raw rows).
+
+    It cuts when the frame's known + source bytes reach the threshold.
+    Unknown leaves count for nothing here: they are driver-local
+    literals or already-materialized frames, cheap to re-read. A frame
+    that is itself a bare leaf is never cut again: a materialized or
+    driver-local leaf (e.g. a caller cut this frame before passing it
+    down) reports True as it stands, while a bare FILE-SCAN leaf reports
+    False — each consumer's pruned, pushdown-filtered re-scan is cheaper
+    than one full-width copy into cache."""
+    est = _estimate(df)
+    if est is None or est.known + est.source < _threshold():
         return df, False
-    try:
-        # Already materialized (the plan is a bare LogicalRDD /
-        # InMemoryRelation / driver-local leaf — e.g. a caller cut this
-        # frame before passing it down): a second cut would copy the
-        # cached blocks for nothing. Composed operators hit this when
-        # both a caller and a primitive guard the same frame. A bare
-        # FILE-SCAN leaf (LogicalRelation etc.) is NOT materialized —
-        # but it is also not worth cutting: each consumer's pruned,
-        # pushdown-filtered columnar re-scan is cheaper than one
-        # full-width copy into cache, so report cut=False and let the
-        # caller keep its below-threshold shape.
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.children().isEmpty():
-            name = plan.getClass().getSimpleName()
-            if name in (*_MATERIALIZED, "LocalRelation", "OneRowRelation"):
-                return df, True
-            return df, False
-    except Exception:  # noqa: BLE001 — guard is advisory only
-        pass
+    if est.root:
+        return df, est.root in (*_MATERIALIZED, "LocalRelation", "OneRowRelation")
     return cut_frame(df), True
 
 
 def cut_frame(df: DataFrame) -> DataFrame:
-    """Apply the reuse cut UNCONDITIONALLY, with the same routing as
-    :func:`reuse_frame` (``SPARK_GRAFT_REUSE_DIR`` → reliable checkpoint,
-    else executor-local blocks) but no threshold check — for operators
-    that already decided the frame is above threshold from an UPSTREAM
-    estimate. The case that needs this: once an upstream cut fired, the
-    downstream frame's leaves are unknown-size RDD scans (estimated as
-    zero), so ``reuse_frame`` on it could never fire even though one
-    materialized execution is exactly as justified as the upstream one
-    (seasonal_decompose's output under stl_outliers' 3-branch fan-out).
-    Same timing as :func:`reuse_frame`: under AQE the frame's upstream
-    shuffle stages run here, when the cut is made.
-    """
-    reuse_dir = os.environ.get(_REUSE_DIR_ENV)
-    if reuse_dir:
-        from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
+    """Cut ``df``'s lineage UNCONDITIONALLY — for operators whose frame
+    fans out whatever its size — and record ``df``'s estimate (known +
+    source bytes, and its count of unknown leaves) on the cut, so every
+    frame derived from it reads as the input it stands for.
 
-        return _ckpt(df, reuse_dir, eager=False)
-    return df.localCheckpoint(eager=False)
+    With ``SPARK_GRAFT_REUSE_DIR`` set the cut is a reliable checkpoint
+    into that fault-tolerant directory (``operators._checkpoint``):
+    localCheckpoint blocks cannot be replayed after executor loss, and
+    the reuse cut fires exactly at the cluster scale where executor loss
+    is routine. Unset, it is ``localCheckpoint(eager=False)``: blocks
+    are freed by the ContextCleaner when the result frame is dropped (a
+    persist() would leak CacheManager entries for lazy frames no caller
+    ever unpersists), and the LogicalRDD keeps the partitioning/ordering
+    metadata, so chained passes keep their no-new-exchange property.
+
+    "Lazy" is only partly true under AQE (the session default): making
+    the cut builds the frame's RDD, which finalizes the adaptive plan
+    and so runs the frame's upstream shuffle stages when the cut is
+    DEFINED, not on its first action; only the last stage and the
+    checkpoint blocks wait for the action. With AQE off nothing runs
+    until the first action."""
+    est = _estimate(df)
+    out = checkpoint(df, os.environ.get(_REUSE_DIR_ENV) or None, eager=False)
+    if est is not None:
+        out._jdf.queryExecution().analyzed().rdd().setName(
+            f"{_RECORD}{est.known + est.source},{est.unknown}"
+        )
+    return out
 
 
 # Scale crossover for the AQE pin (r15, measured at both ends): below
@@ -293,12 +282,12 @@ def cut_frame(df: DataFrame) -> DataFrame:
 # (guide §2).
 def pinned_parallelism(fn):
     """Decorator: run ``fn`` with AQE off when its first argument — the
-    frame it loops or joins over — estimates below the reuse threshold
-    ``SPARK_GRAFT_REUSE_MIN_BYTES`` (default 256 MB), i.e. when the loop is
-    dispatch-bound and the per-exchange AQE barrier is the dominant cost.
-    Data-bound loops keep the session's AQE (runtime coalescing + skew
-    splitting won 1.5x at the x30 probe scale), and so does a frame whose
-    estimate is unknown: without a size there is no case for the pin.
+    frame it loops or joins over — is :func:`summary_sized`, i.e. when the
+    loop is dispatch-bound and the per-exchange AQE barrier is the
+    dominant cost. Data-bound loops keep the session's AQE (runtime
+    coalescing + skew splitting won 1.5x at the x30 probe scale), and so
+    does a frame with an unknown leaf: a driver-local or user-cut input
+    may hold any number of rows, so there is no case for the pin.
 
     Pinned, every DataFrame argument is rebound into a clone of the
     frame's session with AQE off — all of them, because a join plans in
@@ -313,8 +302,7 @@ def pinned_parallelism(fn):
 
     @functools.wraps(fn)
     def pinned(frame: DataFrame, *args, **kwargs):
-        est = estimated_input_bytes(frame)
-        if est is None or est >= _threshold():
+        if not summary_sized(frame):
             return fn(frame, *args, **kwargs)
         child = child_session(frame.sparkSession, {_FLAG: "false"})
 

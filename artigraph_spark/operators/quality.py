@@ -963,8 +963,8 @@ def psi_drift(
     # call: plain windows while the histogram is summary-sized, else the
     # range-bucketed two-phase prefix, so near-unique columns (where the
     # histogram IS the data) never park on one partition (the r10 fix).
-    # A cut above is a materialized leaf, which the walk's size gate
-    # never reads as small, so the cut histogram stays bucketed.
+    # A cut above reads as the input it was cut from, which the walk's
+    # size gate never reads as small, so the cut histogram stays bucketed.
     # Everything past the two histograms is one linear pipeline per side:
     # each row of the base histogram covers ranks in (cum − f, cum], so
     # the equi-depth edges fall out of a bins-1× explode + filter — no

@@ -982,11 +982,9 @@ def seasonal_decompose(
     # bucketing shuffle (the one data-sized pass) plus the trend window.
     # Scale-adaptive single execution of the #days-row frame; no-op at
     # test scale (operators._adaptive.reuse_frame).
-    from artigraph_spark.operators._adaptive import cut_frame, reuse_frame_cut
+    from artigraph_spark.operators._adaptive import reuse_frame
 
-    d, cut = reuse_frame_cut(
-        t.withColumn("__det", F.lit(period) * F.col("y") - F.col("__ts"))
-    )
+    d = reuse_frame(t.withColumn("__det", F.lit(period) * F.col("y") - F.col("__ts")))
     s = d.groupBy("phase").agg(davg("__det").alias("__s7"))
     g = s.agg(davg(F.round(F.col("__s7"), 9)).alias("__s7bar"))
     pd_ = F.lit(float(period))
@@ -1010,13 +1008,10 @@ def seasonal_decompose(
     )
     # r15: callers that fan the DECOMPOSED frame out to several branches
     # (stl_outliers: median, deviation, flag) ask for one materialized
-    # execution of the whole decomposition with ``reuse_output=True``.
-    # reuse_frame on `out` itself could never fire once the `d` cut
-    # replaced the leaves with unknown-size RDD scans, so the decision
-    # rides the SAME upstream estimate that fired the d-cut: both cuts
-    # or neither — below threshold the caller keeps the lazy shape.
-    if reuse_output and cut:
-        out = cut_frame(out)
+    # execution of the whole decomposition with ``reuse_output=True``;
+    # the `d` cut carries its input's estimate, so both cuts or neither.
+    if reuse_output:
+        out = reuse_frame(out)
     return out
 
 

@@ -59,45 +59,43 @@ def query(name: str, oracle: str | None, bench: bool = False) -> Callable[[Spark
 # r10 clears the 28 oldest r4-stale; r11 should clear the 3 remaining
 # r4-stale plus the 43 r5-stale and start on r6.
 _PRIORITY: tuple[str, ...] = (
-    # ROUND-15 ROTATION. Recorded-window census at round start:
-    # {r9:40, r10:49, r11:44, r12:42, r13:49, r14:50} (274 total, no
-    # never-recorded queries) — exactly the census the r14 rotation
-    # predicted. No new queries this round (optimization round; the
-    # registry-growth policy adds none). Window: 4 impl-changed
-    # re-greens + ALL 40 r9-stale (alphabetical) + the first 6
-    # r10-stale (alphabetical) = exactly 50, draining the oldest
-    # stratum completely. Expected census after the driver records
-    # r15: {r10:43, r11:44, r12:42, r13:48, r14:47, r15:50}.
-    # Impl-changed rationale (values identical, plan pipeline changed
-    # — each earns a fresh hash row): winsorize_quantity (both
-    # rank-quantile thresholds fused into one conditional aggregation),
-    # stl_outliers_daily (single seasonal_decompose derivation via
-    # reuse_output), markov_stationary_events (broadcast-total path
-    # above the reuse threshold), seasonal_decompose_daily (operator
-    # internals now route through reuse_frame_cut/cut_frame).
+    # ROUND-16 ROTATION. Recorded-window census at round start:
+    # {r10:42, r11:44, r12:42, r13:48, r14:48, r15:50} (274 total, no
+    # never-recorded queries; the r15 rotation predicted 43 r10-stale,
+    # the recorded count is 42). No new queries. Window: 2
+    # impl-changed re-greens + ALL 42 r10-stale (alphabetical) + the
+    # first 6 r11-stale (alphabetical) = exactly 50, draining the
+    # oldest stratum completely. Expected census after the driver
+    # records r16: {r11:37, r12:42, r13:48, r14:47, r15:50, r16:50}.
+    # Impl-changed rationale (values identical, adaptive decisions
+    # changed — each earns a fresh hash row): mad_outliers_orders (the
+    # MAD pass's prefix walk takes plain windows: its input joins the
+    # cut median, which now reads as the input it was computed from),
+    # dedup_clusters (connected components now runs with AQE pinned
+    # off: the signature cut reads as its ~64 KB input, where Catalyst
+    # estimated its output at 169 MB per band branch).
     # (1) impl changed this round — first driver rows
-    "winsorize_quantity", "stl_outliers_daily",
-    "markov_stationary_events", "seasonal_decompose_daily",
-    # (2) all 40 r9-stale re-greens (alphabetical)
-    "agg_collect", "agg_count_distinct", "agg_cube",
-    "agg_dedup_pick_first", "agg_distinct_rows", "agg_filtered",
-    "agg_global_summary", "agg_grouping_sets", "agg_histogram",
-    "agg_minmax_stats", "agg_percentiles", "agg_pivot",
-    "agg_pricing_summary", "agg_rollup", "benchmark_contamination",
-    "bloom_incremental_dedup", "bm25_ranking", "bootstrap_ci_quantity",
-    "ccf_click_purchase", "conditional_distinct", "dup_rate_by_source",
-    "effect_size_price", "fk_orphans_audit", "hourly_conversion_bh",
-    "length_band_filter_docs", "mann_kendall_hourly",
-    "ppl_decile_report", "pseudo_dp_noisy_counts_events",
-    "rank_normalize_lineitem", "rfm_segments_users", "set_union_all",
-    "set_union_distinct", "shortest_paths_copurchase",
-    "simhash_checked", "sort_limit_topk", "text_quality_score",
-    "tfidf_terms", "token_bpe_counts", "trimmed_mean_price",
-    "upsample_domains",
-    # (3) the first 6 r10-stale (alphabetical) to fill 50
-    "adamic_adar_copurchase", "auc_status_by_priority",
-    "calibration_price_returns", "correlated_group_filter",
-    "cuped_user_value", "curriculum_stages_docs",
+    "mad_outliers_orders", "dedup_clusters",
+    # (2) all 42 r10-stale re-greens (alphabetical)
+    "dedup_exact", "dedup_fingerprint", "dedup_lines_in_doc",
+    "doc_rolling_hash", "domain_cap", "epoch_shuffle_shards",
+    "exact_quantiles_quantity", "feature_bins_lineitem",
+    "gini_spend_by_nation", "grouped_map_pandas", "join_cross",
+    "join_full_outer", "join_inner", "join_left_anti", "join_left_outer",
+    "join_left_semi", "join_range", "join_right_outer", "join_self",
+    "join_star_broadcast", "kcore_copurchase", "kfold_assign_docs",
+    "ks_price_drift", "lang_distribution", "lorenz_spend_by_nation",
+    "mann_whitney_quantity", "media_decode_headers",
+    "minhash_lsh_pairs_checked", "nested_struct_access", "pack_sequences",
+    "pack_sequences_by_lang", "percent_of_total", "psi_price_drift",
+    "scalar_subquery_filter", "spearman_price_quantity",
+    "spearman_price_quantity_quantized", "stratified_sample_mix",
+    "stratified_split_exact", "string_agg", "text_normalize",
+    "tukey_outliers_quantity", "twap_user_value",
+    # (3) the first 6 r11-stale (alphabetical) to fill 50
+    "anomaly_zscore_hours", "bloom_prefilter_contract",
+    "calendar_functions", "chunk_documents", "clustering_coefficient",
+    "cohort_retention",
 )
 
 # The queries whose implementation or oracle changed THIS round (the
@@ -106,10 +104,7 @@ _PRIORITY: tuple[str, ...] = (
 # `tools/window_audit.py` is reproducible with no arguments.
 # (Superseded rotations live in git history and in the committed
 # CORRECTNESS_r* artifacts the audit recomputes from.)
-ROUND_FRESH: tuple[str, ...] = (
-    "winsorize_quantity", "stl_outliers_daily",
-    "markov_stationary_events", "seasonal_decompose_daily",
-)
+ROUND_FRESH: tuple[str, ...] = ("mad_outliers_orders", "dedup_clusters")
 
 
 def _ordered() -> dict[str, QueryDef]:

@@ -2,8 +2,9 @@
 (``bucketed_prefix_sums``, ``bucketed_group_value_ranks``), and so behind
 every operator that calls them, kaplan_meier and logrank_test included:
 ``_adaptive.summary_sized`` picks the plain-window arm only for a frame
-with no materialized leaf whose every leaf has a known estimate summing
-below the reuse threshold, and fails safe (the bucketed arm) otherwise.
+whose every leaf has a known estimate (a Catalyst estimate, or the source
+estimate a cut recorded) summing below the reuse threshold, and fails
+safe (the bucketed arm) otherwise.
 On the bucketed arm the walks' own lineage cuts route through
 ``_adaptive.cut_frame``."""
 
@@ -47,20 +48,20 @@ def test_unknown_leaf_takes_bucketed_arm(spark, monkeypatch):
     assert summary_sized(_units(spark))
     assert not summary_sized(local)
     assert not summary_sized(_units(spark).join(local, "d"))
-    monkeypatch.setattr(_adaptive, "_leaf_sizes", lambda df: [10, 1 << 63])
+    monkeypatch.setattr(_adaptive, "_estimate", lambda df: _adaptive._Estimate(10, 0, 1, None))
     assert not summary_sized(_units(spark))
 
 
 def test_failed_estimate_takes_bucketed_arm(spark, monkeypatch):
     monkeypatch.delenv(_ENV, raising=False)
-    assert _adaptive._leaf_sizes(object()) is None  # the walk never raises
-    monkeypatch.setattr(_adaptive, "_leaf_sizes", lambda df: None)
+    assert _adaptive._estimate(object()) is None  # the walk never raises
+    monkeypatch.setattr(_adaptive, "_estimate", lambda df: None)
     assert not summary_sized(_units(spark))
 
 
 def test_estimate_at_threshold_takes_bucketed_arm(spark, monkeypatch):
     df = _units(spark)
-    est = _adaptive.estimated_input_bytes(df)
+    est = _adaptive._estimate(df).known
     assert est and est > 0
     monkeypatch.setenv(_ENV, str(est))
     assert not summary_sized(df)
@@ -75,11 +76,9 @@ def test_cut_frame_is_not_summary_sized(spark, monkeypatch):
     agg = _units(spark).groupBy("d").count()
     assert summary_sized(agg)
     cut = agg.localCheckpoint(eager=False)
-    # the cut keeps a known, histogram-sized estimate below the
-    # threshold: only its materialized leaf says no
-    sizes = _adaptive._leaf_sizes(cut)
-    assert sizes and all(s < _adaptive._UNKNOWN_SIZE for s in sizes)
-    assert sum(sizes) < _adaptive._threshold()
+    # a cut the engine did not make carries no record of its source: its
+    # materialized leaf is unknown, whatever Catalyst estimates for it
+    assert _adaptive._estimate(cut) == (0, 0, 1, "LogicalRDD")
     assert not summary_sized(cut)
     assert not summary_sized(cut.groupBy("d").count())
     assert not summary_sized(cut.join(_units(spark), "d"))
@@ -100,9 +99,9 @@ def test_prefix_walk_over_a_cut_histogram_stays_bucketed(spark, monkeypatch):
 def test_malformed_threshold_falls_back_to_default(spark, monkeypatch):
     monkeypatch.setenv(_ENV, "not-a-number")
     default = 256 * 1024 * 1024
-    monkeypatch.setattr(_adaptive, "_leaf_sizes", lambda df: [default - 1])
+    monkeypatch.setattr(_adaptive, "_estimate", lambda df: _adaptive._Estimate(default - 1, 0, 0, None))
     assert summary_sized(_units(spark))
-    monkeypatch.setattr(_adaptive, "_leaf_sizes", lambda df: [default])
+    monkeypatch.setattr(_adaptive, "_estimate", lambda df: _adaptive._Estimate(0, default, 0, None))
     assert not summary_sized(_units(spark))
 
 

@@ -1,7 +1,6 @@
-"""Round-14 optimization internals: the scale-adaptive reuse cut
-(`operators._adaptive.reuse_frame`) and its wiring into the bucketed
-rank/prefix-sum primitives — results must be identical on the lazy and
-the cut path, and the cut must be a strict no-op below the threshold."""
+"""Round-14 optimization internals: the scale-adaptive reuse cut's wiring
+into the bucketed rank/prefix-sum primitives — results must be identical
+on the lazy and the cut path (the cut itself: ``tests/test_adaptive.py``)."""
 
 from __future__ import annotations
 
@@ -9,53 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _has_rdd_scan(df) -> bool:
-    return "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
-
-
 def _ranks_fixture(spark):
     rows = [(g, v) for g in ("a", "b") for v in (1.0, 2.0, 2.0, 5.0, -3.0)]
     return spark.createDataFrame(rows, "g: string, v: double")
-
-
-def test_reuse_frame_noop_below_threshold(spark, monkeypatch):
-    from artigraph_spark.operators._adaptive import reuse_frame
-
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
-    df = _ranks_fixture(spark).groupBy("g").count()
-    out = reuse_frame(df)
-    assert out is df  # identical object: the declared plan is untouched
-
-
-def test_reuse_frame_cuts_above_threshold_same_rows(spark, monkeypatch):
-    from artigraph_spark.operators._adaptive import reuse_frame
-
-    df = _ranks_fixture(spark).groupBy("g").count()
-    expected = sorted(map(tuple, df.collect()))
-    monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "0")
-    cut = reuse_frame(df)
-    assert cut is not df
-    assert _has_rdd_scan(cut)
-    assert sorted(map(tuple, cut.collect())) == expected
-
-
-def test_estimated_input_bytes_sums_leaves(spark, tmp_path):
-    from artigraph_spark.operators._adaptive import estimated_input_bytes
-
-    path = str(tmp_path / "leaves.parquet")
-    _ranks_fixture(spark).write.parquet(path)
-    a = spark.read.parquet(path)
-    est_single = estimated_input_bytes(a.groupBy("g").count())
-    est_joined = estimated_input_bytes(
-        a.join(a.select(F.col("g").alias("g2")), F.col("g") == F.col("g2"))
-    )
-    assert est_single is not None and est_single > 0
-    # Leaf-sum semantics: a self-join counts the input twice, never the
-    # (CBO-less) multiplicative root estimate.
-    assert est_joined == 2 * est_single
-    # a driver-local relation has no stats -> counted as zero, not huge
-    est_local = estimated_input_bytes(_ranks_fixture(spark).groupBy("g").count())
-    assert est_local == 0
 
 
 @pytest.mark.parametrize("forced", [False, True])

@@ -46,9 +46,11 @@ def test_dataframe_debugging_is_off_in_engine_sessions(spark):
 
 
 # py4j commands sent while defining (not running) each query on the
-# benchmark's fixture copy: 464 and 143 with call-site capture off, 1,304
-# and 403 with it on. The budgets are about 1.5x the former.
-DEFINE_BUDGET = {"survival_km_users": 700, "window_session": 215}
+# benchmark's fixture copy: 455 and 148 with call-site capture off (1,304
+# and 403 with it on, counted when the capture was turned off). The
+# budgets are about 1.5x the former (the window_session one was set at
+# 143).
+DEFINE_BUDGET = {"survival_km_users": 680, "window_session": 215}
 
 
 @pytest.mark.parametrize("name", sorted(DEFINE_BUDGET))
