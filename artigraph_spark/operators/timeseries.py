@@ -413,11 +413,11 @@ def transition_matrix(
             & F.col(ts_col).isNotNull()
             & F.col(state_col).isNotNull()
         )
-        .select(
-            F.col(state_col).alias("src"),
-            F.lead(state_col).over(w).alias("dst"),
-        )
+        .select(F.col(state_col), F.lead(state_col).over(w).alias("dst"))
         .filter(F.col("dst").isNotNull())
+        # renamed above the window: an alias below it would ride the
+        # exchange beside the state column it copies
+        .withColumnRenamed(state_col, "src")
     )
     counts = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n_transitions"))
     total = Window.partitionBy("src")
@@ -454,12 +454,9 @@ def scd2_intervals(df, key_col: str, ts_col: str, id_col: str):
             F.col(id_col),
             F.unix_timestamp(F.col(ts_col)).alias("__t"),
         )
-        .select(
-            key_col,
-            id_col,
-            F.col("__t").alias("valid_from_s"),
-            F.lead("__t").over(w).alias("valid_to_s"),
-        )
+        .select(key_col, id_col, "__t", F.lead("__t").over(w).alias("valid_to_s"))
+        # renamed above the window, so the exchange ships __t once
+        .withColumnRenamed("__t", "valid_from_s")
     )
 
 
@@ -1086,15 +1083,19 @@ def kaplan_meier(
                 )
             ).alias("n_censored"),
         )
-        .withColumn("__exits", F.col("n_event") + F.col("n_censored"))
     )
-    # pass 1: n_risk = total exits − exits at strictly smaller durations.
-    # keep_bucket lets pass 2 ride the same bucket ids when the walk is
-    # bucketed (see bucketed_prefix_sums' chained-passes note).
+    # pass 1: n_risk = total exits − exits at strictly smaller durations,
+    # exits = events + censored. Summing the two counts separately keeps
+    # a derived exits column off the pass's exchange. keep_bucket lets
+    # pass 2 ride the same bucket ids when the walk is bucketed (see
+    # bucketed_prefix_sums' chained-passes note).
+    counts = ["n_event", "n_censored"]
+    sums = [f"__{part}_{c}" for part in ("tot", "pre") for c in counts]
+    tot_e, tot_c, pre_e, pre_c = (F.col(c) for c in sums)
     t = (
-        bucketed_prefix_sums(risk, gcols, "duration", ["__exits"], keep_bucket="__kb")
-        .withColumn("n_risk", F.col("__tot___exits") - F.col("__pre___exits"))
-        .drop("__exits", "__tot___exits", "__pre___exits")
+        bucketed_prefix_sums(risk, gcols, "duration", counts, keep_bucket="__kb")
+        .withColumn("n_risk", tot_e + tot_c - (pre_e + pre_c))
+        .drop(*sums)
     )
     # pass 2: the term depends on n_risk (itself a prefix), so the curve
     # needs a second prefix over the one-row-per-duration frame pass 1

@@ -25,26 +25,36 @@ def sessionize(
     results are deterministic and oracle-comparable. Timestamp columns
     compare at MICROSECOND precision (whole-second truncation merged
     sessions whose sub-second gap exceeded the threshold and split ones
-    that didn't); numeric time columns compare raw. Streaming equivalent:
-    ``F.session_window`` (see artigraph_spark.streaming).
+    that didn't); numeric time columns compare raw. The window lags the
+    raw time column once, and the gap is taken above the window, so the
+    one exchange ships only the frame's own columns (a derived micros
+    column under the window would ride the shuffle beside its source).
+    Streaming equivalent: ``F.session_window`` (see
+    artigraph_spark.streaming).
     """
     from pyspark.sql import types as T
 
     keys = [key] if isinstance(key, str) else list(key)
+    if session_col in {time_col, *keys, *(tiebreak or [])}:
+        raise ValueError(f"session_col {session_col!r} names an input of the window")
     order = [F.col(time_col).asc()] + [F.col(c).asc() for c in (tiebreak or [])]
     w = Window.partitionBy(*keys).orderBy(*order)
-    dt = df.schema[time_col].dataType
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-        ts = F.unix_micros(F.col(time_col).cast("timestamp"))
-        gap_seconds = gap_seconds * 1_000_000
-    else:
-        ts = F.col(time_col).cast("long")
+    timelike = isinstance(
+        df.schema[time_col].dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
+    )
+
+    def units(c: Column) -> Column:
+        return F.unix_micros(c.cast("timestamp")) if timelike else c.cast("long")
+
+    gap = gap_seconds * 1_000_000 if timelike else gap_seconds
+    # the previous time rides in the output column until the sum replaces it
+    prev = F.col(session_col)
     new_sess = (
-        F.when(F.lag(ts).over(w).isNull(), 1)
-        .when(ts - F.lag(ts).over(w) > gap_seconds, 1)
+        F.when(units(prev).isNull(), 1)
+        .when(units(F.col(time_col)) - units(prev) > gap, 1)
         .otherwise(0)
     )
-    return df.withColumn(
+    return df.withColumn(session_col, F.lag(time_col).over(w)).withColumn(
         session_col,
         F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
     )

@@ -66,3 +66,65 @@ def scan_columns(df: DataFrame, table_hint: str) -> list[str]:
             inner = schema[len("struct<") : -1]
             return [c.split(":")[0] for c in inner.split(",") if c]
     return []
+
+
+def _ids(exprs) -> set[int]:
+    return {exprs.apply(i).exprId().id() for i in range(exprs.size())}
+
+
+def _below_codegen(node):
+    """``node`` with whole-stage-codegen wrappers peeled off."""
+    while node.getClass().getSimpleName() in ("WholeStageCodegenExec", "InputAdapter"):
+        node = node.child()
+    return node
+
+
+def _shuffle_inputs(df: DataFrame) -> list:
+    """Every shuffle exchange of the (pre-execution) physical plan as a
+    pair ``(exchange, node below it)``, codegen wrappers peeled off; the
+    AQE wrapper is looked through, subqueries are not. JVM objects."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            out.append((node, _below_codegen(node.child())))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    return out
+
+
+def shuffled_columns(df: DataFrame) -> list[list[str]]:
+    """The column names each shuffle exchange of the plan writes (the
+    output of the node below it), depth first from the root."""
+    cols = []
+    for _, below in _shuffle_inputs(df):
+        out = below.output()
+        cols.append([out.apply(i).name() for i in range(out.size())])
+    return cols
+
+
+def derived_shuffle_columns(df: DataFrame) -> list[str]:
+    """Names of the columns a shuffle ships twice over: Alias outputs of a
+    Project directly under a shuffle exchange whose inputs are all plain
+    columns of that same Project, and which are not partitioning keys.
+    Computing such a column above the exchange instead ships fewer bytes
+    (``_w0`` is Catalyst's name for a window input it computed below)."""
+    names = []
+    for exchange, below in _shuffle_inputs(df):
+        if below.getClass().getSimpleName() != "ProjectExec":
+            continue
+        part = exchange.outputPartitioning()
+        keyed = part.getClass().getSimpleName() in ("HashPartitioning", "RangePartitioning")
+        keys = _ids(part.references().toSeq()) if keyed else set()
+        projs = below.projectList()
+        exprs = [(e, e.getClass().getSimpleName()) for e in map(projs.apply, range(projs.size()))]
+        plain = {e.exprId().id() for e, kind in exprs if kind == "AttributeReference"}
+        for e, kind in exprs:
+            if kind == "Alias" and e.exprId().id() not in keys:
+                refs = _ids(e.references().toSeq())
+                if refs and refs <= plain:
+                    names.append(e.name())
+    return names

@@ -271,12 +271,14 @@ def string_agg(spark, sf_dir):
 )
 def percent_of_total(spark, sf_dir):
     """Percent-of-group-total via an unframed partition window (fixed-point
-    denominator for cross-engine determinism)."""
+    denominator for cross-engine determinism). Repartitioned on the window
+    key so ``fxp(o_totalprice)`` is computed above the exchange, which
+    then ships the price once."""
     from pyspark.sql import Window as W
 
     from artigraph_spark.functions import DEFAULT_BITS, fxp
 
-    o = load(spark, sf_dir, "orders")
+    o = load(spark, sf_dir, "orders").repartition("o_orderstatus")
     w = W.partitionBy("o_orderstatus")
     denom = F.sum(fxp("o_totalprice")).over(w).cast("double") / F.lit(float(1 << DEFAULT_BITS))
     return o.select(

@@ -95,8 +95,11 @@ def window_lag_lead(spark, sf_dir):
     """,
 )
 def window_running_agg(spark, sf_dir):
-    """Running aggregates over row frames (cumulative sum/count, sliding max)."""
-    e = load(spark, sf_dir, "events")
+    """Running aggregates over row frames (cumulative sum/count, sliding max).
+    The explicit repartition on the window key is the window's own
+    exchange; it puts the fixed-point ``fxp(value)`` above it, so the
+    shuffle ships ``value`` alone instead of beside its derived copy."""
+    e = load(spark, sf_dir, "events").repartition("user_id")
     w = W.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     cum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     w3 = w.rowsBetween(-2, W.currentRow)
@@ -125,8 +128,10 @@ def window_running_agg(spark, sf_dir):
     """,
 )
 def window_range_frame(spark, sf_dir):
-    """RANGE (value-based) frames: peers within 10k price below current."""
-    o = load(spark, sf_dir, "orders")
+    """RANGE (value-based) frames: peers within 10k price below current.
+    Repartitioned on the window key so ``fxp(o_totalprice)`` is computed
+    above the exchange (see ``window_running_agg``)."""
+    o = load(spark, sf_dir, "orders").repartition("o_orderstatus")
     w = (
         W.partitionBy("o_orderstatus")
         .orderBy(F.col("o_totalprice"))

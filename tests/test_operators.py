@@ -2261,6 +2261,17 @@ def test_sessionize_subsecond_gaps(spark):
     assert got == {1: 1, 2: 2}  # 1.8s gap > 1s threshold → new session
 
 
+def test_sessionize_rejects_a_session_col_naming_a_window_input(spark):
+    """The lagged time rides in ``session_col`` between the two windows,
+    so that name may not be a key, time or tiebreak column."""
+    from artigraph_spark.operators.windows import sessionize
+
+    df = spark.createDataFrame([(1, 1, 5)], "user long, eid long, t long")
+    for name in ("user", "t", "eid"):
+        with pytest.raises(ValueError, match="names an input of the window"):
+            sessionize(df, "user", "t", 1, tiebreak=["eid"], session_col=name)
+
+
 def test_mp4_parsing_audio_first_largesize_and_v1_mvhd(spark):
     """ISO-BMFF edge cases: audio-first trak layout (dims live on the SECOND
     track), size==1 largesize boxes before moov, and version-1 mvhd."""

@@ -536,3 +536,33 @@ def test_privacy_audits_single_scan_single_key_shuffle(spark):
         l_diversity(e, ["event_type"], "user_id", 5), "simple"
     )
     assert ld.count("FileScan") == 1
+
+
+def test_session_window_shuffles_its_source_columns_once(spark, qs):
+    """sessionize lags the raw time column and takes the gap above the
+    window: the one exchange writes the four source columns the query
+    reads, with no derived micros copy of ``ts`` beside them, and the
+    Window computes a single lag."""
+    df = qs["window_session"](spark, SF)
+    assert P.shuffled_columns(df) == [["event_id", "ts", "user_id", "value"]]
+    assert P.derived_shuffle_columns(df) == []
+    assert P.physical_plan(df, "simple").count("lag(") == 1
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "event_transitions",
+        "scd2_intervals_orders",
+        "window_running_agg",
+        "window_range_frame",
+        "percent_of_total",
+        "survival_km_by_first_event",
+        "survival_km_users",
+    ],
+)
+def test_window_shuffles_ship_no_derived_copies(spark, qs, name):
+    """Aliases and fixed-point window inputs are computed above the
+    exchange, so no shuffle ships a column next to the plain columns it
+    is computed from (tools/plan_audit.py prints the same count)."""
+    assert P.derived_shuffle_columns(qs[name](spark, SF)) == []

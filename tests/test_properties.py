@@ -5,7 +5,7 @@ import math
 
 import duckdb
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from artigraph_spark.fingerprint import Fingerprint
@@ -1108,3 +1108,99 @@ def test_poly62_simhash_matches_driver_replay_property(spark, texts):
         for r in simhash(df, "doc_id", "text", bits=62, hash_fn="poly62").collect()
     }
     assert got == _ref_simhash62(texts)
+
+
+# --- sessionize: one lag of the raw time column == the former formula --------
+
+
+def _sessionize_lagging_derived_micros(df, keys, time_col, gap_seconds, tiebreak):
+    """The former ``sessionize`` body: micros derived below the window and
+    lagged twice (its exchange shipped the derived column beside the
+    source)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    order = [F.col(time_col).asc()] + [F.col(c).asc() for c in tiebreak]
+    w = Window.partitionBy(*keys).orderBy(*order)
+    dt = df.schema[time_col].dataType
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        ts = F.unix_micros(F.col(time_col).cast("timestamp"))
+        gap_seconds = gap_seconds * 1_000_000
+    else:
+        ts = F.col(time_col).cast("long")
+    new_sess = (
+        F.when(F.lag(ts).over(w).isNull(), 1)
+        .when(ts - F.lag(ts).over(w) > gap_seconds, 1)
+        .otherwise(0)
+    )
+    return df.withColumn(
+        "session_id",
+        F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    )
+
+
+def _time_value(kind, v):
+    """Tick ``v`` (a quarter second; a day for dates) as a ``kind`` value."""
+    import datetime
+
+    if v is None:
+        return None
+    if kind == "long":
+        return v
+    if kind == "date":
+        return datetime.date(2024, 3, 1) + datetime.timedelta(days=v)
+    # 2024-03-10 is a US daylight-saving switch: the New York session
+    # below casts NTZ values across it
+    return datetime.datetime(2024, 3, 10, 1, 59, 58) + datetime.timedelta(
+        microseconds=250_000 * v
+    )
+
+
+_session_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=2),  # k1
+        st.integers(min_value=0, max_value=1),  # k2
+        st.one_of(st.none(), st.integers(min_value=0, max_value=24)),  # tick
+    ),
+    max_size=30,
+)
+
+
+# Gaps of exactly 1 s (ticks 0→4), 1 unit (8→9) and 1 day (8→9 as
+# dates): each kind meets its threshold exactly in one of the examples.
+_session_edges = [
+    (0, 0, 0), (0, 0, 4), (0, 0, 4), (0, 0, 8), (0, 0, 9),
+    (0, 0, None), (0, 1, None), (0, 1, 2), (1, 0, 24),
+]
+
+
+@pytest.mark.parametrize("kind", ["timestamp", "timestamp_ntz", "date", "long"])
+@settings(max_examples=8, deadline=None)
+@example(rows=_session_edges, gap=1, multi_key=True, zone="America/New_York")
+@example(rows=_session_edges, gap=86_400, multi_key=False, zone="UTC")
+@given(
+    rows=_session_rows,
+    gap=st.sampled_from([0, 1, 2, 86_400]),
+    multi_key=st.booleans(),
+    zone=st.sampled_from(["UTC", "America/New_York"]),
+)
+def test_sessionize_matches_the_derived_micros_formula(spark, kind, rows, gap, multi_key, zone):
+    """Every time type, NULL times, equal times split by the tiebreak,
+    one- and two-column keys, sub-second gaps and a session time zone
+    that moves NTZ casts across a DST switch: lagging the raw column and
+    differencing above the window assigns the same sessions as the
+    former derived-micros formula."""
+    from artigraph_spark.operators.windows import sessionize
+    from artigraph_spark.session import child_session
+
+    s = child_session(spark, {"spark.sql.session.timeZone": zone})
+    df = s.createDataFrame(
+        [(k1, k2, eid, _time_value(kind, v)) for eid, (k1, k2, v) in enumerate(rows)],
+        f"k1 long, k2 long, eid long, t {kind}",
+    )
+    keys = ["k1", "k2"] if multi_key else ["k1"]
+    got = sessionize(df, keys, "t", gap, tiebreak=["eid"])
+    want = _sessionize_lagging_derived_micros(df, keys, "t", gap, ["eid"])
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())

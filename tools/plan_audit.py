@@ -14,6 +14,10 @@ flag plan anti-patterns —
     scan count jumped between rounds re-runs its upstream), and Window /
     join node counts, so a diff of two full audits shows any plan-shape
     change
+  - derived shuffle columns (``derived=``): Alias outputs of a Project
+    directly under a shuffle exchange that only re-derive columns the same
+    Project ships plainly and are not partitioning keys — bytes a shuffle
+    ships twice (see ``plans.derived_shuffle_columns``)
 
 Usage: python tools/plan_audit.py [sf_dir] [name ...]
 Prints one line per query and a summary; exits 1 on hard violations
@@ -28,6 +32,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from artigraph_spark.plans import derived_shuffle_columns
 from artigraph_spark.queries import queries
 from artigraph_spark.session import get_spark
 
@@ -45,10 +50,12 @@ def main() -> int:
     qs = queries()
     names = only or sorted(qs)
     hard, soft = [], []
+    derived_total = derived_queries = 0
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
+            derived = len(derived_shuffle_columns(df))
         except Exception as exc:  # noqa: BLE001 — report, keep sweeping
             hard.append((name, f"EXPLAIN FAILED: {exc}"))
             print(f"FAIL {name}: explain failed: {str(exc)[:200]}")
@@ -61,6 +68,8 @@ def main() -> int:
         nodes = _NODE.findall(plan)
         windows = nodes.count("Window")
         joins = sum(n.endswith("Join") or n == "CartesianProduct" for n in nodes)
+        derived_total += derived
+        derived_queries += bool(derived)
         flags = []
         if cart:
             flags.append(f"CARTESIAN x{cart}")
@@ -74,12 +83,12 @@ def main() -> int:
         status = "WARN" if flags else "ok  "
         print(
             f"{status} {name}: scans={scans} exchanges={exch} windows={windows} "
-            f"joins={joins} bnlj={bnlj}"
+            f"joins={joins} bnlj={bnlj} derived={derived}"
             + (f"  [{', '.join(flags)}]" if flags else "")
         )
     print(
         f"\n{len(names)} plans audited: {len(hard)} hard violations, "
-        f"{len(soft)} soft flags"
+        f"{len(soft)} soft flags, derived={derived_total} in {derived_queries} queries"
     )
     for name, why in hard:
         print(f"  HARD {name}: {why}")
