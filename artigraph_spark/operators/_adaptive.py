@@ -65,7 +65,9 @@ cut's ``LogicalRDD`` leaf at the cut frame's OUTPUT (a histogram over
 signature frame over 65,515 B as 169,033,645 B); the name carries the
 input it stands for instead, and every frame derived from the cut reads
 it through that leaf, through joins, aggregates and actions alike. Only
-this module writes or reads that name.
+this module writes or reads that name. The cut itself is
+``operators._checkpoint``'s, so it is reliable exactly when the context
+has a checkpoint directory.
 
 A pinned operator runs in a CLONE of the caller's session with AQE off
 (``session.child_session``) and hands its result back as a frame of the
@@ -99,11 +101,6 @@ _FLAG = "spark.sql.adaptive.enabled"
 # ≥16x the measured break-even scale, far below any "100 TB" regime.
 _REUSE_ENV = "SPARK_GRAFT_REUSE_MIN_BYTES"
 _REUSE_DEFAULT = 256 * 1024 * 1024
-
-# Optional reliable-checkpoint routing for every cut (:func:`cut_frame`):
-# production runs point it at durable storage (HDFS/object store);
-# local/bench runs leave it unset and keep executor-local blocks.
-_REUSE_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 
 # Catalyst's defaultSizeInBytes for relations with no statistics is
 # Long.MaxValue (sometimes scaled); anything this large is "unknown",
@@ -245,15 +242,15 @@ def cut_frame(df: DataFrame) -> DataFrame:
     source bytes, and its count of unknown leaves) on the cut, so every
     frame derived from it reads as the input it stands for.
 
-    With ``SPARK_GRAFT_REUSE_DIR`` set the cut is a reliable checkpoint
-    into that fault-tolerant directory (``operators._checkpoint``):
-    localCheckpoint blocks cannot be replayed after executor loss, and
-    the reuse cut fires exactly at the cluster scale where executor loss
-    is routine. Unset, it is ``localCheckpoint(eager=False)``: blocks
-    are freed by the ContextCleaner when the result frame is dropped (a
-    persist() would leak CacheManager entries for lazy frames no caller
-    ever unpersists), and the LogicalRDD keeps the partitioning/ordering
-    metadata, so chained passes keep their no-new-exchange property.
+    The cut is ``operators._checkpoint``'s: a reliable checkpoint when
+    the context has a checkpoint directory (localCheckpoint blocks cannot
+    be replayed after executor loss, and the reuse cut fires exactly at
+    the cluster scale where executor loss is routine). Without one it is
+    a lazy ``localCheckpoint``: blocks are freed by the ContextCleaner
+    when the result frame is dropped (a persist() would leak CacheManager
+    entries for lazy frames no caller ever unpersists), and the
+    LogicalRDD keeps the partitioning/ordering metadata, so chained
+    passes keep their no-new-exchange property.
 
     "Lazy" is only partly true under AQE (the session default): making
     the cut builds the frame's RDD, which finalizes the adaptive plan
@@ -262,7 +259,7 @@ def cut_frame(df: DataFrame) -> DataFrame:
     checkpoint blocks wait for the action. With AQE off nothing runs
     until the first action."""
     est = _estimate(df)
-    out = checkpoint(df, os.environ.get(_REUSE_DIR_ENV) or None, eager=False)
+    out = checkpoint(df, eager=False)
     if est is not None:
         out._jdf.queryExecution().analyzed().rdd().setName(
             f"{_RECORD}{est.known + est.source},{est.unknown}"

@@ -1,5 +1,4 @@
-"""Checkpoint routing for iterative operators (pagerank, triangle counts,
-connected components).
+"""The engine's one lineage cut.
 
 ``localCheckpoint`` stores blocks in executor storage — fast and
 self-cleaning (ContextCleaner frees them when the frame is collected), but
@@ -9,37 +8,29 @@ Reliable ``checkpoint()`` writes to a fault-tolerant directory (HDFS/
 object store) instead — survives any executor loss at the cost of a
 write+read round trip.
 
-Iterative operators accept ``checkpoint_dir=None`` (default: executor-local
-blocks, right for local mode and short-lived results) and route to
-reliable checkpoints when a directory is supplied — the sturdier choice
-for 1000-executor runs where some executor loss per hour is expected.
+Which one a cut makes is a deployment decision, and Spark already has the
+setting for it: the context's checkpoint directory (``spark.checkpoint.dir``
+at launch, or ``SparkContext.setCheckpointDir``). With one set, every cut
+in the engine — iterative rounds, fan-out frames, the reuse cut — is
+reliable; without one, every cut is executor-local. The engine reads the
+directory and never writes it: it is context-wide state shared by every
+thread and session.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# applicationId -> raw checkpoint dir last passed to setCheckpointDir
-_LAST_SET_DIR: dict[str, str] = {}
+
+def reliable(df: DataFrame) -> bool:
+    """Whether a cut of ``df`` goes to the context's checkpoint directory."""
+    return df.sparkSession.sparkContext.getCheckpointDir() is not None
 
 
-def checkpoint(df: DataFrame, checkpoint_dir: str | None, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and cut its lineage: reliable ``checkpoint()``
-    under ``checkpoint_dir`` when one is given, ``localCheckpoint()``
-    otherwise.  Setting the directory is idempotent; an already-configured
-    SparkContext dir is only overridden when the caller explicitly passes
-    a different one (explicit argument wins — it is the caller's session).
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    # Idempotence via a per-context memo of the RAW path we last set.
-    # Comparing against getCheckpointDir() cannot work: it returns the
-    # fully-qualified URI plus a per-context UUID subdirectory
-    # ('file:/tmp/ck/<uuid>'), so a plain-path caller never matches (a
-    # fresh UUID dir would be minted per call) and a prefix test
-    # false-positives on sibling dirs ('.../ck' vs '.../ck2').
-    if _LAST_SET_DIR.get(sc.applicationId) != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-        _LAST_SET_DIR[sc.applicationId] = checkpoint_dir
-    return df.checkpoint(eager=eager)
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and cut its lineage: a reliable ``checkpoint()``
+    when the context has a checkpoint directory, ``localCheckpoint()``
+    otherwise."""
+    if reliable(df):
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

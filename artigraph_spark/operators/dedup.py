@@ -553,7 +553,6 @@ def connected_components(
     src: str = "a",
     dst: str = "b",
     max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list → (node, component)
     with component = min node id in the component.
@@ -573,12 +572,12 @@ def connected_components(
     every caller feeds real keys). This is the standard Spark shape for
     iterative graph algorithms without a graph library.
 
-    Per-round lineage cuts route through ``operators._checkpoint``: by
-    default executor-local blocks (self-releasing, ~2 rounds pinned — see
-    below), or reliable checkpoints under ``checkpoint_dir`` when given —
-    the sturdier mode for 1000-executor runs, where an executor death
-    would otherwise kill the job because a localCheckpointed round cannot
-    be replayed. Reliable round files stay on disk until the application
+    Per-round lineage cuts are ``operators._checkpoint``'s: executor-local
+    blocks (self-releasing, ~2 rounds pinned — see below), or reliable
+    checkpoints when the context has a checkpoint directory — the
+    sturdier mode for 1000-executor runs, where an executor death would
+    otherwise kill the job because a localCheckpointed round cannot be
+    replayed. Reliable round files stay on disk until the application
     ends (Spark only reclaims them early with
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true``) — size the
     dir for O(log diameter) node-count-sized rounds.
@@ -601,12 +600,12 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        return _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir)
+        return _cc_loop(sym, edges, src, dst, max_iterations)
     finally:
         sym.unpersist()
 
 
-def _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir):
+def _cc_loop(sym, edges, src, dst, max_iterations):
     nodes = sym.select(F.col("u").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
 
@@ -675,7 +674,7 @@ def _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir):
         # (eager=False): the probe immediately below is the first action
         # and materializes the blocks as it runs — an eager cut would
         # spend one extra job per round doing the same work twice.
-        jumped = _ckpt(jumped, checkpoint_dir, eager=False)
+        jumped = _ckpt(jumped, eager=False)
         # Convergence probe (r13): labels are MONOTONE non-increasing
         # (both steps take F.least), so for integral node types
         # "no node changed" ⇔ "the exact label sum is unchanged" — one
@@ -704,11 +703,10 @@ def _cc_loop(sym, edges, src, dst, max_iterations, checkpoint_dir):
         # The new round is materialized and its lineage truncated, so the
         # previous round's checkpoint blocks are dead — release them NOW
         # (the convergence probe above was the last reader of `labels`).
-        # Block release only applies to localCheckpoint rounds; reliable
-        # rounds live as files under checkpoint_dir, not executor blocks.
-        if checkpoint_dir is None:
-            _release(prev_id)
-            prev_id = _ckpt_rdd_id(jumped)
+        # A reliable round is never in the persistent-RDD map (its blocks
+        # are files under the checkpoint dir), so its release is a no-op.
+        _release(prev_id)
+        prev_id = _ckpt_rdd_id(jumped)
         labels = jumped
         if changed == 0:
             break
@@ -940,7 +938,6 @@ def cdc_chunk_dedup_report(
     base: int = 1_000_003,
     max_df: int = 50,
     min_shared: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Corpus-level near-dup report over CONTENT-DEFINED chunk
     fingerprints — the consumer shape
@@ -993,8 +990,7 @@ def cdc_chunk_dedup_report(
     per = _ckpt(
         ch.groupBy(F.col(id_col), F.col("chunk_fp")).agg(
             F.max("chunk_tokens").alias("__tok")
-        ),
-        checkpoint_dir,
+        )
     )
     fpstats = per.groupBy("chunk_fp").agg(
         F.count(F.lit(1)).alias("__df"), F.max("__tok").alias("__ftok")
@@ -1034,7 +1030,6 @@ def duplicate_spans(
     min_tokens: int = 8,
     base1: int = 1_000_003,
     base2: int = 999_983,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-substring duplicate-SPAN detection (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
@@ -1063,8 +1058,8 @@ def duplicate_spans(
     (the CDC precedent — both folds share ONE window traversal via a
     struct accumulator, the poly_char_hash2 idiom), ONE explode to
     token-position granularity (corpus-token-count rows, linear) that is
-    lineage-cut once for its two consumers (``checkpoint_dir`` routes
-    the cut to a reliable directory for 1000-executor runs), one
+    lineage-cut once for its two consumers (a reliable cut under a
+    context checkpoint directory, for 1000-executor runs), one
     map-side-combined groupBy(fp) for occurrence counts, one fp-keyed
     semi join back, and one DOC-KEYED window over duplicated positions
     only for the islands merge. Nothing quadratic, nothing data-sized on
@@ -1083,8 +1078,7 @@ def duplicate_spans(
     # O(n·k) gram folds (the cdc_chunk_dedup_report checkpoint-routing
     # rule; plan audit read scans=2 before the cut).
     staged = _ckpt(
-        _span_gram_positions(df, id_col, text_col, min_tokens, base1, base2),
-        checkpoint_dir,
+        _span_gram_positions(df, id_col, text_col, min_tokens, base1, base2)
     )
     dup_fps = (
         staged.groupBy("__fp")
@@ -1218,7 +1212,6 @@ def remove_duplicate_spans(
     base1: int = 1_000_003,
     base2: int = 999_983,
     spans: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The REWRITE pass that consumes :func:`duplicate_spans`' cut-list —
     the exact-substring analogue of `cdc_chunk_dedup_report` closing the
@@ -1254,7 +1247,6 @@ def remove_duplicate_spans(
         spans = duplicate_spans(
             df, id_col, text_col,
             min_tokens=min_tokens, base1=base1, base2=base2,
-            checkpoint_dir=checkpoint_dir,
         )
     per_doc = spans.groupBy(F.col(id_col)).agg(
         F.collect_list(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from artigraph_spark.operators._adaptive import pinned_parallelism
-from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
+from artigraph_spark.operators._checkpoint import checkpoint as _ckpt, reliable
 
 
 @pinned_parallelism
@@ -32,7 +32,6 @@ def pagerank(
     iterations: int = 8,
     damping: float = 0.85,
     bits: int = 30,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -45,12 +44,12 @@ def pagerank(
     groupBy(dst) with map-side partial sums — the standard distributed
     PageRank step, linear in edges, shuffles keyed on node ids. The
     iteration count is fixed (default 8), so the lineage is a bounded
-    8-deep DAG by default; with ``checkpoint_dir`` set, ranks are
-    reliably checkpointed every 4 iterations AND at the end, so both the
-    in-flight lineage depth and the result survive executor loss — the
-    right mode for long jobs on real clusters (``operators._checkpoint``).
-    Without it the result is localCheckpointed (executor-local blocks,
-    self-cleaning, lost with the executor — fine in local mode).
+    8-deep DAG; ranks are cut every 4 iterations AND at the end
+    (``operators._checkpoint``). Under a context checkpoint directory
+    both cuts are reliable and eager, so the in-flight lineage depth and
+    the result survive executor loss — the right mode for long jobs on
+    real clusters. Without one they are executor-local blocks
+    (self-cleaning, lost with the executor — fine in local mode).
 
     The degree-annotated edge list and per-node base frame are persisted
     (they feed every iteration); they stay cached until Spark's LRU evicts
@@ -149,39 +148,35 @@ def pagerank(
             # Catalyst plan truncates to a LogicalRDD at cut time, not
             # at materialization), so in local-blocks mode it is LAZY —
             # the next action materializes it, saving one node-count-
-            # sized job per cut. With checkpoint_dir the cut stays
-            # EAGER: it is the mid-loop fault barrier, and a deferred
-            # reliable checkpoint would leave nothing durable until the
-            # final action (an executor loss would replay the whole
-            # loop — the exact failure mode reliable mode buys off).
-            ranks = _ckpt(
-                ranks, checkpoint_dir, eager=checkpoint_dir is not None
-            )
+            # sized job per cut. A reliable cut stays EAGER: it is the
+            # mid-loop fault barrier, and a deferred reliable checkpoint
+            # would leave nothing durable until the final action (an
+            # executor loss would replay the whole loop — the exact
+            # failure mode reliable mode buys off).
+            ranks = _ckpt(ranks, eager=reliable(ranks))
     # Materialize the slim (node, rank) result, then RELEASE the two
     # persisted loop frames — otherwise each pagerank() call leaks
     # disk-backed cache blocks the caller has no handle to unpersist.
-    # localCheckpoint follows the connected_components precedent: the
-    # result is node-count-sized, its blocks are freed by the
+    # The cut follows the connected_components precedent: the result is
+    # node-count-sized, executor-local blocks are freed by the
     # ContextCleaner once the returned frame is garbage-collected, and a
     # lineage replay would re-run the whole loop anyway. The finally
     # releases the frames even when the eager checkpoint job fails — a
     # failed call must not leak cache blocks either.
     try:
-        return _ckpt(
-            ranks.select("node", F.col("r").alias("rank_fx")), checkpoint_dir
-        )
+        return _ckpt(ranks.select("node", F.col("r").alias("rank_fx")))
     finally:
         e.unpersist()
         base.unpersist()
 
 
+@pinned_parallelism
 def triangle_counts(
     edges: DataFrame,
     src: str,
     dst: str,
     *,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-node triangle counts over an undirected graph, returned as
     ``(node, n_triangles)`` for nodes in at least one triangle. Input
@@ -206,8 +201,8 @@ def triangle_counts(
     closure — and the edge list feeds both the degree aggregate and the
     orientation join; without the persists each reference re-runs the
     upstream scan+distinct), then released pagerank-style: the slim
-    per-node result is localCheckpointed so the caller holds no lineage
-    into the freed frames. ``materialize=False`` returns the fully lazy
+    per-node result is lineage-cut (``operators._checkpoint``) so the
+    caller holds no lineage into the freed frames. ``materialize=False`` returns the fully lazy
     plan instead (re-execution cost and all) — for plan inspection or
     embedding in a larger optimized query.
     """
@@ -225,13 +220,6 @@ def triangle_counts(
     # final action (the pagerank mid-cut lesson). With
     # ``materialize=False`` nothing compiles inside the scope and the
     # caller's session conf governs the returned lazy plan as before.
-    return _triangle_counts_impl(
-        edges, src, dst, materialize, checkpoint_dir, StorageLevel
-    )
-
-
-@pinned_parallelism
-def _triangle_counts_impl(edges, src, dst, materialize, checkpoint_dir, StorageLevel):
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -285,14 +273,14 @@ def _triangle_counts_impl(edges, src, dst, materialize, checkpoint_dir, StorageL
         return counts
     # finally-guarded like pagerank: a failed checkpoint job must not
     # leak the two persisted frames the caller has no handle to.
-    # (AQE pinned by this function's @pinned_parallelism.)
     try:
-        return _ckpt(counts, checkpoint_dir)
+        return _ckpt(counts)
     finally:
         e.unpersist()
         o.unpersist()
 
 
+@pinned_parallelism
 def support_pairs(
     df,
     basket_col: str,
@@ -318,7 +306,6 @@ def support_pairs(
     if top_k <= 0:
         raise ValueError(f"top_k must be positive, got {top_k}")
     from pyspark import StorageLevel
-    from pyspark.sql import functions as F
 
     # r14: built AND materialized under the pinned-AQE scope
     # (operators._adaptive) — the within-basket pair join's skew is
@@ -327,11 +314,7 @@ def support_pairs(
     # serializes the short pipeline; measured 2.0 s -> 1.5 s at sf0.1.
     # The persist must sit inside the scope (caching compiles its plan
     # at cacheQuery time — the pagerank mid-cut lesson).
-    return _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F)
-
-
-@pinned_parallelism
-def _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F):
+    #
     # The distinct (basket, item) frame feeds four plan branches (both
     # pair sides, the item counts, the basket total): persist it for the
     # call and release after materializing the top-k (the
@@ -390,13 +373,13 @@ def _support_pairs_impl(df, basket_col, item_col, top_k, StorageLevel, F):
         .orderBy(F.col("pair_cnt").desc(), F.col("item_a"), F.col("item_b"))
         .limit(top_k)
     )
-    # (AQE pinned by this function's @pinned_parallelism.)
     try:
-        return out.localCheckpoint(eager=True)
+        return _ckpt(out)
     finally:
         items.unpersist()
 
 
+@pinned_parallelism
 def bfs_hops(
     edges: DataFrame,
     src: str,
@@ -404,7 +387,6 @@ def bfs_hops(
     seeds: DataFrame,
     *,
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distances: for every node reachable from the
     seed set within ``max_hops`` directed hops, the MINIMUM number of
@@ -419,9 +401,9 @@ def bfs_hops(
     node set), and a node settles exactly once at its true BFS level, so
     the result is deterministic on any engine/partitioning. Early exit
     on an empty frontier (a metadata-sized count per round, the
-    connected-components convention); per-round lineage cuts route
-    through ``operators._checkpoint`` (localCheckpoint by default,
-    reliable files under ``checkpoint_dir`` for long cluster runs).
+    connected-components convention); per-round lineage cuts are
+    ``operators._checkpoint``'s (executor-local blocks, or reliable files
+    under the context's checkpoint directory for long cluster runs).
 
     ``seeds`` is a one-column DataFrame of start nodes (distinct-ed and
     intersected with nothing — seeds absent from the graph still report
@@ -434,13 +416,6 @@ def bfs_hops(
     # pinned-AQE frontier loop (operators._adaptive): fixed node-keyed
     # exchange shapes every round, per-round cuts freeze plans at
     # declaration, persist compiles at cacheQuery — the pagerank scope
-    return _bfs_hops_impl(
-        edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLevel
-    )
-
-
-@pinned_parallelism
-def _bfs_hops_impl(edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLevel):
     seed_col = seeds.columns[0]
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -448,7 +423,7 @@ def _bfs_hops_impl(edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLeve
     dist = seeds.select(F.col(seed_col).alias("node")).distinct().withColumn(
         "hops", F.lit(0).cast("long")
     )
-    dist = _ckpt(dist, checkpoint_dir)
+    dist = _ckpt(dist)
     frontier = dist.select("node")
     try:
         for i in range(1, max_hops + 1):
@@ -460,10 +435,10 @@ def _bfs_hops_impl(edges, src, dst, seeds, max_hops, checkpoint_dir, StorageLeve
             fresh = targets.join(dist, "node", "left_anti").withColumn(
                 "hops", F.lit(i).cast("long")
             )
-            fresh = _ckpt(fresh, checkpoint_dir)
+            fresh = _ckpt(fresh)
             if fresh.limit(1).count() == 0:
                 break
-            dist = _ckpt(dist.unionByName(fresh), checkpoint_dir)
+            dist = _ckpt(dist.unionByName(fresh))
             frontier = fresh.select("node")
         return dist
     finally:
@@ -502,8 +477,7 @@ def adamic_adar(
     (both neighbor sides, the degree aggregate, the anti-join). With
     ``materialize=True`` (default) it is persisted for the duration and
     released triangle_counts-style — the slim top-k result is
-    localCheckpointed so the caller holds no lineage into the freed
-    frame. Without it, an expensive upstream (e.g. the co-purchase pair
+    lineage-cut so the caller holds no lineage into the freed frame. Without it, an expensive upstream (e.g. the co-purchase pair
     builder) re-runs once per branch. ``materialize=False`` returns the
     fully lazy plan for plan inspection / embedding.
 
@@ -549,11 +523,12 @@ def adamic_adar(
         .select("u", "w", "n_common", F.round("aa", 9).alias("aa_r"), "rk")
     )
     if materialize:
-        out = out.localCheckpoint()  # ≤ top_k rows
+        out = _ckpt(out)  # ≤ top_k rows
         e.unpersist()
     return out
 
 
+@pinned_parallelism
 def hits(
     edges: DataFrame,
     src: str,
@@ -561,7 +536,6 @@ def hits(
     *,
     iterations: int = 8,
     bits: int = 30,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration HITS (hubs & authorities) over a directed edge
     list — Kleinberg's dual of PageRank: a good HUB points at good
@@ -591,9 +565,9 @@ def hits(
     — so an unrolled lazy plan grows 4^iterations; each round's scores
     are therefore materialized through an eager per-iteration lineage
     cut (node-count-sized frames, the kmeans/bfs eager-loop precedent;
-    reliable files under ``checkpoint_dir`` for cluster runs via
-    ``operators._checkpoint``). The distinct edge list is persisted
-    across the loop and released in a finally.
+    ``operators._checkpoint``, reliable under a context checkpoint
+    directory). The distinct edge list is persisted across the loop and
+    released in a finally.
 
     Hubs are nodes with out-edges, authorities nodes with in-edges (a
     node can be both — it appears once per role). Returns
@@ -610,13 +584,6 @@ def hits(
     # pinned-AQE loop scope (operators._adaptive): per-iteration eager
     # cuts plan inside the loop, the persist compiles at cacheQuery —
     # both must sit inside the scope (the pagerank mid-cut lesson)
-    return _hits_impl(
-        edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLevel
-    )
-
-
-@pinned_parallelism
-def _hits_impl(edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLevel):
     e = (
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
         .distinct()
@@ -645,16 +612,14 @@ def _hits_impl(edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLe
                     e.join(h.withColumnRenamed("node", "__s"), "__s")
                     .groupBy(F.col("__d").alias("node"))
                     .agg(F.sum("sc").alias("raw"))
-                ),
-                checkpoint_dir,
+                )
             )
             h = _ckpt(
                 _normalize(
                     e.join(a.withColumnRenamed("node", "__d"), "__d")
                     .groupBy(F.col("__s").alias("node"))
                     .agg(F.sum("sc").alias("raw"))
-                ),
-                checkpoint_dir,
+                )
             )
         out = h.select(
             "node", F.lit("hub").alias("role"), F.col("sc").alias("score_fx")
@@ -664,12 +629,13 @@ def _hits_impl(edges, src, dst, iterations, one, bits, checkpoint_dir, StorageLe
             )
         )
         # Materialize before releasing the loop's persisted edge frame —
-        # the pagerank/_ckpt precedent (localCheckpoint by default).
-        return _ckpt(out, checkpoint_dir)
+        # the pagerank/_ckpt precedent.
+        return _ckpt(out)
     finally:
         e.unpersist()
 
 
+@pinned_parallelism
 def k_core(
     edges: DataFrame,
     src: str,
@@ -678,7 +644,6 @@ def k_core(
     k: int,
     max_rounds: int = 12,
     until_convergence: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core decomposition membership: iteratively peel nodes of degree
     < k until the remaining subgraph is stable — the standard "dense
@@ -690,7 +655,7 @@ def k_core(
     duplicated list. Each peel round is one map-side-combined degree
     aggregate plus two semi-joins (node-keyed, edge-linear) with an
     eager per-round lineage cut (frontier-loop convention; reliable
-    files under ``checkpoint_dir`` for cluster runs), and an
+    under a context checkpoint directory), and an
     edge-count early exit (metadata-sized, the BFS/CC convention) —
     rounds past convergence are no-ops, which is exactly what makes the
     fixed-round oracle replay equal to the early-exited Spark run. If
@@ -713,13 +678,6 @@ def k_core(
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     # pinned-AQE peel loop (operators._adaptive): per-round eager cuts
     # and counts over fixed node-keyed exchange shapes
-    return _k_core_impl(
-        edges, src, dst, k, max_rounds, until_convergence, checkpoint_dir
-    )
-
-
-@pinned_parallelism
-def _k_core_impl(edges, src, dst, k, max_rounds, until_convergence, checkpoint_dir):
     pe = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("__a"),
@@ -731,8 +689,7 @@ def _k_core_impl(edges, src, dst, k, max_rounds, until_convergence, checkpoint_d
     e = _ckpt(
         pe.select(F.col("__a").alias("__s"), F.col("__b").alias("__d")).unionByName(
             pe.select(F.col("__b").alias("__s"), F.col("__a").alias("__d"))
-        ),
-        checkpoint_dir,
+        )
     )
     n_edges = e.count()
     converged = n_edges == 0
@@ -748,8 +705,7 @@ def _k_core_impl(edges, src, dst, k, max_rounds, until_convergence, checkpoint_d
         e2 = _ckpt(
             e.join(keep, "__s", "left_semi").join(
                 keep.withColumnRenamed("__s", "__d"), "__d", "left_semi"
-            ),
-            checkpoint_dir,
+            )
         )
         n2 = e2.count()
         e = e2
@@ -773,6 +729,7 @@ def _k_core_impl(edges, src, dst, k, max_rounds, until_convergence, checkpoint_d
     )
 
 
+@pinned_parallelism
 def association_rules(
     df,
     basket_col: str,
@@ -803,23 +760,13 @@ def association_rules(
         raise ValueError(f"top_k must be positive, got {top_k}")
     if min_pair_cnt < 1:
         raise ValueError(f"min_pair_cnt must be >= 1, got {min_pair_cnt}")
-    from pyspark.sql import functions as F
-
     from pyspark import StorageLevel
 
     # same pinned-AQE scope as support_pairs (identical pair join); the
-    # persist must compile inside the scope (the pagerank mid-cut lesson)
-    return _association_rules_impl(
-        df, basket_col, item_col, min_pair_cnt, top_k, StorageLevel, F
-    )
-
-
-@pinned_parallelism
-def _association_rules_impl(
-    df, basket_col, item_col, min_pair_cnt, top_k, StorageLevel, F
-):
-    # persisted across its four consuming branches, released after the
-    # top-k materializes (the set_similarity_pairs convention)
+    # persist must compile inside the scope (the pagerank mid-cut lesson).
+    # The distinct items frame is persisted across its four consuming
+    # branches and released after the top-k materializes (the
+    # set_similarity_pairs convention).
     items = (
         df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
         .filter(F.col("__b").isNotNull() & F.col("__i").isNotNull())
@@ -886,13 +833,13 @@ def _association_rules_impl(
         F.col("antecedent"),
         F.col("consequent"),
     ).limit(top_k)
-    # (AQE pinned by this function's @pinned_parallelism.)
     try:
-        return ranked.localCheckpoint(eager=True)
+        return _ckpt(ranked)
     finally:
         items.unpersist()
 
 
+@pinned_parallelism
 def shortest_paths_bounded(
     edges: DataFrame,
     src: str,
@@ -901,7 +848,6 @@ def shortest_paths_bounded(
     seeds: DataFrame,
     *,
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest distances using at most ``max_hops``
     edges — the weighted sibling of :func:`bfs_hops` (bounded-hop
@@ -918,7 +864,7 @@ def shortest_paths_bounded(
     distances — edge-linear, node-keyed shuffles. Each round's distance
     frame is consumed TWICE next round (relax + carry), so rounds are
     materialized through eager node-sized lineage cuts (the hits/k_core
-    convention; reliable files under ``checkpoint_dir`` for clusters).
+    convention; reliable under a context checkpoint directory).
     Weights are validated per row with precise errors: NULL/NaN,
     negative (bounded-hop relaxation is still well-defined, but
     "shortest within k hops" under negative weights is almost always a
@@ -932,13 +878,7 @@ def shortest_paths_bounded(
         raise ValueError(f"max_hops must be non-negative, got {max_hops}")
     # pinned-AQE relaxation loop (operators._adaptive): per-round eager
     # cuts over fixed node-keyed exchange shapes (the bfs_hops scope)
-    return _shortest_paths_impl(
-        edges, src, dst, weight, seeds, max_hops, checkpoint_dir
-    )
-
-
-@pinned_parallelism
-def _shortest_paths_impl(edges, src, dst, weight, seeds, max_hops, checkpoint_dir):
+    #
     # Weights must be non-null, non-NaN, non-negative, and integral —
     # each violation gets its own branch with an accurate message (a
     # blanket `>= 0 else "negative"` mislabels NULLs, and cast('long')
@@ -986,8 +926,7 @@ def _shortest_paths_impl(edges, src, dst, weight, seeds, max_hops, checkpoint_di
     dist = _ckpt(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
-        .withColumn("dist", F.lit(0).cast("long")),
-        checkpoint_dir,
+        .withColumn("dist", F.lit(0).cast("long"))
     )
     try:
         for _ in range(max_hops):
@@ -1001,8 +940,7 @@ def _shortest_paths_impl(edges, src, dst, weight, seeds, max_hops, checkpoint_di
             dist = _ckpt(
                 dist.unionByName(relaxed)
                 .groupBy("node")
-                .agg(F.min("dist").alias("dist")),
-                checkpoint_dir,
+                .agg(F.min("dist").alias("dist"))
             )
         return dist
     finally:

@@ -428,8 +428,8 @@ def robust_outliers(
     deviations) + two broadcast joins of per-group statistics — no
     global row sort. See ``_cumulative_hist`` for the distinct-value
     cardinality caveat. Both per-group statistic frames take a lazy
-    lineage cut (r11, the kaplan_meier chained-pass lesson; routed by
-    ``_adaptive.cut_frame``, so ``SPARK_GRAFT_REUSE_DIR`` applies):
+    lineage cut (r11, the kaplan_meier chained-pass lesson; made by
+    ``_adaptive.cut_frame``, reliable under a context checkpoint dir):
     the deviation histogram's 4-branch fan-out would otherwise multiply
     the median's whole tree statically, and column pruning can
     specialize the duplicated exchanges enough to defeat runtime reuse

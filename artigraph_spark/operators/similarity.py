@@ -16,6 +16,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 from artigraph_spark.operators.windows import top_k_per_group
 
 _SCALE = float(1 << 30)
@@ -842,7 +843,6 @@ def semdedup(
     threshold: "tuple[int, int]" = (3, 10),
     dim: int = 64,
     max_abs: float = 2.0,
-    checkpoint_dir: str | None = None,
     keeper: str = "min_id",
 ) -> DataFrame:
     """SemDeDup-style SEMANTIC dedup (Abbas et al. 2023, arXiv:2303.09540):
@@ -896,8 +896,6 @@ def semdedup(
     farther-from-centroid one (dist_q DESC, id ASC) under
     ``min_centroid_sim``).
     """
-    from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
-
     p, q = threshold
     _cos_int64_bound_check("semdedup", dim=dim, qbits=qbits, max_abs=max_abs, p=p, q=q)
     if keeper not in ("min_id", "min_centroid_sim"):
@@ -925,8 +923,7 @@ def semdedup(
         df.filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
         .select(F.col(id_col), qexpr.alias("__q"))
         .withColumn("__n", sdot(F.col("__q"), F.col("__q")))
-        .join(assign, id_col),
-        checkpoint_dir,
+        .join(assign, id_col)
     )
     extra_a = [F.col("dist_q").alias("__da")] if keeper == "min_centroid_sim" else []
     extra_b = [F.col("dist_q").alias("__db")] if keeper == "min_centroid_sim" else []
@@ -1019,7 +1016,6 @@ def semdedup_against(
     threshold: "tuple[int, int]" = (3, 10),
     max_abs: float = 2.0,
     max_ref_bucket: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cross-snapshot SEMANTIC dedup: flag every vector in a NEW batch
     that has a cosine near-twin in a REFERENCE corpus, WITHOUT
@@ -1062,8 +1058,6 @@ def semdedup_against(
     — ``pruned`` 0/1 (1 = a verified ref near-twin exists), ``ref_match``
     the smallest matching ref id (NULL when pruned = 0).
     """
-    from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
-
     p, q = threshold
     _cos_int64_bound_check(
         "semdedup_against", dim=dim, qbits=qbits, max_abs=max_abs, p=p, q=q
@@ -1092,8 +1086,7 @@ def semdedup_against(
                 qexpr.alias("__q"),
                 buckets.alias("__bk"),
             )
-            .withColumn("__n", _sdot(F.col("__q"), F.col("__q"))),
-            checkpoint_dir,
+            .withColumn("__n", _sdot(F.col("__q"), F.col("__q")))
         )
 
     npts = prep(new_df, "__ni")
@@ -1289,7 +1282,7 @@ def set_similarity_pairs(
     so it is persisted for the duration of the call (the adamic_adar
     convention — without it every branch re-scans and re-distincts the
     input; measured 16 FileScans → 1 on the co-purchase query) and the
-    result localCheckpointed before release.
+    result lineage-cut before release.
 
     Returns ``(a, b, size_a, size_b, overlap, jaccard_r)`` with a < b and
     ``jaccard = overlap / (size_a + size_b − overlap)``.
@@ -1359,7 +1352,7 @@ def set_similarity_pairs(
         out = j.select("a", "b", "size_a", "size_b", "overlap", "jaccard_r")
         # Materialize (threshold-sized) before releasing the loop frames —
         # the pagerank finally-release convention.
-        return out.localCheckpoint(eager=True)
+        return _ckpt(out)
     finally:
         for f_ in released:
             f_.unpersist()
@@ -1401,7 +1394,7 @@ def _pca_fit(
     (d²-sized after partial aggregation — the per-task combine is what
     makes n·d² intermediate rows shuffle as d² partials); the centered
     long frame is persisted across its two consumers and the d²-row
-    covariance localCheckpointed once, after which the 12 rounds run on
+    covariance lineage-cut once, after which the 12 rounds run on
     d-row frames with per-round lineage cuts (the hits convention — each
     round's vector is consumed twice: next product + its own max).
 
@@ -1415,8 +1408,6 @@ def _pca_fit(
     if not 1 <= bits <= 30:
         raise ValueError(f"bits must be in [1, 30], got {bits}")
     from pyspark import StorageLevel
-
-    from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 
     one_q = float(1 << qbits)
     one_b = float(1 << bits)
@@ -1453,8 +1444,7 @@ def _pca_fit(
             .groupBy("i", "j")
             .agg(F.sum(F.col("__ca") * F.col("__cb")).alias("__g"))
             .crossJoin(F.broadcast(n_df))
-            .select("i", "j", F.floor(F.col("__g") / F.col("__n")).alias("g")),
-            None,
+            .select("i", "j", F.floor(F.col("__g") / F.col("__n")).alias("g"))
         )
         v = cov.select(F.col("i").alias("j")).distinct().withColumn(
             "v", F.lit(1 << bits).cast("long")
@@ -1476,8 +1466,7 @@ def _pca_fit(
                     )
                     .cast("long")
                     .alias("v"),
-                ),
-                None,
+                )
             )
         return centered, v
     except BaseException:
@@ -1531,13 +1520,11 @@ def pca_project(
 
     One broadcast join of the d-row loadings onto the persisted
     centered long form + a map-side-combined per-id sum; the
-    vector-count-sized result is localCheckpointed before the loop
+    vector-count-sized result is lineage-cut before the loop
     frames release (the pagerank convention).
 
     Returns ``(id, proj_fx)``.
     """
-    from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
-
     centered, v = _pca_fit(
         df, id_col=id_col, vec_col=vec_col, iterations=iterations,
         qbits=qbits, bits=bits,
@@ -1548,8 +1535,7 @@ def pca_project(
                 F.broadcast(v.withColumnRenamed("j", "__i")), "__i"
             )
             .groupBy(F.col("__id").alias(id_col))
-            .agg(F.sum(F.col("__c") * F.col("v")).alias("proj_fx")),
-            None,
+            .agg(F.sum(F.col("__c") * F.col("v")).alias("proj_fx"))
         )
     finally:
         centered.unpersist()
@@ -1693,8 +1679,6 @@ def pca_explained(
 
     Returns ``(id, frac_explained_r)``.
     """
-    from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
-
     centered, v = _pca_fit(
         df, id_col=id_col, vec_col=vec_col, iterations=iterations,
         qbits=qbits, bits=bits,
@@ -1722,8 +1706,7 @@ def pca_explained(
                         9,
                     ),
                 ).alias("frac_explained_r"),
-            ),
-            None,
+            )
         )
     finally:
         centered.unpersist()

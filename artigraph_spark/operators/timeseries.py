@@ -12,6 +12,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
+
 
 def funnel_stages(
     e: DataFrame,
@@ -840,7 +842,7 @@ def rfm_segments(
             m_q.alias("m_q"),
             (r_q * 100 + f_q * 10 + m_q).cast("long").alias("rfm_code"),
         )
-        return out.localCheckpoint(eager=True)
+        return _ckpt(out)
     finally:
         scored.unpersist()
 
@@ -1484,7 +1486,7 @@ def markov_stationary(
 
     Scale shape: the heavy work is the ONE per-group window sort and
     (src, dst) aggregate of transition_matrix; the quantized |states|²
-    matrix is localCheckpointed once (kilobytes) and the iterations run
+    matrix is lineage-cut once (kilobytes) and the iterations run
     on |states|-row frames — π is consumed once per round, so the plan
     grows linearly and needs no per-round cuts. Above the reuse
     threshold the per-src totals attach via a broadcast join over the
@@ -1504,8 +1506,6 @@ def markov_stationary(
     if not 1 <= bits <= 30 or not 1 <= pbits <= 30:
         raise ValueError(f"bits/pbits must be in [1, 30], got {bits}/{pbits}")
     from pyspark.sql import Window
-
-    from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 
     w = Window.partitionBy(group_col).orderBy(ts_col, tiebreak_col)
     pairs = (
@@ -1561,7 +1561,7 @@ def markov_stationary(
             .cast("long")
             .alias("__p"),
         )
-    p = _ckpt(quant, None)
+    p = _ckpt(quant)
     states = p.select(F.col("__src").alias("state")).distinct()
     n_states = states.agg(F.count(F.lit(1)).alias("__ns"))
     pi = states.crossJoin(F.broadcast(n_states)).select(

@@ -714,6 +714,7 @@ def ppl_decile_report(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from artigraph_spark.functions import davg
+    from artigraph_spark.operators._checkpoint import checkpoint
     from artigraph_spark.operators._ranks import (
         bucketed_row_numbers,
         ntile_from_rank,
@@ -745,7 +746,7 @@ def ppl_decile_report(spark, sf_dir):
                 F.round(davg("__nll"), 9).alias("mean_nll_r"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return checkpoint(out)
     finally:
         scores.unpersist()
 

@@ -19,3 +19,17 @@ def spark():
 @pytest.fixture()
 def tmp_root(tmp_path):
     return str(tmp_path)
+
+
+@pytest.fixture()
+def reliable_cuts(spark, tmp_path):
+    """Give the context a checkpoint directory under ``tmp_path``, so every
+    engine lineage cut is reliable, and yield it. Teardown restores the
+    context's previous setting; Spark has no public unset, so the Scala
+    setter takes the saved ``Option`` back."""
+    scala_sc = spark.sparkContext._jsc.sc()
+    prev = scala_sc.checkpointDir()
+    path = tmp_path / "checkpoints"
+    spark.sparkContext.setCheckpointDir(str(path))
+    yield path
+    getattr(scala_sc, "checkpointDir_$eq")(prev)

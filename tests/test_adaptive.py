@@ -1,8 +1,7 @@
 """``operators._adaptive``: the one size estimate (``_estimate``) behind the
 reuse cut, the AQE pin and the prefix/rank gate — leaf-sum semantics, the
 source estimate a cut records for every frame derived from it, the
-reliable-checkpoint routing of the cut (``SPARK_GRAFT_REUSE_DIR``), the
-fail-safe answers for unknown or materialized leaves, and the
+reliable cut under the context's checkpoint directory, the fail-safe answers for unknown or materialized leaves, and the
 ``pinned_parallelism`` decorator, which runs pinned work in a cloned
 session and never writes the caller's conf. Results are identical on
 every path."""
@@ -27,7 +26,6 @@ from artigraph_spark.operators._adaptive import (
 )
 
 _ENV = "SPARK_GRAFT_REUSE_MIN_BYTES"
-_DIR_ENV = "SPARK_GRAFT_REUSE_DIR"
 _FLAG = "spark.sql.adaptive.enabled"
 
 
@@ -81,7 +79,6 @@ def test_estimate_sums_leaves(spark, tmp_path):
 
 
 def test_cut_records_its_source_estimate(spark, monkeypatch):
-    monkeypatch.delenv(_DIR_ENV, raising=False)
     src = spark.range(0, 500)
     want = _estimate(src).known
     cut = cut_frame(src.groupBy((F.col("id") % 7).alias("g")).count())
@@ -118,18 +115,16 @@ def test_reuse_frame_cuts_above_threshold_same_rows(spark, monkeypatch):
     assert sorted(map(tuple, cut.collect())) == expected
 
 
-def test_reuse_dir_routes_to_reliable_checkpoint(spark, monkeypatch, tmp_path):
-    ck = tmp_path / "reuse_ck"
+def test_reuse_dir_routes_to_reliable_checkpoint(spark, monkeypatch, reliable_cuts):
     monkeypatch.setenv(_ENV, "0")
-    monkeypatch.setenv(_DIR_ENV, str(ck))
     df = _fixture(spark).groupBy("g").count()
     expected = sorted(map(tuple, df.collect()))
     cut, fired = reuse_frame_cut(df)
     assert fired and cut is not df
     assert sorted(map(tuple, cut.collect())) == expected
     # the cut went through the RELIABLE checkpoint dir, not executor blocks
-    files = [p for p, _, fs in os.walk(ck) for _ in fs]
-    assert files, "reliable checkpoint wrote nothing under SPARK_GRAFT_REUSE_DIR"
+    files = [p for p, _, fs in os.walk(reliable_cuts) for _ in fs]
+    assert files, "reliable checkpoint wrote nothing under the checkpoint dir"
     # and it records its source estimate like the executor-local cut
     src = spark.range(0, 50)
     ranged, _ = reuse_frame_cut(src.groupBy((F.col("id") % 3).alias("g")).count())
@@ -138,11 +133,53 @@ def test_reuse_dir_routes_to_reliable_checkpoint(spark, monkeypatch, tmp_path):
 
 def test_reuse_dir_unset_keeps_local_path(spark, monkeypatch, tmp_path):
     monkeypatch.setenv(_ENV, "0")
-    monkeypatch.delenv(_DIR_ENV, raising=False)
+    # the test session's context has no checkpoint directory
+    assert spark.sparkContext.getCheckpointDir() is None
     df = _fixture(spark).groupBy("g").count()
     cut, fired = reuse_frame_cut(df)
     assert fired
     assert _has_rdd_scan(cut)
+
+
+def _checkpointed_rdds(root):
+    return {d for p, ds, _ in os.walk(root) for d in ds if d.startswith("rdd-")}
+
+
+def test_operator_cuts_follow_checkpoint_dir(spark, monkeypatch, request):
+    """Operator lineage cuts go through ``_adaptive.cut_frame``: with a
+    context checkpoint directory they land as reliable checkpoints under
+    it instead of executor-local blocks, which cannot be replayed after
+    executor loss, and give the same rows."""
+    from artigraph_spark.operators.quality import robust_outliers
+    from artigraph_spark.operators.timeseries import kaplan_meier, restricted_mean_survival
+
+    def values():
+        return spark.range(0, 24).select(
+            (F.col("id") % 2).cast("string").alias("g"),
+            F.when(F.col("id") == 7, F.lit(500.0)).otherwise(F.col("id") % 5).alias("v"),
+        )
+
+    def curve():
+        # a Range leaf is summary-sized: kaplan_meier takes its plain-window
+        # arm and makes no cut of its own
+        units = spark.range(1, 30).select(
+            F.col("id").alias("d"), (F.col("id") % 2).cast("int").alias("obs")
+        )
+        return kaplan_meier(units, "d", "obs")
+
+    monkeypatch.delenv(_ENV, raising=False)
+    want_outliers = sorted(robust_outliers(values(), "g", "v").collect())
+    want_rmst = restricted_mean_survival(curve(), "duration", "survival_r", 20).collect()
+
+    ck = request.getfixturevalue("reliable_cuts")
+    got = sorted(robust_outliers(values(), "g", "v").collect())
+    # the median and the MAD frames
+    assert len(_checkpointed_rdds(ck)) == 2
+    assert got == want_outliers
+    rmst = restricted_mean_survival(curve(), "duration", "survival_r", 20)
+    assert rmst.collect() == want_rmst
+    # the curve cut
+    assert len(_checkpointed_rdds(ck)) == 3
 
 
 def test_malformed_threshold_env_falls_back(spark, monkeypatch):
@@ -159,7 +196,6 @@ def test_bare_scan_leaf_reports_no_cut(spark, monkeypatch, tmp_path):
     path = str(tmp_path / "scan.parquet")
     _fixture(spark).write.parquet(path)
     monkeypatch.setenv(_ENV, "0")
-    monkeypatch.delenv(_DIR_ENV, raising=False)
     scan = spark.read.parquet(path)
     out, fired = reuse_frame_cut(scan)
     assert out is scan and not fired
@@ -167,7 +203,6 @@ def test_bare_scan_leaf_reports_no_cut(spark, monkeypatch, tmp_path):
 
 def test_already_cut_leaf_reports_cut_without_recut(spark, monkeypatch):
     monkeypatch.setenv(_ENV, "0")
-    monkeypatch.delenv(_DIR_ENV, raising=False)
     pre = _fixture(spark).groupBy("g").count().localCheckpoint(eager=True)
     out, fired = reuse_frame_cut(pre)
     # an eagerly materialized LogicalRDD: no second copy
@@ -179,7 +214,6 @@ def test_users_own_checkpoint_leaf_fails_safe(spark, monkeypatch, adaptive_on):
     an unknown leaf, so the gate takes the bucketed arm, nothing pins, and
     the forced cut reports the leaf as materialized without a copy."""
     monkeypatch.delenv(_ENV, raising=False)
-    monkeypatch.delenv(_DIR_ENV, raising=False)
     pre = spark.range(0, 50).groupBy((F.col("id") % 3).alias("g")).count()
     pre = pre.localCheckpoint(eager=True)
     assert _estimate(pre) == (0, 0, 1, "LogicalRDD")
@@ -196,7 +230,6 @@ def test_derived_from_a_cut_above_threshold_reads_large(spark, monkeypatch, adap
     """A cut's leaf reads as the input it stands for, not as its own
     (summary-sized) output: a frame derived from a cut made at or above
     the threshold is neither summary-sized nor pinnable."""
-    monkeypatch.delenv(_DIR_ENV, raising=False)
     total = spark.range(0, 500).agg(F.count(F.lit(1)).alias("n"))
     monkeypatch.setenv(_ENV, str(_estimate(total).known))
     cut, fired = reuse_frame_cut(total)
@@ -214,7 +247,6 @@ def test_robust_outliers_gates_see_summary_sized_inputs(spark, monkeypatch):
     from artigraph_spark.operators.quality import robust_outliers
 
     monkeypatch.delenv(_ENV, raising=False)
-    monkeypatch.delenv(_DIR_ENV, raising=False)
     seen = []
     real = _adaptive.summary_sized
 

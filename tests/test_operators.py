@@ -830,57 +830,39 @@ def test_grouped_hll_rejects_bad_m(spark):
 
 
 @pytest.mark.slow
-def test_iterative_ops_reliable_checkpoint_dir(spark, tmp_path):
-    """With checkpoint_dir set, pagerank / triangle_counts /
+def test_iterative_ops_reliable_checkpoint_dir(spark, request):
+    """Under a context checkpoint directory, pagerank / triangle_counts /
     connected_components produce identical results to the local mode AND
-    actually write reliable checkpoint files under the supplied dir."""
+    actually write reliable checkpoint files under that dir."""
     import os
 
     from artigraph_spark.operators.dedup import connected_components
     from artigraph_spark.operators.graph import pagerank, triangle_counts
 
-    ckdir = str(tmp_path / "ck")
     rows = [(f"n{i}", f"n{(i * 7 + 1) % 30}") for i in range(30)]
     e = spark.createDataFrame(rows, ["s", "d"])
-
-    pr_local = sorted(map(tuple, pagerank(e, "s", "d", iterations=5).collect()))
-    pr_rel = sorted(
-        map(
-            tuple,
-            pagerank(e, "s", "d", iterations=5, checkpoint_dir=ckdir).collect(),
-        )
-    )
-    assert pr_local == pr_rel
-
     tri = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], ["s", "d"]
     )
-    t_local = sorted(map(tuple, triangle_counts(tri, "s", "d").collect()))
-    t_rel = sorted(
-        map(
-            tuple,
-            triangle_counts(tri, "s", "d", checkpoint_dir=ckdir).collect(),
-        )
-    )
-    assert t_local == t_rel == [("a", 1), ("b", 1), ("c", 1)]
 
-    cc_local = sorted(
-        map(tuple, connected_components(tri, src="s", dst="d").collect())
-    )
-    cc_rel = sorted(
-        map(
-            tuple,
-            connected_components(
-                tri, src="s", dst="d", checkpoint_dir=ckdir
-            ).collect(),
+    def run():
+        return (
+            sorted(map(tuple, pagerank(e, "s", "d", iterations=5).collect())),
+            sorted(map(tuple, triangle_counts(tri, "s", "d").collect())),
+            sorted(map(tuple, connected_components(tri, src="s", dst="d").collect())),
         )
-    )
+
+    pr_local, t_local, cc_local = run()
+    ckdir = request.getfixturevalue("reliable_cuts")
+    pr_rel, t_rel, cc_rel = run()
+    assert pr_local == pr_rel
+    assert t_local == t_rel == [("a", 1), ("b", 1), ("c", 1)]
     assert cc_local == cc_rel
 
     written = [
         os.path.join(r, f) for r, _, fs in os.walk(ckdir) for f in fs
     ]
-    assert written, "reliable checkpoints must write files under checkpoint_dir"
+    assert written, "reliable checkpoints must write files under the checkpoint dir"
 
 
 def test_grouped_cms_never_undercounts_and_matches_exact_when_wide(spark):

@@ -111,7 +111,6 @@ def test_gate_is_taken_once_on_the_uncut_risk_table(spark, monkeypatch, threshol
         monkeypatch.delenv(_ENV, raising=False)
     else:
         monkeypatch.setenv(_ENV, threshold)
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_DIR", raising=False)
     seen = []
     real = _adaptive.summary_sized
 
@@ -135,18 +134,15 @@ def _checkpointed_rdds(root):
     return {d for p, ds, _ in os.walk(root) for d in ds if d.startswith("rdd-")}
 
 
-def test_bucketed_arm_cuts_route_through_reuse_dir(spark, monkeypatch, tmp_path):
-    ck = tmp_path / "reuse_ck"
+def test_bucketed_arm_cuts_route_through_reuse_dir(spark, monkeypatch, reliable_cuts):
     monkeypatch.setenv(_ENV, "0")
-    monkeypatch.setenv("SPARK_GRAFT_REUSE_DIR", str(ck))
     want_km = kaplan_meier(_units(spark), "d", "obs").collect()
     # both of kaplan_meier's cuts (risk table, term frame) went to the dir
-    assert len(_checkpointed_rdds(ck)) == 2
+    assert len(_checkpointed_rdds(reliable_cuts)) == 2
     logrank_test(_units(spark), "d", "obs", "g").collect()
-    assert len(_checkpointed_rdds(ck)) == 3
+    assert len(_checkpointed_rdds(reliable_cuts)) == 3
     # same curve as the plain-window arm
     monkeypatch.delenv(_ENV)
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_DIR")
     assert kaplan_meier(_units(spark), "d", "obs").collect() == want_km
 
 
@@ -199,7 +195,6 @@ def test_logrank_risk_table_is_lineage_cut(spark, monkeypatch):
     # A Range source plans no ExistingRDD of its own, so one shows only
     # where the risk table is cut: on the forced-cut arm (a zero
     # threshold), never on the window arm the default gate picks here.
-    monkeypatch.delenv("SPARK_GRAFT_REUSE_DIR", raising=False)
     df = spark.range(1, 40).select(
         F.col("id").alias("duration"),
         (F.col("id") % 2).cast("int").alias("observed"),

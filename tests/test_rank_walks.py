@@ -9,9 +9,11 @@ estimate, so an unknown-size input plans no sort-merge join and a
 non-numeric value plans no cartesian product.
 
 The two prefix walks pick their shape with ``_adaptive.summary_sized``;
-each test here pins the shape it checks by patching that gate, so a Range
-input (known and tiny, which the real gate sends to plain windows) still
-exercises the bucketed walk."""
+each plan-shape test here pins the shape it checks by patching that gate,
+so a Range input (known and tiny, which the real gate sends to plain
+windows) still exercises the bucketed walk. A chained pass that reuses
+its first pass's bucket ids gives the rows of a fresh bucketing, and an
+external bucket id must be non-NULL."""
 
 from __future__ import annotations
 
@@ -147,6 +149,27 @@ def test_chained_pass_follows_first_pass_shape(spark, monkeypatch, window):
     assert sorted(p2.select(cols).collect()) == sorted(want.select(cols).collect())
 
 
+def test_prefix_sums_bucket_reuse_matches_fresh_bucketing(spark):
+    rows = [("g%d" % (i % 3), i * 7 % 101, i % 5) for i in range(120)]
+    hist = (
+        spark.createDataFrame(rows, "g: string, v: long, m: long")
+        .groupBy("g", "v")
+        .agg(F.sum("m").alias("m"))
+    )
+    p1 = bucketed_prefix_sums(hist, ["g"], "v", ["m"], keep_bucket="__kb")
+    seeded = p1.withColumn("m2", F.col("__pre_m") + F.col("m"))
+    reused = bucketed_prefix_sums(seeded, ["g"], "v", ["m2"], bucket_col="__kb")
+    fresh = bucketed_prefix_sums(
+        seeded.drop("__kb"), ["g"], "v", ["m2"]
+    )
+    key = lambda r: (r["g"], r["v"])  # noqa: E731
+    got = {key(r): (r["__pre_m2"], r["__tot_m2"]) for r in reused.collect()}
+    want = {key(r): (r["__pre_m2"], r["__tot_m2"]) for r in fresh.collect()}
+    assert got == want
+    # the bucket column passes through under its kept name and is reusable
+    assert "__kb" in p1.columns
+
+
 def _local(spark, vtype):
     rows = [(i % 3, i * 37 % 101) for i in range(200)]
     df = spark.createDataFrame(rows, "g long, v long")
@@ -174,3 +197,32 @@ def test_ungrouped_numeric_prefix_of_unknown_size_broadcasts(spark, monkeypatch)
     assert "SortMergeJoin" not in _shape(out)
     want = window_prefix_sums(hist, [], "v", ["f"])
     assert sorted(out.collect()) == sorted(want.collect())
+
+
+# --- external bucket ids ---
+
+
+def test_bucketed_prefix_sums_null_bucket_id_raises(spark):
+    hist = spark.createDataFrame(
+        [("g", 1.0, 2, 1), ("g", 2.0, 3, None)],
+        "grp string, v double, n long, bk int",
+    )
+    out = bucketed_prefix_sums(
+        hist, ["grp"], "v", ["n"], buckets=4, bucket_col="bk"
+    )
+    with pytest.raises(Exception, match="NULL bucket id"):
+        out.collect()
+
+
+def test_bucketed_prefix_sums_external_bucket_non_null_ok(spark):
+    hist = spark.createDataFrame(
+        [("g", 1.0, 2, 0), ("g", 2.0, 3, 1)],
+        "grp string, v double, n long, bk int",
+    )
+    rows = (
+        bucketed_prefix_sums(hist, ["grp"], "v", ["n"], buckets=4, bucket_col="bk")
+        .orderBy("v")
+        .collect()
+    )
+    assert [r["__pre_n"] for r in rows] == [0, 2]
+    assert [r["__tot_n"] for r in rows] == [5, 5]

@@ -5,8 +5,9 @@ restricted_mean_survival integral-duration / negative-duration guards
 (the r11 advice medium item: fractional durations were silently
 HALF_UP-rounded by the DECIMAL(18,0) width cast), the fused
 kaplan_meier prefix walk (values unchanged, one bucketing instead of
-two), and the bucketed_prefix_sums pre-bucketed reuse mode backing the
-fuse. The logrank_test lineage-cut test lives in test_prefix_gate.py.
+two), and the monotone bucket ids bucketed_prefix_sums keeps for the
+fuse. The logrank_test lineage-cut test lives in test_prefix_gate.py, and
+the chained-pass reuse test in test_rank_walks.py.
 """
 
 import pytest
@@ -68,30 +69,7 @@ def test_rmst_hand_value_still_exact(spark):
     assert got[0]["horizon"] == 8
 
 
-# --- bucketed_prefix_sums chained-pass reuse (the kaplan_meier fuse) ----------
-
-
-def test_prefix_sums_bucket_reuse_matches_fresh_bucketing(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    rows = [("g%d" % (i % 3), i * 7 % 101, i % 5) for i in range(120)]
-    hist = (
-        spark.createDataFrame(rows, "g: string, v: long, m: long")
-        .groupBy("g", "v")
-        .agg(F.sum("m").alias("m"))
-    )
-    p1 = bucketed_prefix_sums(hist, ["g"], "v", ["m"], keep_bucket="__kb")
-    seeded = p1.withColumn("m2", F.col("__pre_m") + F.col("m"))
-    reused = bucketed_prefix_sums(seeded, ["g"], "v", ["m2"], bucket_col="__kb")
-    fresh = bucketed_prefix_sums(
-        seeded.drop("__kb"), ["g"], "v", ["m2"]
-    )
-    key = lambda r: (r["g"], r["v"])  # noqa: E731
-    got = {key(r): (r["__pre_m2"], r["__tot_m2"]) for r in reused.collect()}
-    want = {key(r): (r["__pre_m2"], r["__tot_m2"]) for r in fresh.collect()}
-    assert got == want
-    # the bucket column passes through under its kept name and is reusable
-    assert "__kb" in p1.columns
+# --- bucketed_prefix_sums kept bucket ids (the kaplan_meier fuse) -------------
 
 
 def test_prefix_sums_keep_bucket_ids_are_monotone_in_value(spark):

@@ -1,6 +1,6 @@
 """Round-13 guards + operators: ADVICE-item API boundaries (keep_cols
-collision, NULL external bucket ids, ts_col type checks) and the round's
-new dedup-family members."""
+collision, ts_col type checks; the NULL external bucket-id guard lives in
+test_rank_walks.py) and the round's new dedup-family members."""
 
 from __future__ import annotations
 
@@ -35,36 +35,6 @@ def test_minhash_fast_keep_cols_mh_outside_range_ok(spark):
     row = out.collect()[0]
     assert row["mh4"] == 7
     assert {f"mh{i}" for i in range(4)} <= set(out.columns)
-
-
-def test_bucketed_prefix_sums_null_bucket_id_raises(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    hist = spark.createDataFrame(
-        [("g", 1.0, 2, 1), ("g", 2.0, 3, None)],
-        "grp string, v double, n long, bk int",
-    )
-    out = bucketed_prefix_sums(
-        hist, ["grp"], "v", ["n"], buckets=4, bucket_col="bk"
-    )
-    with pytest.raises(Exception, match="NULL bucket id"):
-        out.collect()
-
-
-def test_bucketed_prefix_sums_external_bucket_non_null_ok(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    hist = spark.createDataFrame(
-        [("g", 1.0, 2, 0), ("g", 2.0, 3, 1)],
-        "grp string, v double, n long, bk int",
-    )
-    rows = (
-        bucketed_prefix_sums(hist, ["grp"], "v", ["n"], buckets=4, bucket_col="bk")
-        .orderBy("v")
-        .collect()
-    )
-    assert [r["__pre_n"] for r in rows] == [0, 2]
-    assert [r["__tot_n"] for r in rows] == [5, 5]
 
 
 def test_stateful_dedup_ts_col_type_guard(spark):

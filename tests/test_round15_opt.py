@@ -48,7 +48,11 @@ def test_markov_cut_path_matches_window_path(spark, monkeypatch):
     assert window_path == cut_path and len(window_path) == 3
 
 
-def test_seasonal_reuse_output_parity(spark, monkeypatch, tmp_path):
+def _checkpointed_rdds(root):
+    return {d for _, ds, _ in os.walk(root) for d in ds if d.startswith("rdd-")}
+
+
+def test_seasonal_reuse_output_parity(spark, monkeypatch, reliable_cuts):
     """reuse_output=True returns the identical frame content as the
     default lazy shape on both arms, and materializes the decomposition
     exactly when its detrended frame is cut: no checkpoint on the
@@ -71,11 +75,9 @@ def test_seasonal_reuse_output_parity(spark, monkeypatch, tmp_path):
             monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
         else:
             monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", threshold)
-        ck = tmp_path / arm
-        monkeypatch.setenv("SPARK_GRAFT_REUSE_DIR", str(ck))
+        before = _checkpointed_rdds(reliable_cuts)
         fused = sorted(
             map(tuple, seasonal_decompose(df, "ts", period=7, reuse_output=True).collect())
         )
         assert fused == base
-        checkpointed = {d for _, ds, _ in os.walk(ck) for d in ds if d.startswith("rdd-")}
-        assert len(checkpointed) == cuts, arm
+        assert len(_checkpointed_rdds(reliable_cuts) - before) == cuts, arm
