@@ -121,7 +121,8 @@ _RECORD = "artigraph_spark.estimate="
 # Catalyst has an estimate for, ``source`` bytes the cut leaves were
 # computed from (their records), the count of ``unknown`` leaves (no
 # estimate; a cut's record adds the unknown leaves of the frame it cut),
-# and the plan's class as ``root`` when the root is itself a leaf.
+# and the plan's class as ``root`` when the root is itself a leaf (or a
+# no-shuffle coalesce of one).
 _Estimate = namedtuple("_Estimate", "known source unknown root")
 
 
@@ -163,7 +164,12 @@ def _estimate(df: DataFrame) -> "_Estimate | None":
                 unknown += 1
             else:
                 known += size
-        root = name if n == 1 and plan.equals(leaf) else None
+        # A loaded one-split table is its scan under a no-shuffle
+        # coalesce(1) (sources.load): still a bare leaf.
+        top = plan
+        if n == 1 and top.nodeName() == "Repartition" and not top.shuffle():
+            top = top.child()
+        root = name if n == 1 and top.equals(leaf) else None
         return _Estimate(known, source, unknown, root)
     except Exception:  # noqa: BLE001 — estimate is advisory only
         return None

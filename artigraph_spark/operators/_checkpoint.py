@@ -15,6 +15,13 @@ in the engine — iterative rounds, fan-out frames, the reuse cut — is
 reliable; without one, every cut is executor-local. The engine reads the
 directory and never writes it: it is context-wide state shared by every
 thread and session.
+
+A reliable cut's files (``<dir>/<uuid>/rdd-<id>/``) are deleted once its
+frame is garbage-collected only with
+``spark.cleaner.referenceTracking.cleanCheckpoints=true``, which
+``session.get_spark`` sets; a user's own session needs the same conf at
+launch, or every reliable cut stays on disk. Spark never removes the
+``<uuid>/`` root itself, not even at exit.
 """
 
 from __future__ import annotations

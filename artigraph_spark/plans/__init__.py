@@ -96,6 +96,12 @@ def _shuffle_inputs(df: DataFrame) -> list:
     return out
 
 
+def count_shuffles(df: DataFrame) -> int:
+    """The number of shuffle exchanges of the plan, whatever their
+    partitioning (broadcasts are not shuffles)."""
+    return len(_shuffle_inputs(df))
+
+
 def shuffled_columns(df: DataFrame) -> list[list[str]]:
     """The column names each shuffle exchange of the plan writes (the
     output of the node below it), depth first from the root."""

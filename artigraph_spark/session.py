@@ -76,6 +76,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Delete a reliable cut's files once its frame is collected
+        # (operators._checkpoint); Spark keeps them by default.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

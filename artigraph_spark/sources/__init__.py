@@ -10,6 +10,27 @@ Each source's schema is resolved once per file version: Spark infers a
 parquet schema by running a job, even for one file, so ``load`` keeps the
 resolved schema and passes it to the reader; later loads of the same
 version run no job.
+
+A source that Spark's own planner scans as exactly one partition is
+declared single-partition: ``load`` returns it under ``coalesce(1)``. A
+file scan reports ``UnknownPartitioning`` whatever its split count, so
+without the declaration Catalyst shuffles a one-split table under every
+window, aggregate and join, and its rows go from one scan task through a
+shuffle to one reduce task. Over a one-partition scan ``coalesce(1)`` is
+a narrow dependency in the same task, so it moves no data, and it reports
+``SinglePartition``, which meets every clustered and all-tuples
+requirement: no exchange is planned above the table until it meets a
+multi-partition side. What it gives up is the parallelism of the reduce
+side: the operators above the table run in the scan's one task instead of
+being spread over reduce tasks. A one-split table holds at most
+``spark.sql.files.maxPartitionBytes`` (128 MB) of file, and AQE merges
+the shuffle of a table that small into one or a few reduce partitions
+anyway; at scale a table has many splits and is never declared. The split
+count is Spark's answer for the bare read, taken on the driver (no job),
+cached per file version and per the values that set file splits; it
+decides only whether ``coalesce(1)`` is free, never the rows, since
+``coalesce(1)`` returns the same rows on any input. A source at a path
+``os.stat`` cannot read (a remote URI) is never declared.
 """
 
 from __future__ import annotations
@@ -39,6 +60,21 @@ _TYPE_CONFS = (
 # once each infer once, which is harmless. One entry per file version
 # loaded; load only reads the star-schema tables, so the map stays small.
 _SCHEMAS: dict[tuple, T.StructType] = {}
+
+# Session confs that set how Spark splits a file scan into partitions
+# (``FilePartition.maxSplitBytes``; the leaf parallelism defaults to the
+# context's ``defaultParallelism``, also part of the key).
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+# (source version, split confs, default parallelism) -> the number of
+# partitions Spark scans the source as. Kept like _SCHEMAS.
+_SPLITS: dict[tuple, int] = {}
 
 TABLES = (
     "region",
@@ -100,6 +136,25 @@ def file_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
     return schema
 
 
+def _scan_partitions(spark: SparkSession, path: str, df: DataFrame) -> int | None:
+    """How many partitions Spark scans ``df``, the bare read of ``path``,
+    as: the partition count of its physical scan, which the planner
+    builds on the driver without running a job. Cached per file version
+    and split settings; None for a path ``os.stat`` cannot read."""
+    try:
+        key = (
+            _version(path),
+            tuple(spark.conf.get(c, None) for c in _SPLIT_CONFS),
+            spark.sparkContext.defaultParallelism,
+        )
+    except OSError:
+        return None
+    n = _SPLITS.get(key)
+    if n is None:
+        n = _SPLITS[key] = df._jdf.queryExecution().sparkPlan().execute().getNumPartitions()
+    return n
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -107,20 +162,24 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timestamp formatting/epoch functions are session-timezone-sensitive.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = file_schema(spark, sf_dir, name)
-    # Plain scan, no up-front repartition: an injected "parallelism
-    # floor" repartition was measured 2.5x SLOWER end-to-end at
-    # sf0.01/sf0.1 (the extra full-table exchange dwarfs any
-    # scan-parallelism gain on local fixtures), and at 100 TB real
-    # inputs have thousands of splittable row groups so the floor
-    # would never fire. Let Catalyst/AQE own parallelism.
-    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(schema).parquet(path)
+    # A one-split source is declared single-partition (module docstring):
+    # coalesce(1) over a one-partition scan runs in the scan's own task,
+    # and its SinglePartition output needs no exchange under a window,
+    # aggregate or join. A multi-split source stays a plain scan, no
+    # up-front repartition: an injected "parallelism floor" repartition
+    # was measured 2.5x SLOWER end-to-end at sf0.01/sf0.1 (the extra
+    # full-table exchange dwarfs any scan-parallelism gain), and at 100 TB
+    # real inputs have thousands of splits. Catalyst/AQE own parallelism.
+    single = _scan_partitions(spark, path, df) == 1
     if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
         # Truncate the raw nanos to microsecond TimestampType (documented-
         # lossy ns bridge, SURVEY §1.2 Timestamp). Derived copies written
         # by Spark already carry a real timestamp — only convert when the
         # column actually reads as long.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return df.coalesce(1) if single else df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -171,7 +171,7 @@ def test_operator_cuts_follow_checkpoint_dir(spark, monkeypatch, request):
     want_outliers = sorted(robust_outliers(values(), "g", "v").collect())
     want_rmst = restricted_mean_survival(curve(), "duration", "survival_r", 20).collect()
 
-    ck = request.getfixturevalue("reliable_cuts")
+    ck = request.getfixturevalue("kept_cuts")
     got = sorted(robust_outliers(values(), "g", "v").collect())
     # the median and the MAD frames
     assert len(_checkpointed_rdds(ck)) == 2
@@ -199,6 +199,16 @@ def test_bare_scan_leaf_reports_no_cut(spark, monkeypatch, tmp_path):
     scan = spark.read.parquet(path)
     out, fired = reuse_frame_cut(scan)
     assert out is scan and not fired
+    # A one-split source comes out of load() under a no-shuffle
+    # coalesce(1); it is still a bare scan leaf, not a frame to cut.
+    from artigraph_spark.sources import load
+
+    _fixture(spark).coalesce(1).write.parquet(str(tmp_path / "part.parquet"))
+    loaded = load(spark, str(tmp_path), "part")
+    assert "Coalesce 1" in loaded._jdf.queryExecution().executedPlan().toString()
+    assert _estimate(loaded).root == "LogicalRelation"
+    out, fired = reuse_frame_cut(loaded)
+    assert out is loaded and not fired
 
 
 def test_already_cut_leaf_reports_cut_without_recut(spark, monkeypatch):

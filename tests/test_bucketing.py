@@ -39,18 +39,25 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     assert "SortMergeJoin" in P.physical_plan(joined, "simple")
 
 
-def test_unbucketed_join_needs_exchanges(spark, bucketed_tables):
-    li = load(spark, SF, "lineitem")
-    o = load(spark, SF, "orders").withColumnRenamed("o_orderkey", "l_orderkey")
-    joined = li.join(o, "l_orderkey")
+def _plain_join(session):
+    li = load(session, SF, "lineitem")
+    o = load(session, SF, "orders").withColumnRenamed("o_orderkey", "l_orderkey")
+    return li.join(o, "l_orderkey")
+
+
+def test_unbucketed_join_needs_exchanges(spark, bucketed_tables, multi_split):
+    # Over multi-split scans: load() declares a one-split table
+    # single-partition, and two such sides join with no exchange at all.
+    joined = _plain_join(multi_split)
     assert P.count_exchanges(joined) >= 1  # the shuffle bucketing removes
+    single = _plain_join(spark)
+    assert P.count_shuffles(single) == 0
+    assert sorted(single.collect()) == sorted(joined.collect())
 
 
 def test_bucketed_results_match_plain(spark, bucketed_tables):
     bucketed = bucketed_join(spark, "b_lineitem", "b_orders", "l_orderkey")
-    li = load(spark, SF, "lineitem")
-    o = load(spark, SF, "orders").withColumnRenamed("o_orderkey", "l_orderkey")
-    plain = li.join(o, "l_orderkey")
+    plain = _plain_join(spark)
     assert bucketed.count() == plain.count()
     b_sum = bucketed.agg(F.sum("l_quantity")).collect()[0][0]
     p_sum = plain.agg(F.sum("l_quantity")).collect()[0][0]

@@ -2,11 +2,14 @@
 with one set, a registered query's cuts land there as reliable
 checkpoints and give the same rows as the executor-local route, and no
 operator ever writes the directory itself (it is context-wide state
-shared by every thread and session)."""
+shared by every thread and session). A reliable cut's files go once its
+frame is collected."""
 
 from __future__ import annotations
 
+import gc
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -27,7 +30,7 @@ def test_registered_query_cuts_follow_checkpoint_dir(spark, request):
     local = sorted(map(tuple, q(spark, SF).collect()))
     assert local
 
-    ck = request.getfixturevalue("reliable_cuts")
+    ck = request.getfixturevalue("kept_cuts")
     before = spark.sparkContext.getCheckpointDir()
     reliable = sorted(map(tuple, q(spark, SF).collect()))
     assert reliable == local
@@ -100,7 +103,7 @@ def _dedup_calls(spark):
     }
 
 
-def test_operators_never_write_the_checkpoint_dir(spark, reliable_cuts):
+def test_operators_never_write_the_checkpoint_dir(spark, kept_cuts):
     sc = spark.sparkContext
     want = sc.getCheckpointDir()
     assert want is not None
@@ -108,4 +111,23 @@ def test_operators_never_write_the_checkpoint_dir(spark, reliable_cuts):
     for name, call in calls.items():
         call().collect()
         assert sc.getCheckpointDir() == want, name
-    assert _checkpointed_rdds(reliable_cuts)
+    assert _checkpointed_rdds(kept_cuts)
+
+
+def test_dropped_reliable_cut_is_cleaned_up(spark, reliable_cuts):
+    # get_spark sets spark.cleaner.referenceTracking.cleanCheckpoints, so
+    # the ContextCleaner deletes a cut's rdd-* directory once the JVM
+    # collects the frame; without it the directory stays for good.
+    from artigraph_spark.operators._checkpoint import checkpoint
+
+    cut = checkpoint(spark.range(100).withColumn("x", F.col("id") * 2))
+    assert cut.count() == 100
+    made = _checkpointed_rdds(reliable_cuts)
+    assert made
+    del cut
+    deadline = time.monotonic() + 10
+    while _checkpointed_rdds(reliable_cuts) & made and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.1)
+    assert not _checkpointed_rdds(reliable_cuts) & made

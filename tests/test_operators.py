@@ -853,7 +853,7 @@ def test_iterative_ops_reliable_checkpoint_dir(spark, request):
         )
 
     pr_local, t_local, cc_local = run()
-    ckdir = request.getfixturevalue("reliable_cuts")
+    ckdir = request.getfixturevalue("kept_cuts")
     pr_rel, t_rel, cc_rel = run()
     assert pr_local == pr_rel
     assert t_local == t_rel == [("a", 1), ("b", 1), ("c", 1)]

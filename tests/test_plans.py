@@ -1,5 +1,12 @@
 """Physical-plan invariant tests: the plan shapes that must survive a
-100×-scale-up, locked in as assertions (see docs/PLANS.md)."""
+100×-scale-up, locked in as assertions (see docs/PLANS.md).
+
+Every sf0.001 table is one file that Spark scans as one partition, so
+``sources.load`` declares it single-partition and no exchange is planned
+above it. The tests that lock an exchange's shape read their tables
+through the ``multi_split`` session, which scans them as several
+partitions, and check the default load of the same query too: no shuffle,
+the same rows."""
 
 import pytest
 
@@ -12,6 +19,15 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def qs():
     return queries()
+
+
+def _same_rows_unshuffled(single, split, shuffles=0):
+    """``single``, the query over the default one-partition loads, plans
+    ``shuffles`` shuffle exchanges (none unless a test says why) and
+    returns the rows ``split`` (the same query over multi-split loads)
+    does."""
+    assert P.count_shuffles(single) == shuffles
+    assert sorted(single.collect(), key=repr) == sorted(split.collect(), key=repr)
 
 
 def test_star_join_broadcasts_dims(spark, qs):
@@ -34,10 +50,11 @@ def test_filter_pushdown_reaches_scan(spark, qs):
     assert "In(l_returnflag" in filters
 
 
-def test_topk_uses_window_group_limit(spark, qs):
-    df = qs["window_topk_per_group"](spark, SF)
+def test_topk_uses_window_group_limit(spark, multi_split, qs):
+    df = qs["window_topk_per_group"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert "WindowGroupLimit" in plan and "Partial" in plan
+    _same_rows_unshuffled(qs["window_topk_per_group"](spark, SF), df)
 
 
 def test_global_topk_is_take_ordered(spark, qs):
@@ -45,18 +62,22 @@ def test_global_topk_is_take_ordered(spark, qs):
     assert P.has_node(df, "TakeOrderedAndProject")
 
 
-def test_asof_join_single_exchange_no_explosion(spark):
+def test_asof_join_single_exchange_no_explosion(spark, multi_split):
     # union-tag implementation: exactly one hash exchange (on the key),
     # and no join node at all (the reduce is windowed carry-forward).
     from artigraph_spark.operators.joins import asof_join
     from artigraph_spark.sources import load
 
-    e = load(spark, SF, "events").select("event_id", "user_id", "ts")
-    o_raw = load(spark, SF, "orders")
-    o = o_raw.select("o_orderkey", "o_orderdate", o_raw.o_custkey.alias("user_id"))
-    df = asof_join(e, o, on="user_id", left_time="ts", right_time="o_orderdate")
+    def joined(session):
+        e = load(session, SF, "events").select("event_id", "user_id", "ts")
+        o_raw = load(session, SF, "orders")
+        o = o_raw.select("o_orderkey", "o_orderdate", o_raw.o_custkey.alias("user_id"))
+        return asof_join(e, o, on="user_id", left_time="ts", right_time="o_orderdate")
+
+    df = joined(multi_split)
     assert P.count_exchanges(df) == 1
     assert "Join" not in P.physical_plan(df, "simple")
+    _same_rows_unshuffled(joined(spark), df)
 
 
 def test_minhash_signatures_no_shuffle(spark):
@@ -104,21 +125,23 @@ def test_embedding_near_dup_is_bucketed_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pack_sequences_no_global_window(spark, qs):
+def test_pack_sequences_no_global_window(spark, multi_split, qs):
     """The prefix sum must be per-bucket (hashpartitioning on __bkt), never
     a single-partition global window, and the offsets join must broadcast."""
-    df = qs["pack_sequences"](spark, SF)
+    df = qs["pack_sequences"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert "SinglePartition" not in plan
     assert "hashpartitioning(__bkt" in plan  # per-bucket window key
     assert "BroadcastExchange" in plan
+    _same_rows_unshuffled(qs["pack_sequences"](spark, SF), df)
 
 
-def test_domain_cap_map_side_group_limit(spark, qs):
+def test_domain_cap_map_side_group_limit(spark, multi_split, qs):
     """Per-group cap prunes to <=k rows per partition BEFORE the exchange."""
-    df = qs["domain_cap"](spark, SF)
+    df = qs["domain_cap"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert "WindowGroupLimit" in plan and "Partial" in plan
+    _same_rows_unshuffled(qs["domain_cap"](spark, SF), df)
 
 
 def test_weighted_sample_is_take_ordered(spark, qs):
@@ -150,11 +173,11 @@ def test_upsample_domains_no_shuffle(spark, qs):
     assert P.count_exchanges(df) == 0
 
 
-def test_select_token_budget_no_global_sort(spark, qs):
+def test_select_token_budget_no_global_sort(spark, multi_split, qs):
     """Budget selection must never serialize through one task: the prefix
     sum runs per score-bucket (hash partitioning), never a global
     rangepartitioning sort, and the bucket-offset join broadcasts."""
-    df = qs["select_token_budget"](spark, SF)
+    df = qs["select_token_budget"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert "rangepartitioning" not in plan
     assert "SinglePartition" not in plan
@@ -165,6 +188,7 @@ def test_select_token_budget_no_global_sort(spark, qs):
     # never even tokenized.
     filters = " ".join(P.pushed_filters(df))
     assert "GreaterThanOrEqual(n_chars" in filters
+    _same_rows_unshuffled(qs["select_token_budget"](spark, SF), df)
 
 
 def test_repetition_scores_no_cartesian(spark, qs):
@@ -302,16 +326,20 @@ def test_interval_join_is_equi_join_with_range_residual(spark, qs):
     assert "event_type" in filters
 
 
-def test_grouped_cms_single_data_shuffle(spark, qs):
+def test_grouped_cms_single_data_shuffle(spark, multi_split, qs):
     """Sketch build = one data-sized exchange on (group, depth, bucket);
     probe side joins the broadcast sketch — no second data shuffle, no
     cartesian."""
     from artigraph_spark.operators.sketches import grouped_count_min_sketch
     from artigraph_spark.sources import load
 
-    e = load(spark, SF, "events")
-    sk = grouped_count_min_sketch(e, "event_type", "user_id", width=64, depth=4)
+    def sketch(session):
+        e = load(session, SF, "events")
+        return grouped_count_min_sketch(e, "event_type", "user_id", width=64, depth=4)
+
+    sk = sketch(multi_split)
     assert P.count_exchanges(sk) == 1
+    _same_rows_unshuffled(sketch(spark), sk)
     plan = P.physical_plan(qs["cms_decayed_topk"](spark, SF), "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -413,17 +441,22 @@ def test_salted_join_no_extra_scans(spark, qs):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_sorted_neighborhood_no_global_window(spark, qs):
+def test_sorted_neighborhood_no_global_window(spark, multi_split, qs):
     """The two-phase rank must window per prefix bucket (hashpartitioning
     on __b) with the offsets broadcast — never a single-partition global
     sort — and the rank-gap pair join must stay an equi-join."""
-    df = qs["sorted_neighborhood_docs"](spark, SF)
+    df = qs["sorted_neighborhood_docs"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert "SinglePartition" not in plan
     assert "hashpartitioning(__b" in plan
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # Both sides of the rank-gap join read the offsets cut, a leaf whose
+    # size Spark does not know, so the join's estimate is above
+    # spark.sql.maxSinglePartitionBytes and Spark shuffles both of its
+    # single-partition sides: the two exchanges left.
+    _same_rows_unshuffled(qs["sorted_neighborhood_docs"](spark, SF), df, shuffles=2)
 
 
 def test_chi2_and_mi_single_data_scan(spark, qs):
@@ -436,7 +469,7 @@ def test_chi2_and_mi_single_data_scan(spark, qs):
         assert "CartesianProduct" not in plan, name
 
 
-def test_ks_psi_one_scan_per_side(spark, qs, monkeypatch):
+def test_ks_psi_one_scan_per_side(spark, multi_split, qs, monkeypatch):
     # KS/PSI cumulative walks ride bucketed_prefix_sums (r10): the
     # histogram subtree is statically duplicated under the range-frame /
     # offsets / local-window branches, but every duplicate sits behind
@@ -460,12 +493,12 @@ def test_ks_psi_one_scan_per_side(spark, qs, monkeypatch):
     from artigraph_spark.operators import _adaptive
 
     monkeypatch.setattr(_adaptive, "summary_sized", lambda df: False)
-    df = qs["ks_price_drift"](spark, SF)
+    df = qs["ks_price_drift"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert plan.count("FileScan") <= 8
     assert "CartesianProduct" not in plan
     assert P.executed_plan(df).count("ReusedExchange") >= 2
-    df = qs["psi_price_drift"](spark, SF)
+    df = qs["psi_price_drift"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert plan.count("FileScan") <= 10
     assert "CartesianProduct" not in plan
@@ -474,15 +507,17 @@ def test_ks_psi_one_scan_per_side(spark, qs, monkeypatch):
     # (one FileScan per side, nothing to reuse), and PSI's base histogram
     # still feeds two consumers through one reused exchange.
     monkeypatch.undo()
-    df = qs["ks_price_drift"](spark, SF)
+    df = qs["ks_price_drift"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert plan.count("FileScan") == 2
     assert "CartesianProduct" not in plan
-    df = qs["psi_price_drift"](spark, SF)
+    _same_rows_unshuffled(qs["ks_price_drift"](spark, SF), df)
+    df = qs["psi_price_drift"](multi_split, SF)
     plan = P.physical_plan(df, "simple")
     assert plan.count("FileScan") <= 10
     assert "CartesianProduct" not in plan
     assert P.executed_plan(df).count("ReusedExchange") >= 2
+    _same_rows_unshuffled(qs["psi_price_drift"](spark, SF), df)
 
 
 def test_adamic_adar_equi_joins_only(spark):
@@ -515,7 +550,7 @@ def test_benford_single_scan(spark, qs):
     assert plan.count("FileScan") == 1
 
 
-def test_privacy_audits_single_scan_single_key_shuffle(spark):
+def test_privacy_audits_single_scan_single_key_shuffle(spark, multi_split):
     """Privacy-audit scale lock: k-anonymity is one FileScan + one keyed
     exchange (map-side-combined grouped count); l-diversity is one
     FileScan with the two-phase distinct aggregation — neither may
@@ -523,30 +558,36 @@ def test_privacy_audits_single_scan_single_key_shuffle(spark):
     from artigraph_spark.operators.privacy import k_anonymity, l_diversity
     from artigraph_spark.sources import load
 
-    o = load(spark, SF, "orders")
-    ka = P.physical_plan(
-        k_anonymity(o, ["o_orderstatus", "o_orderpriority"], 10), "simple"
-    )
+    def audits(session):
+        o = load(session, SF, "orders")
+        e = load(session, SF, "events")
+        return (
+            k_anonymity(o, ["o_orderstatus", "o_orderpriority"], 10),
+            l_diversity(e, ["event_type"], "user_id", 5),
+        )
+
+    ka_df, ld_df = audits(multi_split)
+    ka = P.physical_plan(ka_df, "simple")
     assert ka.count("FileScan") == 1
     assert ka.count("Exchange") == 1
     assert "partial_count" in ka  # map-side combine before the exchange
 
-    e = load(spark, SF, "events")
-    ld = P.physical_plan(
-        l_diversity(e, ["event_type"], "user_id", 5), "simple"
-    )
+    ld = P.physical_plan(ld_df, "simple")
     assert ld.count("FileScan") == 1
+    for single, split in zip(audits(spark), (ka_df, ld_df)):
+        _same_rows_unshuffled(single, split)
 
 
-def test_session_window_shuffles_its_source_columns_once(spark, qs):
+def test_session_window_shuffles_its_source_columns_once(spark, multi_split, qs):
     """sessionize lags the raw time column and takes the gap above the
     window: the one exchange writes the four source columns the query
     reads, with no derived micros copy of ``ts`` beside them, and the
     Window computes a single lag."""
-    df = qs["window_session"](spark, SF)
+    df = qs["window_session"](multi_split, SF)
     assert P.shuffled_columns(df) == [["event_id", "ts", "user_id", "value"]]
     assert P.derived_shuffle_columns(df) == []
     assert P.physical_plan(df, "simple").count("lag(") == 1
+    _same_rows_unshuffled(qs["window_session"](spark, SF), df)
 
 
 @pytest.mark.parametrize(

@@ -134,13 +134,13 @@ def _checkpointed_rdds(root):
     return {d for p, ds, _ in os.walk(root) for d in ds if d.startswith("rdd-")}
 
 
-def test_bucketed_arm_cuts_route_through_reuse_dir(spark, monkeypatch, reliable_cuts):
+def test_bucketed_arm_cuts_route_through_reuse_dir(spark, monkeypatch, kept_cuts):
     monkeypatch.setenv(_ENV, "0")
     want_km = kaplan_meier(_units(spark), "d", "obs").collect()
     # both of kaplan_meier's cuts (risk table, term frame) went to the dir
-    assert len(_checkpointed_rdds(reliable_cuts)) == 2
+    assert len(_checkpointed_rdds(kept_cuts)) == 2
     logrank_test(_units(spark), "d", "obs", "g").collect()
-    assert len(_checkpointed_rdds(reliable_cuts)) == 3
+    assert len(_checkpointed_rdds(kept_cuts)) == 3
     # same curve as the plain-window arm
     monkeypatch.delenv(_ENV)
     assert kaplan_meier(_units(spark), "d", "obs").collect() == want_km

@@ -13,7 +13,10 @@ each plan-shape test here pins the shape it checks by patching that gate,
 so a Range input (known and tiny, which the real gate sends to plain
 windows) still exercises the bucketed walk. A chained pass that reuses
 its first pass's bucket ids gives the rows of a fresh bucketing, and an
-external bucket id must be non-NULL."""
+external bucket id must be non-NULL. On adversarial data (ties, NULL
+group keys, NaN, one-row groups, forced bucket collisions) each walk
+gives the rows of the window form it replaces, and a frequency-weighted
+histogram ranks as its raw rows do."""
 
 from __future__ import annotations
 
@@ -21,6 +24,7 @@ import re
 from collections import Counter
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from artigraph_spark.operators import _adaptive
@@ -29,6 +33,7 @@ from artigraph_spark.operators._ranks import (
     bucketed_group_value_ranks,
     bucketed_prefix_sums,
     bucketed_row_numbers,
+    ntile_from_rank,
     window_prefix_sums,
 )
 
@@ -226,3 +231,144 @@ def test_bucketed_prefix_sums_external_bucket_non_null_ok(spark):
     )
     assert [r["__pre_n"] for r in rows] == [0, 2]
     assert [r["__tot_n"] for r in rows] == [5, 5]
+
+
+# --- rows against the window forms ---
+
+
+def test_bucketed_group_value_ranks_equal_window_ranks(spark):
+    # The bucketed two-phase prefix-sum rank must equal rank() over the
+    # raw per-group window on adversarial data: ties, NULL group keys,
+    # NaN values, single-element groups, few buckets (forced bucket
+    # collisions), many buckets (mostly-empty buckets).
+
+    rows = []
+    vals = [1.0, 1.0, 2.5, 2.5, 2.5, -3.0, 0.0, 7.25, float("nan"), 7.25]
+    for g in ["a", "b", None]:
+        for i, v in enumerate(vals):
+            rows.append((g, v, i))
+    rows.append(("solo", 42.0, 99))
+    df = spark.createDataFrame(rows, "g: string, v: double, id: bigint")
+
+    w = Window.partitionBy("g").orderBy(F.col("v").asc_nulls_last())
+    # canonicalize NaN for dict lookups (nan != nan in Python)
+    ckey = lambda g, v: (g, "NaN" if v != v else v)  # noqa: E731
+    want = {
+        ckey(r["g"], r["v"]): r["rk"]
+        for r in df.withColumn("rk", F.rank().over(w)).collect()
+    }
+    for buckets in (1, 3, 1024):
+        got = bucketed_group_value_ranks(df, ["g"], "v", buckets=buckets)
+        for r in got.collect():
+            assert r["__rg"] == want[ckey(r["g"], r["__v"])], (buckets, r)
+            expected_ng = 1 if r["g"] == "solo" else len(vals)
+            assert r["__ng"] == expected_ng
+
+
+def test_bucketed_row_numbers_and_ntile_match_window_forms(spark):
+    rows = [(i, float((i * 37) % 13)) for i in range(47)]
+    rows += [(100, None), (101, None)]  # null values
+    df = spark.createDataFrame(rows, "uid: bigint, v: double")
+
+    for desc in (False, True):
+        order = [F.col("v").desc_nulls_last() if desc else F.col("v").asc_nulls_first(), F.col("uid")]
+        w = Window.orderBy(*order)
+        want = {
+            r["uid"]: (r["rn"], r["t3"], r["t5"])
+            for r in df.select(
+                "uid",
+                F.row_number().over(w).alias("rn"),
+                F.ntile(3).over(w).alias("t3"),
+                F.ntile(5).over(w).alias("t5"),
+            ).collect()
+        }
+        got = bucketed_row_numbers(
+            df, "v", ["uid"], descending=desc, buckets=7, out_col="rn"
+        ).withColumn("n", F.lit(49).cast("long"))
+        for r in got.select(
+            "uid",
+            "rn",
+            ntile_from_rank("rn", "n", 3).alias("t3"),
+            ntile_from_rank("rn", "n", 5).alias("t5"),
+        ).collect():
+            assert (r["rn"], r["t3"], r["t5"]) == want[r["uid"]], (desc, r)
+
+
+def test_bucketed_prefix_sums_equal_window_prefix(spark):
+    # The range-bucketed two-phase prefix must equal the raw cumulative
+    # window over the histogram on adversarial data: NaN values (bucket
+    # last), NULL group keys, multiple sum columns, empty group_cols
+    # (global mode), non-numeric value column, forced bucket collisions.
+
+    vals = [1.0, 2.5, -3.0, 0.0, 7.25, float("nan"), 42.0]
+    rows = [(g, v, 2, 5) for g in ["a", "b", None] for v in vals]
+    df = spark.createDataFrame(rows, "g: string, v: double, fa: bigint, fb: bigint")
+    hist = df.groupBy("g", "v").agg(F.sum("fa").alias("fa"), F.sum("fb").alias("fb"))
+
+    w = Window.partitionBy("g").orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    want = {
+        (r["g"], str(r["v"])): (r["pa"] or 0, r["pb"] or 0)
+        for r in hist.select(
+            "g", "v",
+            F.sum("fa").over(w).alias("pa"), F.sum("fb").over(w).alias("pb"),
+        ).collect()
+    }
+    for buckets in (1, 3, 1024):
+        got = bucketed_prefix_sums(hist, ["g"], "v", ["fa", "fb"], buckets=buckets)
+        for r in got.collect():
+            assert (r["__pre_fa"], r["__pre_fb"]) == want[(r["g"], str(r["v"]))], (
+                buckets, r,
+            )
+            assert r["__tot_fa"] == 2 * len(vals)
+            assert r["__tot_fb"] == 5 * len(vals)
+
+    # global mode (no group columns)
+    ghist = df.groupBy("v").agg(F.sum("fa").alias("fa"))
+    wg = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    wantg = {
+        str(r["v"]): r["pa"] or 0
+        for r in ghist.select("v", F.sum("fa").over(wg).alias("pa")).collect()
+    }
+    for r in bucketed_prefix_sums(ghist, [], "v", ["fa"], buckets=64).collect():
+        assert r["__pre_fa"] == wantg[str(r["v"])], r
+        assert r["__tot_fa"] == 6 * len(vals)
+
+    # non-numeric value column degenerates to one bucket, still correct
+    shist = spark.createDataFrame([("x", 1), ("y", 2), ("z", 4)], "v: string, f: bigint")
+    got = {
+        r["v"]: (r["__pre_f"], r["__tot_f"])
+        for r in bucketed_prefix_sums(shist, [], "v", ["f"]).collect()
+    }
+    assert got == {"x": (0, 7), "y": (1, 7), "z": (3, 7)}
+
+
+def test_group_value_ranks_freq_mode_equals_raw_mode(spark):
+    # The frequency-weighted histogram input (freq_col) must produce the
+    # SAME rank frame as feeding the raw rows — same adversarial data as
+    # the r9 raw-mode property test (ties, NULL group, NaN, solo group,
+    # forced bucket collisions).
+
+    rows = []
+    vals = [1.0, 1.0, 2.5, 2.5, 2.5, -3.0, 0.0, 7.25, float("nan"), 7.25]
+    for g in ["a", "b", None]:
+        for i, v in enumerate(vals):
+            rows.append((g, v, i))
+    rows.append(("solo", 42.0, 99))
+    df = spark.createDataFrame(rows, "g: string, v: double, id: bigint")
+    hist = df.groupBy("g", "v").agg(F.count(F.lit(1)).alias("w"))
+
+    ckey = lambda g, v: (g, "NaN" if v != v else v)  # noqa: E731
+    for buckets in (1, 3, 1024):
+        raw = {
+            ckey(r["g"], r["__v"]): (r["__f"], r["__rg"], r["__ng"])
+            for r in bucketed_group_value_ranks(
+                df, ["g"], "v", buckets=buckets
+            ).collect()
+        }
+        wtd = {
+            ckey(r["g"], r["__v"]): (r["__f"], r["__rg"], r["__ng"])
+            for r in bucketed_group_value_ranks(
+                hist, ["g"], "v", buckets=buckets, freq_col="w"
+            ).collect()
+        }
+        assert raw == wtd, buckets

@@ -60,91 +60,8 @@ def test_spearman_quantized_grid(spark):
     assert spearman_corr(off_grid, "x", "y").collect()[0]["rho_r"] == 1.0
 
 
-def test_bucketed_prefix_sums_equal_window_prefix(spark):
-    # The range-bucketed two-phase prefix must equal the raw cumulative
-    # window over the histogram on adversarial data: NaN values (bucket
-    # last), NULL group keys, multiple sum columns, empty group_cols
-    # (global mode), non-numeric value column, forced bucket collisions.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    vals = [1.0, 2.5, -3.0, 0.0, 7.25, float("nan"), 42.0]
-    rows = [(g, v, 2, 5) for g in ["a", "b", None] for v in vals]
-    df = spark.createDataFrame(rows, "g: string, v: double, fa: bigint, fb: bigint")
-    hist = df.groupBy("g", "v").agg(F.sum("fa").alias("fa"), F.sum("fb").alias("fb"))
-
-    w = Window.partitionBy("g").orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    want = {
-        (r["g"], str(r["v"])): (r["pa"] or 0, r["pb"] or 0)
-        for r in hist.select(
-            "g", "v",
-            F.sum("fa").over(w).alias("pa"), F.sum("fb").over(w).alias("pb"),
-        ).collect()
-    }
-    for buckets in (1, 3, 1024):
-        got = bucketed_prefix_sums(hist, ["g"], "v", ["fa", "fb"], buckets=buckets)
-        for r in got.collect():
-            assert (r["__pre_fa"], r["__pre_fb"]) == want[(r["g"], str(r["v"]))], (
-                buckets, r,
-            )
-            assert r["__tot_fa"] == 2 * len(vals)
-            assert r["__tot_fb"] == 5 * len(vals)
-
-    # global mode (no group columns)
-    ghist = df.groupBy("v").agg(F.sum("fa").alias("fa"))
-    wg = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    wantg = {
-        str(r["v"]): r["pa"] or 0
-        for r in ghist.select("v", F.sum("fa").over(wg).alias("pa")).collect()
-    }
-    for r in bucketed_prefix_sums(ghist, [], "v", ["fa"], buckets=64).collect():
-        assert r["__pre_fa"] == wantg[str(r["v"])], r
-        assert r["__tot_fa"] == 6 * len(vals)
-
-    # non-numeric value column degenerates to one bucket, still correct
-    shist = spark.createDataFrame([("x", 1), ("y", 2), ("z", 4)], "v: string, f: bigint")
-    got = {
-        r["v"]: (r["__pre_f"], r["__tot_f"])
-        for r in bucketed_prefix_sums(shist, [], "v", ["f"]).collect()
-    }
-    assert got == {"x": (0, 7), "y": (1, 7), "z": (3, 7)}
 
 
-def test_group_value_ranks_freq_mode_equals_raw_mode(spark):
-    # The frequency-weighted histogram input (freq_col) must produce the
-    # SAME rank frame as feeding the raw rows — same adversarial data as
-    # the r9 raw-mode property test (ties, NULL group, NaN, solo group,
-    # forced bucket collisions).
-    from pyspark.sql import functions as F
-
-    from artigraph_spark.operators._ranks import bucketed_group_value_ranks
-
-    rows = []
-    vals = [1.0, 1.0, 2.5, 2.5, 2.5, -3.0, 0.0, 7.25, float("nan"), 7.25]
-    for g in ["a", "b", None]:
-        for i, v in enumerate(vals):
-            rows.append((g, v, i))
-    rows.append(("solo", 42.0, 99))
-    df = spark.createDataFrame(rows, "g: string, v: double, id: bigint")
-    hist = df.groupBy("g", "v").agg(F.count(F.lit(1)).alias("w"))
-
-    ckey = lambda g, v: (g, "NaN" if v != v else v)  # noqa: E731
-    for buckets in (1, 3, 1024):
-        raw = {
-            ckey(r["g"], r["__v"]): (r["__f"], r["__rg"], r["__ng"])
-            for r in bucketed_group_value_ranks(
-                df, ["g"], "v", buckets=buckets
-            ).collect()
-        }
-        wtd = {
-            ckey(r["g"], r["__v"]): (r["__f"], r["__rg"], r["__ng"])
-            for r in bucketed_group_value_ranks(
-                hist, ["g"], "v", buckets=buckets, freq_col="w"
-            ).collect()
-        }
-        assert raw == wtd, buckets
 
 
 def test_gini_histogram_form_equals_window_form(spark):

@@ -52,7 +52,7 @@ def _checkpointed_rdds(root):
     return {d for _, ds, _ in os.walk(root) for d in ds if d.startswith("rdd-")}
 
 
-def test_seasonal_reuse_output_parity(spark, monkeypatch, reliable_cuts):
+def test_seasonal_reuse_output_parity(spark, monkeypatch, kept_cuts):
     """reuse_output=True returns the identical frame content as the
     default lazy shape on both arms, and materializes the decomposition
     exactly when its detrended frame is cut: no checkpoint on the
@@ -75,9 +75,9 @@ def test_seasonal_reuse_output_parity(spark, monkeypatch, reliable_cuts):
             monkeypatch.delenv("SPARK_GRAFT_REUSE_MIN_BYTES", raising=False)
         else:
             monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", threshold)
-        before = _checkpointed_rdds(reliable_cuts)
+        before = _checkpointed_rdds(kept_cuts)
         fused = sorted(
             map(tuple, seasonal_decompose(df, "ts", period=7, reuse_output=True).collect())
         )
         assert fused == base
-        assert len(_checkpointed_rdds(reliable_cuts) - before) == cuts, arm
+        assert len(_checkpointed_rdds(kept_cuts) - before) == cuts, arm

@@ -171,73 +171,3 @@ def test_upsample_domains_frame_rejects_negative_factor(spark):
     bad = spark.createDataFrame([("a", -0.5)], "domain: string, factor: double")
     with pytest.raises(Exception, match="negative factor"):
         upsample_domains(df, "domain", bad, F.col("id")).collect()
-
-
-def test_bucketed_group_value_ranks_equal_window_ranks(spark):
-    # The bucketed two-phase prefix-sum rank must equal rank() over the
-    # raw per-group window on adversarial data: ties, NULL group keys,
-    # NaN values, single-element groups, few buckets (forced bucket
-    # collisions), many buckets (mostly-empty buckets).
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from artigraph_spark.operators._ranks import bucketed_group_value_ranks
-
-    rows = []
-    vals = [1.0, 1.0, 2.5, 2.5, 2.5, -3.0, 0.0, 7.25, float("nan"), 7.25]
-    for g in ["a", "b", None]:
-        for i, v in enumerate(vals):
-            rows.append((g, v, i))
-    rows.append(("solo", 42.0, 99))
-    df = spark.createDataFrame(rows, "g: string, v: double, id: bigint")
-
-    w = Window.partitionBy("g").orderBy(F.col("v").asc_nulls_last())
-    # canonicalize NaN for dict lookups (nan != nan in Python)
-    ckey = lambda g, v: (g, "NaN" if v != v else v)  # noqa: E731
-    want = {
-        ckey(r["g"], r["v"]): r["rk"]
-        for r in df.withColumn("rk", F.rank().over(w)).collect()
-    }
-    for buckets in (1, 3, 1024):
-        got = bucketed_group_value_ranks(df, ["g"], "v", buckets=buckets)
-        for r in got.collect():
-            assert r["__rg"] == want[ckey(r["g"], r["__v"])], (buckets, r)
-            expected_ng = 1 if r["g"] == "solo" else len(vals)
-            assert r["__ng"] == expected_ng
-
-
-def test_bucketed_row_numbers_and_ntile_match_window_forms(spark):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from artigraph_spark.operators._ranks import (
-        bucketed_row_numbers,
-        ntile_from_rank,
-    )
-
-    rows = [(i, float((i * 37) % 13)) for i in range(47)]
-    rows += [(100, None), (101, None)]  # null values
-    df = spark.createDataFrame(rows, "uid: bigint, v: double")
-
-    for desc in (False, True):
-        order = [F.col("v").desc_nulls_last() if desc else F.col("v").asc_nulls_first(), F.col("uid")]
-        w = Window.orderBy(*order)
-        want = {
-            r["uid"]: (r["rn"], r["t3"], r["t5"])
-            for r in df.select(
-                "uid",
-                F.row_number().over(w).alias("rn"),
-                F.ntile(3).over(w).alias("t3"),
-                F.ntile(5).over(w).alias("t5"),
-            ).collect()
-        }
-        got = bucketed_row_numbers(
-            df, "v", ["uid"], descending=desc, buckets=7, out_col="rn"
-        ).withColumn("n", F.lit(49).cast("long"))
-        for r in got.select(
-            "uid",
-            "rn",
-            ntile_from_rank("rn", "n", 3).alias("t3"),
-            ntile_from_rank("rn", "n", 5).alias("t5"),
-        ).collect():
-            assert (r["rn"], r["t3"], r["t5"]) == want[r["uid"]], (desc, r)

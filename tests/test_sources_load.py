@@ -1,9 +1,12 @@
-"""``sources.load``: each file version's schema is inferred once.
+"""``sources.load``: each file version's schema is inferred once, and a
+source Spark scans as one partition is declared single-partition.
 
 Spark infers a parquet schema by running a job; ``load`` keeps the resolved
 schema per file version (and per type-mapping conf), so a repeat load runs
 no job, a rewritten file is re-inferred, and every load still builds a
-fresh relation.
+fresh relation. The split count is Spark's own answer for the bare read,
+taken without a job; a multi-split source and one at a path ``os.stat``
+cannot read keep their exchanges.
 """
 
 import itertools
@@ -16,7 +19,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from artigraph_spark.sources import DEFAULT_SF_DIR, load
+from artigraph_spark import plans as P
+from artigraph_spark.sources import DEFAULT_SF_DIR, file_schema, load
 
 # The sf0.001 fixture, next to the default scale factor's directory.
 SF = os.path.join(os.path.dirname(DEFAULT_SF_DIR.rstrip("/")), "sf0.001")
@@ -155,3 +159,36 @@ def test_hit_still_resets_session_time_zone_to_utc(spark, name):
         assert spark.conf.get(tz) == "UTC"
     finally:
         spark.conf.set(tz, "UTC")
+
+
+def _customers(tmp_path):
+    n = 20_000
+    pq.write_table(
+        pa.table({"c_custkey": list(range(n)), "c_nationkey": [i % 25 for i in range(n)]}),
+        tmp_path / "customer.parquet",
+    )
+    assert os.path.getsize(tmp_path / "customer.parquet") > 16 * 1024  # above multi_split's splits
+    return str(tmp_path)
+
+
+def test_cold_split_count_runs_no_job(spark, multi_split, tmp_path):
+    sf_dir = _customers(tmp_path)
+    file_schema(spark, sf_dir, "customer")  # the inference job, outside the count
+    single, jobs = _load_counting_jobs(spark, sf_dir, "customer")  # split count cold
+    assert jobs == 0
+    by_nation = single.groupBy("c_nationkey").count()
+    assert P.count_shuffles(by_nation) == 0
+    # A source Spark scans as several partitions keeps its exchange.
+    split = load(multi_split, sf_dir, "customer").groupBy("c_nationkey").count()
+    assert P.count_shuffles(split) == 1
+    assert sorted(by_nation.collect()) == sorted(split.collect())
+
+
+def test_unstattable_path_is_not_declared(spark, tmp_path):
+    # A URI os.stat cannot read, as a remote one would be: Spark still
+    # reads it, and load declares nothing.
+    sf_dir = "file://" + _customers(tmp_path)
+    df = load(spark, sf_dir, "customer")
+    assert "Coalesce" not in df._jdf.queryExecution().executedPlan().toString()
+    assert P.count_shuffles(df.groupBy("c_nationkey").count()) == 1
+    assert df.count() == 20_000

@@ -50,7 +50,7 @@ def main() -> int:
     qs = queries()
     names = only or sorted(qs)
     hard, soft = [], []
-    derived_total = derived_queries = 0
+    derived_total = derived_queries = scans_total = exch_total = 0
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
@@ -68,6 +68,8 @@ def main() -> int:
         nodes = _NODE.findall(plan)
         windows = nodes.count("Window")
         joins = sum(n.endswith("Join") or n == "CartesianProduct" for n in nodes)
+        scans_total += scans
+        exch_total += exch
         derived_total += derived
         derived_queries += bool(derived)
         flags = []
@@ -88,7 +90,8 @@ def main() -> int:
         )
     print(
         f"\n{len(names)} plans audited: {len(hard)} hard violations, "
-        f"{len(soft)} soft flags, derived={derived_total} in {derived_queries} queries"
+        f"{len(soft)} soft flags, scans={scans_total} exchanges={exch_total} "
+        f"derived={derived_total} in {derived_queries} queries"
     )
     for name, why in hard:
         print(f"  HARD {name}: {why}")
