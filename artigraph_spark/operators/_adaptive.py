@@ -248,18 +248,19 @@ def cut_frame(df: DataFrame) -> DataFrame:
     source bytes, and its count of unknown leaves) on the cut, so every
     frame derived from it reads as the input it stands for.
 
-    The cut is ``operators._checkpoint``'s: a reliable checkpoint when
-    the context has a checkpoint directory (localCheckpoint blocks cannot
-    be replayed after executor loss, and the reuse cut fires exactly at
-    the cluster scale where executor loss is routine). Without one it is
-    a lazy ``localCheckpoint``: blocks are freed by the ContextCleaner
+    The cut is ``operators._checkpoint``'s: an eager reliable checkpoint
+    when the context has a checkpoint directory (localCheckpoint blocks
+    cannot be replayed after executor loss, and the reuse cut fires
+    exactly at the cluster scale where executor loss is routine; eager,
+    so the frame is computed once, when the cut is defined). Without one
+    it is a lazy ``localCheckpoint``: blocks are freed by the ContextCleaner
     when the result frame is dropped (a persist() would leak CacheManager
     entries for lazy frames no caller ever unpersists), and the
     LogicalRDD keeps the partitioning/ordering metadata, so chained
     passes keep their no-new-exchange property.
 
     "Lazy" is only partly true under AQE (the session default): making
-    the cut builds the frame's RDD, which finalizes the adaptive plan
+    a local cut builds the frame's RDD, which finalizes the adaptive plan
     and so runs the frame's upstream shuffle stages when the cut is
     DEFINED, not on its first action; only the last stage and the
     checkpoint blocks wait for the action. With AQE off nothing runs

@@ -12,9 +12,9 @@ Which one a cut makes is a deployment decision, and Spark already has the
 setting for it: the context's checkpoint directory (``spark.checkpoint.dir``
 at launch, or ``SparkContext.setCheckpointDir``). With one set, every cut
 in the engine — iterative rounds, fan-out frames, the reuse cut — is
-reliable; without one, every cut is executor-local. The engine reads the
-directory and never writes it: it is context-wide state shared by every
-thread and session.
+reliable and eager; without one, every cut is executor-local. The engine
+reads the directory and never writes it: it is context-wide state shared
+by every thread and session.
 
 A reliable cut's files (``<dir>/<uuid>/rdd-<id>/``) are deleted once its
 frame is garbage-collected only with
@@ -29,15 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def reliable(df: DataFrame) -> bool:
-    """Whether a cut of ``df`` goes to the context's checkpoint directory."""
-    return df.sparkSession.sparkContext.getCheckpointDir() is not None
-
-
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and cut its lineage: a reliable ``checkpoint()``
     when the context has a checkpoint directory, ``localCheckpoint()``
-    otherwise."""
-    if reliable(df):
-        return df.checkpoint(eager=eager)
+    otherwise.
+
+    A reliable cut is always eager, whatever ``eager`` says: Spark writes
+    a lazy one's files in a second job after the first action, which
+    computes the frame again (nothing persists it in between), while the
+    eager cut computes it once. ``eager=False`` defers only a local cut
+    to the frame's first action."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)

@@ -670,10 +670,11 @@ def _cc_loop(sym, edges, src, dst, max_iterations):
             F.least(F.col("label"), F.coalesce("l_label", F.col("label"))).alias("label"),
         )
         # Checkpoint FIRST so the convergence probe reuses the materialized
-        # round instead of re-executing the two joins a second time. LAZY
-        # (eager=False): the probe immediately below is the first action
-        # and materializes the blocks as it runs — an eager cut would
-        # spend one extra job per round doing the same work twice.
+        # round instead of re-executing the two joins a second time. A
+        # local cut is LAZY (eager=False): the probe immediately below is
+        # the first action and materializes the blocks as it runs — an
+        # eager cut would spend one extra job per round doing the same
+        # work twice. A reliable cut is eager (operators._checkpoint).
         jumped = _ckpt(jumped, eager=False)
         # Convergence probe (r13): labels are MONOTONE non-increasing
         # (both steps take F.least), so for integral node types

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from artigraph_spark.operators._adaptive import pinned_parallelism
-from artigraph_spark.operators._checkpoint import checkpoint as _ckpt, reliable
+from artigraph_spark.operators._checkpoint import checkpoint as _ckpt
 
 
 @pinned_parallelism
@@ -148,12 +148,9 @@ def pagerank(
             # Catalyst plan truncates to a LogicalRDD at cut time, not
             # at materialization), so in local-blocks mode it is LAZY —
             # the next action materializes it, saving one node-count-
-            # sized job per cut. A reliable cut stays EAGER: it is the
-            # mid-loop fault barrier, and a deferred reliable checkpoint
-            # would leave nothing durable until the final action (an
-            # executor loss would replay the whole loop — the exact
-            # failure mode reliable mode buys off).
-            ranks = _ckpt(ranks, eager=reliable(ranks))
+            # sized job per cut. A reliable cut is always eager
+            # (operators._checkpoint): it is the mid-loop fault barrier.
+            ranks = _ckpt(ranks, eager=False)
     # Materialize the slim (node, rank) result, then RELEASE the two
     # persisted loop frames — otherwise each pagerank() call leaks
     # disk-backed cache blocks the caller has no handle to unpersist.
@@ -280,6 +277,36 @@ def triangle_counts(
         o.unpersist()
 
 
+def _basket_items(df, basket_col: str, item_col: str):
+    """The prelude :func:`support_pairs` and :func:`association_rules`
+    share: the distinct (basket, item) frame ``(__b, __i)``, persisted,
+    the per-item counts ``(__i, __c)`` and the one-row basket total
+    ``(__nb)``.
+
+    The distinct frame feeds four plan branches (both pair sides, the
+    item counts, the basket total), so it is persisted for the call and
+    the caller releases it after materializing its top-k (the
+    set_similarity_pairs convention — unpersisted, every branch
+    re-scans and re-distincts the input). The caller builds it inside
+    its pinned-AQE scope: caching compiles the plan at cacheQuery time
+    (the pagerank mid-cut lesson). The basket total is a lazy one-row
+    aggregate crossed into the ratios — an eager ``.count()`` would run
+    a full Spark job at plan-build time (the heavy_hitters
+    total/crossJoin shape, kept plan-lockable).
+    """
+    from pyspark import StorageLevel
+
+    items = (
+        df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
+        .filter(F.col("__b").isNotNull() & F.col("__i").isNotNull())
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    counts = items.groupBy(F.col("__i")).agg(F.count(F.lit(1)).alias("__c"))
+    n_baskets = items.agg(F.count_distinct(F.col("__b")).alias("__nb"))
+    return items, counts, n_baskets
+
+
 @pinned_parallelism
 def support_pairs(
     df,
@@ -293,9 +320,9 @@ def support_pairs(
     ``(item_a, item_b, pair_cnt, cnt_a, cnt_b, lift_r)``, top-k by
     ``(pair_cnt desc, item_a, item_b)``.
 
-    The pair enumeration distincts (basket, item) and self-joins WITHIN
-    the basket key with ``item_a < item_b`` — each pair found once,
-    cost Σ_b C(|b|, 2), safe whenever basket sizes are bounded (order
+    The pair counts are :func:`~artigraph_spark.operators.similarity.overlap_pairs`
+    with items as the sets and baskets as the members — cost
+    Σ_b C(|b|, 2), safe whenever basket sizes are bounded (order
     line counts, session lengths); for heavy-tailed baskets cap or
     sample baskets first (the same precondition as the wedge join in
     :func:`triangle_counts`, and the ``key_skew_audit`` numbers tell
@@ -305,42 +332,19 @@ def support_pairs(
     """
     if top_k <= 0:
         raise ValueError(f"top_k must be positive, got {top_k}")
-    from pyspark import StorageLevel
+    from artigraph_spark.operators.similarity import overlap_pairs
 
     # r14: built AND materialized under the pinned-AQE scope
     # (operators._adaptive) — the within-basket pair join's skew is
     # bounded by the documented basket-size precondition, so runtime
     # skew splitting is redundant while the per-exchange barrier
     # serializes the short pipeline; measured 2.0 s -> 1.5 s at sf0.1.
-    # The persist must sit inside the scope (caching compiles its plan
-    # at cacheQuery time — the pagerank mid-cut lesson).
-    #
-    # The distinct (basket, item) frame feeds four plan branches (both
-    # pair sides, the item counts, the basket total): persist it for the
-    # call and release after materializing the top-k (the
-    # set_similarity_pairs convention — unpersisted, every branch
-    # re-scans and re-distincts the input).
-    items = (
-        df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
-        .filter(F.col("__b").isNotNull() & F.col("__i").isNotNull())
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    items, counts, n_baskets = _basket_items(df, basket_col, item_col)
+    pairs = overlap_pairs(items, "__i", "__b").select(
+        F.col("a").alias("item_a"),
+        F.col("b").alias("item_b"),
+        F.col("overlap").alias("pair_cnt"),
     )
-    # basket total as a lazy one-row aggregate crossed into the lift —
-    # an eager .count() here would run a full Spark job at plan-build
-    # time (the heavy_hitters total/crossJoin shape, kept plan-lockable)
-    n_baskets = items.agg(
-        F.count_distinct(F.col("__b")).alias("__nb")
-    )
-    a = items.select("__b", F.col("__i").alias("item_a"))
-    b = items.select("__b", F.col("__i").alias("item_b"))
-    pairs = (
-        a.join(b, "__b")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("pair_cnt"))
-    )
-    counts = items.groupBy(F.col("__i")).agg(F.count(F.lit(1)).alias("__c"))
     ca = counts.select(F.col("__i").alias("item_a"), F.col("__c").alias("cnt_a"))
     cb = counts.select(F.col("__i").alias("item_b"), F.col("__c").alias("cnt_b"))
     out = (
@@ -752,88 +756,72 @@ def association_rules(
     the lift product; ``min_pair_cnt`` prunes the noise tail before the
     totally-ordered top-k by (confidence desc, pair_cnt desc, a, b).
 
-    Scale shape: identical to support_pairs (within-basket self-join,
+    Scale shape: identical to support_pairs (the same
+    :func:`~artigraph_spark.operators.similarity.overlap_pairs` count,
     Σ_b C(|b|,2) — bound basket sizes upstream) plus one union of the
     two rule directions before the top-k.
     """
     if top_k <= 0:
         raise ValueError(f"top_k must be positive, got {top_k}")
-    if min_pair_cnt < 1:
-        raise ValueError(f"min_pair_cnt must be >= 1, got {min_pair_cnt}")
-    from pyspark import StorageLevel
+    from artigraph_spark.operators.similarity import overlap_pairs
 
-    # same pinned-AQE scope as support_pairs (identical pair join); the
-    # persist must compile inside the scope (the pagerank mid-cut lesson).
-    # The distinct items frame is persisted across its four consuming
-    # branches and released after the top-k materializes (the
-    # set_similarity_pairs convention).
-    items = (
-        df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
-        .filter(F.col("__b").isNotNull() & F.col("__i").isNotNull())
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_baskets = items.agg(F.count_distinct(F.col("__b")).alias("__nb"))
-    a = items.select("__b", F.col("__i").alias("__ia"))
-    b = items.select("__b", F.col("__i").alias("__ib"))
-    upairs = (
-        a.join(b, "__b")
-        .filter(F.col("__ia") < F.col("__ib"))
-        .groupBy("__ia", "__ib")
-        .agg(F.count(F.lit(1)).alias("pair_cnt"))
-        .filter(F.col("pair_cnt") >= min_pair_cnt)
-    )
-    # both rule directions from the one undirected pair table
-    rules = upairs.select(
-        F.col("__ia").alias("antecedent"), F.col("__ib").alias("consequent"), "pair_cnt"
-    ).unionByName(
-        upairs.select(
-            F.col("__ib").alias("antecedent"),
-            F.col("__ia").alias("consequent"),
-            "pair_cnt",
-        )
-    )
-    counts = items.groupBy(F.col("__i")).agg(F.count(F.lit(1)).alias("__c"))
-    ca = counts.select(F.col("__i").alias("antecedent"), F.col("__c").alias("cnt_a"))
-    cb = counts.select(F.col("__i").alias("consequent"), F.col("__c").alias("cnt_b"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    conf = F.round(F.col("pair_cnt").cast("double") / F.col("cnt_a").cast("double"), 9)
-    supp_b = F.col("cnt_b").cast("double") / F.col("__nb").cast("double")
-    out = (
-        rules.join(ca, "antecedent")
-        .join(cb, "consequent")
-        .crossJoin(F.broadcast(n_baskets))
-        .select(
-            "antecedent",
-            "consequent",
-            "pair_cnt",
-            "cnt_a",
-            "cnt_b",
-            F.round(
-                F.col("pair_cnt").cast("double") / F.col("__nb").cast("double"), 9
-            ).alias("support_r"),
-            conf.alias("confidence_r"),
-            F.round(
-                (dec(F.col("pair_cnt")) * dec(F.col("__nb"))).cast("double")
-                / (dec(F.col("cnt_a")) * dec(F.col("cnt_b"))).cast("double"),
-                6,
-            ).alias("lift_r"),
-            F.when(
-                conf < 1.0,
-                F.round((F.lit(1.0) - supp_b) / (F.lit(1.0) - conf), 9),
-            ).alias("conviction_r"),
-        )
-    )
-    # orderBy + limit compiles to TakeOrderedAndProject — a distributed
-    # per-partition top-k merge, not a single-partition window sort
-    # (the support_pairs convention).
-    ranked = out.orderBy(
-        F.col("confidence_r").desc(),
-        F.col("pair_cnt").desc(),
-        F.col("antecedent"),
-        F.col("consequent"),
-    ).limit(top_k)
+    # same pinned-AQE scope as support_pairs (identical pair join)
+    items, counts, n_baskets = _basket_items(df, basket_col, item_col)
     try:
+        upairs = overlap_pairs(items, "__i", "__b", min_pair_cnt)
+        # both rule directions from the one undirected pair table
+        rules = upairs.select(
+            F.col("a").alias("antecedent"),
+            F.col("b").alias("consequent"),
+            F.col("overlap").alias("pair_cnt"),
+        ).unionByName(
+            upairs.select(
+                F.col("b").alias("antecedent"),
+                F.col("a").alias("consequent"),
+                F.col("overlap").alias("pair_cnt"),
+            )
+        )
+        ca = counts.select(F.col("__i").alias("antecedent"), F.col("__c").alias("cnt_a"))
+        cb = counts.select(F.col("__i").alias("consequent"), F.col("__c").alias("cnt_b"))
+        dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+        conf = F.round(
+            F.col("pair_cnt").cast("double") / F.col("cnt_a").cast("double"), 9
+        )
+        supp_b = F.col("cnt_b").cast("double") / F.col("__nb").cast("double")
+        out = (
+            rules.join(ca, "antecedent")
+            .join(cb, "consequent")
+            .crossJoin(F.broadcast(n_baskets))
+            .select(
+                "antecedent",
+                "consequent",
+                "pair_cnt",
+                "cnt_a",
+                "cnt_b",
+                F.round(
+                    F.col("pair_cnt").cast("double") / F.col("__nb").cast("double"), 9
+                ).alias("support_r"),
+                conf.alias("confidence_r"),
+                F.round(
+                    (dec(F.col("pair_cnt")) * dec(F.col("__nb"))).cast("double")
+                    / (dec(F.col("cnt_a")) * dec(F.col("cnt_b"))).cast("double"),
+                    6,
+                ).alias("lift_r"),
+                F.when(
+                    conf < 1.0,
+                    F.round((F.lit(1.0) - supp_b) / (F.lit(1.0) - conf), 9),
+                ).alias("conviction_r"),
+            )
+        )
+        # orderBy + limit compiles to TakeOrderedAndProject — a distributed
+        # per-partition top-k merge, not a single-partition window sort
+        # (the support_pairs convention).
+        ranked = out.orderBy(
+            F.col("confidence_r").desc(),
+            F.col("pair_cnt").desc(),
+            F.col("antecedent"),
+            F.col("consequent"),
+        ).limit(top_k)
         return _ckpt(ranked)
     finally:
         items.unpersist()

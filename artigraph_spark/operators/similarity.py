@@ -1249,6 +1249,46 @@ def knn_label_accuracy(
     )
 
 
+def overlap_pairs(
+    members: DataFrame, set_col: str, member_col: str, min_overlap: int = 1
+) -> DataFrame:
+    """Pairs of sets that share at least ``min_overlap`` members, as
+    ``(a, b, overlap)`` with ``a < b`` — the package's one member-keyed
+    pair count, under set similarity, basket co-occurrence and the
+    co-purchase graph.
+
+    ``members`` is the caller's distinct (set, member) frame, so each
+    shared member counts once. The member column is the inverted index:
+    a self-join on it enumerates exactly the co-occurring pairs, at cost
+    Σ_member df(member)² rather than n², and one (a, b) groupBy counts
+    them. NULLs need no filter: the equi-join drops NULL members, and
+    ``a < b`` drops NULL sets.
+    """
+    if min_overlap < 1:
+        raise ValueError(f"min_overlap must be >= 1, got {min_overlap}")
+    # r14 note: a posting-list enumeration for set_similarity_pairs'
+    # capped path (groupBy(member).collect_list + sorted upper-triangle
+    # combos expanded in codegen) was built and measured — it wins on the
+    # ISOLATED enumeration stage (0.88 vs 1.01 s median at sf0.1,
+    # alternating single-session runs) and sheds 12 exchanges / 2
+    # SortMergeJoins from the full plan, but the FULL pipeline
+    # measured consistently SLOWER (4.0 vs 5.0 s clean; 3-4 of 4
+    # interleaved pairs in every protocol): collect_list aggregation
+    # degrades to sort-based past the object-hash fallback threshold
+    # and the expansion stage loses the join's pipelined partial
+    # aggregation. Reverted to the self-join (the guide §1.1
+    # "ideal-plan gotcha" case); see OPTIMIZATION_r14.md.
+    la = members.select(F.col(set_col).alias("a"), F.col(member_col).alias("__m"))
+    lb = members.select(F.col(set_col).alias("b"), F.col(member_col).alias("__m"))
+    return (
+        la.join(lb, "__m")
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("overlap"))
+        .filter(F.col("overlap") >= min_overlap)
+    )
+
+
 def set_similarity_pairs(
     df: DataFrame,
     set_col: str,
@@ -1263,32 +1303,28 @@ def set_similarity_pairs(
     entities) that share ≥ ``min_overlap`` members — collaborative-
     filtering neighborhoods, audience overlap, entity co-reference.
 
-    NEVER all-pairs: the member column is the inverted index — a
-    self-join on the member key enumerates exactly the co-occurring
-    pairs, so the cost is Σ_member df(member)² rather than n². The
-    hot-member quadratic blowup (a member present in millions of sets —
-    the stop-word of set joins) is capped by ``max_member_df``: members
-    with document frequency above it are EXCLUDED from pair generation
-    AND from the set sizes, keeping the Jaccard consistent (this is the
-    standard prefix-filtering compromise; at 100 TB it is the knob that
-    bounds the shuffle). Pass None to disable (exact Jaccard over all
-    members — only safe when the df distribution is known bounded).
+    NEVER all-pairs: the pairs and their overlaps come from
+    :func:`overlap_pairs`. The hot-member quadratic blowup (a member
+    present in millions of sets — the stop-word of set joins) is capped
+    by ``max_member_df``: members with document frequency above it are
+    EXCLUDED from pair generation AND from the set sizes, keeping the
+    Jaccard consistent (this is the standard prefix-filtering
+    compromise; at 100 TB it is the knob that bounds the shuffle). Pass
+    None to disable (exact Jaccard over all members — only safe when the
+    df distribution is known bounded).
 
-    One groupBy(member) for the df filter, one member-keyed self-join,
-    one (a,b) groupBy for overlap counts, and set-keyed equi-joins of
-    the size table (AQE broadcasts them when small) — all shuffles
-    key-partitioned, no global sort. The distinct (set, member) frame
-    feeds FOUR plan branches (df filter, sizes, both self-join sides),
-    so it is persisted for the duration of the call (the adamic_adar
-    convention — without it every branch re-scans and re-distincts the
-    input; measured 16 FileScans → 1 on the co-purchase query) and the
-    result lineage-cut before release.
+    One groupBy(member) for the df filter, the pair count, and set-keyed
+    equi-joins of the size table (AQE broadcasts them when small) — all
+    shuffles key-partitioned, no global sort. The distinct (set, member)
+    frame feeds FOUR plan branches (df filter, sizes, both self-join
+    sides), so it is persisted for the duration of the call (the
+    adamic_adar convention — without it every branch re-scans and
+    re-distincts the input; measured 16 FileScans → 1 on the
+    co-purchase query) and the result lineage-cut before release.
 
     Returns ``(a, b, size_a, size_b, overlap, jaccard_r)`` with a < b and
     ``jaccard = overlap / (size_a + size_b − overlap)``.
     """
-    if min_overlap < 1:
-        raise ValueError(f"min_overlap must be >= 1, got {min_overlap}")
     from pyspark import StorageLevel
 
     pairs_src = (
@@ -1311,27 +1347,7 @@ def set_similarity_pairs(
             )
             released.append(pairs_src)
         sizes = pairs_src.groupBy("__s").agg(F.count(F.lit(1)).alias("__sz"))
-        # r14 note: a posting-list enumeration for the capped path
-        # (groupBy(member).collect_list + sorted upper-triangle combos
-        # expanded in codegen) was built and measured — it wins on the
-        # ISOLATED enumeration stage (0.88 vs 1.01 s median at sf0.1,
-        # alternating single-session runs) and sheds 12 exchanges / 2
-        # SortMergeJoins from the full plan, but the FULL pipeline
-        # measured consistently SLOWER (4.0 vs 5.0 s clean; 3-4 of 4
-        # interleaved pairs in every protocol): collect_list aggregation
-        # degrades to sort-based past the object-hash fallback threshold
-        # and the expansion stage loses the join's pipelined partial
-        # aggregation. Reverted to the self-join (the guide §1.1
-        # "ideal-plan gotcha" case); see OPTIMIZATION_r14.md.
-        la = pairs_src.select(F.col("__s").alias("a"), "__m")
-        lb = pairs_src.select(F.col("__s").alias("b"), "__m")
-        overlap = (
-            la.join(lb, "__m")
-            .filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("overlap"))
-            .filter(F.col("overlap") >= min_overlap)
-        )
+        overlap = overlap_pairs(pairs_src, "__s", "__m", min_overlap)
         sa = sizes.select(F.col("__s").alias("a"), F.col("__sz").alias("size_a"))
         sb = sizes.select(F.col("__s").alias("b"), F.col("__sz").alias("size_b"))
         j = (

@@ -1184,10 +1184,14 @@ def triangle_counts_copurchase(spark, sf_dir):
 
 
 def _copurchase_pairs(spark, sf_dir):
-    """The co-purchase similarity edge list (customers sharing >= 4 parts,
-    s1 < s2) — separate so the plan test can lock the full production
-    pipeline (this join included) via triangle_counts(materialize=False)
-    without triggering the query's eager checkpoint."""
+    """The co-purchase similarity edge list ``(s1, s2, overlap)``:
+    customers sharing ``overlap`` >= 4 distinct parts, s1 < s2 — the
+    graph of all five co-purchase graph queries, and separate so the plan
+    test can lock the full production pipeline (this join included) via
+    triangle_counts(materialize=False) without triggering the query's
+    eager checkpoint."""
+    from artigraph_spark.operators.similarity import overlap_pairs
+
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     cp = (
@@ -1195,13 +1199,8 @@ def _copurchase_pairs(spark, sf_dir):
         .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
-    c2 = cp.select(F.col("ck").alias("ck2"), F.col("pk").alias("pk2"))
-    return (
-        cp.join(c2, (F.col("pk2") == F.col("pk")) & (F.col("ck") < F.col("ck2")))
-        .groupBy(F.col("ck").alias("s1"), F.col("ck2").alias("s2"))
-        .agg(F.count(F.lit(1)).alias("__shared"))
-        .filter(F.col("__shared") >= 4)
-        .select("s1", "s2")
+    return overlap_pairs(cp, "ck", "pk", 4).select(
+        F.col("a").alias("s1"), F.col("b").alias("s2"), "overlap"
     )
 
 
@@ -1259,7 +1258,7 @@ def clustering_coefficient(spark, sf_dir):
     from artigraph_spark.operators._adaptive import reuse_frame
     from artigraph_spark.operators.graph import triangle_counts
 
-    pairs = reuse_frame(_copurchase_pairs(spark, sf_dir))
+    pairs = reuse_frame(_copurchase_pairs(spark, sf_dir).select("s1", "s2"))
     tc = triangle_counts(pairs, "s1", "s2")
     deg = (
         pairs.select(F.col("s1").alias("n"))
@@ -1510,24 +1509,7 @@ def kcore_copurchase(spark, sf_dir):
     convergence rounds are no-ops. See ``operators.graph.k_core``."""
     from artigraph_spark.operators.graph import k_core
 
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    cp = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    a = cp.select(F.col("ck").alias("s1"), "pk")
-    b = cp.select(F.col("ck").alias("s2"), "pk")
-    e = (
-        a.join(b, "pk")
-        .filter(F.col("s1") < F.col("s2"))
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("__w"))
-        .filter(F.col("__w") >= 4)
-        .select("s1", "s2")
-    )
-    return k_core(e, "s1", "s2", k=4, max_rounds=8)
+    return k_core(_copurchase_pairs(spark, sf_dir), "s1", "s2", k=4, max_rounds=8)
 
 
 @query(
@@ -1634,23 +1616,8 @@ def shortest_paths_copurchase(spark, sf_dir):
     ``operators.graph.shortest_paths_bounded``."""
     from artigraph_spark.operators.graph import shortest_paths_bounded
 
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    cp = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    a = cp.select(F.col("ck").alias("s1"), "pk")
-    b = cp.select(F.col("ck").alias("s2"), "pk")
-    pe = (
-        a.join(b, "pk")
-        .filter(F.col("s1") < F.col("s2"))
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 4)
-    )
-    w = F.expr("1000000 div c + 1")
+    pe = _copurchase_pairs(spark, sf_dir)
+    w = F.expr("1000000 div overlap + 1")
     e = pe.select(F.col("s1").alias("s"), F.col("s2").alias("d"), w.alias("w")).unionByName(
         pe.select(F.col("s2").alias("s"), F.col("s1").alias("d"), w.alias("w"))
     )

@@ -131,3 +131,36 @@ def test_dropped_reliable_cut_is_cleaned_up(spark, reliable_cuts):
         spark.sparkContext._jvm.System.gc()
         time.sleep(0.1)
     assert not _checkpointed_rdds(reliable_cuts) & made
+
+
+def _udf_evaluations(spark, cut_of):
+    # A Python UDF counts its own evaluations: (at definition, in total).
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        calls.add(1)
+        return x
+
+    df = spark.range(100).withColumn("x", F.udf(tick, "long")(F.col("id")))
+    cut = cut_of(df)
+    at_definition = calls.value
+    assert sorted(r.x for r in cut.collect()) == list(range(100))
+    return at_definition, calls.value
+
+
+def test_reliable_cut_computes_its_frame_once(spark, reliable_cuts):
+    # A lazy reliable checkpoint computes the frame for the first action
+    # and again for Spark's checkpoint write (0 at definition, 200 in
+    # total); the engine's reliable cut is eager and computes it once.
+    from artigraph_spark.operators._adaptive import cut_frame
+    from artigraph_spark.operators._checkpoint import checkpoint
+
+    assert _udf_evaluations(spark, lambda df: checkpoint(df, eager=False)) == (100, 100)
+    assert _udf_evaluations(spark, cut_frame) == (100, 100)
+    assert _checkpointed_rdds(reliable_cuts)
+
+
+def test_local_lazy_cut_computes_its_frame_at_first_action(spark):
+    from artigraph_spark.operators._checkpoint import checkpoint
+
+    assert _udf_evaluations(spark, lambda df: checkpoint(df, eager=False)) == (0, 100)

@@ -1915,32 +1915,6 @@ def test_curriculum_stages_balance_and_determinism(spark):
         curriculum_stages(df, F.col("score"), "id", n_stages=0)
 
 
-def test_support_pairs_counts_and_lift(spark):
-    from artigraph_spark.operators.graph import support_pairs
-
-    # baskets: {1,2,3}, {1,2}, {2,3}, {4}; duplicate item in a basket
-    rows = [
-        (10, 1), (10, 2), (10, 3), (10, 2),
-        (11, 1), (11, 2),
-        (12, 2), (12, 3),
-        (13, 4),
-    ]
-    df = spark.createDataFrame(rows, ["b", "i"])
-    got = {(r["item_a"], r["item_b"]): r
-           for r in support_pairs(df, "b", "i", top_k=10).collect()}
-    assert got[(1, 2)]["pair_cnt"] == 2
-    assert got[(2, 3)]["pair_cnt"] == 2
-    assert got[(1, 3)]["pair_cnt"] == 1
-    # lift(1,2) = 2 * 4 baskets / (2 * 3)
-    assert abs(got[(1, 2)]["lift_r"] - 2 * 4 / (2 * 3)) < 1e-5
-    assert (2, 1) not in got  # each pair once, a < b
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="top_k"):
-        support_pairs(df, "b", "i", top_k=0)
-
-
 def test_packing_and_epoch_shuffle_survive_full_range_ids(spark):
     """Full-range xxhash64-style ids (spanning more than 2^63 between
     min and max, values at both int64 extremes) must not overflow the

@@ -298,7 +298,7 @@ def test_collocation_pmi_topk_no_cartesian(spark, qs):
 
 def test_triangle_counts_equi_joins_only(spark):
     """The FULL production triangle pipeline — the co-purchase pair
-    construction (its ck < ck2 residual included) plus wedge enumeration
+    construction (its a < b residual included) plus wedge enumeration
     and closure — must plan as hash equi-joins, never a nested-loop
     product. Inspected via materialize=False on the query's own edge
     builder (the registered query localCheckpoints eagerly, which would

@@ -63,58 +63,3 @@ def test_spearman_identical_on_both_paths(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_REUSE_MIN_BYTES", "0")
     cut = spearman_corr(df, "x", "y").collect()[0]
     assert (lazy["n"], lazy["rho_r"]) == (cut["n"], cut["rho_r"])
-
-
-def test_set_similarity_capped_path_matches_brute_force(spark):
-    """r14: pins the capped-path contract while enumeration strategies
-    are A/B'd (a posting-list expansion was measured and reverted this
-    round) — the emitted (a, b, sizes, overlap, jaccard) rows must equal
-    the brute force computed under the same cap semantics (hot members
-    excluded from pairs AND sizes, min_overlap applied before the
-    threshold)."""
-    import itertools
-    import random
-
-    from artigraph_spark.operators.similarity import set_similarity_pairs
-
-    rng = random.Random(1405)
-    rows = sorted(
-        {
-            (f"s{rng.randrange(30)}", f"m{rng.randrange(40)}")
-            for _ in range(400)
-        }
-    )
-    cap, min_ov, thr = 5, 2, 0.05
-    df_by_m = {}
-    for s, m in rows:
-        df_by_m.setdefault(m, set()).add(s)
-    kept = {m for m, ss in df_by_m.items() if len(ss) <= cap}
-    sets = {}
-    for s, m in rows:
-        if m in kept:
-            sets.setdefault(s, set()).add(m)
-    expect = {}
-    for a, b in itertools.combinations(sorted(sets), 2):
-        ov = len(sets[a] & sets[b])
-        if ov >= min_ov:
-            jac = round(ov / (len(sets[a]) + len(sets[b]) - ov), 9)
-            if jac >= thr:
-                expect[(a, b)] = (len(sets[a]), len(sets[b]), ov, jac)
-    out = set_similarity_pairs(
-        spark.createDataFrame(rows, "s: string, m: string"),
-        "s",
-        "m",
-        threshold=thr,
-        max_member_df=cap,
-        min_overlap=min_ov,
-    )
-    got = {
-        (r["a"], r["b"]): (
-            r["size_a"],
-            r["size_b"],
-            r["overlap"],
-            r["jaccard_r"],
-        )
-        for r in out.collect()
-    }
-    assert got == expect

@@ -1,5 +1,5 @@
 """Round-8 operator unit tests: survival analysis, robust/rank statistics,
-bootstrap CI, CDC time travel, record linkage, set similarity, readability,
+bootstrap CI, CDC time travel, record linkage, readability,
 HITS, and the DP release — hand-computed expectations on tiny inputs plus
 contract/validation edges (the oracle queries carry the at-scale parity)."""
 
@@ -191,28 +191,6 @@ def test_fellegi_sunter_weights_and_decisions(spark):
         )
 
 
-def test_set_similarity_hand_computed_and_hot_member_cap(spark):
-    from artigraph_spark.operators.similarity import set_similarity_pairs
-
-    rows = (
-        [("u1", m) for m in ["a", "b", "c"]]
-        + [("u2", m) for m in ["a", "b", "d"]]
-        + [("u3", m) for m in ["e", "f"]]
-        # 'hot' is in every set
-        + [("u1", "hot"), ("u2", "hot"), ("u3", "hot")]
-    )
-    df = spark.createDataFrame(rows, "s: string, m: string")
-    out = set_similarity_pairs(df, "s", "m", threshold=0.1, max_member_df=2)
-    got = {(r["a"], r["b"]): r for r in out.collect()}
-    # 'hot' excluded from pairs AND sizes: u1∩u2 = {a,b}, sizes 3,3 -> J = 2/4
-    assert got[("u1", "u2")]["jaccard_r"] == pytest.approx(0.5)
-    assert got[("u1", "u2")]["size_a"] == 3  # not 4
-    assert ("u1", "u3") not in got  # only shared member was the capped one
-    # without the cap the hot member links everyone
-    all_pairs = set_similarity_pairs(df, "s", "m", threshold=0.01).collect()
-    assert len(all_pairs) == 3
-
-
 def test_readability_hand_computed(spark):
     from artigraph_spark.operators.text import readability_scores
 
@@ -378,27 +356,6 @@ def test_markov_stationary_absorbing_state(spark):
     assert out["b"] > 0.99 * one and out.get("a", 0) == 0
     with pytest.raises(ValueError, match="iterations"):
         markov_stationary(df, "u", "ts", "s", "id", iterations=0)
-
-
-def test_association_rules_direction_and_conviction(spark):
-    from artigraph_spark.operators.graph import association_rules
-
-    # x appears in 4 baskets, y in 2 — both y-baskets contain x:
-    # y->x has confidence 1.0 (conviction NULL); x->y confidence 0.5
-    rows = [(1, "x"), (1, "y"), (2, "x"), (2, "y"), (3, "x"), (4, "x")]
-    df = spark.createDataFrame(rows, "b: bigint, i: string")
-    out = {
-        (r["antecedent"], r["consequent"]): r
-        for r in association_rules(df, "b", "i", min_pair_cnt=1, top_k=10).collect()
-    }
-    yx = out[("y", "x")]
-    assert yx["confidence_r"] == 1.0 and yx["conviction_r"] is None
-    xy = out[("x", "y")]
-    assert xy["confidence_r"] == 0.5
-    assert xy["support_r"] == 0.5  # 2 of 4 baskets
-    # conviction x->y = (1 - 2/4) / (1 - 0.5) = 1.0 (independence)
-    assert xy["conviction_r"] == pytest.approx(1.0)
-    assert xy["lift_r"] == pytest.approx(1.0)  # 2*4/(4*2)
 
 
 def test_quantile_normalize_maps_groups_onto_global(spark):
