@@ -577,10 +577,9 @@ def connected_components(
     checkpoints when the context has a checkpoint directory — the
     sturdier mode for 1000-executor runs, where an executor death would
     otherwise kill the job because a localCheckpointed round cannot be
-    replayed. Reliable round files stay on disk until the application
-    ends (Spark only reclaims them early with
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``) — size the
-    dir for O(log diameter) node-count-sized rounds.
+    replayed. ``operators._checkpoint``'s module note says when reliable
+    round files are deleted; size the dir for O(log diameter)
+    node-count-sized rounds.
     """
     # r14: the symmetrized edge list feeds EVERY round's neighbor-min
     # join, but each round's job replayed its subtree (scan + union) from

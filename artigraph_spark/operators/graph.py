@@ -647,7 +647,6 @@ def k_core(
     *,
     k: int,
     max_rounds: int = 12,
-    until_convergence: bool = False,
 ) -> DataFrame:
     """k-core decomposition membership: iteratively peel nodes of degree
     < k until the remaining subgraph is stable — the standard "dense
@@ -667,11 +666,9 @@ def k_core(
     layer per round, e.g. a long path at k=2, can need more than the
     default 12), the result would contain nodes below the contract, so
     non-convergence raises instead of silently returning them — the
-    per-round edge count makes the check free. For legitimately
-    deep-peel graphs pass ``until_convergence=True``: peeling continues
-    past ``max_rounds`` with the same per-round lineage cuts until the
-    fixed point (termination is guaranteed — every non-converged round
-    removes at least one edge, so rounds ≤ |E|).
+    per-round edge count makes the check free. Every non-converged round
+    removes at least one edge, so ``max_rounds`` equal to the number of
+    distinct undirected edges always reaches the fixed point.
 
     Returns ``(node, core_deg)`` — nodes in the k-core with their
     within-core degree (≥ k by construction).
@@ -698,7 +695,7 @@ def k_core(
     n_edges = e.count()
     converged = n_edges == 0
     rounds = 0
-    while not converged and (until_convergence or rounds < max_rounds):
+    while not converged and rounds < max_rounds:
         rounds += 1
         keep = (
             e.groupBy("__s")

@@ -58,6 +58,13 @@ def _cell_rows(key_col: str, depth: int, width: int, seed: int):
     )
 
 
+def _drop_null(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` without the rows where any of ``cols`` is NULL."""
+    for c in cols:
+        df = df.filter(F.col(c).isNotNull())
+    return df
+
+
 def count_min_sketch(
     df: DataFrame,
     key_col: str,
@@ -69,15 +76,9 @@ def count_min_sketch(
 
     Returns the sketch as a (depth_id, bucket, cnt) table — ``depth×width``
     rows max, safely broadcast-sized for any realistic (width, depth).
+    It is :func:`grouped_count_min_sketch` with no group column.
     """
-    if width <= 0 or depth <= 0:
-        raise ValueError(f"width and depth must be positive, got {width}x{depth}")
-    rows = _cell_rows(key_col, depth, width, seed)
-    return (
-        df.select(F.explode(rows).alias("__cell"))
-        .groupBy(F.col("__cell.depth_id").alias("depth_id"), F.col("__cell.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return _cms_build(df, [], key_col, width, depth, seed, None)
 
 
 def cms_estimate(
@@ -90,22 +91,12 @@ def cms_estimate(
 ) -> DataFrame:
     """Estimate each key's frequency from a sketch built with the same
     (width, depth, seed). Joins the broadcast sketch per depth row and takes
-    the min cell — ``estimate`` is always >= the true count.
-
-    Keys absent from every stream row still map to real cells, so their
-    estimate is the (possibly zero … well, missing cells mean zero) floor;
-    missing cells coalesce to 0.
+    the min cell — ``estimate`` is always >= the true count; a cell no
+    stream row reached counts 0. It is :func:`grouped_cms_estimate` with
+    no group column.
     """
-    probes = keys.select(
-        F.col(key_col),
-        F.explode(
-            _cell_rows(key_col, depth, width, seed)
-        ).alias("__cell"),
-    ).select(key_col, F.col("__cell.depth_id").alias("depth_id"), F.col("__cell.bucket").alias("bucket"))
-    return (
-        probes.join(F.broadcast(sketch), ["depth_id", "bucket"], "left")
-        .groupBy(key_col)
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("estimate"))
+    return _cms_probe(
+        sketch, keys, [], key_col, width, depth, seed, broadcast_sketch=True
     )
 
 
@@ -336,15 +327,6 @@ def _check_histogram_args(lo: float, hi: float, bins: int, quantiles: list[float
         raise ValueError(f"need hi > lo, got [{lo}, {hi})")
 
 
-def _estimate_expr(bin_col, lo: float, hi: float, bins: int):
-    """Upper edge of the covering bin; the overflow bin reports an honest
-    +Infinity. One definition for the grouped and ungrouped sketches."""
-    width = (hi - lo) / bins
-    return F.when(bin_col >= bins, F.lit(float("inf"))).otherwise(
-        F.lit(lo) + (bin_col + 1) * F.lit(width)
-    )
-
-
 def _bin_index(x, lo: float, hi: float, bins: int):
     """Histogram bin for a value: clamp in double space BEFORE the int cast
     (never overflows under ANSI); values at/above hi go to the overflow
@@ -384,40 +366,10 @@ def histogram_quantiles(
     counts). One data-sized shuffle — the groupBy(bin) partial/final count;
     everything after runs on the bounded summary. Rank = ceil of the IEEE
     double product q·n; an oracle replaying this must also multiply in
-    double (not decimal).
+    double (not decimal). It is :func:`grouped_histogram_quantiles` with
+    no group column.
     """
-    _check_histogram_args(lo, hi, bins, quantiles)
-    from pyspark.sql import Window
-
-    x = F.col(col)
-    idx = _bin_index(x, lo, hi, bins)
-    # Spark orders NaN above every double (and NaN = NaN is true), so NaN
-    # would land in the overflow bin, inflate n, yet never satisfy
-    # x <= estimate — exclude it along with NULL.
-    clean = df.filter(x.isNotNull() & ~F.isnan(x.cast("double")))
-    hist = clean.groupBy(idx.alias("bin")).agg(F.count(F.lit(1)).alias("cnt"))
-    cum = hist.withColumn(
-        "cum",
-        F.sum("cnt").over(
-            Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    total = hist.agg(F.sum("cnt").alias("__n"))
-    targets = (
-        df.sparkSession.createDataFrame([(float(q),) for q in quantiles], ["q"])
-        .crossJoin(F.broadcast(total))
-        .withColumn("target_rank", F.ceil(F.col("q") * F.col("__n")).cast("long"))
-    )
-    return (
-        targets.join(F.broadcast(cum), F.col("cum") >= F.col("target_rank"))
-        .groupBy("q", "target_rank")
-        .agg(F.min("bin").alias("__bin"))
-        .select(
-            "q",
-            "target_rank",
-            _estimate_expr(F.col("__bin"), lo, hi, bins).alias("estimate"),
-        )
-    )
+    return _histogram_quantiles(df, [], col, lo, hi, bins, quantiles)
 
 
 _HLL_MAX_RHO = 32  # rank source is a 31-bit mixed value; w=0 caps here
@@ -471,44 +423,15 @@ def hll_sketch(
     n/m up to ~2^31 — trillions of distinct keys at m=1024). Everything is
     engine-replayable, so the oracle recomputes the registers AND the
     estimate bit-for-bit. One shuffle: the groupBy(register) max, with
-    map-side partial max doing nearly all the work.
+    map-side partial max doing nearly all the work. It is
+    :func:`grouped_hll_sketch` with no group column.
     """
-    _check_hll_m(m)
-    k = _fold(key_col)
-    reg = _mix31(k, seed) % F.lit(m)
-    w = _mix31(k, seed + 12)
-    return (
-        df.filter(F.col(key_col).isNotNull())
-        .select(reg.alias("register"), _hll_rho(w).alias("rho"))
-        .groupBy("register")
-        .agg(F.max("rho").alias("max_rho"))
-    )
+    return _hll_registers(df, [], key_col, m, seed)
 
 
 def _check_hll_m(m: int) -> None:
     if m <= 0 or m & (m - 1):
         raise ValueError(f"m must be a positive power of two, got {m}")
-
-
-def _hll_scaled_sum():
-    """Exact-integer harmonic sum term: Σ 2^(32−rho), per-row cast to long
-    BEFORE summing. One definition for the grouped and ungrouped
-    estimators — the oracles replay it bit-for-bit, so a drifted copy
-    silently breaks estimates."""
-    return F.sum(
-        F.pow(F.lit(2.0), F.lit(_HLL_MAX_RHO) - F.col("max_rho")).cast("long")
-    )
-
-
-def _hll_estimate_expr(present, nreg, m: int):
-    """α_m·m²·2^32 / (present + empty·2^32) — shared raw-estimate formula
-    (same sharing rationale as :func:`_hll_scaled_sum`)."""
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    return (
-        F.lit(alpha * m * m)
-        * F.lit(float(1 << _HLL_MAX_RHO))
-        / (present + (F.lit(m) - nreg) * F.lit(1 << _HLL_MAX_RHO))
-    )
 
 
 def hll_estimate(sketch: DataFrame, m: int = 1024) -> DataFrame:
@@ -520,17 +443,11 @@ def hll_estimate(sketch: DataFrame, m: int = 1024) -> DataFrame:
     correctly-rounded op on identical inputs — engine-exact. No
     small-range linear-counting branch (it needs ln(), whose last-ulp
     behavior differs across engines); raw-estimate bias at very low
-    cardinality is the documented tradeoff.
+    cardinality is the documented tradeoff. It is
+    :func:`grouped_hll_estimate` with no group column, so an empty sketch
+    still gives its one row: the all-empty estimate α·m.
     """
-    _check_hll_m(m)
-    # SUM over an empty register table is NULL — coalesce to 0 so an empty
-    # sketch reports the defined all-empty estimate (α·m), not NULL.
-    return sketch.agg(
-        F.coalesce(_hll_scaled_sum(), F.lit(0)).alias("__present"),
-        F.count(F.lit(1)).alias("__nreg"),
-    ).select(
-        _hll_estimate_expr(F.col("__present"), F.col("__nreg"), m).alias("estimate")
-    )
+    return _hll_estimates(sketch, [], m, small_range_correction=False)
 
 
 def grouped_histogram_quantiles(
@@ -554,62 +471,84 @@ def grouped_histogram_quantiles(
     ≤bins+1 rows per group, and the rank probe joins summary-sized frames
     keyed on the group. Returns (group_col, q, target_rank, estimate).
     """
-    _check_histogram_args(lo, hi, bins, quantiles)
-    x = F.col(col)
-    # NULL-group rows would be counted into the histogram but dropped by
-    # the NULL-rejecting equi-join on the group key — exclude them up
-    # front so accepted data always yields estimates.
-    clean = df.filter(
-        F.col(group_col).isNotNull()
-        & x.isNotNull()
-        & ~F.isnan(x.cast("double"))
-    )
-    hist = clean.groupBy(
-        F.col(group_col), _bin_index(x, lo, hi, bins).alias("bin")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    return _grouped_quantile_walk(hist, group_col, lo, hi, bins, quantiles)
+    return _histogram_quantiles(df, [group_col], col, lo, hi, bins, quantiles)
 
 
-def _grouped_quantile_walk(
-    hist: DataFrame,
-    group_col: str,
+def _histogram_quantiles(
+    df: DataFrame,
+    group_cols: list[str],
+    col: str,
     lo: float,
     hi: float,
     bins: int,
     quantiles: list[float],
 ) -> DataFrame:
-    """The per-group rank walk over a ``(group, bin, cnt)`` histogram
-    table — shared by :func:`grouped_histogram_quantiles` (histograms per
-    group) and :func:`sliding_histogram_quantiles` (histograms per
-    trailing window). Summary-sized: the cumulative window runs over
-    ≤bins+1 rows per group."""
+    """The histogram build behind both public forms; ``group_cols=[]`` is
+    the ungrouped sketch."""
+    _check_histogram_args(lo, hi, bins, quantiles)
+    x = F.col(col)
+    # Spark orders NaN above every double (and NaN = NaN is true), so NaN
+    # would land in the overflow bin, inflate n, yet never satisfy
+    # x <= estimate — exclude it along with NULL. NULL-group rows would be
+    # counted into the histogram but dropped by the NULL-rejecting
+    # equi-join on the group key — exclude them up front so accepted data
+    # always yields estimates.
+    clean = _drop_null(df, group_cols).filter(
+        x.isNotNull() & ~F.isnan(x.cast("double"))
+    )
+    hist = clean.groupBy(
+        *group_cols, _bin_index(x, lo, hi, bins).alias("bin")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    return _quantile_walk(hist, group_cols, lo, hi, bins, quantiles)
+
+
+def _quantile_walk(
+    hist: DataFrame,
+    group_cols: list[str],
+    lo: float,
+    hi: float,
+    bins: int,
+    quantiles: list[float],
+) -> DataFrame:
+    """The per-group rank walk over a ``(*group_cols, bin, cnt)`` histogram
+    table — shared by the histogram sketches (histograms per group, or
+    one with ``group_cols=[]``) and :func:`sliding_histogram_quantiles`
+    (histograms per trailing window). Summary-sized: the cumulative window
+    runs over ≤bins+1 rows per group."""
     from pyspark.sql import Window
 
     cum = hist.withColumn(
         "cum",
         F.sum("cnt").over(
-            Window.partitionBy(group_col)
+            Window.partitionBy(*group_cols)
             .orderBy("bin")
             .rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
-    totals = hist.groupBy(group_col).agg(F.sum("cnt").alias("__n"))
+    totals = hist.groupBy(*group_cols).agg(F.sum("cnt").alias("__n"))
     targets = totals.select(
-        F.col(group_col),
+        *group_cols,
         F.explode(F.array(*[F.lit(float(q)) for q in quantiles])).alias("q"),
         "__n",
     ).withColumn("target_rank", F.ceil(F.col("q") * F.col("__n")).cast("long"))
+    # with no group key the walk is one ≤bins+1-row histogram: broadcast it
+    # (``join(other, [])`` raises, so the zero-key join is a cross join)
+    joined = (
+        targets.join(cum, group_cols)
+        if group_cols
+        else targets.crossJoin(F.broadcast(cum))
+    )
+    # the upper edge of the covering bin; the overflow bin reports an
+    # honest +Infinity
+    b = F.col("__bin")
+    estimate = F.when(b >= bins, F.lit(float("inf"))).otherwise(
+        F.lit(lo) + (b + 1) * F.lit((hi - lo) / bins)
+    )
     return (
-        targets.join(cum, group_col)
-        .filter(F.col("cum") >= F.col("target_rank"))
-        .groupBy(group_col, "q", "target_rank")
+        joined.filter(F.col("cum") >= F.col("target_rank"))
+        .groupBy(*group_cols, "q", "target_rank")
         .agg(F.min("bin").alias("__bin"))
-        .select(
-            group_col,
-            "q",
-            "target_rank",
-            _estimate_expr(F.col("__bin"), lo, hi, bins).alias("estimate"),
-        )
+        .select(*group_cols, "q", "target_rank", estimate.alias("estimate"))
     )
 
 
@@ -663,7 +602,7 @@ def sliding_histogram_quantiles(
         .groupBy("bucket", "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    return _grouped_quantile_walk(merged, "bucket", lo, hi, bins, quantiles)
+    return _quantile_walk(merged, ["bucket"], lo, hi, bins, quantiles)
 
 
 def grouped_hll_sketch(
@@ -683,14 +622,22 @@ def grouped_hll_sketch(
     and sketches merge across groups or snapshots via max). One shuffle
     keyed by (group, register) with map-side partial max.
     """
+    return _hll_registers(df, [group_col], key_col, m, seed)
+
+
+def _hll_registers(
+    df: DataFrame, group_cols: list[str], key_col: str, m: int, seed: int
+) -> DataFrame:
+    """The HLL register build behind both public forms; ``group_cols=[]``
+    is the ungrouped sketch. Rows with a NULL key or group are dropped."""
     _check_hll_m(m)
     k = _fold(key_col)
     reg = _mix31(k, seed) % F.lit(m)
     w = _mix31(k, seed + 12)
     return (
-        df.filter(F.col(key_col).isNotNull() & F.col(group_col).isNotNull())
-        .select(F.col(group_col), reg.alias("register"), _hll_rho(w).alias("rho"))
-        .groupBy(group_col, "register")
+        _drop_null(df, [key_col, *group_cols])
+        .select(*group_cols, reg.alias("register"), _hll_rho(w).alias("rho"))
+        .groupBy(*group_cols, "register")
         .agg(F.max("rho").alias("max_rho"))
     )
 
@@ -716,16 +663,39 @@ def grouped_hll_estimate(
     PMI family's log use). Off by default — the raw estimator is what
     the existing contract queries lock.
     """
+    return _hll_estimates(sketch, [group_col], m, small_range_correction)
+
+
+def _hll_estimates(
+    sketch: DataFrame,
+    group_cols: list[str],
+    m: int,
+    small_range_correction: bool,
+) -> DataFrame:
+    """The HLL estimator behind both public forms; ``group_cols=[]`` is a
+    global aggregate, so it answers one row even for an empty sketch."""
     _check_hll_m(m)
-    agg = sketch.groupBy(group_col).agg(
-        _hll_scaled_sum().alias("__present"), F.count(F.lit(1)).alias("__nreg")
+    # the exact-integer harmonic sum Σ 2^(32−rho), each term cast to long
+    # BEFORE summing (the oracles replay it bit-for-bit). SUM over an
+    # empty register table is NULL — coalesce to 0 so an empty sketch
+    # reports the defined all-empty estimate (α·m), not NULL.
+    scaled = F.pow(F.lit(2.0), F.lit(_HLL_MAX_RHO) - F.col("max_rho")).cast("long")
+    agg = sketch.groupBy(*group_cols).agg(
+        F.coalesce(F.sum(scaled), F.lit(0)).alias("__present"),
+        F.count(F.lit(1)).alias("__nreg"),
     )
-    raw = _hll_estimate_expr(F.col("__present"), F.col("__nreg"), m)
+    # α_m·m²·2^32 / (present + empty·2^32)
+    alpha = 0.7213 / (1.0 + 1.079 / m)
+    raw = (
+        F.lit(alpha * m * m)
+        * F.lit(float(1 << _HLL_MAX_RHO))
+        / (F.col("__present") + (F.lit(m) - F.col("__nreg")) * F.lit(1 << _HLL_MAX_RHO))
+    )
     if small_range_correction:
         empty = F.lit(m) - F.col("__nreg")
         lc = F.lit(float(m)) * F.log(F.lit(float(m)) / empty.cast("double"))
         raw = F.when((raw <= 2.5 * m) & (empty > 0), lc).otherwise(raw)
-    return agg.select(group_col, raw.alias("estimate"))
+    return agg.select(*group_cols, raw.alias("estimate"))
 
 
 def decay_weight(
@@ -795,15 +765,29 @@ def grouped_count_min_sketch(
     The hashes don't see the group (same cell layout in every group), so
     per-group sketches merge across groups or snapshots by summing cells.
     """
+    return _cms_build(df, [group_col], key_col, width, depth, seed, weight)
+
+
+def _cms_build(
+    df: DataFrame,
+    group_cols: list[str],
+    key_col: str,
+    width: int,
+    depth: int,
+    seed: int,
+    weight,
+) -> DataFrame:
+    """The count-min build behind both public forms; ``group_cols=[]``
+    is the ungrouped sketch. Rows with a NULL group key are dropped."""
     if width <= 0 or depth <= 0:
         raise ValueError(f"width and depth must be positive, got {width}x{depth}")
     rows = _cell_rows(key_col, depth, width, seed)
     w = F.lit(1).cast("long") if weight is None else weight.cast("long")
     return (
-        df.filter(F.col(group_col).isNotNull())
-        .select(F.col(group_col), F.explode(rows).alias("__cell"), w.alias("__w"))
+        _drop_null(df, group_cols)
+        .select(*group_cols, F.explode(rows).alias("__cell"), w.alias("__w"))
         .groupBy(
-            group_col,
+            *group_cols,
             F.col("__cell.depth_id").alias("depth_id"),
             F.col("__cell.bucket").alias("bucket"),
         )
@@ -832,24 +816,41 @@ def grouped_cms_estimate(
     high-cardinality groups (distinct users as groups) pass
     ``broadcast_sketch=False`` and let the shuffle join + AQE decide.
     """
+    return _cms_probe(
+        sketch, keys, [group_col], key_col, width, depth, seed, broadcast_sketch
+    )
+
+
+def _cms_probe(
+    sketch: DataFrame,
+    keys: DataFrame,
+    group_cols: list[str],
+    key_col: str,
+    width: int,
+    depth: int,
+    seed: int,
+    broadcast_sketch: bool,
+) -> DataFrame:
+    """The count-min probe behind both public forms; ``group_cols=[]``
+    is the ungrouped estimate."""
     if width <= 0 or depth <= 0:
         raise ValueError(f"width and depth must be positive, got {width}x{depth}")
     probes = keys.select(
-        F.col(group_col),
+        *group_cols,
         F.col(key_col),
         F.explode(
             _cell_rows(key_col, depth, width, seed)
         ).alias("__cell"),
     ).select(
-        group_col,
+        *group_cols,
         key_col,
         F.col("__cell.depth_id").alias("depth_id"),
         F.col("__cell.bucket").alias("bucket"),
     )
     s = F.broadcast(sketch) if broadcast_sketch else sketch
     return (
-        probes.join(s, [group_col, "depth_id", "bucket"], "left")
-        .groupBy(group_col, key_col)
+        probes.join(s, [*group_cols, "depth_id", "bucket"], "left")
+        .groupBy(*group_cols, key_col)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("estimate"))
     )
 
@@ -964,103 +965,30 @@ def _hh_threshold(threshold_fraction: float) -> tuple[int, int]:
     return num, denom
 
 
-def _hh_local_candidates_arrow(
-    data: DataFrame, cols: list[str], group_cols: list[str], num: int, denom: int
-) -> DataFrame:
-    """Partition-local heavy-hitter candidates with NO exchange: an
-    Arrow-batched ``mapInArrow`` walks each input partition once,
-    counting keys (grouped by ``group_cols``, which may be empty) in a
-    transient hash table — the same structure Spark's map-side combine
-    would build, minus the post-combine exchange — and emits only the
-    keys whose local fraction (within their group's partition slice)
-    clears ``num/denom``. Output rows per partition are bounded by
-    groups·⌊denom/num⌋ regardless of key cardinality. The trade vs the
-    (pid, key) groupBy: all partition rows cross the Arrow boundary
-    (scan-local, no network) instead of the post-combine distinct
-    (pid, key) rows crossing one network exchange; the hash table is
-    in-Python and unspillable, so per-partition distinct-key counts must
-    fit driver-side-agg-sized memory — size input partitions as you
-    would for any hash aggregate."""
-    import pyarrow as pa
-
-    n_group = len(group_cols)
-    out_schema = data.select(*cols).schema
-    # one canonical NaN object: dict lookups match by identity before
-    # equality, so mapping every NaN to THIS object makes NaN counts
-    # merge across batches (nan != nan would otherwise fragment a
-    # NaN-keyed heavy hitter below threshold — Spark's groupBy in the
-    # exchange strategy normalizes NaN, so parity requires it here)
-    _nan = float("nan")
-
-    def _canon(v):
-        return _nan if (isinstance(v, float) and v != v) else v
-
-    def walk(batches):
-        counts: dict = {}
-        totals: dict = {}
-        arrow_schema = None
-        for batch in batches:
-            if arrow_schema is None:
-                arrow_schema = batch.schema
-            tbl = pa.table(batch)
-            grouped = tbl.group_by(cols).aggregate([([], "count_all")])
-            key_lists = [grouped.column(c).to_pylist() for c in cols]
-            cnt_list = grouped.column("count_all").to_pylist()
-            for raw_keys, c in zip(zip(*key_lists), cnt_list):
-                row_keys = tuple(_canon(v) for v in raw_keys)
-                counts[row_keys] = counts.get(row_keys, 0) + c
-                g = row_keys[:n_group]
-                totals[g] = totals.get(g, 0) + c
-        if arrow_schema is None:
-            return
-        cand = [
-            k for k, c in counts.items() if c * denom >= num * totals[k[:n_group]]
-        ]
-        arrays = [
-            pa.array([k[i] for k in cand], type=arrow_schema.field(col).type)
-            for i, col in enumerate(cols)
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, names=cols)
-
-    return data.select(*cols).mapInArrow(walk, out_schema)
-
-
 def _hh_impl(
     df: DataFrame,
     group_cols: list[str],
     key_col: str,
     threshold_fraction: float,
-    local_strategy: str,
 ) -> DataFrame:
     """Shared two-pass pigeonhole heavy-hitter core; ``group_cols=[]``
-    is the global case. Strategy dispatch, threshold arithmetic, and
-    the no-forced-broadcast reasoning live here ONCE - see the public
-    wrappers for semantics."""
+    is the global case. Threshold arithmetic and the no-forced-broadcast
+    reasoning live here ONCE - see the public wrappers for semantics."""
     num, denom = _hh_threshold(threshold_fraction)
-    if local_strategy not in ("arrow", "exchange"):
-        raise ValueError(f"unknown local_strategy {local_strategy!r}")
-    cond = F.col(key_col).isNotNull()
-    for g in group_cols:
-        cond = cond & F.col(g).isNotNull()
-    data = df.filter(cond)
     cols = [*group_cols, key_col]
-    if local_strategy == "arrow":
-        candidates = _hh_local_candidates_arrow(
-            data, cols, group_cols, num, denom
-        ).distinct()
-    else:
-        local = data.groupBy(
-            F.spark_partition_id().alias("__pid"), *[F.col(c) for c in cols]
-        ).agg(F.count(F.lit(1)).alias("__c"))
-        local_tot = local.groupBy("__pid", *group_cols).agg(
-            F.sum("__c").alias("__pt")
-        )
-        candidates = (
-            local.join(local_tot, ["__pid", *group_cols])
-            .filter(F.col("__c") * denom >= F.lit(num) * F.col("__pt"))
-            .select(*cols)
-            .distinct()
-        )
+    data = _drop_null(df, cols)
+    local = data.groupBy(
+        F.spark_partition_id().alias("__pid"), *[F.col(c) for c in cols]
+    ).agg(F.count(F.lit(1)).alias("__c"))
+    local_tot = local.groupBy("__pid", *group_cols).agg(
+        F.sum("__c").alias("__pt")
+    )
+    candidates = (
+        local.join(local_tot, ["__pid", *group_cols])
+        .filter(F.col("__c") * denom >= F.lit(num) * F.col("__pt"))
+        .select(*cols)
+        .distinct()
+    )
     # no forced broadcast: candidates are bounded by partitions/phi, which
     # a small phi on a many-partition input can push past broadcast limits
     # - AQE broadcasts the (usually tiny) side at runtime when it fits
@@ -1092,8 +1020,6 @@ def heavy_hitters(
     df: DataFrame,
     key_col: str,
     threshold_fraction: float,
-    *,
-    local_strategy: str = "exchange",
 ) -> DataFrame:
     """EXACT heavy hitters — non-null keys with ≥ ``threshold_fraction``
     of the non-null rows — in two passes with a pigeonhole-pruned second
@@ -1106,22 +1032,11 @@ def heavy_hitters(
     exact-counts ONLY candidates and applies the global threshold. No
     per-key count table is ever retained.
 
-    ``local_strategy`` picks how pass 1 runs:
-
-    - ``"exchange"`` (default): the relational (partition_id, key)
-      groupBy — the combine is map-side and its post-combine output
-      (distinct (pid, key) rows) crosses one exchange before the
-      local-fraction filter. Whenever keys repeat, that output is far
-      smaller than the data — and a key heavy enough to clear φ repeats
-      by definition — so this is the right default for the operator's
-      realistic regime (measured 1.8× faster than arrow at ×10 events;
-      docs/SCALE.md round-7 section).
-    - ``"arrow"``: Arrow-batched ``mapInArrow`` counts inside each
-      partition and emits only local winners — NO exchange anywhere
-      before the candidate semi-join (plan-locked), at the cost of the
-      full data crossing the Arrow boundary once, scan-local. Prefer it
-      when keys barely repeat (combine output ≈ data, so the exchange
-      ships data-sized bytes over the network while arrow ships none).
+    Pass 1 is the relational (partition_id, key) groupBy: the combine is
+    map-side, and its post-combine output (distinct (pid, key) rows)
+    crosses one exchange before the local-fraction filter. A key heavy
+    enough to clear φ repeats by definition, so that output is far
+    smaller than the data in the operator's realistic regime.
 
     The candidate SET depends on partitioning (any superset is fine);
     the FINAL output does not — the exact pass re-filters globally, so
@@ -1132,7 +1047,7 @@ def heavy_hitters(
     to return-everything. NULL keys are excluded from both counts and
     the total. Returns ``(key, exact_cnt)``.
     """
-    return _hh_impl(df, [], key_col, threshold_fraction, local_strategy)
+    return _hh_impl(df, [], key_col, threshold_fraction)
 
 
 
@@ -1267,8 +1182,6 @@ def grouped_heavy_hitters(
     group_col: str,
     key_col: str,
     threshold_fraction: float,
-    *,
-    local_strategy: str = "exchange",
 ) -> DataFrame:
     """Per-group exact heavy hitters: within every group, the non-null
     keys holding ≥ ``threshold_fraction`` of that group's non-null rows —
@@ -1280,16 +1193,10 @@ def grouped_heavy_hitters(
     candidate set of at most 1/φ keys per (partition, group); only
     candidates are exact-counted, and the final global filter makes the
     output partitioning-independent (oracle replays it as brute force).
-    ``local_strategy`` as in :func:`heavy_hitters`: ``"exchange"``
-    (default — right whenever keys repeat, measured in docs/SCALE.md)
-    runs the relational (pid, group, key) groupBy; ``"arrow"`` counts
-    per (group, key) inside each partition with no exchange before the
-    candidate semi-join, for the low-repeat regime. Returns
+    Pass 1 is the relational (pid, group, key) groupBy. Returns
     ``(group, key, exact_cnt, group_total)``.
     """
-    return _hh_impl(
-        df, [group_col], key_col, threshold_fraction, local_strategy
-    )
+    return _hh_impl(df, [group_col], key_col, threshold_fraction)
 
 
 def key_skew_audit(df: DataFrame, key_col: str, top_k: int = 5) -> DataFrame:

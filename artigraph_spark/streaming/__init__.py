@@ -603,105 +603,6 @@ def stateful_cosine_band_flags(
     )
 
 
-def has_transform_with_state() -> bool:
-    """True where the ``transformWithStateInPandas`` state API is USABLE:
-    the API exists (Spark 4.x) and its runtime dependency is importable
-    (the state-server protocol needs ``google.protobuf``, which a minimal
-    Python env may lack). The streaming ops are not welded to the older
-    ``applyInPandasWithState``: that API is the 3.x-compatible pin, this
-    gate routes to the successor where the runtime supports it."""
-    from pyspark.sql.group import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def stateful_exact_dedup_tws(
-    df: DataFrame,
-    id_col: str,
-    hash_col: str,
-    *,
-    ttl_seconds: int | None = None,
-) -> DataFrame:
-    """Spark-4 state-API twin of ``stateful_exact_dedup``: same
-    first-seen-wins contract, implemented as a ``StatefulProcessor`` over
-    ``transformWithStateInPandas``. State bounding uses the API's NATIVE
-    per-state TTL (``getValueState(..., ttlDurationMs)``) instead of the
-    manual timeout bookkeeping — the state store evicts expired markers
-    itself, no timer code. The marker is re-written on every duplicate
-    sighting so the TTL slides exactly like the 3.x twin's
-    per-sighting ``setTimeoutTimestamp``; the residual twin divergence
-    is the CLOCK — native TTL is processing-time where the 3.x path
-    uses the event-time watermark, so under heavy event-time disorder
-    the two may expire a quiet hash at different moments.
-
-    Requires Spark 4.x (raise otherwise — call
-    ``has_transform_with_state()`` to route) and the RocksDB state store
-    provider (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``), which is also the provider
-    you want at 100 TB: state spills off-heap to local disk instead of
-    living on the JVM heap.
-    """
-    if not has_transform_with_state():
-        # Gate BEFORE the Spark-4-only import below: on 3.x the module
-        # doesn't exist, and the documented contract is this RuntimeError,
-        # not a ModuleNotFoundError.
-        raise RuntimeError(
-            "transformWithStateInPandas requires Spark 4.x and the "
-            "google-protobuf runtime; use stateful_exact_dedup "
-            "(applyInPandasWithState) where either is missing"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    columns = [f.name for f in df.schema.fields]
-    ttl_ms = None if ttl_seconds is None else ttl_seconds * 1000
-
-    class _FirstSeenDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "seen boolean", ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            best = None
-            for pdf in rows:
-                # Same NULL-id guard as the 3.x path: idxmin raises on
-                # all-NA, and a NULL id can never win "minimum id".
-                pdf = pdf[pdf[id_col].notna()]
-                if len(pdf):
-                    m = pdf.loc[pdf[id_col].idxmin()]
-                    if best is None or m[id_col] < best[id_col]:
-                        best = m
-            if best is None or self._seen.exists():
-                if best is not None:
-                    # refresh the marker on every duplicate sighting so
-                    # the TTL slides like the 3.x twin's
-                    # setTimeoutTimestamp-per-sighting — without this, a
-                    # hash duplicated every ttl/2 re-emits every ~ttl
-                    # (native TTL counts from the last UPDATE, and
-                    # exists() alone does not refresh it)
-                    self._seen.update((True,))
-                return iter(())  # already emitted, first-seen wins
-            self._seen.update((True,))
-            return iter((pd.DataFrame({c: [best[c]] for c in columns}),))
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(hash_col).transformWithStateInPandas(
-        statefulProcessor=_FirstSeenDedup(),
-        outputStructType=df.schema,
-        outputMode="append",
-        timeMode="none" if ttl_ms is None else "processingTime",
-    )
-
-
 def run_stream_to_batch(
     stream_df: DataFrame, *, query_name: str = "stream_out", output_mode: str = "complete"
 ) -> DataFrame:

@@ -1385,88 +1385,52 @@ def test_heavy_hitters_exact_set_and_pruning(spark):
         heavy_hitters(df, "k", 0.0)
     with _pytest.raises(ValueError, match="resolution"):
         heavy_hitters(df, "k", 1e-9)
-    with _pytest.raises(ValueError, match="local_strategy"):
-        heavy_hitters(df, "k", 0.2, local_strategy="bogus")
 
 
-def test_heavy_hitters_local_strategies_agree(spark):
-    """The arrow (mapInArrow, exchange-free) and exchange ((pid, key)
-    groupBy) candidate strategies must produce identical FINAL sets —
-    the global exact pass makes the result candidate-superset-invariant.
-    Covers long and string keys (arrow type round-trip) and the grouped
-    variant."""
+def test_heavy_hitters_match_counter_brute_force(spark):
+    """The (pid, key) candidate pass plus the global exact pass give
+    exactly the brute-force heavy-hitter set over several input
+    partitions, for long, string and NaN-dominated double keys and per
+    group."""
+    from collections import Counter
+
     from artigraph_spark.operators.sketches import (
         grouped_heavy_hitters,
         heavy_hitters,
     )
 
+    def brute(keys, phi):
+        cnt = Counter(k for k in keys if k is not None)
+        total = sum(cnt.values())
+        num = int(round(phi * 1_000_000))
+        return sorted(
+            (k, c) for k, c in cnt.items() if c * 1_000_000 >= num * total
+        )
+
     rows = [(1, "a")] * 50 + [(2, "b")] * 30 + [
         (i, f"k{i}") for i in range(3, 40)
     ] + [(None, None)] * 5
-    # both strategies EXPLICIT — relying on the default would silently
-    # compare a strategy against itself if the default ever flips (it
-    # did in r7: arrow -> exchange)
     df = spark.createDataFrame(rows, "k long, s string").repartition(4)
-    for key in ("k", "s"):
-        got_a = sorted(
-            tuple(r)
-            for r in heavy_hitters(
-                df, key, 0.2, local_strategy="arrow"
-            ).collect()
-        )
-        got_x = sorted(
-            tuple(r)
-            for r in heavy_hitters(
-                df, key, 0.2, local_strategy="exchange"
-            ).collect()
-        )
-        assert got_a == got_x and got_a, key
+    for i, key in enumerate(("k", "s")):
+        got = sorted(tuple(r) for r in heavy_hitters(df, key, 0.2).collect())
+        assert got == brute([r[i] for r in rows], 0.2) and got, key
     g = [("x", i % 3) for i in range(60)] + [("y", 7)] * 20 + [("y", i) for i in range(8, 30)]
     gdf = spark.createDataFrame(g, "g string, k long").repartition(5)
-    ga = sorted(
-        tuple(r)
-        for r in grouped_heavy_hitters(
-            gdf, "g", "k", 0.2, local_strategy="arrow"
-        ).collect()
+    got = sorted(
+        tuple(r) for r in grouped_heavy_hitters(gdf, "g", "k", 0.2).collect()
     )
-    gx = sorted(
-        tuple(r)
-        for r in grouped_heavy_hitters(
-            gdf, "g", "k", 0.2, local_strategy="exchange"
-        ).collect()
+    want = sorted(
+        (grp, k, c, sum(1 for gg, _ in g if gg == grp))
+        for grp in ("x", "y")
+        for k, c in brute([kk for gg, kk in g if gg == grp], 0.2)
     )
-    assert ga == gx and ga
-    # NaN keys must not fragment across Arrow batches: a NaN-dominated
-    # double key is a heavy hitter under BOTH strategies
+    assert got == want and got
+    # NaN keys count as one key (Spark's groupBy normalizes NaN): a
+    # NaN-dominated double key is a heavy hitter
     nan_rows = [(float("nan"),)] * 80 + [(float(i), ) for i in range(20)]
     ndf = spark.createDataFrame(nan_rows, "fval double").repartition(4)
-    na = sorted(
-        str(tuple(r))
-        for r in heavy_hitters(
-            ndf, "fval", 0.3, local_strategy="arrow"
-        ).collect()
-    )
-    nx = sorted(
-        str(tuple(r))
-        for r in heavy_hitters(
-            ndf, "fval", 0.3, local_strategy="exchange"
-        ).collect()
-    )
-    assert na == nx and len(na) == 1 and "nan" in na[0]
-
-
-def test_heavy_hitters_arrow_candidates_no_exchange(spark):
-    """Plan lock for the r7 rewrite: the arrow candidate stage is a
-    MapInArrow directly over the scan — NO Exchange anywhere in its
-    subtree (the point of the strategy: local counting never pays a
-    full-key-cardinality shuffle)."""
-    from artigraph_spark.operators.sketches import _hh_local_candidates_arrow
-
-    df = spark.createDataFrame([(i % 7,) for i in range(100)], "k long")
-    cand = _hh_local_candidates_arrow(df, ["k"], [], 200_000, 1_000_000)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan
-    assert "Exchange" not in plan
+    got = [tuple(r) for r in heavy_hitters(ndf, "fval", 0.3).collect()]
+    assert len(got) == 1 and got[0][0] != got[0][0] and got[0][1] == 80
 
 
 def test_sliding_quantiles_window_merge_equals_direct_histogram(spark):

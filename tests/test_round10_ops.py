@@ -1,7 +1,7 @@
 """Round-10 regression tests: the r9 verdict/advice follow-ups.
 
 Each test pins a behavior added or fixed in round 10 (k-core
-until_convergence escape, twap zero-span guard lives in
+convergence within max_rounds, twap zero-span guard lives in
 test_exactstats, spearman quantized variant, …).
 """
 
@@ -10,9 +10,8 @@ import pytest
 
 def test_k_core_until_convergence_escape(spark):
     # The r9 fix correctly raises when max_rounds is exhausted mid-peel;
-    # until_convergence=True keeps peeling past max_rounds to the fixed
-    # point instead (per-round lineage cuts make each extra round cheap,
-    # and every non-converged round removes >= 1 edge, so it terminates).
+    # every non-converged round removes >= 1 edge, so max_rounds equal to
+    # the edge count always reaches the fixed point.
     from artigraph_spark.operators.graph import k_core
 
     edges = [(i, i + 1) for i in range(1, 12)]  # path 1-2-...-12
@@ -20,8 +19,8 @@ def test_k_core_until_convergence_escape(spark):
     # default still raises (the r9 contract, unchanged)
     with pytest.raises(RuntimeError, match="did not converge"):
         k_core(df, "s", "d", k=2, max_rounds=2)
-    # escape hatch: converges to the (empty) fixpoint instead of raising
-    assert k_core(df, "s", "d", k=2, max_rounds=2, until_convergence=True).count() == 0
+    # enough rounds: converges to the (empty) fixpoint instead of raising
+    assert k_core(df, "s", "d", k=2, max_rounds=len(edges)).count() == 0
     # deep peel with a surviving core: pendant path feeding a 4-clique
     deep = [(10 + i, 11 + i) for i in range(8)] + [
         (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 10),
@@ -29,9 +28,7 @@ def test_k_core_until_convergence_escape(spark):
     ddf = spark.createDataFrame(deep, "s: bigint, d: bigint")
     out = {
         r["node"]: r["core_deg"]
-        for r in k_core(
-            ddf, "s", "d", k=2, max_rounds=1, until_convergence=True
-        ).collect()
+        for r in k_core(ddf, "s", "d", k=2, max_rounds=len(deep)).collect()
     }
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
 

@@ -3,16 +3,14 @@
 Each test pins a behavior added or fixed in round 11 — the
 quantile_normalize broadcast guard + quantize_bits escape, the
 kaplan_meier bucketed-prefix rewrite (granularity-safe risk-table
-walk), decimal/double type preservation in bucketed_prefix_sums, the
-bucketed_row_numbers count_col rider, and curriculum_stages' global
-path no longer re-scanning the input for its row count.
+walk), and curriculum_stages' global path no longer re-scanning the
+input for its row count.
 """
 
 import math
 from decimal import Decimal
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -64,73 +62,6 @@ def test_quantile_normalize_default_contract_unchanged(spark):
     # global dist {1,2,10,20}, group rank 1/2 -> global rank 2, rank 2/2 -> 4
     assert out[("a", 1.0)] == 2.0 and out[("a", 2.0)] == 20.0
     assert out[("b", 10.0)] == 2.0 and out[("b", 20.0)] == 20.0
-
-
-# --- bucketed_prefix_sums type preservation ----------------------------------
-
-
-def test_bucketed_prefix_sums_preserves_decimal_scale_and_values(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    rows = [(i, Decimal(f"{i}.00000000{i % 10}")) for i in range(1, 60)]
-    df = spark.createDataFrame(rows, "v: int, m: decimal(38,9)")
-    out = bucketed_prefix_sums(df, [], "v", ["m"], buckets=7)
-    sch = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-    # full scale 9 preserved on both the prefix and the total
-    assert sch["__pre_m"] == "decimal(38,9)"
-    assert sch["__tot_m"] == "decimal(38,9)"
-    naive = {
-        r["v"]: (r["p"], r["t"])
-        for r in df.select(
-            "v",
-            F.coalesce(
-                F.sum("m").over(
-                    Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("p"),
-            F.sum("m").over(Window.partitionBy()).alias("t"),
-        ).collect()
-    }
-    for r in out.collect():
-        p, t = naive[r["v"]]
-        assert r["__pre_m"] == p and r["__tot_m"] == t
-
-
-def test_bucketed_prefix_sums_double_not_truncated_to_long(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    # the r10 advice failure scenario: fractional masses silently
-    # truncated to integers by the old hard long-cast
-    rows = [(1, 0.25), (2, 0.25), (3, 0.25)]
-    df = spark.createDataFrame(rows, "v: int, w: double")
-    out = {r["v"]: (r["__pre_w"], r["__tot_w"]) for r in
-           bucketed_prefix_sums(df, [], "v", ["w"], buckets=2).collect()}
-    assert out[2] == (0.25, 0.75)
-    assert out[3] == (0.5, 0.75)
-
-
-def test_bucketed_prefix_sums_counts_still_long(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    df = spark.createDataFrame([(1, 2), (2, 3)], "v: int, f: int")
-    out = bucketed_prefix_sums(df, [], "v", ["f"])
-    sch = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-    assert sch["__pre_f"] == "bigint" and sch["__tot_f"] == "bigint"
-
-
-# --- bucketed_row_numbers count_col ------------------------------------------
-
-
-def test_bucketed_row_numbers_count_col_rides_offsets(spark):
-    from artigraph_spark.operators._ranks import bucketed_row_numbers
-
-    df = spark.createDataFrame([(i,) for i in range(37)], "v: int")
-    out = bucketed_row_numbers(
-        df, "v", [], out_col="rn", count_col="n", buckets=5
-    ).collect()
-    assert all(r["n"] == 37 for r in out)
-    assert sorted(r["rn"] for r in out) == list(range(1, 38))
 
 
 def test_curriculum_stages_global_path_no_second_count_scan(spark, tmp_path):

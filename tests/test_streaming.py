@@ -335,57 +335,6 @@ def test_stateful_exact_dedup_ttl_parity_and_bounded_state(spark, tmp_path):
     assert state_rows <= 3  # evictions happened: bounded by the TTL horizon
 
 
-@pytest.mark.skipif(
-    not stx.has_transform_with_state(),
-    reason="transformWithStateInPandas needs Spark 4.x + google-protobuf",
-)
-def test_stateful_exact_dedup_tws_parity(spark):
-    """The Spark-4 transformWithStateInPandas path matches the 3.x
-    applyInPandasWithState path (and so the batch dedup) on the fixture
-    stream — same first-seen contract through the successor API."""
-    from pyspark.sql import functions as F
-
-    from artigraph_spark.sources import load
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        docs = stx.read_stream(spark, SF_DIR, "documents", max_files_per_trigger=1)
-        hashed = docs.select(
-            F.col("doc_id"), F.col("text"), F.sha2(F.col("text"), 256).alias("h")
-        )
-        out = stx.run_stream_to_batch(
-            stx.stateful_exact_dedup_tws(hashed, "doc_id", "h", ttl_seconds=86400),
-            query_name="t_tws_dedup",
-            output_mode="append",
-        )
-        batch = (
-            load(spark, SF_DIR, "documents")
-            .select(F.col("doc_id"), F.sha2(F.col("text"), 256).alias("h"))
-            .groupBy("h")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
-        assert _canon(out, ["h", "doc_id"]) == _canon(batch, ["h", "doc_id"])
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_stateful_exact_dedup_tws_raises_without_spark4(monkeypatch):
-    """On 3.x or a protobuf-less runtime (simulated) the tws twin refuses
-    with a clear routing hint instead of crashing the stream mid-query."""
-    import pytest as _pytest
-
-    monkeypatch.setattr(stx, "has_transform_with_state", lambda: False)
-    with _pytest.raises(RuntimeError, match="Spark 4"):
-        stx.stateful_exact_dedup_tws(None, "doc_id", "h")
-
-
 def test_stateful_exact_dedup_ttl_null_ts_does_not_kill_query(spark, tmp_path):
     """In bounded mode a NULL event time would poison the TTL arithmetic
     (NaT.timestamp() raises, killing the query). NULL-ts rows are dropped;
