@@ -12,6 +12,15 @@ scaling concern next to the 100 TB data plane.
 Write cost: a mutating call rewrites the JsonFileBackend file only when it
 changes the catalog's state, and a build makes one memo probe and one link
 call per producer output — so a no-op rebuild leaves the file untouched.
+
+On-disk layout: one JSON object with four tables. ``partitions`` maps an
+artifact fingerprint, and ``links`` a ``"<snapshot>:<artifact>"`` pair, to
+``{path: entry}``; an entry holds its key, fingerprints and optional value,
+and its path only as the dict key. The file is written with compact
+separators. Catalogs in the older layout (an entry also carrying a
+``"path"`` field, spaced separators, ``graph:tag`` tag keys) are normalized
+in memory on load, so they read the same; the first mutation rewrites
+them in this layout, which a build predating it cannot read back.
 """
 
 from __future__ import annotations
@@ -39,7 +48,6 @@ def _key_to_jsonable(key: PartitionKey) -> list[list[str]]:
 
 def _partition_to_json(p: StoragePartition) -> dict[str, Any]:
     out = {
-        "path": p.path,
         "key": _key_to_jsonable(p.partition_key),
         "input_fp": p.input_fingerprint.key,
         "content_fp": p.content_fingerprint.key,
@@ -62,7 +70,7 @@ def _upsert(table: dict[str, Any], key: str, partitions: list[StoragePartition])
     return changed
 
 
-def _partition_from_json(d: dict[str, Any]) -> StoragePartition:
+def _partition_from_json(path: str, d: dict[str, Any]) -> StoragePartition:
     from artigraph_spark.partitions import PartitionField
 
     fields = {}
@@ -73,7 +81,7 @@ def _partition_from_json(d: dict[str, Any]) -> StoragePartition:
         fcls = PartitionField.by_name(cls_name)
         fields[name] = fcls.parse(fcls.default_component, text)
     return StoragePartition(
-        path=d["path"],
+        path=path,
         partition_key=PartitionKey(fields=fields),
         input_fingerprint=Fingerprint(key=d["input_fp"]),
         content_fingerprint=Fingerprint(key=d["content_fp"]),
@@ -230,6 +238,11 @@ class JsonFileBackend(Backend):
     different: skipping a write that changes nothing cannot drop another
     writer's entries, and a memoized rebuild writes nothing. Swap for
     Delta/DB at multi-host scale.
+
+    Each partition entry is stored under its path alone, in compact JSON
+    (module docstring). An older-layout catalog reads the same and a no-op
+    rebuild leaves it alone; its first real mutation rewrites it, one-way,
+    in the new layout.
     """
 
     def __init__(self, path: str) -> None:
@@ -258,6 +271,7 @@ class JsonFileBackend(Backend):
         with open(self.path) as f:
             self._state = json.load(f)
         self._migrate_legacy_tag_keys()
+        self._drop_legacy_paths()
         self._stamp = stamp
 
     def _migrate_legacy_tag_keys(self) -> None:
@@ -290,6 +304,16 @@ class JsonFileBackend(Backend):
                 )
             tags[new_key] = tags.pop(k)
 
+    def _drop_legacy_paths(self) -> None:
+        # Entries repeated their dict key as a "path" field before the
+        # path-keyed layout. Dropping it in memory makes a legacy entry
+        # compare equal to the one _upsert would write, so a no-op rebuild
+        # over an old catalog still leaves the file alone.
+        for table in ("partitions", "links"):
+            for store in self._state.get(table, {}).values():
+                for entry in store.values():
+                    entry.pop("path", None)
+
     @contextlib.contextmanager
     def _locked(self, *, exclusive: bool = True):
         # Readers take a SHARED flock (concurrent cross-process reads don't
@@ -312,7 +336,7 @@ class JsonFileBackend(Backend):
         os.makedirs(d, exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
-            json.dump(self._state, f)
+            json.dump(self._state, f, separators=(",", ":"))
         os.replace(tmp, self.path)
         st = os.stat(self.path)
         self._stamp = (st.st_mtime_ns, st.st_ino, st.st_size)
@@ -341,10 +365,10 @@ class JsonFileBackend(Backend):
         input_fingerprints: set[int | None] | None = None,
     ) -> list[StoragePartition]:
         with self._locked(exclusive=False):
-            entries = list(self._state["partitions"].get(str(artifact_fp.key), {}).values())
+            entries = list(self._state["partitions"].get(str(artifact_fp.key), {}).items())
         if input_fingerprints is not None:
-            entries = [d for d in entries if d["input_fp"] in input_fingerprints]
-        return [_partition_from_json(d) for d in entries]
+            entries = [(path, d) for path, d in entries if d["input_fp"] in input_fingerprints]
+        return [_partition_from_json(path, d) for path, d in entries]
 
     def delete_partitions_by_path(self, paths: set[str]) -> None:
         with self._locked():
@@ -364,7 +388,7 @@ class JsonFileBackend(Backend):
             out: list[StoragePartition] = []
             for link_key, store in self._state["links"].items():
                 if link_key.startswith(prefix):
-                    out.extend(_partition_from_json(d) for d in store.values())
+                    out.extend(_partition_from_json(path, d) for path, d in store.items())
             return out
 
     def link_snapshot_partitions(
@@ -379,8 +403,8 @@ class JsonFileBackend(Backend):
     ) -> list[StoragePartition]:
         with self._locked(exclusive=False):
             return [
-                _partition_from_json(d)
-                for d in self._state["links"].get(f"{snapshot_id.key}:{artifact_fp.key}", {}).values()
+                _partition_from_json(path, d)
+                for path, d in self._state["links"].get(f"{snapshot_id.key}:{artifact_fp.key}", {}).items()
             ]
 
     @staticmethod

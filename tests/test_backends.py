@@ -54,7 +54,7 @@ def test_json_backend_roundtrips_custom_partition_field(tmp_path):
     assert q.partition_key.fields["h"].value == 255
     with pytest.raises(LookupError, match="NoSuchField"):
         _partition_from_json(
-            {"path": "/x", "key": [["k", "NoSuchField", "1"]], "input_fp": None, "content_fp": None}
+            "/x", {"key": [["k", "NoSuchField", "1"]], "input_fp": None, "content_fp": None}
         )
 
 
@@ -162,3 +162,102 @@ def test_json_backend_merges_across_instances_and_processes(tmp_path):
     ]
     (hit,) = fresh.read_artifact_partitions(afp, input_fingerprints={Fingerprint.from_int(2).key})
     assert hit == _part("/d/n=2", 2)
+
+
+def _legacy_layout(state: dict) -> dict:
+    """``state`` as the older layout stored it: every partition and link
+    entry repeating its dict key as a ``"path"`` field."""
+    return {
+        **state,
+        **{
+            table: {
+                key: {path: {"path": path, **entry} for path, entry in store.items()}
+                for key, store in state[table].items()
+            }
+            for table in ("partitions", "links")
+        },
+    }
+
+
+def test_json_backend_reads_legacy_layout_catalog(tmp_path):
+    """A catalog in the older layout (spaced separators, entries carrying
+    ``"path"``) reads back the same partitions through every reader, and
+    its first mutation rewrites it compact with no inner ``"path"``."""
+    import json as _json
+
+    from artigraph_spark.backends import JsonFileBackend
+    from artigraph_spark.fingerprint import Fingerprint
+
+    snap, afp = Fingerprint.from_int(1), Fingerprint.from_int(5)
+    one, two = _part("/d/n=1", 1), _part("/d/n=2", 2).model_copy(update={"value": "7"})
+    entries = {
+        "/d/n=1": {"path": "/d/n=1", "key": [["n", "IntField", "1"]], "input_fp": 1, "content_fp": 101},
+        "/d/n=2": {
+            "path": "/d/n=2", "key": [["n", "IntField", "2"]], "input_fp": 2, "content_fp": 102, "value": "7",
+        },
+    }
+    catalog = tmp_path / "cat.json"
+    catalog.write_text(_json.dumps({
+        "snapshots": {"1": "g"},
+        "partitions": {"5": entries},
+        "links": {"1:5": entries},
+        "tags": {_json.dumps(["g", "prod"]): snap.key},
+    }))
+    b = JsonFileBackend(str(catalog))
+    assert b.read_artifact_partitions(afp) == [one, two]
+    assert b.read_artifact_partitions(afp, input_fingerprints={2}) == [two]
+    assert b.read_snapshot_partitions(snap, afp) == [one, two]
+    assert b.read_all_snapshot_partitions(snap) == [one, two]
+    assert b.read_tag("g", "prod") == snap
+
+    b.write_artifact_partitions(afp, [_part("/d/n=3", 3)])
+    text = catalog.read_text()
+    state = _json.loads(text)
+    assert '"path"' not in text
+    assert text == _json.dumps(state, separators=(",", ":"))
+    assert _legacy_layout(state)["links"] == {"1:5": entries}
+    assert JsonFileBackend(str(catalog)).read_snapshot_partitions(snap, afp) == [one, two]
+
+
+def test_noop_build_over_legacy_catalog_writes_nothing(tmp_root, spark):
+    """A no-op Graph.build over a catalog in the older layout leaves its
+    bytes, inode and mtime alone; the next real build rewrites it without
+    any inner ``"path"``."""
+    import json as _json
+    import os
+
+    from artigraph_spark.backends import JsonFileBackend
+    from artigraph_spark.executors import LocalSparkExecutor
+    from tests.test_graph import DAYS, make_day_graph, seed_days
+
+    catalog = os.path.join(tmp_root, "catalog.json")
+    seed_days(tmp_root, {d: [d] for d in DAYS})
+    snap = make_day_graph(tmp_root, JsonFileBackend(catalog), spark).snapshot(strict_fingerprints=True)
+    snap.build(LocalSparkExecutor(strict_fingerprints=True)).tag("prod")
+    with open(catalog) as f:
+        state = _json.load(f)
+    with open(catalog, "w") as f:
+        _json.dump(_legacy_layout(state), f)
+
+    def file_state():
+        st = os.stat(catalog)
+        with open(catalog, "rb") as f:
+            return f.read(), st.st_ino, st.st_mtime_ns
+
+    def build():
+        ex = LocalSparkExecutor(strict_fingerprints=True)
+        g = make_day_graph(tmp_root, JsonFileBackend(catalog), spark)
+        g.snapshot(strict_fingerprints=True).build(ex)
+        return ex.built_partitions, ex.skipped_partitions
+
+    before = file_state()
+    assert b'"path"' in before[0]
+    assert build() == (0, 2 * len(DAYS))
+    assert file_state() == before
+
+    seed_days(tmp_root, {1: [5]})
+    assert build() == (2, 2 * len(DAYS) - 2)
+    with open(catalog) as f:
+        text = f.read()
+    assert '"path"' not in text
+    assert _json.loads(text)["tags"] == state["tags"]

@@ -504,6 +504,40 @@ def test_noop_rebuild_leaves_catalog_file_alone(tmp_root, spark):
     assert build(in_memory) == rebuilt
 
 
+def test_catalog_stores_each_path_once_and_noop_rebuild_parses_once(tmp_root, spark, monkeypatch):
+    """Each partition path is on disk once per table entry holding it (as
+    that entry's key), and a no-op rebuild through a fresh backend parses
+    the catalog file at most once."""
+    from collections import Counter
+
+    seed_days(tmp_root, {d: [d] for d in DAYS})
+    catalog = os.path.join(tmp_root, "catalog.json")
+    g = make_day_graph(tmp_root, JsonFileBackend(catalog), spark)
+    g.snapshot(strict_fingerprints=True).build(LocalSparkExecutor(strict_fingerprints=True))
+    with open(catalog) as f:
+        text = f.read()
+    state = json.loads(text)
+    held = Counter(
+        path for table in ("partitions", "links") for store in state[table].values() for path in store
+    )
+    assert len(held) == 3 * len(DAYS)  # raw, total and double partitions
+    assert {path: text.count(json.dumps(path)) for path in held} == held
+
+    loads = []
+    real_load = json.load
+
+    def counting_load(f, *args, **kwargs):
+        if getattr(f, "name", None) == catalog:
+            loads.append(f.name)
+        return real_load(f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    ex = LocalSparkExecutor(strict_fingerprints=True)
+    make_day_graph(tmp_root, JsonFileBackend(catalog), spark).snapshot(strict_fingerprints=True).build(ex)
+    assert (ex.built_partitions, ex.skipped_partitions) == (0, 2 * len(DAYS))
+    assert len(loads) <= 1
+
+
 @pytest.mark.parametrize("executor", [LocalSparkExecutor, ThreadedSparkExecutor])
 def test_memoized_partitions_link_before_a_failed_build(tmp_root, spark, executor):
     """Memoized partitions are linked before any partition is built, so a

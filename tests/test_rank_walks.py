@@ -12,8 +12,9 @@ The two prefix walks pick their shape with ``_adaptive.summary_sized``;
 each plan-shape test here pins the shape it checks by patching that gate,
 so a Range input (known and tiny, which the real gate sends to plain
 windows) still exercises the bucketed walk. A chained pass that reuses
-its first pass's bucket ids gives the rows of a fresh bucketing, and an
-external bucket id must be non-NULL. On adversarial data (ties, NULL
+its first pass's bucket ids gives the rows of a fresh bucketing, the ids
+a pass keeps are monotone in value, and an external bucket id must be
+non-NULL. On adversarial data (ties, NULL
 group keys, NaN, one-row groups, forced bucket collisions) each walk
 gives the rows of the window form it replaces, and a frequency-weighted
 histogram ranks as its raw rows do. Prefix sums keep their value type
@@ -208,6 +209,17 @@ def test_ungrouped_numeric_prefix_of_unknown_size_broadcasts(spark, monkeypatch)
 
 
 # --- external bucket ids ---
+
+
+def test_prefix_sums_keep_bucket_ids_are_monotone_in_value(spark):
+    from artigraph_spark.operators._ranks import bucketed_prefix_sums
+
+    hist = (
+        spark.createDataFrame([(i, 1) for i in range(50)], "v: long, m: long")
+    )
+    out = bucketed_prefix_sums(hist, [], "v", ["m"], keep_bucket="__kb").collect()
+    seq = [r["__kb"] for r in sorted(out, key=lambda r: r["v"])]
+    assert seq == sorted(seq)
 
 
 def test_bucketed_prefix_sums_null_bucket_id_raises(spark):

@@ -3,11 +3,11 @@
 Each test pins a behavior added or fixed in round 12 — the
 restricted_mean_survival integral-duration / negative-duration guards
 (the r11 advice medium item: fractional durations were silently
-HALF_UP-rounded by the DECIMAL(18,0) width cast), the fused
+HALF_UP-rounded by the DECIMAL(18,0) width cast) and the fused
 kaplan_meier prefix walk (values unchanged, one bucketing instead of
-two), and the monotone bucket ids bucketed_prefix_sums keeps for the
-fuse. The logrank_test lineage-cut test lives in test_prefix_gate.py, and
-the chained-pass reuse test in test_rank_walks.py.
+two). The logrank_test lineage-cut test lives in test_prefix_gate.py, and
+the chained-pass reuse and monotone kept bucket id tests in
+test_rank_walks.py.
 """
 
 import pytest
@@ -67,20 +67,6 @@ def test_rmst_hand_value_still_exact(spark):
     assert len(got) == 1
     assert got[0]["rmst_r"] == pytest.approx(5.0, abs=1e-9)
     assert got[0]["horizon"] == 8
-
-
-# --- bucketed_prefix_sums kept bucket ids (the kaplan_meier fuse) -------------
-
-
-def test_prefix_sums_keep_bucket_ids_are_monotone_in_value(spark):
-    from artigraph_spark.operators._ranks import bucketed_prefix_sums
-
-    hist = (
-        spark.createDataFrame([(i, 1) for i in range(50)], "v: long, m: long")
-    )
-    out = bucketed_prefix_sums(hist, [], "v", ["m"], keep_bucket="__kb").collect()
-    seq = [r["__kb"] for r in sorted(out, key=lambda r: r["v"])]
-    assert seq == sorted(seq)
 
 
 # --- minhash_signatures_shingled (the oracle-checkable shingle MinHash) -------
