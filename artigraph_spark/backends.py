@@ -5,9 +5,10 @@ implementation backends/memory.py:62-138).
 
 Two implementations: in-process MemoryBackend (tests / ephemeral runs) and
 JsonFileBackend (a single JSON file; cross-process memoization). On a real
-cluster the same 8-method interface fronts a Delta table or a database —
-the catalog is tiny (O(partitions) rows of fingerprints+paths), never a
-scaling concern next to the 100 TB data plane.
+cluster the same 8-method interface fronts a Delta table or a database.
+The catalog holds fingerprints and paths only, but it is not O(partitions):
+every snapshot links every partition it read or built, so the links grow
+as snapshots × partitions.
 
 Write cost: a mutating call rewrites the JsonFileBackend file only when it
 changes the catalog's state, and a build makes one memo probe and one link
@@ -16,10 +17,18 @@ call per producer output — so a no-op rebuild leaves the file untouched.
 On-disk layout: one JSON object with four tables. ``partitions`` maps an
 artifact fingerprint, and ``links`` a ``"<snapshot>:<artifact>"`` pair, to
 ``{path: entry}``; an entry holds its key, fingerprints and optional value,
-and its path only as the dict key. The file is written with compact
-separators. Catalogs in the older layout (an entry also carrying a
-``"path"`` field, spaced separators, ``graph:tag`` tag keys) are normalized
-in memory on load, so they read the same; the first mutation rewrites
+and its path only as the dict key. A link whose entry equals the
+``partitions`` entry at the same artifact and path stores the reference
+``0`` instead of repeating it, so a link costs its path plus one digit.
+Before a ``partitions`` entry is overwritten with a different one or
+deleted, it is copied into every link that still references it: an older
+snapshot keeps the key and fingerprints it was linked with. The file is
+written with compact separators.
+
+Catalogs in an older layout (an entry also carrying a ``"path"`` field,
+links repeating their ``partitions`` entry, spaced separators,
+``graph:tag`` tag keys) are normalized in memory on load, so they read the
+same and a no-op rebuild leaves them alone; the first mutation rewrites
 them in this layout, which a build predating it cannot read back.
 """
 
@@ -42,6 +51,9 @@ from artigraph_spark.partitions import PartitionKey
 from artigraph_spark.storage import StoragePartition
 
 
+_REF = 0  # a link entry equal to the ``partitions`` entry at its path
+
+
 def _key_to_jsonable(key: PartitionKey) -> list[list[str]]:
     return [[name, type(f).__name__, str(f.components[f.default_component])] for name, f in sorted(key.fields.items())]
 
@@ -55,19 +67,6 @@ def _partition_to_json(p: StoragePartition) -> dict[str, Any]:
     if p.value is not None:  # literal payload rides in the catalog
         out["value"] = p.value
     return out
-
-
-def _upsert(table: dict[str, Any], key: str, partitions: list[StoragePartition]) -> bool:
-    """Upsert ``partitions`` by path into ``table[key]``; True if any entry
-    was new or different."""
-    store = table.setdefault(key, {})
-    changed = False
-    for p in partitions:
-        entry = _partition_to_json(p)
-        if store.get(p.path) != entry:
-            store[p.path] = entry
-            changed = True
-    return changed
 
 
 def _partition_from_json(path: str, d: dict[str, Any]) -> StoragePartition:
@@ -124,8 +123,9 @@ class Backend:
         otherwise re-memoize against a dead path, and an artifact definition
         change alters its fingerprint without moving its storage paths, so
         deletion must be path-keyed, not fingerprint-keyed. Snapshot links
-        are NOT touched — reading a pruned snapshot raises FileNotFoundError
-        by design."""
+        keep the entries they were linked with, so a pruned snapshot still
+        reads back its partitions — and reading their data raises
+        FileNotFoundError by design."""
         raise NotImplementedError
 
     def read_all_snapshot_partitions(
@@ -239,10 +239,12 @@ class JsonFileBackend(Backend):
     writer's entries, and a memoized rebuild writes nothing. Swap for
     Delta/DB at multi-host scale.
 
-    Each partition entry is stored under its path alone, in compact JSON
-    (module docstring). An older-layout catalog reads the same and a no-op
-    rebuild leaves it alone; its first real mutation rewrites it, one-way,
-    in the new layout.
+    Each partition entry is stored under its path alone, in compact JSON,
+    and a link equal to its ``partitions`` entry stores the reference ``0``
+    (module docstring). Overwriting or deleting a referenced entry first
+    copies it into the links that reference it. An older-layout catalog
+    reads the same and a no-op rebuild leaves it alone; its first real
+    mutation rewrites it, one-way, in the new layout.
     """
 
     def __init__(self, path: str) -> None:
@@ -272,6 +274,7 @@ class JsonFileBackend(Backend):
             self._state = json.load(f)
         self._migrate_legacy_tag_keys()
         self._drop_legacy_paths()
+        self._reference_links()
         self._stamp = stamp
 
     def _migrate_legacy_tag_keys(self) -> None:
@@ -307,12 +310,39 @@ class JsonFileBackend(Backend):
     def _drop_legacy_paths(self) -> None:
         # Entries repeated their dict key as a "path" field before the
         # path-keyed layout. Dropping it in memory makes a legacy entry
-        # compare equal to the one _upsert would write, so a no-op rebuild
-        # over an old catalog still leaves the file alone.
+        # compare equal to the one a mutation would write, so a no-op
+        # rebuild over an old catalog still leaves the file alone.
         for table in ("partitions", "links"):
             for store in self._state.get(table, {}).values():
                 for entry in store.values():
-                    entry.pop("path", None)
+                    if entry != _REF:
+                        entry.pop("path", None)
+
+    def _reference_links(self) -> None:
+        # Links repeated their partitions entry before the reference
+        # layout. Turning an equal one into _REF in memory makes an old
+        # catalog read, and compare on a no-op link, as the new one does.
+        parts = self._state.get("partitions", {})
+        for link_key, store in self._state.get("links", {}).items():
+            shared = parts.get(link_key.rpartition(":")[2], {})
+            for path, entry in store.items():
+                if entry == shared.get(path):
+                    store[path] = _REF
+
+    def _unreference(self, doomed: dict[str, set[str]]) -> None:
+        """Copy the ``partitions`` entries at ``doomed`` (artifact key →
+        paths), which are about to change or go, into every link that
+        still references them."""
+        parts = self._state["partitions"]
+        for link_key, store in self._state["links"].items():
+            afp = link_key.rpartition(":")[2]
+            for path in store.keys() & doomed.get(afp, ()):
+                if store[path] == _REF:
+                    store[path] = parts[afp][path]
+
+    def _read_link(self, link_key: str, store: dict[str, Any]) -> list[StoragePartition]:
+        shared = self._state["partitions"].get(link_key.rpartition(":")[2], {})
+        return [_partition_from_json(path, shared[path] if d == _REF else d) for path, d in store.items()]
 
     @contextlib.contextmanager
     def _locked(self, *, exclusive: bool = True):
@@ -355,8 +385,14 @@ class JsonFileBackend(Backend):
     def write_artifact_partitions(
         self, artifact_fp: Fingerprint, partitions: list[StoragePartition]
     ) -> None:
+        afp = str(artifact_fp.key)
         with self._locked():
-            if _upsert(self._state["partitions"], str(artifact_fp.key), partitions):
+            store = self._state["partitions"].setdefault(afp, {})
+            new = {p.path: _partition_to_json(p) for p in partitions}
+            changed = {path: entry for path, entry in new.items() if store.get(path) != entry}
+            if changed:
+                self._unreference({afp: changed.keys() & store.keys()})
+                store.update(changed)
                 self._flush()
 
     def read_artifact_partitions(
@@ -372,12 +408,13 @@ class JsonFileBackend(Backend):
 
     def delete_partitions_by_path(self, paths: set[str]) -> None:
         with self._locked():
-            removed = False
-            for store in self._state["partitions"].values():
-                for path in paths & store.keys():
-                    del store[path]
-                    removed = True
-            if removed:
+            parts = self._state["partitions"]
+            doomed = {afp: gone for afp, store in parts.items() if (gone := paths & store.keys())}
+            if doomed:
+                self._unreference(doomed)
+                for afp, gone in doomed.items():
+                    for path in gone:
+                        del parts[afp][path]
                 self._flush()
 
     def read_all_snapshot_partitions(
@@ -388,24 +425,32 @@ class JsonFileBackend(Backend):
             out: list[StoragePartition] = []
             for link_key, store in self._state["links"].items():
                 if link_key.startswith(prefix):
-                    out.extend(_partition_from_json(path, d) for path, d in store.items())
+                    out.extend(self._read_link(link_key, store))
             return out
 
     def link_snapshot_partitions(
         self, snapshot_id: Fingerprint, artifact_fp: Fingerprint, partitions: list[StoragePartition]
     ) -> None:
+        afp = str(artifact_fp.key)
         with self._locked():
-            if _upsert(self._state["links"], f"{snapshot_id.key}:{artifact_fp.key}", partitions):
+            shared = self._state["partitions"].get(afp, {})
+            store = self._state["links"].setdefault(f"{snapshot_id.key}:{afp}", {})
+            changed = False
+            for p in partitions:
+                entry = _partition_to_json(p)
+                old = store.get(p.path)
+                if (shared.get(p.path) if old == _REF else old) != entry:
+                    store[p.path] = _REF if shared.get(p.path) == entry else entry
+                    changed = True
+            if changed:
                 self._flush()
 
     def read_snapshot_partitions(
         self, snapshot_id: Fingerprint, artifact_fp: Fingerprint
     ) -> list[StoragePartition]:
+        key = f"{snapshot_id.key}:{artifact_fp.key}"
         with self._locked(exclusive=False):
-            return [
-                _partition_from_json(path, d)
-                for path, d in self._state["links"].get(f"{snapshot_id.key}:{artifact_fp.key}", {}).items()
-            ]
+            return self._read_link(key, self._state["links"].get(key, {}))
 
     @staticmethod
     def _tag_key(graph_name: str, tag: str) -> str:

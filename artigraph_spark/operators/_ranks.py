@@ -355,24 +355,26 @@ def window_prefix_sums(
 ) -> DataFrame:
     """:func:`bucketed_prefix_sums`' output contract (``__tot_<c>`` then
     ``__pre_<c>`` appended, in Spark's natural sum types) from plain
-    ``Window.partitionBy(*group_cols)`` frames: one exchange and sort, no
-    bucket map, no join.
+    ``Window.partitionBy(*group_cols).orderBy(value_col)`` frames: one
+    exchange, one sort and one Window node, no bucket map, no join.
 
     Each group's whole histogram sorts on one partition (ungrouped: the
     whole histogram), so the prefix walks take this shape only for a
     SUMMARY-sized input (``_adaptive.summary_sized``) and the bucketed
-    walk otherwise. The frames are an exclusive ``rowsBetween(unboundedPreceding, -1)``
-    running sum and an unordered partition total — never a
-    ``currentRow → unboundedFollowing`` suffix frame, which Spark
-    evaluates row by row over the rest of the partition (O(n²)). Integral
-    and DECIMAL sums are order-independent, so both shapes give identical
-    rows on the same ``hist`` contract (one row per (group, value), no
-    NULL values)."""
+    walk otherwise. Both frames share the one ordered spec: an exclusive
+    ``rowsBetween(unboundedPreceding, -1)`` running sum, and the total
+    over ``rowsBetween(unboundedPreceding, unboundedFollowing)``, which
+    Spark evaluates once per partition. Never a ``currentRow →
+    unboundedFollowing`` suffix frame, which Spark evaluates row by row
+    over the rest of the partition (O(n²)). Integral and DECIMAL sums are
+    order-independent, so both shapes give identical rows on the same
+    ``hist`` contract (one row per (group, value), no NULL values)."""
     if not sum_cols:
         raise ValueError("window_prefix_sums needs sum columns")
     scols = list(sum_cols)
-    whole = Window.partitionBy(*group_cols)
-    before = whole.orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
+    ordered = Window.partitionBy(*group_cols).orderBy(value_col)
+    whole = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    before = ordered.rowsBetween(Window.unboundedPreceding, -1)
     return hist.select(
         "*",
         *[F.sum(c).over(whole).alias(f"__tot_{c}") for c in scols],

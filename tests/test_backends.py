@@ -1,6 +1,10 @@
-"""Catalog-backend edge cases: key-collision hygiene and PartitionField
-registry round-trips (the main backend contract is exercised through
-test_graph.py's build/memoization scenarios)."""
+"""Catalog-backend edge cases: key-collision hygiene, PartitionField
+registry round-trips, older catalog layouts, and link references (a link
+stores ``0`` for the ``partitions`` entry it equals; the main backend
+contract is exercised through test_graph.py's build/memoization
+scenarios)."""
+
+import pytest
 
 
 def test_json_backend_tag_keys_do_not_collide(tmp_path):
@@ -164,15 +168,31 @@ def test_json_backend_merges_across_instances_and_processes(tmp_path):
     assert hit == _part("/d/n=2", 2)
 
 
-def _legacy_layout(state: dict) -> dict:
-    """``state`` as the older layout stored it: every partition and link
-    entry repeating its dict key as a ``"path"`` field."""
+def _full_links(state: dict) -> dict:
+    """``state`` with every link reference ``0`` expanded into the
+    ``partitions`` entry it points at, as links stored it before
+    references."""
+    parts = state["partitions"]
     return {
         **state,
+        "links": {
+            key: {path: parts[key.rpartition(":")[2]][path] if e == 0 else e for path, e in store.items()}
+            for key, store in state["links"].items()
+        },
+    }
+
+
+def _legacy_layout(state: dict) -> dict:
+    """``state`` as the older layout stored it: every link holding its full
+    entry, and every partition and link entry repeating its dict key as a
+    ``"path"`` field."""
+    full = _full_links(state)
+    return {
+        **full,
         **{
             table: {
                 key: {path: {"path": path, **entry} for path, entry in store.items()}
-                for key, store in state[table].items()
+                for key, store in full[table].items()
             }
             for table in ("partitions", "links")
         },
@@ -261,3 +281,192 @@ def test_noop_build_over_legacy_catalog_writes_nothing(tmp_root, spark):
         text = f.read()
     assert '"path"' not in text
     assert _json.loads(text)["tags"] == state["tags"]
+
+
+def _day_build(tmp_root, catalog, spark):
+    """Build the day graph over ``catalog``: (graph, snapshot, built, skipped)."""
+    from artigraph_spark.backends import JsonFileBackend
+    from artigraph_spark.executors import LocalSparkExecutor
+    from tests.test_graph import make_day_graph
+
+    ex = LocalSparkExecutor(strict_fingerprints=True)
+    g = make_day_graph(tmp_root, JsonFileBackend(catalog), spark)
+    snap = g.snapshot(strict_fingerprints=True).build(ex)
+    return g, snap, ex.built_partitions, ex.skipped_partitions
+
+
+def _every_read(backend, graph, snaps) -> list:
+    """Every answer the catalog gives about ``graph``'s artifacts and
+    ``snaps``, in reader order."""
+    reads = []
+    for _, artifact in sorted(graph._artifacts.items()):
+        reads.append(backend.read_artifact_partitions(artifact.fingerprint))
+        reads.extend(backend.read_snapshot_partitions(s.snapshot_id, artifact.fingerprint) for s in snaps)
+    reads.extend(backend.read_all_snapshot_partitions(s.snapshot_id) for s in snaps)
+    return reads
+
+
+def test_fresh_build_stores_a_reference_for_every_link(tmp_root, spark):
+    """Every link of a fresh build equals its ``partitions`` entry, so each
+    is stored as ``0`` and reads back as that entry."""
+    import json as _json
+    import os
+
+    from tests.test_graph import DAYS, seed_days
+
+    catalog = os.path.join(tmp_root, "catalog.json")
+    seed_days(tmp_root, {d: [d] for d in DAYS})
+    g, snap, built, _ = _day_build(tmp_root, catalog, spark)
+    assert built == 2 * len(DAYS)
+    with open(catalog) as f:
+        state = _json.load(f)
+    links = [e for store in state["links"].values() for e in store.values()]
+    assert len(links) == 3 * len(DAYS) and set(links) == {0}
+    for _, artifact in sorted(g._artifacts.items()):
+        linked = g.backend.read_snapshot_partitions(snap.snapshot_id, artifact.fingerprint)
+        stored = g.backend.read_artifact_partitions(artifact.fingerprint)
+        assert sorted(linked, key=str) == sorted(stored, key=str)
+
+
+def test_overwritten_raw_partition_keeps_the_old_snapshots_entry(tmp_root, spark):
+    """Rebuilding after one raw partition changed overwrites its
+    ``partitions`` entry; the older snapshot's link first takes a copy of
+    the old entry, so each snapshot reads its own content fingerprint."""
+    import json as _json
+    import os
+
+    from tests.test_graph import DAYS, seed_days
+
+    catalog = os.path.join(tmp_root, "catalog.json")
+    seed_days(tmp_root, {d: [d] for d in DAYS})
+    g, old, _, _ = _day_build(tmp_root, catalog, spark)
+    nums = g.artifacts.nums.fingerprint
+
+    def content(snap):
+        return {p.path: p.content_fingerprint for p in g.backend.read_snapshot_partitions(snap.snapshot_id, nums)}
+
+    before = content(old)
+    seed_days(tmp_root, {1: [5]})
+    g, new, built, _ = _day_build(tmp_root, catalog, spark)
+    assert built == 2
+    assert content(old) == before
+    (changed,) = [path for path, fp in content(new).items() if fp != before[path]]
+    assert {p.path: p.content_fingerprint for p in g.backend.read_artifact_partitions(nums)} == content(new)
+    with open(catalog) as f:
+        links = _json.load(f)["links"]
+    assert links[f"{old.snapshot_id.key}:{nums.key}"][changed] != 0
+    assert links[f"{new.snapshot_id.key}:{nums.key}"][changed] == 0
+
+
+def test_pruned_partitions_still_read_through_the_old_snapshot(tmp_root, spark):
+    """``delete_partitions_by_path`` copies each deleted entry into the
+    links that reference it: the snapshot still lists its partitions."""
+    import os
+
+    from artigraph_spark.backends import JsonFileBackend
+    from tests.test_graph import DAYS, seed_days
+
+    catalog = os.path.join(tmp_root, "catalog.json")
+    seed_days(tmp_root, {d: [d] for d in DAYS})
+    g, snap, _, _ = _day_build(tmp_root, catalog, spark)
+    total = g.artifacts.total.fingerprint
+    linked = g.backend.read_all_snapshot_partitions(snap.snapshot_id)
+    pruned = {p.path for p in g.backend.read_artifact_partitions(total)}
+    assert len(pruned) == len(DAYS)
+
+    g.backend.delete_partitions_by_path(pruned)
+    fresh = JsonFileBackend(catalog)
+    assert fresh.read_artifact_partitions(total) == []
+    assert fresh.read_all_snapshot_partitions(snap.snapshot_id) == linked
+    assert {p.path for p in fresh.read_snapshot_partitions(snap.snapshot_id, total)} == pruned
+
+
+def test_reference_sequence_reads_the_same_on_both_backends(tmp_path):
+    """Links, overwrites, re-links and deletes read the same from
+    ``MemoryBackend`` and ``JsonFileBackend`` (and from a fresh instance
+    over the JSON file) after every step."""
+    from artigraph_spark.backends import JsonFileBackend, MemoryBackend
+    from artigraph_spark.fingerprint import Fingerprint
+
+    catalog = str(tmp_path / "cat.json")
+    s1, s2, s3 = (Fingerprint.from_int(i) for i in (1, 2, 3))
+    a, b = Fingerprint.from_int(5), Fingerprint.from_int(6)
+    one, two, three = _part("/d/n=1", 1), _part("/d/n=2", 2), _part("/d/n=3", 3)
+    one_v2 = _part("/d/n=1", 11)
+    steps = [
+        ("write_artifact_partitions", a, [one, two]),
+        ("link_snapshot_partitions", s1, a, [one, two]),
+        ("write_artifact_partitions", b, [three]),
+        ("link_snapshot_partitions", s1, b, [three]),
+        ("write_artifact_partitions", a, [one_v2]),
+        ("link_snapshot_partitions", s2, a, [one_v2, two]),
+        ("link_snapshot_partitions", s3, a, [one]),
+        ("write_artifact_partitions", a, [one]),
+        ("delete_partitions_by_path", {"/d/n=2", "/d/n=3"}),
+        ("write_artifact_partitions", a, [two]),
+        ("link_snapshot_partitions", s3, a, [two]),
+    ]
+    mem, js = MemoryBackend(), JsonFileBackend(catalog)
+
+    def reads(backend):
+        out = [backend.read_artifact_partitions(fp) for fp in (a, b)]
+        out += [backend.read_snapshot_partitions(s, fp) for s in (s1, s2, s3) for fp in (a, b)]
+        return out + [backend.read_all_snapshot_partitions(s) for s in (s1, s2, s3)]
+
+    for name, *args in steps:
+        getattr(mem, name)(*args)
+        getattr(js, name)(*args)
+        assert reads(js) == reads(mem), name
+        assert reads(JsonFileBackend(catalog)) == reads(mem), name
+    assert reads(mem)[2:4] == [[one, two], [three]]
+    assert reads(mem)[4] == [one_v2, two]
+
+
+@pytest.mark.parametrize("with_path", [False, True])
+def test_full_link_entries_read_the_same_and_noop_build_writes_nothing(tmp_root, spark, with_path):
+    """A catalog whose links hold their full entries (with or without the
+    older ``"path"`` field) reads the same through every reader as the
+    reference layout, a no-op build over it leaves its bytes, inode and
+    mtime alone, and its first real build stores every link equal to its
+    ``partitions`` entry as a reference."""
+    import json as _json
+    import os
+
+    from artigraph_spark.backends import JsonFileBackend
+    from tests.test_graph import DAYS, seed_days
+
+    catalog = os.path.join(tmp_root, "catalog.json")
+    seed_days(tmp_root, {d: [d] for d in DAYS})
+    _, old, _, _ = _day_build(tmp_root, catalog, spark)
+    seed_days(tmp_root, {2: [7]})
+    g, new, _, _ = _day_build(tmp_root, catalog, spark)
+    snaps = [old, new]
+    want = _every_read(JsonFileBackend(catalog), g, snaps)
+    with open(catalog) as f:
+        state = _json.load(f)
+    older = _legacy_layout(state) if with_path else _full_links(state)
+    assert older != state
+    with open(catalog, "w") as f:
+        _json.dump(older, f)
+
+    assert _every_read(JsonFileBackend(catalog), g, snaps) == want
+
+    def file_state():
+        st = os.stat(catalog)
+        with open(catalog, "rb") as f:
+            return f.read(), st.st_ino, st.st_mtime_ns
+
+    before = file_state()
+    assert _day_build(tmp_root, catalog, spark)[2:] == (0, 2 * len(DAYS))
+    assert file_state() == before
+
+    seed_days(tmp_root, {3: [9]})
+    _day_build(tmp_root, catalog, spark)
+    with open(catalog) as f:
+        state = _json.load(f)
+    parts = state["partitions"]
+    assert all(
+        e == 0 or e != parts[key.rpartition(":")[2]].get(path)
+        for key, store in state["links"].items()
+        for path, e in store.items()
+    )

@@ -114,12 +114,12 @@ def test_walk_plan_shape(spark, monkeypatch, walk):
 
 
 # The window shape of the two gated walks: the histogram's exchange plus
-# the window's own, and two Window nodes (the ordered running sum and the
-# unordered total) — no bucket map, no join.
+# the window's own, and one Window node (the running sum and the total
+# share one ordered spec) — no bucket map, no join.
 _WINDOW_SHAPES = {
-    "value_ranks": {"Exchange": 2, "Window": 2},
-    "prefix_grouped": {"Exchange": 2, "Window": 2},
-    "prefix_ungrouped": {"Exchange": 2, "Window": 2},
+    "value_ranks": {"Exchange": 2, "Window": 1},
+    "prefix_grouped": {"Exchange": 2, "Window": 1},
+    "prefix_ungrouped": {"Exchange": 2, "Window": 1},
 }
 
 
